@@ -17,7 +17,7 @@ Layout:
   synth.py               deterministic synthetic transcripts generator
   oracle.py              pure-Python oracle (independent reimplementation for golden tests)
   extract/               the extraction core (plain / html / pdfish payloads,
-                         hysteresis variant, word-span fixups, pure-SQL path)
+                         hysteresis variant, word-span fixups)
   queries/               operator registry (relational, dedup, textstats,
                          simsearch, extraction, labeldsl) with DuckDB oracles
   fusion.py              multi-recognizer weighted fusion + the ×4 vote

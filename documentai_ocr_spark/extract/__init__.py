@@ -5,7 +5,6 @@ from .core import (
     assemble_conversations,
     extract_batch,
     extract_turns,
-    extract_turns_arrow,
     extract_word_boxes,
 )
 
@@ -16,6 +15,5 @@ __all__ = [
     "assemble_conversations",
     "extract_batch",
     "extract_turns",
-    "extract_turns_arrow",
     "extract_word_boxes",
 ]

@@ -5,7 +5,9 @@ stage over the scan — no shuffle at all for the per-turn path (each
 turn's extraction is independent; the per-turn text-equality contract
 makes this embarrassingly parallel, which is exactly why it scales to
 10^12 turns: throughput is scan-bound, parallelism is the partition
-count, and there is no key to skew).
+count, and there is no key to skew). mapInPandas is the one Python
+boundary: every other operator in the package uses it too, and a
+mapInArrow twin measured as a throughput tie (BENCH.md).
 
 Cross-turn operations (conversation assembly) DO need grouping and
 ordering — they live in :func:`assemble_conversations`, which uses an
@@ -76,12 +78,9 @@ def classify_payload_batch(texts: pd.Series) -> pd.Series:
     return pd.Series(out, index=texts.index)
 
 
-def _extract_arrays(texts: pd.Series, plain_variant: str):
-    """The ONE extraction kernel core, shared by both Python boundaries
-    (:func:`extract_batch` for mapInPandas, :func:`extract_turns_arrow`
-    for mapInArrow): a text Series in, plain output arrays out —
-    (kinds Series, text object-array, spans object-array, n_spans
-    int64-array), all batch-ordered."""
+def extract_batch(pdf: pd.DataFrame, plain_variant: str = "density") -> pd.DataFrame:
+    """One Arrow batch of transcript turns → extracted rows (same order)."""
+    texts = pdf["text"].reset_index(drop=True)
     kinds = classify_payload_batch(texts)
 
     n = len(texts)
@@ -105,15 +104,6 @@ def _extract_arrays(texts: pd.Series, plain_variant: str):
         text_out[pos] = sub["text"].to_numpy()
         spans_out[pos] = sub["spans"].to_numpy()
         n_spans_out[pos] = sub["n_spans"].to_numpy()
-    return kinds, text_out, spans_out, n_spans_out
-
-
-def extract_batch(pdf: pd.DataFrame, plain_variant: str = "density") -> pd.DataFrame:
-    """One Arrow batch of transcript turns → extracted rows (same order)."""
-    texts = pdf["text"].reset_index(drop=True)
-    kinds, text_out, spans_out, n_spans_out = _extract_arrays(
-        texts, plain_variant
-    )
     return pd.DataFrame(
         {
             "conv_id": pdf["conv_id"].to_numpy(),
@@ -130,9 +120,9 @@ def extract_batch(pdf: pd.DataFrame, plain_variant: str = "density") -> pd.DataF
 def extract_turns(
     transcripts: DataFrame, plain_variant: str = "density"
 ) -> DataFrame:
-    """Per-turn main-content extraction. Narrow (no shuffle): the plan is
-    scan → WholeStageCodegen(project) → ArrowEvalPython → output, so it
-    scales linearly with input partitions (tune
+    """Per-turn main-content extraction — the package's one extraction
+    path. Narrow (no shuffle): the plan is scan → project → MapInPandas
+    → output, so it scales linearly with input partitions (tune
     ``spark.sql.files.maxPartitionBytes`` for split granularity and
     ``spark.sql.execution.arrow.maxRecordsPerBatch`` for batch shape).
     ``plain_variant`` selects the plain-payload kernel (PLAIN_VARIANTS).
@@ -152,93 +142,6 @@ def extract_turns(
                 yield extract_batch(pdf, plain_variant)
 
     return src.mapInPandas(run, schema=EXTRACT_SCHEMA)
-
-
-def extract_turns_arrow(
-    transcripts: DataFrame, plain_variant: str = "density"
-) -> DataFrame:
-    """``mapInArrow`` twin of :func:`extract_turns`: identical kernel,
-    identical output (byte-equal — pinned by tests/test_extract_units),
-    but the Python boundary exchanges ``pyarrow.RecordBatch`` directly
-    instead of round-tripping each batch through a pandas block
-    manager. The classify/extract math already runs on Arrow buffers
-    and numpy (classify_payload_batch builds a ``pa.array`` first
-    thing), so the pandas frame in the middle is pure conversion
-    overhead — this path shares the array-level core
-    (:func:`_extract_arrays`) with the pandas boundary: only the text
-    column is lifted to a bare Series (the kernel's masked dispatch is
-    pandas-shaped), conv_id/role pass through as the input's own Arrow
-    arrays untouched, and the output RecordBatch is assembled with
-    ``from_arrays`` against an explicit schema (no output DataFrame, no
-    ``from_pandas``, list<struct> spans never infer). Same narrow
-    no-shuffle plan: scan → project → MapInArrow. Use whichever
-    boundary profiles faster on the target wheel; the contract is that
-    both exist and agree byte-for-byte."""
-    import pyarrow as pa
-
-    if plain_variant not in PLAIN_VARIANTS:
-        raise ValueError(f"unknown plain_variant {plain_variant!r}")
-    src = transcripts.select("conv_id", "turn_idx", "role", "text")
-    out_schema = pa.schema(
-        [
-            ("conv_id", pa.string()),
-            ("turn_idx", pa.int32()),
-            ("role", pa.string()),
-            ("payload_kind", pa.string()),
-            ("text", pa.string()),
-            (
-                "spans",
-                pa.list_(
-                    pa.struct(
-                        [
-                            ("beg", pa.int32()),
-                            ("end", pa.int32()),
-                            ("kind", pa.string()),
-                            ("score", pa.float64()),
-                        ]
-                    )
-                ),
-            ),
-            ("n_spans", pa.int32()),
-        ]
-    )
-
-    spans_type = out_schema.field("spans").type
-
-    def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pyarrow.compute as pc
-
-        from .textops import pin_arrow_pools
-
-        pin_arrow_pools()
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            cols = {
-                name: rb.column(rb.schema.get_field_index(name))
-                for name in ("conv_id", "turn_idx", "role", "text")
-            }
-            # only the text column touches pandas, as a bare Series
-            # (the kernel's masked sub-batch dispatch is pandas-shaped);
-            # no input DataFrame, no block manager
-            texts = cols["text"].to_pandas()
-            kinds, text_out, spans_out, n_spans_out = _extract_arrays(
-                texts, plain_variant
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    cols["conv_id"],  # zero-copy passthrough
-                    pc.cast(cols["turn_idx"], pa.int32()),
-                    cols["role"],  # zero-copy passthrough
-                    pa.array(kinds.to_numpy(), type=pa.string()),
-                    pa.array(text_out, type=pa.string()),
-                    pa.array(spans_out.tolist(), type=spans_type),
-                    pa.array(n_spans_out, type=pa.int32()),
-                ],
-                schema=out_schema,
-            )
-
-    return src.mapInArrow(run, schema=EXTRACT_SCHEMA)
 
 
 WORD_BOX_SCHEMA = (

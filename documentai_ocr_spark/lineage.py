@@ -105,7 +105,6 @@ def run_extraction_increment(
     rule_ver: str = "v1",
     n_buckets: int = DEFAULT_BUCKETS,
     max_buckets: int | None = None,
-    plain_variant: str = "density",
     augment=None,
     lock: bool = True,
     _crash_before_commit: bool = False,
@@ -133,7 +132,6 @@ def run_extraction_increment(
             rule_ver,
             n_buckets,
             max_buckets,
-            plain_variant,
             augment,
             _crash_before_commit,
         )
@@ -149,7 +147,6 @@ def _increment_locked(
     rule_ver,
     n_buckets,
     max_buckets,
-    plain_variant,
     augment,
     _crash_before_commit,
 ) -> int:
@@ -166,7 +163,7 @@ def _increment_locked(
     # carry the bucket through extraction by recomputing it on the output
     # (pure function of conv_id — cheaper than widening the kernel schema)
     ext = (
-        extract_turns(src.drop("bucket"), plain_variant=plain_variant)
+        extract_turns(src.drop("bucket"))
         .withColumn("bucket", bucket_expr(n_buckets))
         .withColumn("part_id", F.spark_partition_id())
     )
@@ -218,7 +215,6 @@ def run_to_completion(
     rule_ver: str = "v1",
     n_buckets: int = DEFAULT_BUCKETS,
     max_buckets_per_run: int | None = None,
-    plain_variant: str = "density",
 ) -> int:
     """Drain the work queue (the while-pending loop of the reference,
     minus the sleep — each iteration is one committed batch)."""
@@ -231,7 +227,6 @@ def run_to_completion(
             rule_ver=rule_ver,
             n_buckets=n_buckets,
             max_buckets=max_buckets_per_run,
-            plain_variant=plain_variant,
         )
         if n == 0:
             return total

@@ -1549,42 +1549,54 @@ def q_incdedup_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rolling_fold(docs, 3)
 
 
+def _three_batch_ledger(
+    spark: SparkSession, sf_dir: str, increment, prefix: str
+) -> DataFrame:
+    """Run ``increment`` (dedup_increment or simhash_increment) over the
+    fixed 3-batch schedule (batch = doc_id mod 3) against a fresh state
+    dir and return the committed ledger rows. The dir is private to the
+    call (concurrent runs never share or delete each other's state) and
+    is removed once the ledger rows are collected."""
+    import shutil
+    import tempfile
+
+    from ..incdedup import LEDGER_SCHEMA
+
+    state = tempfile.mkdtemp(prefix=prefix)
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    rows = []
+    try:
+        for k in range(3):
+            st = increment(
+                spark,
+                docs.where((F.col("doc_id") % 3).cast("int") == k),
+                state,
+                f"b{k}",
+            )
+            rows.append(tuple(st[f] for f in (
+                "batch_seq", "batch_id", "n_in", "n_exact_dropped",
+                "n_near_dropped", "n_survivors",
+            )))
+    finally:
+        shutil.rmtree(state, ignore_errors=True)
+    return spark.createDataFrame(rows, LEDGER_SCHEMA)
+
+
 @_q("x_incdedup_state")
 def x_incdedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL state-backed rolling ingest, end-to-end: three
     dedup_increment calls against a fresh persisted-state dir (exact +
     band-signature tables, ledger commits), returning the committed
     ledger — one row per batch with input/dropped/survivor counts.
-    Deterministic: the state dir is recreated per call. Rows-only by
+    Deterministic: each call starts from a fresh state dir. Rows-only by
     necessity (filesystem state); the SEMANTICS are oracled via
     q_incdedup_fold and tests/test_incdedup.py pins this path equal to
     that fold on the union."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
+    from ..incdedup import dedup_increment
 
-    from ..incdedup import LEDGER_SCHEMA, dedup_increment
-
-    state = os.path.join(
-        tempfile.gettempdir(),
-        "incdedup_state_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
+    return _three_batch_ledger(
+        spark, sf_dir, dedup_increment, "incdedup_state_"
     )
-    shutil.rmtree(state, ignore_errors=True)
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    rows = []
-    for k in range(3):
-        st = dedup_increment(
-            spark,
-            docs.where((F.col("doc_id") % 3).cast("int") == k),
-            state,
-            f"b{k}",
-        )
-        rows.append(tuple(st[f] for f in (
-            "batch_seq", "batch_id", "n_in", "n_exact_dropped",
-            "n_near_dropped", "n_survivors",
-        )))
-    return spark.createDataFrame(rows, LEDGER_SCHEMA)
 
 
 # ------------------------------------- incremental simhash (verifying)
@@ -1693,32 +1705,11 @@ def x_incdedup_simhash_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     returning the committed ledger. Rows-only (filesystem state);
     semantics oracled via q_incdedup_simhash_fold and pinned equal in
     tests/test_incdedup.py."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
+    from ..incdedup import simhash_increment
 
-    from ..incdedup import LEDGER_SCHEMA, simhash_increment
-
-    state = os.path.join(
-        tempfile.gettempdir(),
-        "incdedup_sh_state_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10],
+    return _three_batch_ledger(
+        spark, sf_dir, simhash_increment, "incdedup_sh_state_"
     )
-    shutil.rmtree(state, ignore_errors=True)
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    rows = []
-    for k in range(3):
-        st = simhash_increment(
-            spark,
-            docs.where((F.col("doc_id") % 3).cast("int") == k),
-            state,
-            f"b{k}",
-        )
-        rows.append(tuple(st[f] for f in (
-            "batch_seq", "batch_id", "n_in", "n_exact_dropped",
-            "n_near_dropped", "n_survivors",
-        )))
-    return spark.createDataFrame(rows, LEDGER_SCHEMA)
 
 
 # The cap's OBSERVABILITY twin: before trusting a bucket cap you look
@@ -1727,8 +1718,9 @@ def x_incdedup_simhash_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 # drop — the curve that justified 256 on the turn corpus (BENCH.md:
 # one 62,876-doc bucket carried 2.0e9 of the 2.78e9 candidate pairs).
 # Pair counts square bucket sizes, so they go through decimal(19,0)
-# operands before the bigint cast (the q_split_scan widening) —
-# int64 wraps silently at buckets past ~4.3e9 docs otherwise.
+# operands (HUGEINT in the DuckDB oracle) before the bigint cast (the
+# q_split_scan widening) — int64 wraps silently at buckets past ~4.3e9
+# docs otherwise.
 @_q(
     "q_minhash_bucket_profile",
     f"""
@@ -1738,9 +1730,11 @@ def x_incdedup_simhash_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(floor(log2(n)) AS int) AS size_class,
            CAST(COUNT(*) AS bigint) AS n_buckets,
            CAST(SUM(n) AS bigint) AS n_entries,
-           CAST(SUM(n * (n - 1) // 2) AS bigint) AS cand_pairs,
+           CAST(SUM(CAST(n AS HUGEINT) * (n - 1) // 2) AS bigint)
+             AS cand_pairs,
            CAST(SUM(CASE WHEN n > {_MH_BUCKET_CAP}
-                         THEN n * (n - 1) // 2 ELSE 0 END) AS bigint)
+                         THEN CAST(n AS HUGEINT) * (n - 1) // 2
+                         ELSE 0 END) AS bigint)
              AS pairs_dropped_by_cap
     FROM s GROUP BY 1
     """,

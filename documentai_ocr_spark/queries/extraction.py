@@ -36,7 +36,7 @@ def _q(name: str):
 def x_extract_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-turn main-content extraction over the transcripts table
     (derived deterministically from documents). Narrow plan:
-    scan → project → ArrowEvalPython — zero shuffles."""
+    scan → project → MapInPandas — zero shuffles."""
     t = transcripts_from_documents(spark, sf_dir)
     return extract_turns(t).select(
         "conv_id", "turn_idx", "payload_kind", "text", "n_spans"

@@ -1119,7 +1119,7 @@ def q_slide_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 # run assembly WITH char offsets into the joined output) as a fully
 # SQL-expressible query — upgrading the extraction contract's evidence
 # from rows-only to a DuckDB value-hash gate. Rules come from rules.py
-# (single source of truth shared with the Arrow kernel / sqlpath.py /
+# (single source of truth shared with the Arrow kernel and
 # oracle.extract_plain) — both the Spark exprs and the DuckDB SQL
 # interpolate the SAME constants (imported at module top), so tuning a
 # threshold cannot silently decouple this query from the kernel.

@@ -152,21 +152,12 @@ HYST_EXIT = 0.35
 HYST_BRIDGE = 1
 SPAN_KIND_REGION = "region"
 
-# Java-regex whitespace class equal to Python str.strip()'s set (Java \s
-# misses \x1c-\x1f and the Unicode spaces even with (?U)). Doubled
-# backslashes survive Spark SQL string-literal unescaping inside expr().
-# \n is absent on purpose: lines are produced by split(text, '\n').
-WS_CLASS = (
-    r"[\\t\\r\\x{0B}\\f\\x{1C}-\\x{1F} \\x{85}\\x{A0}\\x{1680}"
-    r"\\x{2000}-\\x{200A}\\x{2028}\\x{2029}\\x{202F}\\x{205F}\\x{3000}]"
-)
-
 # ------------------------------------------------------- payload detection
-# EXPLICIT ASCII whitespace class, not \s: Python re's \s is Unicode-wide
-# while RE2 (pyarrow kernel) and Java regex (sqlpath rlike) use ASCII \s —
-# a Unicode-space-prefixed payload would sniff differently per engine and
-# break the per-turn text-equality invariant. The explicit class below
-# means the same thing to all three regex engines.
+# EXPLICIT ASCII whitespace class, not \s: Python re's \s (detect_payload
+# below, the oracle's sniff) is Unicode-wide while RE2 (the pyarrow
+# kernel) uses ASCII \s — a Unicode-space-prefixed payload would sniff
+# differently per engine and break the per-turn text-equality invariant.
+# The explicit class below means the same thing to both regex engines.
 _SNIFF_WS = r"[ \t\r\n\f\x0B]"
 HTML_SNIFF_RE = re.compile(rf"^{_SNIFF_WS}*<[a-zA-Z!]")    # starts like markup
 PDFISH_SNIFF_RE = re.compile(rf'^{_SNIFF_WS}*\{{"c"{_SNIFF_WS}*:')  # char box

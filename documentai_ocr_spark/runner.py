@@ -42,9 +42,6 @@ def main() -> None:
     p.add_argument("--max-buckets", type=int, default=None,
                    help="bound one run's work (batched drain)")
     p.add_argument("--rule-ver", default="v1")
-    p.add_argument("--plain-variant", default="density",
-                   choices=["density", "hysteresis"],
-                   help="plain-payload kernel (extract.PLAIN_VARIANTS)")
     args = p.parse_args()
 
     from pyspark.sql import SparkSession
@@ -82,7 +79,6 @@ def main() -> None:
         rule_ver=args.rule_ver,
         n_buckets=args.n_buckets,
         max_buckets_per_run=args.max_buckets,
-        plain_variant=args.plain_variant,
     )
     wall = time.time() - t0
 

@@ -80,16 +80,32 @@ def test_partitioning_invariance(spark, fixture_pdf):
 
 
 def test_edge_payloads(spark):
+    texts = [
+        "",
+        "   ",
+        "x",
+        "a" * 500,
+        "\n\n\n",
+        None,
+        # trim parity: str.strip() whitespace that ASCII \s misses
+        "\x1c  padded with odd whitespace content line here  \x1c",
+        "\xa0\xa0 unicode space padded content line here \u3000",
+        "Copyright 2024 Example Corp. All rights reserved.",
+        "short\nok",
+        "good content line with words here.\nnav: home | products\n"
+        "more of the decent content",
+    ]
+    n = len(texts)
     cases = pd.DataFrame(
         {
-            "conv_id": ["e"] * 6,
-            "turn_idx": pd.array([0, 1, 2, 3, 4, 5], dtype="int32"),
-            "role": ["user"] * 6,
-            "text": ["", "   ", "x", "a" * 500, "\n\n\n", None],
+            "conv_id": ["e"] * n,
+            "turn_idx": pd.array(range(n), dtype="int32"),
+            "role": ["user"] * n,
+            "text": texts,
         }
     )
     got = {r.turn_idx: r for r in extract_turns(spark.createDataFrame(cases)).collect()}
-    for t in range(6):
+    for t in range(n):
         want = extract_turn(cases["text"].iloc[t])
         assert got[t].text == want["text"]
         assert _span_tuples(got[t].spans) == _span_tuples(want["spans"])

@@ -181,38 +181,3 @@ def test_hostile_probes_through_spark_boundary(spark):
         assert [
             (s["beg"], s["end"]) for s in (x.asDict() for x in r["spans"])
         ] == [(s["beg"], s["end"]) for s in o["spans"]]
-
-
-def test_map_in_arrow_path_byte_equal(spark):
-    """extract_turns_arrow (RecordBatch boundary) must equal
-    extract_turns (pandas boundary) byte-for-byte on the full sf0.001
-    transcript set — text, spans (incl. kind and score), n_spans,
-    payload_kind, every row."""
-    from documentai_ocr_spark.extract import (
-        extract_turns,
-        extract_turns_arrow,
-    )
-    from documentai_ocr_spark.synth import transcripts_from_documents
-
-    tr = transcripts_from_documents(spark, "/root/testdata/sf0.001")
-
-    def snap(df):
-        return {
-            (r.conv_id, r.turn_idx): (
-                r.role,
-                r.payload_kind,
-                r.text,
-                [(s.beg, s.end, s.kind, s.score) for s in r.spans],
-                r.n_spans,
-            )
-            for r in df.collect()
-        }
-
-    a = snap(extract_turns(tr))
-    b = snap(extract_turns_arrow(tr))
-    assert a == b
-    assert len(a) == 6000
-    # and the hysteresis variant agrees with itself across boundaries
-    ah = snap(extract_turns(tr, plain_variant="hysteresis"))
-    bh = snap(extract_turns_arrow(tr, plain_variant="hysteresis"))
-    assert ah == bh

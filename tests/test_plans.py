@@ -31,7 +31,7 @@ def test_extraction_is_narrow(spark):
     )
     p = plan(df)
     assert "Exchange" not in p, "per-turn extraction must not shuffle"
-    assert "ArrowEvalPython" in p or "MapInPandas" in p
+    assert "MapInPandas" in p
 
 
 def test_anti_join_filter_pushed(spark):
