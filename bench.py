@@ -44,9 +44,7 @@ DO_SCALING = os.environ.get("SPARK_GRAFT_SCALING", "1") != "0"
 ONLY_SCALING = os.environ.get("SPARK_GRAFT_ONLY_SCALING", "0") == "1"
 
 BENCH_QUERIES = [
-    "q_pricing_summary",
     "q_gaps_islands",
-    "q_region_revenue",
     "q_dedup_exact",
     "q_minhash_lsh_pairs",
     "q_minhash_lsh_pairs_capped",  # the hot-bucket-capped scale path (r5)
@@ -63,8 +61,6 @@ BENCH_QUERIES = [
     "q_model_classify",         # batched model hook (singleton + broadcast)
     "q_substring_dedup",        # repeated-window span removal (corpus-wide)
     "q_epoch_shuffle",          # global rank via bucketed offsets
-    "q_asof_join",              # as-of via window carry-forward (no join)
-    "q_interval_overlap",       # binned range join (equi-join rewrite)
     "q_top_ngram_coverage",     # Gopher top-n-gram coverage
     "q_dsir_weights",           # DSIR importance weights
     "x_semdedup",               # SemDeDup within-cluster near-dup pairs
@@ -76,12 +72,6 @@ BENCH_QUERIES = [
     #   shuffle per round) is pinned by tests/test_components.py
     "q_turn_supersede",         # transcript upsert: generation + turn-key window
     "q_prefix_share",           # prompt-cache planning (conv-bounded window)
-    # round-4 additions
-    "q_scd2_intervals",         # SCD2 build: three windows on one user sort
-    "q_floor_balance",          # Lindley closed form (cumsum + running min)
-    "q_activity_bitmap",        # bit_or bitmap retention (8 B state/user)
-    "q_weighted_median",        # char-weighted median on the value-domain dim
-    "q_cube_revenue",           # full CUBE via Expand below one exchange
 ]
 
 _SF_TAG = SF_DIR.strip("/").replace("/", "_")

@@ -184,26 +184,36 @@ def batch_survivors(
     note in the module docstring)."""
     from .queries.dedup import _mh_band_df
 
-    dd = docs.select("doc_id", content_hash_col().alias("h"))
-    ek = exact_survivors(dd, acc_exact)
-    ek_docs = docs.join(ek.select("doc_id"), "doc_id")
+    ek, ek_docs = _exact_stage(docs, acc_exact)
     return near_filter(ek, _mh_band_df(ek_docs), acc_bands)
 
 
-def dedup_increment(
+def _exact_stage(
+    docs: DataFrame, acc_exact: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """Exact rule from raw (doc_id, text): (exact survivors (doc_id, h),
+    their (doc_id, text) rows — the only rows a near rule signs)."""
+    dd = docs.select("doc_id", content_hash_col().alias("h"))
+    ek = exact_survivors(dd, acc_exact)
+    return ek, docs.join(ek.select("doc_id"), "doc_id")
+
+
+def _commit_increment(
     spark: SparkSession,
     docs: DataFrame,
     state_dir: str,
     batch_id: str,
-    _crash_before_commit: bool = False,
+    sig_sub: str,
+    sig_schema: str,
+    sign,
+    near,
+    _crash_before_commit: bool,
 ) -> dict:
-    """One rolling increment: dedup ``docs`` (the NEW batch only —
-    doc_id, text) against the committed state, persist the survivors'
-    signatures, commit the batch. Idempotent: a batch_id that is
-    already committed is a no-op returning its ledger stats, so a
-    retried driver never double-appends. ``_crash_before_commit``
-    simulates dying after the data writes but before the ledger append
-    (the staging dirs are left behind, like a real crash)."""
+    """The commit machinery both rolling policies share: ledger lookup
+    (a committed batch_id returns its ledger stats), the exact rule,
+    the policy's near rule ``near(ek, sign(ek_docs), acc_sig)`` against
+    the ``sig_sub`` state table, the state writes, then the ledger row
+    LAST."""
     led = _ledger_rows(spark, state_dir)
     for r in led:
         if r["batch_id"] == batch_id:
@@ -211,21 +221,16 @@ def dedup_increment(
     seq = (max((r["batch_seq"] for r in led), default=-1)) + 1
     ids = [r["batch_id"] for r in led]
     acc_exact = _read_state(spark, state_dir, "exact", _EXACT_SCHEMA, ids)
-    acc_bands = _read_state(spark, state_dir, "signatures", _SIG_SCHEMA, ids)
+    acc_sig = _read_state(spark, state_dir, sig_sub, sig_schema, ids)
 
     n_in = docs.count()
-    sk, sk_bands = batch_survivors(docs, acc_exact, acc_bands)
-    n_exact_kept = (
-        docs.select("doc_id", content_hash_col().alias("h"))
-        .withColumn("mind", F.min("doc_id").over(Window.partitionBy("h")))
-        .where(F.col("doc_id") == F.col("mind"))
-        .join(acc_exact.select("h"), "h", "left_anti")
-        .count()
-    )
+    ek, ek_docs = _exact_stage(docs, acc_exact)
+    sk, sk_sig = near(ek, sign(ek_docs), acc_sig)
+    n_exact_kept = ek.count()
 
     sk.write.mode("overwrite").parquet(f"{state_dir}/exact/batch-{batch_id}")
-    sk_bands.write.mode("overwrite").parquet(
-        f"{state_dir}/signatures/batch-{batch_id}"
+    sk_sig.write.mode("overwrite").parquet(
+        f"{state_dir}/{sig_sub}/batch-{batch_id}"
     )
     sk.select("doc_id").write.mode("overwrite").parquet(
         f"{state_dir}/survivors/batch-{batch_id}"
@@ -256,6 +261,28 @@ def dedup_increment(
         LEDGER_SCHEMA,
     ).write.mode("append").parquet(f"{state_dir}/ledger")
     return stats
+
+
+def dedup_increment(
+    spark: SparkSession,
+    docs: DataFrame,
+    state_dir: str,
+    batch_id: str,
+    _crash_before_commit: bool = False,
+) -> dict:
+    """One rolling increment: dedup ``docs`` (the NEW batch only —
+    doc_id, text) against the committed state, persist the survivors'
+    signatures, commit the batch. Idempotent: a batch_id that is
+    already committed is a no-op returning its ledger stats, so a
+    retried driver never double-appends. ``_crash_before_commit``
+    simulates dying after the data writes but before the ledger append
+    (the staging dirs are left behind, like a real crash)."""
+    from .queries.dedup import _mh_band_df
+
+    return _commit_increment(
+        spark, docs, state_dir, batch_id, "signatures", _SIG_SCHEMA,
+        _mh_band_df, near_filter, _crash_before_commit,
+    )
 
 
 def rolling_fold(
@@ -390,51 +417,10 @@ def simhash_increment(
     with fingerprint state under ``fps/batch-<id>``."""
     from .queries.dedup import _simhash_df
 
-    led = _ledger_rows(spark, state_dir)
-    for r in led:
-        if r["batch_id"] == batch_id:
-            return {k: r[k] for k in r.asDict()}
-    seq = (max((r["batch_seq"] for r in led), default=-1)) + 1
-    ids = [r["batch_id"] for r in led]
-    acc_exact = _read_state(spark, state_dir, "exact", _EXACT_SCHEMA, ids)
-    acc_fp = _read_state(spark, state_dir, "fps", _FP_SCHEMA, ids)
-
-    n_in = docs.count()
-    dd = docs.select("doc_id", content_hash_col().alias("h"))
-    ek = exact_survivors(dd, acc_exact)
-    ek_docs = docs.join(ek.select("doc_id"), "doc_id")
-    sk, sk_fp = simhash_near_filter(ek, _simhash_df(ek_docs), acc_fp)
-    n_exact_kept = ek.count()
-
-    sk.write.mode("overwrite").parquet(f"{state_dir}/exact/batch-{batch_id}")
-    sk_fp.write.mode("overwrite").parquet(f"{state_dir}/fps/batch-{batch_id}")
-    sk.select("doc_id").write.mode("overwrite").parquet(
-        f"{state_dir}/survivors/batch-{batch_id}"
+    return _commit_increment(
+        spark, docs, state_dir, batch_id, "fps", _FP_SCHEMA,
+        _simhash_df, simhash_near_filter, _crash_before_commit,
     )
-    if _crash_before_commit:
-        return {"batch_seq": seq, "batch_id": batch_id, "committed": False}
-
-    n_surv = (
-        spark.read.schema(_SURV_SCHEMA)
-        .parquet(f"{state_dir}/survivors/batch-{batch_id}")
-        .count()
-    )
-    stats = {
-        "batch_seq": seq,
-        "batch_id": batch_id,
-        "n_in": n_in,
-        "n_exact_dropped": n_in - n_exact_kept,
-        "n_near_dropped": n_exact_kept - n_surv,
-        "n_survivors": n_surv,
-    }
-    spark.createDataFrame(
-        [tuple(stats[f] for f in (
-            "batch_seq", "batch_id", "n_in", "n_exact_dropped",
-            "n_near_dropped", "n_survivors",
-        ))],
-        LEDGER_SCHEMA,
-    ).write.mode("append").parquet(f"{state_dir}/ledger")
-    return stats
 
 
 def simhash_rolling_fold(

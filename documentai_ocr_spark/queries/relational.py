@@ -1,8 +1,14 @@
-"""Relational operator parity queries (SURVEY.md §2.2-§2.6).
+"""Relational operator parity queries (SURVEY.md §2.2-§2.6) and the
+transcript/turn operators of the extraction pipeline.
 
 Each query re-expresses one dataflow operator family of the reference
 (file:line cited per query) as idiomatic DataFrame code, with a DuckDB
-oracle. Numeric discipline for cross-engine equality:
+oracle. Entries stay only while they anchor a §2 coverage row or serve
+the pipeline (extraction gates, turn hygiene, conversation assembly,
+the streaming twins' batch references); warehouse reports over the
+harness tables with neither role do not belong here (the TPC-H report
+shapes are gone; the event-warehouse shapes over ``events`` are the
+next to weigh). Numeric discipline for cross-engine equality:
 
   * integer aggregates are cast to bigint on BOTH sides (DuckDB sums
     int → hugeint, Spark → bigint);
@@ -29,7 +35,7 @@ from ..rules import (
     HYST_EXIT as _R_HYST_EXIT,
     MIN_LINE_LEN as _R_MIN_LINE_LEN,
 )
-from .util import inrow_pairs_expr, load, spread, topk_by_count
+from .util import load, spread, topk_by_count
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -46,42 +52,6 @@ def _q(name: str, sql: str | None = None):
 
 
 # ------------------------------------------------------------------ scans+agg
-@_q(
-    "q_pricing_summary",
-    """
-    SELECT l_returnflag, l_linestatus,
-           CAST(SUM(l_quantity) AS double)                       AS sum_qty,
-           ROUND(SUM(l_extendedprice), 2)                        AS sum_price,
-           ROUND(SUM(l_extendedprice * (1 - l_discount)), 2)     AS sum_disc_price,
-           ROUND(CAST(SUM(l_quantity) AS double) / COUNT(*), 6)  AS avg_qty,
-           CAST(COUNT(*) AS bigint)                              AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-01 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H-Q1-shaped scan→filter→agg: the pushdown/pruning smoke test.
-    Filter + 6-column projection must reach the parquet scan (the
-    reference's predicate-before-expensive-work, pdf/tools.py:42)."""
-    li = load(spark, sf_dir, "lineitem")
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("1998-09-01 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").cast("double").alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price"),
-            F.round(
-                F.sum("l_quantity").cast("double") / F.count(F.lit(1)), 6
-            ).alias("avg_qty"),
-            F.count(F.lit(1)).cast("long").alias("count_order"),
-        )
-    )
-
-
 @_q(
     "q_charfreq",
     """
@@ -3870,178 +3840,6 @@ def q_event_topusers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------- shipping-priority top-K
-# The TPC-H Q3 shape: selective dim filter → fact join → grouped
-# revenue → global top-K. The top-10 runs on the ROUNDED revenue with
-# the o_orderkey tiebreak (the q_pmi_collocations discipline) so rank
-# is identical across engines, and Spark plans it as
-# TakeOrderedAndProject — per-partition top-K before one tiny driver
-# merge, never a global sort.
-_SHIP_SEG = "BUILDING"
-_SHIP_DATE = "1995-03-15"
-_SHIP_TOPK = 10
-
-
-@_q(
-    "q_ship_priority",
-    f"""
-    SELECT o.o_orderkey, o.o_orderdate,
-           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2)
-             AS revenue,
-           CAST(COUNT(*) AS bigint) AS n_lines
-    FROM customer c
-    JOIN orders o ON c.c_custkey = o.o_custkey
-    JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-    WHERE c.c_mktsegment = '{_SHIP_SEG}'
-      AND o.o_orderdate < DATE '{_SHIP_DATE}'
-      AND l.l_shipdate > DATE '{_SHIP_DATE}'
-    GROUP BY o.o_orderkey, o.o_orderdate
-    ORDER BY revenue DESC, o.o_orderkey
-    LIMIT {_SHIP_TOPK}
-    """,
-)
-def q_ship_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-{_SHIP_TOPK} unshipped-revenue orders in the {_SHIP_SEG}
-    segment as of {_SHIP_DATE} — the classic selective-dim → fact →
-    top-K report. Both date predicates and the segment filter push to
-    the scans; customer broadcast; the only wide exchange is the
-    (orderkey) revenue agg, pre-combined map-side."""
-    c = (
-        load(spark, sf_dir, "customer")
-        .where(F.col("c_mktsegment") == _SHIP_SEG)
-        .select("c_custkey")
-    )
-    o = (
-        load(spark, sf_dir, "orders")
-        .where(F.col("o_orderdate") < F.lit(_SHIP_DATE).cast("date"))
-        .select("o_orderkey", "o_custkey", "o_orderdate")
-    )
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .where(F.col("l_shipdate") > F.lit(_SHIP_DATE).cast("date"))
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-    )
-    rev = (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(li, li.l_orderkey == o.o_orderkey)
-        .groupBy("o_orderkey", "o_orderdate")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))),
-                2,
-            ).alias("revenue"),
-            F.count(F.lit(1)).cast("long").alias("n_lines"),
-        )
-    )
-    return rev.orderBy(F.desc("revenue"), F.asc("o_orderkey")).limit(
-        _SHIP_TOPK
-    )
-
-
-# ------------------------------------------------- late-shipment semi-join
-# The TPC-H Q4 shape: EXISTS → LEFT SEMI join. An order counts once per
-# priority bucket if ANY of its lines shipped more than _LATE_DAYS
-# after the order date — the semi join never duplicates an order
-# however many lines qualify, which a plain inner join + distinct
-# would pay a dedup shuffle to fix.
-_LATE_DAYS = 90
-
-
-@_q(
-    "q_late_orders",
-    f"""
-    SELECT o.o_orderpriority,
-           CAST(COUNT(*) AS bigint) AS n_late
-    FROM orders o
-    WHERE EXISTS (
-      SELECT 1 FROM lineitem l
-      WHERE l.l_orderkey = o.o_orderkey
-        AND l.l_shipdate > o.o_orderdate + INTERVAL {_LATE_DAYS} DAY)
-    GROUP BY o.o_orderpriority
-    """,
-)
-def q_late_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Orders with at least one line shipped > {_LATE_DAYS} days after
-    order date, counted per priority — the operational-lateness
-    rollup. LEFT SEMI join on orderkey with the date comparison as the
-    join filter; output is O(priorities)."""
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority"
-    )
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    late = o.join(
-        li,
-        (li.l_orderkey == o.o_orderkey)
-        & (li.l_shipdate > F.date_add(o.o_orderdate, _LATE_DAYS)),
-        "left_semi",
-    )
-    return late.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).cast("long").alias("n_late")
-    )
-
-
-# ------------------------------------------------- large-volume customers
-# The TPC-H Q18 shape: a HAVING prune on the fact aggregate BEFORE any
-# dim joins back — the order of operations that matters at scale: the
-# quantity rollup shrinks the fact table to the handful of qualifying
-# orders first, and only those rows touch customer/orders again.
-_BIGQTY_MIN = 250
-_BIGQTY_TOPK = 20
-
-
-@_q(
-    "q_big_spenders",
-    f"""
-    WITH big AS (
-      SELECT l_orderkey, CAST(SUM(l_quantity) AS bigint) AS total_qty
-      FROM lineitem
-      GROUP BY l_orderkey
-      HAVING SUM(l_quantity) > {_BIGQTY_MIN})
-    SELECT c.c_name, o.o_orderkey, o.o_orderdate,
-           ROUND(o.o_totalprice, 2) AS o_totalprice, big.total_qty
-    FROM big
-    JOIN orders o ON o.o_orderkey = big.l_orderkey
-    JOIN customer c ON c.c_custkey = o.o_custkey
-    ORDER BY big.total_qty DESC, o.o_orderkey
-    LIMIT {_BIGQTY_TOPK}
-    """,
-)
-def q_big_spenders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-{_BIGQTY_TOPK} orders by total line quantity above
-    {_BIGQTY_MIN}, with the customer — TPC-H Q18. The HAVING prune
-    runs on the one fact aggregate (map-side combined) so the joins
-    back to orders/customer see only qualifying orderkeys; the top-K
-    is TakeOrderedAndProject on the exact integer quantity with the
-    orderkey tiebreak."""
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("_q"))
-        .where(F.col("_q") > _BIGQTY_MIN)
-        .select(
-            "l_orderkey", F.col("_q").cast("long").alias("total_qty")
-        )
-    )
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
-    )
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    out = (
-        big.join(o, big.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .select(
-            "c_name",
-            "o_orderkey",
-            "o_orderdate",
-            F.round("o_totalprice", 2).alias("o_totalprice"),
-            "total_qty",
-        )
-    )
-    return out.orderBy(F.desc("total_qty"), F.asc("o_orderkey")).limit(
-        _BIGQTY_TOPK
-    )
-
-
 # ---------------------------------------------------------- DAU / WAU
 # Rolling engagement: daily active users beside the trailing-7-day
 # weekly actives and the DAU/WAU stickiness ratio — the
@@ -4214,1464 +4012,6 @@ def q_user_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------------ brand revenue share
-# The last un-exercised driver table: part (a 200-row product dim —
-# always broadcast). Q14-flavored: revenue and line share per brand,
-# the category-mix report. The share is exact integer milli over LINE
-# COUNTS (never a ratio of two rounded revenues); the corpus total is
-# the classic 1-row broadcast dim (the q_bm25 pattern).
-
-
-@_q(
-    "q_brand_revenue",
-    """
-    WITH j AS (SELECT p.p_brand,
-                      l.l_extendedprice * (1 - l.l_discount) AS rev
-               FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey),
-    b AS (SELECT p_brand, ROUND(SUM(rev), 2) AS revenue,
-                 CAST(COUNT(*) AS bigint) AS n_lines
-          FROM j GROUP BY p_brand),
-    t AS (SELECT CAST(SUM(n_lines) AS bigint) AS total FROM b)
-    SELECT b.p_brand, b.revenue, b.n_lines,
-           CAST(1000 * b.n_lines // t.total AS bigint) AS share_milli
-    FROM b, t
-    """,
-)
-def q_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue, line count and exact integer-milli line share per part
-    brand. part broadcasts onto the lineitem scan; one (brand) partial
-    agg is the only exchange; the total is a 1-row broadcast dim."""
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_extendedprice", "l_discount"
-    )
-    p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    b = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .groupBy("p_brand")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))),
-                2,
-            ).alias("revenue"),
-            F.count(F.lit(1)).cast("long").alias("n_lines"),
-        )
-    )
-    t = b.agg(F.sum("n_lines").cast("long").alias("total"))
-    return b.crossJoin(F.broadcast(t)).select(
-        "p_brand",
-        "revenue",
-        "n_lines",
-        F.expr("1000 * n_lines div total").cast("long").alias("share_milli"),
-    )
-
-
-# ---------------------------------------------------------- RFM segments
-# Classic customer segmentation: per customer, Recency (days since
-# last order vs the corpus's latest order), Frequency (order count)
-# and Monetary (lifetime spend in exact cents), each quintile-scored
-# 1-5 with the deterministic rank formula q = least(5, 1 +
-# (5·(rank−1)) div n) over (metric, custkey) order — ties and
-# boundaries exact integer arithmetic, never ntile's engine-specific
-# bucketing. Ranks are GLOBAL (the customer dim has no group key), so
-# they run through util.two_phase_ranks with a constant group: the
-# fact windows partition by (_g, _vbucket) — at 10^9 customers no
-# task ever sorts the whole dim. Monetary per order is
-# floor(o_totalprice·100) — identical on identical doubles — summed
-# as bigint, so the rank key is exact.
-
-
-@_q(
-    "q_rfm_segments",
-    """
-    WITH mx AS (SELECT CAST(MAX(epoch_ms(o_orderdate)) AS bigint) AS m
-                FROM orders),
-    c AS (SELECT o_custkey,
-                 CAST((mx.m - MAX(epoch_ms(o_orderdate))) // 86400000
-                      AS bigint) AS recency_days,
-                 CAST(COUNT(*) AS bigint) AS frequency,
-                 CAST(SUM(CAST(floor(o_totalprice * 100) AS bigint))
-                      AS bigint) AS monetary_cents
-          FROM orders, mx GROUP BY o_custkey, mx.m),
-    n AS (SELECT CAST(COUNT(*) AS bigint) AS n FROM c),
-    r AS (SELECT c.*,
-                 row_number() OVER (ORDER BY -recency_days, o_custkey)
-                   AS rr,
-                 row_number() OVER (ORDER BY frequency, o_custkey) AS rf,
-                 row_number() OVER (ORDER BY monetary_cents, o_custkey)
-                   AS rm
-          FROM c)
-    SELECT o_custkey, recency_days, frequency, monetary_cents,
-           CAST(LEAST(5, 1 + (5 * (rr - 1)) // n.n) AS int) AS r_q,
-           CAST(LEAST(5, 1 + (5 * (rf - 1)) // n.n) AS int) AS f_q,
-           CAST(LEAST(5, 1 + (5 * (rm - 1)) // n.n) AS int) AS m_q
-    FROM r, n
-    """,
-)
-def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-customer RFM quintile scores (r_q high = recently active,
-    f_q high = frequent, m_q high = big spender) beside the raw
-    metrics.
-
-    Scale: one (custkey) partial agg builds the metric dim; each of
-    the three quintile passes is a two_phase_ranks run over that dim
-    (value-bucketed — no global sort); the corpus-latest-date and
-    row-count dims are 1-row broadcasts."""
-    from .util import two_phase_ranks
-
-    o = load(spark, sf_dir, "orders").select(
-        "o_custkey", "o_orderdate", "o_totalprice"
-    )
-    ms = F.unix_millis(F.col("o_orderdate").cast("timestamp"))
-    mx = o.agg(F.max(ms).cast("long").alias("m"))
-    c = (
-        o.crossJoin(F.broadcast(mx))
-        .groupBy("o_custkey")
-        .agg(
-            F.expr(
-                "cast((min(m) - max(unix_millis(cast(o_orderdate as"
-                " timestamp)))) div 86400000 as bigint)"
-            ).alias("recency_days"),
-            F.count(F.lit(1)).cast("long").alias("frequency"),
-            F.sum(
-                F.floor(F.col("o_totalprice") * 100).cast("long")
-            )
-            .cast("long")
-            .alias("monetary_cents"),
-        )
-        .withColumn("_g", F.lit(0))
-        .withColumn("neg_recency", -F.col("recency_days"))
-    )
-    n = c.groupBy("_g").agg(F.count(F.lit(1)).alias("n"))
-
-    # rank each metric over a SLIM (custkey, metric) projection and
-    # join the rank columns back — chaining the passes would make each
-    # pass's eager min/max bucket-sizing job re-execute every earlier
-    # pass's rank join (reviewed: 3× re-execution of pass 1 at scale)
-    def _rank(metric: str, name: str):
-        slim = c.select("_g", "o_custkey", metric)
-        return two_phase_ranks(
-            slim, ["_g"], metric, ["o_custkey"], rank_name=name
-        ).select("o_custkey", name)
-
-    out = (
-        c.join(_rank("neg_recency", "rr"), "o_custkey")
-        .join(_rank("frequency", "rf"), "o_custkey")
-        .join(_rank("monetary_cents", "rm"), "o_custkey")
-        .join(F.broadcast(n), "_g")
-    )
-
-    def _q5(rank_col: str):
-        return (
-            F.least(
-                F.lit(5), 1 + F.expr(f"(5 * ({rank_col} - 1)) div n")
-            )
-            .cast("int")
-        )
-
-    return out.select(
-        "o_custkey",
-        "recency_days",
-        "frequency",
-        "monetary_cents",
-        _q5("rr").alias("r_q"),
-        _q5("rf").alias("f_q"),
-        _q5("rm").alias("m_q"),
-    )
-
-
-# ---------------------------------------------------------- basket pairs
-# Association mining: part pairs co-ordered in the same order, with
-# exact support counts and lift = P(ab)/(P(a)·P(b)) — the classic
-# market-basket report, and for a curation pipeline the template for
-# any "X co-occurs with Y more than chance" question. Pairs expand
-# IN-ROW from each order's sorted distinct part list (bounded by
-# basket size — never a corpus self-join, the q_source_jsd pattern);
-# the part marginals are an O(parts) broadcast dim; lift is ONE
-# rounded expression over four exact integers.
-_BASKET_MIN = 3  # pair support floor — sub-floor pairs never leave the agg
-
-
-@_q(
-    "q_basket_pairs",
-    f"""
-    WITH e AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    n AS (SELECT CAST(COUNT(DISTINCT l_orderkey) AS bigint) AS n_orders
-          FROM e),
-    m AS (SELECT l_partkey AS p, CAST(COUNT(*) AS bigint) AS n_p
-          FROM e GROUP BY 1),
-    pr AS (SELECT a.l_partkey AS pa, b.l_partkey AS pb,
-                  CAST(COUNT(*) AS bigint) AS n_ab
-           FROM e a JOIN e b ON a.l_orderkey = b.l_orderkey
-                            AND a.l_partkey < b.l_partkey
-           GROUP BY 1, 2
-           HAVING COUNT(*) >= {_BASKET_MIN})
-    SELECT pr.pa AS part_a, pr.pb AS part_b, pr.n_ab,
-           ma.n_p AS n_a, mb.n_p AS n_b,
-           ROUND(CAST(pr.n_ab AS double) * n.n_orders
-                 / (ma.n_p * mb.n_p), 6) AS lift
-    FROM pr JOIN m ma ON ma.p = pr.pa JOIN m mb ON mb.p = pr.pb, n
-    """,
-)
-def q_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Co-ordered part pairs at support ≥ {_BASKET_MIN}: exact pair and
-    marginal counts plus lift (>1 = attract, <1 = repel), rounded
-    once. Baskets sort their distinct parts so pa < pb
-    deterministically on both engines.
-
-    Scale: one (orderkey) basket agg, in-row pair explode bounded by
-    basket size (HAVING floor keeps rare pairs inside the partial
-    agg), O(parts) marginal dim broadcast back, 1-row order-count
-    dim."""
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    b = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("parts")
-    )
-    n = b.agg(F.count(F.lit(1)).cast("long").alias("n_orders"))
-    m = b.select(F.explode("parts").alias("p")).groupBy("p").agg(
-        F.count(F.lit(1)).cast("long").alias("n_p")
-    )
-    pr = (
-        b.where(F.size("parts") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    inrow_pairs_expr(
-                        "parts",
-                        lambda i, j: (
-                            f"element_at(parts, {i}) as pa,"
-                            f" element_at(parts, {j}) as pb"
-                        ),
-                    )
-                )
-            ).alias("x")
-        )
-        .select("x.*")
-        .groupBy("pa", "pb")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_ab"))
-        .where(F.col("n_ab") >= _BASKET_MIN)
-    )
-    ma = m.select(F.col("p").alias("pa"), F.col("n_p").alias("n_a"))
-    mb = m.select(F.col("p").alias("pb"), F.col("n_p").alias("n_b"))
-    return (
-        pr.join(F.broadcast(ma), "pa")
-        .join(F.broadcast(mb), "pb")
-        .crossJoin(F.broadcast(n))
-        .select(
-            F.col("pa").alias("part_a"),
-            F.col("pb").alias("part_b"),
-            "n_ab",
-            "n_a",
-            "n_b",
-            F.round(
-                F.col("n_ab").cast("double")
-                * F.col("n_orders")
-                / (F.col("n_a") * F.col("n_b")),
-                6,
-            ).alias("lift"),
-        )
-    )
-
-
-# ---------------------------------------------------------- top supplier
-# The TPC-H Q15 shape: an aggregate-of-aggregate argmax WITH TIES —
-# revenue per supplier, then exactly the suppliers achieving the
-# maximum (a LIMIT 1 would silently drop ties; the 1-row broadcast max
-# dim keeps them all, the tie-safe argmax pattern).
-
-
-@_q(
-    "q_top_supplier",
-    """
-    WITH r AS (SELECT l_suppkey,
-                      ROUND(SUM(l_extendedprice * (1 - l_discount)), 2)
-                        AS revenue
-               FROM lineitem GROUP BY l_suppkey),
-    mx AS (SELECT MAX(revenue) AS m FROM r)
-    SELECT s.s_suppkey, s.s_name, r.revenue
-    FROM r JOIN supplier s ON s.s_suppkey = r.l_suppkey, mx
-    WHERE r.revenue = mx.m
-    """,
-)
-def q_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The supplier(s) with maximum lineitem revenue — ties kept. The
-    comparison runs on the ROUNDED per-supplier revenue (one rounded
-    double per supplier, identical on both engines), so tie detection
-    can never straddle engines. One fact exchange (supplier rollup),
-    a 1-row broadcast max dim, and the 10-row supplier dim broadcast
-    back."""
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    r = li.groupBy("l_suppkey").agg(
-        F.round(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-        ).alias("revenue")
-    )
-    mx = r.agg(F.max("revenue").alias("m"))
-    s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        r.crossJoin(F.broadcast(mx))
-        .where(F.col("revenue") == F.col("m"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .select("s_suppkey", "s_name", "revenue")
-    )
-
-
-# ------------------------------------------------- important part shares
-# The TPC-H Q11 shape: a HAVING prune against a FRACTION OF A GLOBAL
-# aggregate — per-part stocked quantity vs 1.2x the average part's
-# share. Every number in the comparison is an exact integer
-# (l_quantity is integral, summed as bigint; the threshold is the
-# cross-multiplied 10*qty*n_parts > 12*total), so the prune can never
-# straddle engines, and the global total is the classic 1-row
-# broadcast dim — the fact table is aggregated ONCE and the filter is
-# a broadcast-nested-loop against two scalars.
-
-
-@_q(
-    "q_part_value_share",
-    """
-    WITH pq AS (SELECT l_partkey,
-                       CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT)
-                         AS qty
-                FROM lineitem GROUP BY l_partkey),
-    t AS (SELECT CAST(SUM(qty) AS BIGINT) AS total,
-                 CAST(COUNT(*) AS BIGINT) AS n_parts
-          FROM pq)
-    SELECT pq.l_partkey AS p_partkey, pq.qty,
-           CAST(1000000 * pq.qty // t.total AS BIGINT) AS share_micro
-    FROM pq, t
-    WHERE 10 * pq.qty * t.n_parts > 12 * t.total
-    """,
-)
-def q_part_value_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Parts holding more than 1.2x the average part's share of total
-    shipped quantity (TPC-H Q11's fraction-of-global HAVING). One fact
-    exchange (the part rollup); the total/n_parts dim is a single
-    broadcast row; share_micro is exact integer floor division."""
-    li = load(spark, sf_dir, "lineitem").select("l_partkey", "l_quantity")
-    pq = li.groupBy("l_partkey").agg(
-        F.sum(F.col("l_quantity").cast("long")).cast("long").alias("qty")
-    )
-    t = pq.agg(
-        F.sum("qty").cast("long").alias("total"),
-        F.count(F.lit(1)).cast("long").alias("n_parts"),
-    )
-    return (
-        pq.crossJoin(F.broadcast(t))
-        .where(10 * F.col("qty") * F.col("n_parts") > 12 * F.col("total"))
-        .select(
-            F.col("l_partkey").alias("p_partkey"),
-            "qty",
-            F.expr("CAST(1000000 * qty div total AS BIGINT)").alias(
-                "share_micro"
-            ),
-        )
-    )
-
-
-# ------------------------------------------- customer order distribution
-# The TPC-H Q13 shape: distribution-of-counts — how many customers
-# placed exactly k (non-urgent) orders, ZERO included. The scale plan
-# aggregates orders down to a per-customer count dim FIRST (partial
-# agg on the fact side), then LEFT-joins customer to that dim and
-# coalesces the missing rows to 0 — never the row-exploding
-# customer x orders join the naive formulation runs.
-
-
-@_q(
-    "q_cust_order_dist",
-    """
-    WITH co AS (SELECT c.c_custkey,
-                       CAST(COUNT(o.o_orderkey) AS BIGINT) AS n_orders
-                FROM customer c
-                LEFT JOIN orders o
-                  ON o.o_custkey = c.c_custkey
-                 AND o.o_orderpriority <> '1-URGENT'
-                GROUP BY c.c_custkey)
-    SELECT n_orders, CAST(COUNT(*) AS BIGINT) AS n_customers
-    FROM co GROUP BY n_orders
-    """,
-)
-def q_cust_order_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Histogram of customers by their non-urgent order count, zero
-    bucket included (TPC-H Q13). Orders pre-aggregate to an
-    O(customers) count dim before the customer join; the second
-    aggregate groups on the count itself."""
-    o = load(spark, sf_dir, "orders").where(
-        F.col("o_orderpriority") != "1-URGENT"
-    )
-    counts = o.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders")
-    )
-    c = load(spark, sf_dir, "customer").select("c_custkey")
-    co = c.join(
-        counts, c.c_custkey == counts.o_custkey, "left"
-    ).select(F.coalesce("n_orders", F.lit(0)).cast("long").alias("n_orders"))
-    return co.groupBy("n_orders").agg(
-        F.count(F.lit(1)).cast("long").alias("n_customers")
-    )
-
-
-# ------------------------------------------------------- idle rich money
-# The TPC-H Q22 shape: an anti join against a filtered fact PLUS a
-# scalar-subquery filter (balance above the positive-balance average).
-# The average is held as exact integer cents with the comparison
-# cross-multiplied (bal_cents * n > sum_cents), so the cut can never
-# straddle engines; the urgent-customer set is the anti-join probe.
-
-
-@_q(
-    "q_idle_customers",
-    """
-    WITH cents AS (SELECT c_custkey, c_mktsegment,
-                          CAST(ROUND(c_acctbal * 100) AS BIGINT)
-                            AS bal_cents
-                   FROM customer WHERE c_acctbal > 0.0),
-    avgd AS (SELECT CAST(SUM(bal_cents) AS BIGINT) AS s,
-                    CAST(COUNT(*) AS BIGINT) AS n
-             FROM cents)
-    SELECT c_mktsegment,
-           CAST(COUNT(*) AS BIGINT) AS n_cust,
-           CAST(SUM(bal_cents) AS BIGINT) AS bal_cents_sum
-    FROM cents c, avgd
-    WHERE c.bal_cents * avgd.n > avgd.s
-      AND NOT EXISTS (SELECT 1 FROM orders o
-                      WHERE o.o_custkey = c.c_custkey
-                        AND o.o_orderpriority = '1-URGENT')
-    GROUP BY c_mktsegment
-    """,
-)
-def q_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Above-average-balance customers who never placed an urgent
-    order, rolled up per market segment (TPC-H Q22). The
-    positive-balance average is a 1-row broadcast dim compared in
-    exact integer cents; urgent custkeys probe as a LEFT ANTI join."""
-    c = load(spark, sf_dir, "customer").where(F.col("c_acctbal") > 0.0)
-    cents = c.select(
-        "c_custkey",
-        "c_mktsegment",
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("bal_cents"),
-    )
-    avgd = cents.agg(
-        F.sum("bal_cents").cast("long").alias("s"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    )
-    urgent = (
-        load(spark, sf_dir, "orders")
-        .where(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_custkey")
-    )
-    rich = cents.crossJoin(F.broadcast(avgd)).where(
-        F.col("bal_cents") * F.col("n") > F.col("s")
-    )
-    idle = rich.join(
-        urgent, rich.c_custkey == urgent.o_custkey, "left_anti"
-    )
-    return idle.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).cast("long").alias("n_cust"),
-        F.sum("bal_cents").cast("long").alias("bal_cents_sum"),
-    )
-
-
-# ------------------------------------------------- brand supplier spread
-# The TPC-H Q16 shape: DISTINCT-count per group after a dim join, with
-# an excluded-supplier list applied as an anti probe BEFORE the
-# expensive distinct — the exclusion dim (low-balance suppliers; the
-# testdata generator draws balances in [500, 10000] so a <1000 cut is
-# the non-empty analogue of Q16's complaint blocklist) broadcasts, the
-# part dim broadcasts, and the only corpus exchange is the
-# (brand, suppkey) dedup that the distinct count needs anyway.
-
-
-@_q(
-    "q_brand_suppliers",
-    """
-    SELECT p.p_brand,
-           CAST(COUNT(DISTINCT l.l_suppkey) AS BIGINT) AS n_suppliers
-    FROM lineitem l
-    JOIN part p ON l.l_partkey = p.p_partkey
-    WHERE NOT EXISTS (SELECT 1 FROM supplier s
-                      WHERE s.s_suppkey = l.l_suppkey
-                        AND s.s_acctbal < 1000.0)
-    GROUP BY p.p_brand
-    """,
-)
-def q_brand_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct suppliers serving each brand, excluding suppliers in
-    the low-balance blocklist (TPC-H Q16's supplier-cardinality
-    report). Blocklist and part dims broadcast; the distinct count is
-    the single shuffle."""
-    excl = (
-        load(spark, sf_dir, "supplier")
-        .where(F.col("s_acctbal") < 1000.0)
-        .select("s_suppkey")
-    )
-    li = load(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    p = load(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    kept = li.join(
-        F.broadcast(excl), li.l_suppkey == excl.s_suppkey, "left_anti"
-    )
-    j = kept.join(F.broadcast(p), kept.l_partkey == p.p_partkey)
-    return j.groupBy("p_brand").agg(
-        F.count_distinct("l_suppkey").cast("long").alias("n_suppliers")
-    )
-
-
-# ------------------------------------------------- local-supplier volume
-# The TPC-H Q5 shape: revenue kept inside a region — lines where the
-# ordering customer and the supplier share a nation, rolled up per
-# nation for one region + one order-date year. The scale layout:
-# nation/supplier/customer are broadcast dims ATTACHED to their facts
-# (orders gains c_nationkey, lineitem gains s_nationkey), the single
-# wide exchange is the lineitem⋈orders orderkey join with the
-# nation-equality as a join predicate (never a post-join filter over
-# the full cross of nations), and the rollup is O(nations-in-region).
-_LSV_REGION = 3  # EUROPE — has suppliers at every SF
-_LSV_LO, _LSV_HI = "1996-01-01", "1997-01-01"
-
-
-@_q(
-    "q_local_supplier_volume",
-    f"""
-    WITH n AS (SELECT n_nationkey, n_name FROM nation
-               WHERE n_regionkey = {_LSV_REGION}),
-    s AS (SELECT s_suppkey, s_nationkey FROM supplier
-          JOIN n ON s_nationkey = n_nationkey),
-    c AS (SELECT c_custkey, c_nationkey FROM customer
-          JOIN n ON c_nationkey = n_nationkey),
-    o AS (SELECT o_orderkey, c.c_nationkey FROM orders
-          JOIN c ON o_custkey = c.c_custkey
-          WHERE o_orderdate >= TIMESTAMP '{_LSV_LO}'
-            AND o_orderdate < TIMESTAMP '{_LSV_HI}')
-    SELECT nn.n_name,
-           ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2)
-             AS revenue,
-           CAST(COUNT(*) AS bigint) AS n_lines
-    FROM lineitem l
-    JOIN s ON l.l_suppkey = s.s_suppkey
-    JOIN o ON l.l_orderkey = o.o_orderkey
-          AND o.c_nationkey = s.s_nationkey
-    JOIN n nn ON nn.n_nationkey = s.s_nationkey
-    GROUP BY nn.n_name
-    """,
-)
-def q_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-nation revenue where customer and supplier nations match,
-    region {_LSV_REGION}, orders in [{_LSV_LO}, {_LSV_HI}) — the
-    classic "kept-local" volume report. Dims broadcast; one
-    orderkey fact-fact exchange with the nation equality inside the
-    join condition; O(5) rollup."""
-    n = (
-        load(spark, sf_dir, "nation")
-        .where(F.col("n_regionkey") == _LSV_REGION)
-        .select("n_nationkey", "n_name")
-    )
-    s = (
-        load(spark, sf_dir, "supplier")
-        .join(F.broadcast(n.select("n_nationkey")), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey", "s_nationkey")
-    )
-    c = (
-        load(spark, sf_dir, "customer")
-        .join(F.broadcast(n.select("n_nationkey")), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("c_custkey", "c_nationkey")
-    )
-    o = (
-        load(spark, sf_dir, "orders")
-        .where(
-            (F.col("o_orderdate") >= F.lit(_LSV_LO).cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit(_LSV_HI).cast("timestamp"))
-        )
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .select("o_orderkey", "c_nationkey")
-    )
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_suppkey", "l_extendedprice", "l_discount")
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-    )
-    j = li.join(
-        o,
-        (li.l_orderkey == o.o_orderkey)
-        & (o.c_nationkey == li.s_nationkey),
-    )
-    agg = j.groupBy("s_nationkey").agg(
-        F.round(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-        ).alias("revenue"),
-        F.count(F.lit(1)).cast("long").alias("n_lines"),
-    )
-    return agg.join(
-        F.broadcast(n), agg.s_nationkey == n.n_nationkey
-    ).select("n_name", "revenue", "n_lines")
-
-
-# ------------------------------------------------- forecast revenue delta
-# The TPC-H Q6 shape: a pure scan→filter→global-sum with ZERO joins —
-# the predicate-pushdown benchmark. The one global group makes a
-# double sum order-sensitive at scale, so revenue is computed in
-# EXACT integer e4 units (cents × discount-percent, both from
-# floor(x·100) which is identical on identical doubles) and summed in
-# bigint: associative, engine-independent, no rounding step at all.
-_FCR_LO, _FCR_HI = "1997-01-01", "1998-01-01"
-_FCR_DLO, _FCR_DHI = 0.05, 0.07
-_FCR_QTY = 24
-
-
-@_q(
-    "q_forecast_revenue",
-    f"""
-    SELECT CAST(SUM(CAST(floor(l_extendedprice * 100) AS bigint)
-                    * CAST(floor(l_discount * 100) AS bigint))
-                AS bigint) AS revenue_e4,
-           CAST(COUNT(*) AS bigint) AS n_lines
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '{_FCR_LO}'
-      AND l_shipdate < TIMESTAMP '{_FCR_HI}'
-      AND l_discount BETWEEN {_FCR_DLO} AND {_FCR_DHI}
-      AND l_quantity < {_FCR_QTY}
-    """,
-)
-def q_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Would-be revenue if discounts in [{_FCR_DLO}, {_FCR_DHI}] on
-    small orders (< {_FCR_QTY} units) shipped in {_FCR_LO[:4]} had
-    been dropped: SUM(price · discount) in exact e4 units. All four
-    predicates push to the parquet scan; no shuffle beyond the final
-    2-column partial-agg collect."""
-    li = load(spark, sf_dir, "lineitem")
-    f = li.where(
-        (F.col("l_shipdate") >= F.lit(_FCR_LO).cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit(_FCR_HI).cast("timestamp"))
-        & (F.col("l_discount") >= _FCR_DLO)
-        & (F.col("l_discount") <= _FCR_DHI)
-        & (F.col("l_quantity") < _FCR_QTY)
-    )
-    return f.agg(
-        F.sum(
-            F.floor(F.col("l_extendedprice") * 100).cast("long")
-            * F.floor(F.col("l_discount") * 100).cast("long")
-        )
-        .cast("long")
-        .alias("revenue_e4"),
-        F.count(F.lit(1)).cast("long").alias("n_lines"),
-    )
-
-
-# ------------------------------------------------- two-nation trade volume
-# The TPC-H Q7 shape: shipping volume between one nation PAIR, both
-# directions kept as separate rows, per ship-year. Same fact-layout
-# rule as Q5: supplier/customer nation names attach to their facts via
-# broadcast dims filtered to the two nations FIRST (so the fact join's
-# inputs are already pruned to ~2/25ths), the orderkey join is the one
-# wide exchange, and supp≠cust is a join-side predicate.
-_TNV_A, _TNV_B = 3, 8  # both have suppliers at every SF
-
-
-@_q(
-    "q_two_nation_volume",
-    f"""
-    WITH s AS (SELECT s_suppkey, n_name AS supp_nation FROM supplier
-               JOIN nation ON s_nationkey = n_nationkey
-               WHERE n_nationkey IN ({_TNV_A}, {_TNV_B})),
-    c AS (SELECT c_custkey, n_name AS cust_nation FROM customer
-          JOIN nation ON c_nationkey = n_nationkey
-          WHERE n_nationkey IN ({_TNV_A}, {_TNV_B})),
-    o AS (SELECT o_orderkey, cust_nation FROM orders
-          JOIN c ON o_custkey = c_custkey)
-    SELECT supp_nation, cust_nation,
-           CAST(year(l_shipdate) AS int) AS l_year,
-           ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-           CAST(COUNT(*) AS bigint) AS n_lines
-    FROM lineitem l
-    JOIN s ON l.l_suppkey = s.s_suppkey
-    JOIN o ON l.l_orderkey = o.o_orderkey
-    WHERE supp_nation <> cust_nation
-    GROUP BY 1, 2, 3
-    """,
-)
-def q_two_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue shipped between NATION_{_TNV_A} and NATION_{_TNV_B}
-    (each direction its own row) per ship-year. Broadcast-pruned dims
-    on both facts, one orderkey exchange, O(2·years) rollup."""
-    nat = load(spark, sf_dir, "nation").where(
-        F.col("n_nationkey").isin(_TNV_A, _TNV_B)
-    )
-    s = (
-        load(spark, sf_dir, "supplier")
-        .join(F.broadcast(nat), F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey", F.col("n_name").alias("supp_nation"))
-    )
-    c = (
-        load(spark, sf_dir, "customer")
-        .join(F.broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("c_custkey", F.col("n_name").alias("cust_nation"))
-    )
-    o = (
-        load(spark, sf_dir, "orders")
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .select("o_orderkey", "cust_nation")
-    )
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_suppkey", "l_shipdate", "l_extendedprice", "l_discount")
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-    )
-    j = li.join(
-        o,
-        (li.l_orderkey == o.o_orderkey)
-        & (F.col("supp_nation") != F.col("cust_nation")),
-    )
-    return (
-        j.groupBy(
-            "supp_nation",
-            "cust_nation",
-            F.year("l_shipdate").cast("int").alias("l_year"),
-        )
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
-            F.count(F.lit(1)).cast("long").alias("n_lines"),
-        )
-    )
-
-
-# ------------------------------------------------- market-share by year
-# The TPC-H Q8 shape: one nation's share of a region's market for one
-# part type, per order-year. Share is a ratio of two EXACT bigint e4
-# sums computed in ONE conditional aggregation pass (never two scans,
-# never a join of two aggregates), so the only float step is the
-# single published division — identical IEEE on both engines.
-_MKS_REGION = 1  # AMERICA customers form the market
-_MKS_NATION = 3  # NATION_3 suppliers' share — suppliers at every SF
-_MKS_TYPE = "ECONOMY"
-
-
-@_q(
-    "q_market_share",
-    f"""
-    WITH nn AS (SELECT n_nationkey FROM nation
-                WHERE n_regionkey = {_MKS_REGION}),
-    c AS (SELECT c_custkey FROM customer
-          JOIN nn ON c_nationkey = n_nationkey),
-    o AS (SELECT o_orderkey, CAST(year(o_orderdate) AS int) AS o_year
-          FROM orders JOIN c ON o_custkey = c.c_custkey),
-    p AS (SELECT p_partkey FROM part WHERE p_type = '{_MKS_TYPE}'),
-    f AS (SELECT o.o_year,
-                 CAST(floor(l.l_extendedprice * 100) AS bigint)
-                   * (100 - CAST(floor(l.l_discount * 100) AS bigint))
-                   AS rev_e4,
-                 CASE WHEN s.s_nationkey = {_MKS_NATION} THEN 1 ELSE 0
-                   END AS is_nat
-          FROM lineitem l
-          JOIN p ON l.l_partkey = p.p_partkey
-          JOIN o ON l.l_orderkey = o.o_orderkey
-          JOIN supplier s ON l.l_suppkey = s.s_suppkey)
-    SELECT o_year,
-           CAST(SUM(rev_e4) AS bigint) AS total_e4,
-           CAST(SUM(is_nat * rev_e4) AS bigint) AS nation_e4,
-           ROUND(CAST(SUM(is_nat * rev_e4) AS double) / SUM(rev_e4), 6)
-             AS share
-    FROM f GROUP BY o_year
-    """,
-)
-def q_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NATION_{_MKS_NATION}'s share of the region-{_MKS_REGION}
-    customers' {_MKS_TYPE}-part market, per order-year — exact e4
-    numerator/denominator from one pass, share as the single rounded
-    division. Part/customer/supplier dims broadcast; the orderkey
-    fact-fact join is the one wide exchange; O(years) rollup."""
-    nn = (
-        load(spark, sf_dir, "nation")
-        .where(F.col("n_regionkey") == _MKS_REGION)
-        .select("n_nationkey")
-    )
-    c = (
-        load(spark, sf_dir, "customer")
-        .join(F.broadcast(nn), F.col("c_nationkey") == F.col("n_nationkey"))
-        .select("c_custkey")
-    )
-    o = (
-        load(spark, sf_dir, "orders")
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .select("o_orderkey", F.year("o_orderdate").cast("int").alias("o_year"))
-    )
-    p = (
-        load(spark, sf_dir, "part")
-        .where(F.col("p_type") == _MKS_TYPE)
-        .select("p_partkey")
-    )
-    s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    rev_e4 = F.floor(F.col("l_extendedprice") * 100).cast("long") * (
-        100 - F.floor(F.col("l_discount") * 100).cast("long")
-    )
-    f = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .select(
-            "o_year",
-            rev_e4.alias("rev_e4"),
-            F.when(F.col("s_nationkey") == _MKS_NATION, F.lit(1))
-            .otherwise(F.lit(0))
-            .alias("is_nat"),
-        )
-    )
-    return f.groupBy("o_year").agg(
-        F.sum("rev_e4").cast("long").alias("total_e4"),
-        F.sum(F.col("is_nat") * F.col("rev_e4"))
-        .cast("long")
-        .alias("nation_e4"),
-        F.round(
-            F.sum(F.col("is_nat") * F.col("rev_e4")).cast("double")
-            / F.sum("rev_e4"),
-            6,
-        ).alias("share"),
-    )
-
-
-# ------------------------------------------------- product-line profit
-# The TPC-H Q9 shape: profit per (supplier nation, order year) over a
-# name-matched part family, where cost stands in for ps_supplycost as
-# 10% of retail price per unit. Profit is exact e4 integer throughout:
-# price·(1−disc) = cents·(100−pct) and cost = retail_cents·qty·10,
-# both bigint — the grouped difference sums associatively with no
-# float accumulation anywhere.
-_PPF_LIKE = "widget"
-
-
-@_q(
-    "q_part_profit",
-    f"""
-    WITH p AS (SELECT p_partkey,
-                      CAST(floor(p_retailprice * 100) AS bigint)
-                        AS retail_cents
-               FROM part WHERE p_name LIKE '%{_PPF_LIKE}%'),
-    o AS (SELECT o_orderkey, CAST(year(o_orderdate) AS int) AS o_year
-          FROM orders)
-    SELECT n.n_name, o.o_year,
-           CAST(SUM(CAST(floor(l.l_extendedprice * 100) AS bigint)
-                    * (100 - CAST(floor(l.l_discount * 100) AS bigint))
-                    - p.retail_cents * CAST(l.l_quantity AS bigint) * 10)
-                AS bigint) AS profit_e4,
-           CAST(COUNT(*) AS bigint) AS n_lines
-    FROM lineitem l
-    JOIN p ON l.l_partkey = p.p_partkey
-    JOIN supplier s ON l.l_suppkey = s.s_suppkey
-    JOIN nation n ON s.s_nationkey = n.n_nationkey
-    JOIN o ON l.l_orderkey = o.o_orderkey
-    GROUP BY 1, 2
-    """,
-)
-def q_part_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-integer profit (revenue e4 minus 10%-of-retail unit cost
-    e4) per supplier nation and order year for '%{_PPF_LIKE}%' parts.
-    Part (name-pruned), supplier and nation dims broadcast onto the
-    lineitem scan; orders joins on orderkey — the one wide exchange;
-    O(nations × years) rollup."""
-    p = (
-        load(spark, sf_dir, "part")
-        .where(F.col("p_name").like(f"%{_PPF_LIKE}%"))
-        .select(
-            "p_partkey",
-            F.floor(F.col("p_retailprice") * 100)
-            .cast("long")
-            .alias("retail_cents"),
-        )
-    )
-    s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderkey", F.year("o_orderdate").cast("int").alias("o_year")
-    )
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey",
-        "l_quantity", "l_extendedprice", "l_discount",
-    )
-    profit_e4 = F.floor(F.col("l_extendedprice") * 100).cast("long") * (
-        100 - F.floor(F.col("l_discount") * 100).cast("long")
-    ) - F.col("retail_cents") * F.col("l_quantity").cast("long") * 10
-    j = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == n.n_nationkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-    )
-    return j.groupBy("n_name", "o_year").agg(
-        F.sum(profit_e4).cast("long").alias("profit_e4"),
-        F.count(F.lit(1)).cast("long").alias("n_lines"),
-    )
-
-
-# ------------------------------------------------- returned-item report
-# The TPC-H Q10 shape: top-K customers by revenue they returned in one
-# quarter. The custkey rollup happens BEFORE the customer dim joins
-# back (the q_big_spenders prune-early rule), the top-20 runs on the
-# ROUNDED revenue with the custkey tiebreak and plans as
-# TakeOrderedAndProject — per-partition heaps, never a global sort.
-_RTC_LO, _RTC_HI = "1996-07-01", "1996-10-01"
-_RTC_TOPK = 20
-
-
-@_q(
-    "q_returned_customers",
-    f"""
-    WITH rev AS (
-      SELECT o.o_custkey,
-             ROUND(SUM(l.l_extendedprice * (1 - l.l_discount)), 2)
-               AS revenue,
-             CAST(COUNT(*) AS bigint) AS n_lines
-      FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-      WHERE l.l_returnflag = 'R'
-        AND o.o_orderdate >= TIMESTAMP '{_RTC_LO}'
-        AND o.o_orderdate < TIMESTAMP '{_RTC_HI}'
-      GROUP BY o.o_custkey)
-    SELECT r.o_custkey AS c_custkey, c.c_name, n.n_name,
-           r.revenue, r.n_lines
-    FROM rev r
-    JOIN customer c ON r.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    ORDER BY r.revenue DESC, r.o_custkey
-    LIMIT {_RTC_TOPK}
-    """,
-)
-def q_returned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-{_RTC_TOPK} customers by returned ('R') revenue for orders
-    placed in [{_RTC_LO}, {_RTC_HI}) — the returned-item reporting
-    query. Both filters push to their scans; the orderkey join is the
-    one wide exchange; customer/nation broadcast onto the O(custkeys)
-    rollup; top-K is TakeOrderedAndProject."""
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .where(F.col("l_returnflag") == "R")
-        .select("l_orderkey", "l_extendedprice", "l_discount")
-    )
-    o = (
-        load(spark, sf_dir, "orders")
-        .where(
-            (F.col("o_orderdate") >= F.lit(_RTC_LO).cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit(_RTC_HI).cast("timestamp"))
-        )
-        .select("o_orderkey", "o_custkey")
-    )
-    rev = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("o_custkey")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue"),
-            F.count(F.lit(1)).cast("long").alias("n_lines"),
-        )
-    )
-    c = load(spark, sf_dir, "customer").select(
-        "c_custkey", "c_name", "c_nationkey"
-    )
-    n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    out = (
-        rev.join(F.broadcast(c), rev.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .select(
-            F.col("o_custkey").alias("c_custkey"),
-            "c_name", "n_name", "revenue", "n_lines",
-        )
-    )
-    return out.orderBy(F.desc("revenue"), F.asc("c_custkey")).limit(_RTC_TOPK)
-
-
-# ------------------------------------------------- small-quantity revenue
-# The TPC-H Q17 shape: lines whose quantity sits below 20% of their
-# part's own average. The per-part average joins back as an O(parts)
-# aggregate dim, and the threshold comparison is EXACT integer
-# arithmetic — qty < 0.2·(sum/n) ⟺ 5·qty·n < sum — so a line exactly
-# at 20% of average can never straddle engines. The brand prune runs
-# BEFORE the per-part aggregate (broadcast semi), so at 100× the
-# average is computed only over the brand's own lines, never the
-# whole fact table.
-_SQR_BRAND = "Brand#1"
-
-
-@_q(
-    "q_small_qty_revenue",
-    f"""
-    WITH pb AS (SELECT p_partkey FROM part
-                WHERE p_brand = '{_SQR_BRAND}'),
-    f AS (SELECT l.l_partkey, CAST(l.l_quantity AS bigint) AS qty,
-                 l.l_extendedprice
-          FROM lineitem l JOIN pb ON l.l_partkey = pb.p_partkey),
-    a AS (SELECT l_partkey, CAST(SUM(qty) AS bigint) AS sum_qty,
-                 CAST(COUNT(*) AS bigint) AS n
-          FROM f GROUP BY 1)
-    SELECT CAST(COUNT(*) AS bigint) AS n_small_lines,
-           CAST(SUM(CAST(floor(f.l_extendedprice * 100) AS bigint))
-                AS bigint) AS revenue_cents,
-           ROUND(CAST(SUM(CAST(floor(f.l_extendedprice * 100) AS bigint))
-                      AS double) / 700.0, 2) AS avg_yearly
-    FROM f JOIN a ON f.l_partkey = a.l_partkey
-    WHERE 5 * f.qty * a.n < a.sum_qty
-    """,
-)
-def q_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Revenue sitting in {_SQR_BRAND} lines below 20% of their part's
-    average quantity (exact-integer threshold 5·qty·n < sum_qty),
-    published as exact cents plus the 7-year-average convention.
-    Brand dim broadcast-prunes the fact FIRST; one (partkey) exchange
-    builds the average dim; the dim broadcasts back."""
-    pb = (
-        load(spark, sf_dir, "part")
-        .where(F.col("p_brand") == _SQR_BRAND)
-        .select("p_partkey")
-    )
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice"
-    )
-    f = li.join(F.broadcast(pb), li.l_partkey == pb.p_partkey).select(
-        "l_partkey",
-        F.col("l_quantity").cast("long").alias("qty"),
-        "l_extendedprice",
-    )
-    a = f.groupBy("l_partkey").agg(
-        F.sum("qty").cast("long").alias("sum_qty"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    )
-    small = f.join(F.broadcast(a), "l_partkey").where(
-        5 * F.col("qty") * F.col("n") < F.col("sum_qty")
-    )
-    cents = F.sum(
-        F.floor(F.col("l_extendedprice") * 100).cast("long")
-    ).cast("long")
-    return small.agg(
-        F.count(F.lit(1)).cast("long").alias("n_small_lines"),
-        cents.alias("revenue_cents"),
-        F.round(cents.cast("double") / 700.0, 2).alias("avg_yearly"),
-    )
-
-
-# ------------------------------------------------- banded-arm revenue
-# The TPC-H Q19 shape: an OR of brand×size×quantity conjunctions. The
-# arms are disjoint by construction (distinct brands), so each line
-# lands in at most one arm and the rollup is exact per arm. Revenue is
-# exact e4 (cents·(100−pct)) — no rounding anywhere. The implied
-# disjunction envelope (brand ∈ {{arms}}, size ≤ 15, qty ≤ 30) is
-# applied explicitly on the Spark side so the part dim is pruned
-# before broadcast and the quantity bound pushes to the fact scan —
-# the rewrite Catalyst cannot derive from the CASE itself.
-_BAND_ARMS = (
-    ("Brand#1", 5, 1, 11),
-    ("Brand#2", 10, 10, 20),
-    ("Brand#3", 15, 20, 30),
-)
-
-
-def _band_case_sql() -> str:
-    whens = "\n".join(
-        f"WHEN p.p_brand = '{b}' AND p.p_size BETWEEN 1 AND {smax}"
-        f" AND l.l_quantity BETWEEN {qlo} AND {qhi} THEN {i + 1}"
-        for i, (b, smax, qlo, qhi) in enumerate(_BAND_ARMS)
-    )
-    return f"CASE {whens} END"
-
-
-@_q(
-    "q_band_revenue",
-    f"""
-    WITH f AS (
-      SELECT {_band_case_sql()} AS arm,
-             CAST(floor(l.l_extendedprice * 100) AS bigint)
-               * (100 - CAST(floor(l.l_discount * 100) AS bigint))
-               AS rev_e4
-      FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey)
-    SELECT CAST(arm AS int) AS arm,
-           CAST(COUNT(*) AS bigint) AS n_lines,
-           CAST(SUM(rev_e4) AS bigint) AS revenue_e4
-    FROM f WHERE arm IS NOT NULL GROUP BY arm
-    """,
-)
-def q_band_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-e4 revenue per disjunctive brand/size/quantity arm — the
-    OR-of-ANDs predicate family. Part pruned to the arm brands and
-    size envelope before broadcast; quantity envelope pushed to the
-    lineitem scan; O(arms) rollup."""
-    brands = [b for b, *_ in _BAND_ARMS]
-    size_max = max(s for _, s, _, _ in _BAND_ARMS)
-    qty_lo = min(q for *_, q, _ in _BAND_ARMS)
-    qty_hi = max(q for *_, _, q in _BAND_ARMS)
-    p = (
-        load(spark, sf_dir, "part")
-        .where(
-            F.col("p_brand").isin(brands)
-            & (F.col("p_size") >= 1)
-            & (F.col("p_size") <= size_max)
-        )
-        .select("p_partkey", "p_brand", "p_size")
-    )
-    li = (
-        load(spark, sf_dir, "lineitem")
-        .where(
-            (F.col("l_quantity") >= qty_lo) & (F.col("l_quantity") <= qty_hi)
-        )
-        .select("l_partkey", "l_quantity", "l_extendedprice", "l_discount")
-    )
-    arm = F.lit(None).cast("int")
-    for i, (b, smax, qlo, qhi) in reversed(list(enumerate(_BAND_ARMS))):
-        arm = F.when(
-            (F.col("p_brand") == b)
-            & (F.col("p_size") >= 1)
-            & (F.col("p_size") <= smax)
-            & (F.col("l_quantity") >= qlo)
-            & (F.col("l_quantity") <= qhi),
-            F.lit(i + 1),
-        ).otherwise(arm)
-    rev_e4 = F.floor(F.col("l_extendedprice") * 100).cast("long") * (
-        100 - F.floor(F.col("l_discount") * 100).cast("long")
-    )
-    f = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .select(arm.cast("int").alias("arm"), rev_e4.alias("rev_e4"))
-        .where(F.col("arm").isNotNull())
-    )
-    return f.groupBy("arm").agg(
-        F.count(F.lit(1)).cast("long").alias("n_lines"),
-        F.sum("rev_e4").cast("long").alias("revenue_e4"),
-    )
-
-
-# ------------------------------------------------- sole-blame supplier
-# The TPC-H Q21 shape: the DOUBLE correlated subquery — suppliers who
-# were the ONLY late shipper in a multi-supplier order (EXISTS another
-# supplier in the order, NOT EXISTS another LATE supplier). The naive
-# plan is two extra self-joins of the fact table against itself; the
-# scale rewrite is ONE pass: after the orderkey join, a per-order
-# aggregate computes n_suppliers, n_late_suppliers and the (unique,
-# when n_late_suppliers == 1) blamed suppkey via a conditional MAX —
-# both EXISTS predicates become WHERE clauses on O(orders) aggregate
-# rows instead of O(lines²) probe pairs. The oracle runs the LITERAL
-# EXISTS / NOT EXISTS form, so the gate proves the rewrite equivalent.
-_BLAME_DAYS = 105
-_BLAME_STATUS = "F"
-_BLAME_TOPK = 20
-
-
-@_q(
-    "q_blame_supplier",
-    f"""
-    SELECT s.s_suppkey, s.s_name,
-           CAST(COUNT(DISTINCT l1.l_orderkey) AS bigint) AS n_orders
-    FROM supplier s
-    JOIN lineitem l1 ON l1.l_suppkey = s.s_suppkey
-    JOIN orders o ON o.o_orderkey = l1.l_orderkey
-    WHERE o.o_orderstatus = '{_BLAME_STATUS}'
-      AND l1.l_shipdate > o.o_orderdate + INTERVAL {_BLAME_DAYS} DAY
-      AND EXISTS (
-        SELECT 1 FROM lineitem l2
-        WHERE l2.l_orderkey = l1.l_orderkey
-          AND l2.l_suppkey <> l1.l_suppkey)
-      AND NOT EXISTS (
-        SELECT 1 FROM lineitem l3
-        WHERE l3.l_orderkey = l1.l_orderkey
-          AND l3.l_suppkey <> l1.l_suppkey
-          AND l3.l_shipdate > o.o_orderdate + INTERVAL {_BLAME_DAYS} DAY)
-    GROUP BY s.s_suppkey, s.s_name
-    ORDER BY n_orders DESC, s.s_suppkey
-    LIMIT {_BLAME_TOPK}
-    """,
-)
-def q_blame_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Suppliers who were the sole >{_BLAME_DAYS}-day-late shipper in a
-    multi-supplier '{_BLAME_STATUS}'-status order, counted per supplier
-    (distinct orders), top-{_BLAME_TOPK} — TPC-H Q21's double
-    correlated EXISTS / NOT EXISTS, rewritten as one per-order
-    aggregate. The distinct counts are deliberately NOT countDistinct
-    (whose multi-distinct plan Expands the fact rows ×2): a two-level
-    aggregate — (orderkey, suppkey) dedup-with-max(late) first, then
-    the per-order rollup — is the same answer in one un-duplicated
-    pass, and BOTH levels' grouping keys contain orderkey, so at scale
-    (orders too big to broadcast → sort-merge join partitioned by
-    orderkey) neither aggregate re-exchanges the fact table at all.
-    The blame rollup is O(qualifying orders) → O(suppliers); supplier
-    dim broadcast; top-K is TakeOrderedAndProject on (n_orders DESC,
-    s_suppkey). The two self-joins the literal form implies never
-    happen on the Spark side — the oracle runs them, making the gate
-    an equivalence proof for the rewrite."""
-    o = (
-        load(spark, sf_dir, "orders")
-        .where(F.col("o_orderstatus") == _BLAME_STATUS)
-        .select("o_orderkey", "o_orderdate")
-    )
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_shipdate"
-    )
-    j = li.join(o, li.l_orderkey == o.o_orderkey)
-    late = F.col("l_shipdate") > F.date_add(F.col("o_orderdate"), _BLAME_DAYS)
-    per_supp_order = j.groupBy("l_orderkey", "l_suppkey").agg(
-        F.max(late).alias("_late")
-    )
-    per_order = (
-        per_supp_order.groupBy("l_orderkey")
-        .agg(
-            F.count(F.lit(1)).alias("_ns"),
-            F.sum(F.col("_late").cast("int")).alias("_nl"),
-            F.max(F.when(F.col("_late"), F.col("l_suppkey"))).alias(
-                "_blamed"
-            ),
-        )
-        .where((F.col("_ns") > 1) & (F.col("_nl") == 1))
-    )
-    per_supp = per_order.groupBy("_blamed").agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders")
-    )
-    s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        per_supp.join(
-            F.broadcast(s), per_supp._blamed == s.s_suppkey
-        )
-        .select("s_suppkey", "s_name", "n_orders")
-        .orderBy(F.desc("n_orders"), F.asc("s_suppkey"))
-        .limit(_BLAME_TOPK)
-    )
-
-
-# ------------------------------------------------- shipclass priority mix
-# The TPC-H Q12 shape: a conditional-sum (pivot-style) matrix computed
-# after a join whose RANGE predicate references BOTH sides — the
-# lateness band (l_shipdate within (orderdate+LO, orderdate+HI]) can
-# never push to either scan, so it rides the join as a residual
-# filter; the CASE/SUM pair turns what would be two passes (one per
-# priority class) into one. Output is O(returnflag classes).
-_SHIPCLASS_LO = 60
-_SHIPCLASS_HI = 120
-_SHIPCLASS_HIGH = ("1-URGENT", "2-HIGH")
-
-
-@_q(
-    "q_priority_shipclass",
-    f"""
-    SELECT l.l_returnflag AS shipclass,
-           CAST(SUM(CASE WHEN o.o_orderpriority IN
-                         ('{_SHIPCLASS_HIGH[0]}', '{_SHIPCLASS_HIGH[1]}')
-                    THEN 1 ELSE 0 END) AS bigint) AS high_line_count,
-           CAST(SUM(CASE WHEN o.o_orderpriority IN
-                         ('{_SHIPCLASS_HIGH[0]}', '{_SHIPCLASS_HIGH[1]}')
-                    THEN 0 ELSE 1 END) AS bigint) AS low_line_count
-    FROM lineitem l
-    JOIN orders o ON l.l_orderkey = o.o_orderkey
-    WHERE l.l_shipdate > o.o_orderdate + INTERVAL {_SHIPCLASS_LO} DAY
-      AND l.l_shipdate <= o.o_orderdate + INTERVAL {_SHIPCLASS_HI} DAY
-    GROUP BY l.l_returnflag
-    """,
-)
-def q_priority_shipclass(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lines shipped {_SHIPCLASS_LO}–{_SHIPCLASS_HI} days after their
-    order date, split per returnflag class into high- vs low-priority
-    counts — TPC-H Q12's CASE-inside-SUM matrix. One orderkey join
-    (the band predicate is a join residual — it references both
-    tables, so there is nothing to push), then a map-side-combined
-    aggregate straight to O(classes) rows; priorities classify in-row,
-    never as a second join or a pivot shuffle."""
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_returnflag", "l_shipdate"
-    )
-    o = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_orderdate", "o_orderpriority"
-    )
-    j = li.join(
-        o,
-        (li.l_orderkey == o.o_orderkey)
-        & (
-            F.col("l_shipdate")
-            > F.date_add(F.col("o_orderdate"), _SHIPCLASS_LO)
-        )
-        & (
-            F.col("l_shipdate")
-            <= F.date_add(F.col("o_orderdate"), _SHIPCLASS_HI)
-        ),
-    )
-    is_high = F.col("o_orderpriority").isin(*_SHIPCLASS_HIGH)
-    return (
-        j.select("l_returnflag", is_high.alias("_hi"))
-        .groupBy(F.col("l_returnflag").alias("shipclass"))
-        .agg(
-            F.sum(F.when(F.col("_hi"), 1).otherwise(0))
-            .cast("long")
-            .alias("high_line_count"),
-            F.sum(F.when(F.col("_hi"), 0).otherwise(1))
-            .cast("long")
-            .alias("low_line_count"),
-        )
-    )
-
-
-# --------------------------------------------- min-cost supplier (Q2 shape)
-# TPC-H Q2's correlated-MIN argmin: for every part, the cheapest
-# supplier within one region, cost measured as the supplier's best
-# historical line charge in EXACT e4 integers (cents × remaining
-# discount-percent — the q_forecast_revenue rule), so the per-part
-# minimum and the tie comparison can never straddle engines. The
-# ORACLE runs the literal correlated scalar-subquery form (cost_e4 =
-# (SELECT MIN ... WHERE same part)); the engine rewrite is a single
-# min(struct(cost, suppkey)) aggregate — argmin and smallest-suppkey
-# tie-break in one buffer, no self-join, no join-back.
-_MCS_REGION = 3
-
-
-@_q(
-    "q_min_cost_supplier",
-    f"""
-    WITH rs AS (SELECT s_suppkey, s_name FROM supplier
-                JOIN nation ON s_nationkey = n_nationkey
-                WHERE n_regionkey = {_MCS_REGION}),
-    pc AS (SELECT l_partkey, l_suppkey,
-                  MIN(CAST(floor(l_extendedprice * 100) AS bigint)
-                      * (100 - CAST(floor(l_discount * 100) AS bigint)))
-                    AS cost_e4
-           FROM lineitem JOIN rs ON l_suppkey = rs.s_suppkey
-           GROUP BY 1, 2),
-    n AS (SELECT l_partkey, CAST(COUNT(*) AS bigint) AS n_suppliers
-          FROM pc GROUP BY 1),
-    win AS (SELECT pc.l_partkey, MIN(pc.l_suppkey) AS s_suppkey,
-                   pc.cost_e4
-            FROM pc
-            WHERE pc.cost_e4 = (SELECT MIN(p2.cost_e4) FROM pc p2
-                                WHERE p2.l_partkey = pc.l_partkey)
-            GROUP BY 1, 3)
-    SELECT w.l_partkey AS p_partkey, w.s_suppkey, rs.s_name,
-           CAST(w.cost_e4 AS bigint) AS cost_e4, n.n_suppliers
-    FROM win w
-    JOIN rs ON w.s_suppkey = rs.s_suppkey
-    JOIN n ON w.l_partkey = n.l_partkey
-    """,
-)
-def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per part: the cheapest region-{_MCS_REGION} supplier (best
-    historical line charge, exact e4), smallest suppkey on cost ties,
-    and how many region suppliers quoted the part at all.
-
-    Scale — suppliers prune to the region BEFORE touching the fact
-    (broadcast semi shape), ONE fact exchange builds the (part, supp)
-    cost table map-side-combined, the per-part argmin + tie-break is a
-    single min(struct) aggregate over that pre-aggregated table (the
-    oracle's correlated subquery and join-back never materialize), and
-    the name attaches via the same broadcast dim."""
-    nat = load(spark, sf_dir, "nation").where(
-        F.col("n_regionkey") == _MCS_REGION
-    )
-    rs = (
-        load(spark, sf_dir, "supplier")
-        .join(
-            F.broadcast(nat.select("n_nationkey")),
-            F.col("s_nationkey") == F.col("n_nationkey"),
-        )
-        .select("s_suppkey", "s_name")
-    )
-    charge = F.floor(F.col("l_extendedprice") * 100).cast("long") * (
-        100 - F.floor(F.col("l_discount") * 100).cast("long")
-    )
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", charge.alias("_c")
-    )
-    pc = (
-        li.join(
-            F.broadcast(rs.select("s_suppkey")),
-            F.col("l_suppkey") == F.col("s_suppkey"),
-        )
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(F.min("_c").alias("cost_e4"))
-    )
-    per = pc.groupBy("l_partkey").agg(
-        F.min(F.struct("cost_e4", "l_suppkey")).alias("_b"),
-        F.count(F.lit(1)).cast("long").alias("n_suppliers"),
-    )
-    out = per.select(
-        F.col("l_partkey").alias("p_partkey"),
-        F.col("_b.l_suppkey").alias("s_suppkey"),
-        F.col("_b.cost_e4").cast("long").alias("cost_e4"),
-        "n_suppliers",
-    )
-    return out.join(F.broadcast(rs), "s_suppkey").select(
-        "p_partkey", "s_suppkey", "s_name", "cost_e4", "n_suppliers"
-    )
-
-
-# -------------------------------------------- dominant suppliers (Q20 shape)
-# TPC-H Q20's availability threshold ("more than half of what moved"):
-# suppliers who, inside a ship-date window, shipped STRICTLY more than
-# 50% of some part's total shipped quantity. Quantities are whole
-# doubles at every SF, so CAST AS bigint is exact in both engines and
-# the cut is the cross-multiplied integer 2·qty > tot — no division,
-# no rounding, no straddle. The ORACLE runs the literal correlated
-# scalar-subquery form; the engine joins the per-part total dim back
-# to the (part, supp) rollup.
-_DOM_LO, _DOM_HI = "1996-01-01", "1998-01-01"
-
-
-@_q(
-    "q_dominant_suppliers",
-    f"""
-    WITH ps AS (SELECT l_partkey, l_suppkey,
-                       CAST(SUM(CAST(l_quantity AS bigint)) AS bigint)
-                         AS qty
-                FROM lineitem
-                WHERE l_shipdate >= TIMESTAMP '{_DOM_LO}'
-                  AND l_shipdate < TIMESTAMP '{_DOM_HI}'
-                GROUP BY 1, 2),
-    dom AS (SELECT ps.l_suppkey, ps.qty,
-                   (SELECT CAST(SUM(p2.qty) AS bigint) FROM ps p2
-                    WHERE p2.l_partkey = ps.l_partkey) AS tot
-            FROM ps)
-    SELECT s.s_suppkey, s.s_name,
-           CAST(COUNT(*) AS bigint) AS n_dominated,
-           CAST(MAX(1000 * qty // tot) AS bigint) AS max_share_milli
-    FROM dom JOIN supplier s ON dom.l_suppkey = s.s_suppkey
-    WHERE 2 * qty > tot
-    GROUP BY 1, 2
-    """,
-)
-def q_dominant_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Suppliers that shipped strictly more than half of at least one
-    part's total quantity inside [{_DOM_LO}, {_DOM_HI}): the count of
-    parts they dominate and their largest integer-milli share.
-
-    Scale — the date window pushes to the fact scan; ONE fact exchange
-    builds the (part, supp) qty rollup map-side-combined; every later
-    stage (per-part totals, the totals join, the supplier rollup) runs
-    over aggregate-sized tables, and the oracle's correlated subquery
-    becomes a plain equi-join against the O(parts) total dim. The
-    strict > keeps an exact 50/50 split OUT on both engines."""
-    li = load(spark, sf_dir, "lineitem").where(
-        (F.col("l_shipdate") >= F.lit(_DOM_LO).cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit(_DOM_HI).cast("timestamp"))
-    )
-    ps = (
-        li.select(
-            "l_partkey",
-            "l_suppkey",
-            F.col("l_quantity").cast("long").alias("_q"),
-        )
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(F.sum("_q").cast("long").alias("qty"))
-    )
-    tot = ps.groupBy("l_partkey").agg(
-        F.sum("qty").cast("long").alias("tot")
-    )
-    dom = ps.join(tot, "l_partkey").where(
-        2 * F.col("qty") > F.col("tot")
-    )
-    s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    agg = dom.groupBy("l_suppkey").agg(
-        F.count(F.lit(1)).cast("long").alias("n_dominated"),
-        F.max(F.expr("1000 * qty div tot")).cast("long").alias(
-            "max_share_milli"
-        ),
-    )
-    return agg.join(
-        F.broadcast(s), agg.l_suppkey == s.s_suppkey
-    ).select("s_suppkey", "s_name", "n_dominated", "max_share_milli")
-
-
 # --------------------------------------------------------- event gaps
 # Inter-arrival profile: per event type, a histogram of the gap (in
 # ms) between each event and the SAME USER's previous event (any
@@ -5731,56 +4071,6 @@ def q_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n"),
         F.min("gap").cast("long").alias("min_gap_ms"),
         F.max("gap").cast("long").alias("max_gap_ms"),
-    )
-
-
-# ----------------------------------------------------- reorder latency
-# Customer reorder cadence WITHOUT a window: for a customer with n≥2
-# orders, the mean gap between consecutive orders is EXACTLY
-# (last − first) / (n − 1) — the interior terms telescope away — so
-# the whole report is one map-side-combined groupBy(custkey) carrying
-# (count, min, max) and an exact integer-milli division. No per-
-# customer sort, no lag, no second pass; the oracle states the same
-# telescoped form.
-@_q(
-    "q_reorder_latency",
-    """
-    SELECT o_custkey,
-           CAST(COUNT(*) AS bigint) AS n_orders,
-           CAST((epoch_ms(MAX(o_orderdate)) - epoch_ms(MIN(o_orderdate)))
-                // 86400000 AS bigint) AS span_days,
-           CAST(1000 * ((epoch_ms(MAX(o_orderdate))
-                         - epoch_ms(MIN(o_orderdate))) // 86400000)
-                // (COUNT(*) - 1) AS bigint) AS mean_gap_milli_days
-    FROM orders
-    GROUP BY o_custkey
-    HAVING COUNT(*) >= 2
-    """,
-)
-def q_reorder_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per repeat customer (≥2 orders): order count, first→last span
-    in whole days, and the exact mean reorder gap in integer
-    milli-days — span·1000 // (n−1), the telescoped identity that
-    needs no per-customer ordering at all."""
-    o = load(spark, sf_dir, "orders").select(
-        "o_custkey",
-        F.expr(
-            "cast(unix_millis(cast(o_orderdate as timestamp)) as bigint)"
-        ).alias("ms"),
-    )
-    agg = o.groupBy("o_custkey").agg(
-        F.count(F.lit(1)).cast("long").alias("n_orders"),
-        F.min("ms").alias("_lo"),
-        F.max("ms").alias("_hi"),
-    )
-    span = F.expr("(_hi - _lo) div 86400000")
-    return agg.where(F.col("n_orders") >= 2).select(
-        "o_custkey",
-        "n_orders",
-        span.cast("long").alias("span_days"),
-        F.expr("1000 * ((_hi - _lo) div 86400000) div (n_orders - 1)")
-        .cast("long")
-        .alias("mean_gap_milli_days"),
     )
 
 
@@ -6330,91 +4620,6 @@ def q_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------- Benford screen
-# The classic fabricated-numbers audit: the first significant digit
-# of order totals against Benford's law. Digits come from the CENTS
-# integer (cast(floor(o_totalprice * 100)) — floor() is the same
-# IEEE op in both engines, where a bare double→bigint cast would
-# truncate in Spark but round in DuckDB), so the digit extraction is
-# pure integer/string arithmetic. The Benford expectation log10(1 +
-# 1/d) is irrational — it enters as the FIXED milli constant table
-# [301, 176, 125, 97, 79, 67, 58, 51, 46] indexed in-row (no join),
-# and every published column is an exact integer: per-digit counts,
-# 1000·c div n shares, |share − benford| deviations, and the corpus
-# L1 total replicated per row. Scale: one 9-bucket map-side-combined
-# aggregation is the only exchange; the 1-row total dim joins back
-# as a scalar broadcast (the q_key_skew pattern).
-@_q(
-    "q_benford",
-    """
-    WITH c AS (SELECT CAST(substr(CAST(CAST(FLOOR(o_totalprice * 100)
-                             AS bigint) AS varchar), 1, 1) AS bigint)
-                        AS digit,
-                      CAST(COUNT(*) AS bigint) AS n
-               FROM orders
-               WHERE FLOOR(o_totalprice * 100) >= 1
-               GROUP BY 1),
-    tot AS (SELECT CAST(SUM(n) AS bigint) AS total FROM c),
-    m AS (SELECT c.digit, c.n, tot.total,
-                 CAST(1000 * c.n // tot.total AS bigint)
-                   AS share_milli,
-                 ([301, 176, 125, 97, 79, 67, 58, 51, 46])[c.digit]
-                   AS benford_milli
-          FROM c, tot)
-    SELECT digit, n, share_milli,
-           CAST(benford_milli AS bigint) AS benford_milli,
-           CAST(ABS(share_milli - benford_milli) AS bigint)
-             AS dev_milli,
-           CAST(SUM(ABS(share_milli - benford_milli)) OVER ()
-                AS bigint) AS l1_total_milli
-    FROM m
-    """,
-)
-def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-digit distribution of order totals vs Benford's law: 9
-    rows of exact integer counts, milli shares, per-digit deviation,
-    and the corpus L1 total. See family comment for the floor-cents
-    rule and the fixed milli constant table."""
-    cents = F.expr("cast(floor(o_totalprice * 100) as bigint)")
-    c = (
-        load(spark, sf_dir, "orders")
-        .where(F.expr("floor(o_totalprice * 100) >= 1"))
-        .select(
-            F.substring(cents.cast("string"), 1, 1)
-            .cast("long")
-            .alias("digit")
-        )
-        .groupBy("digit")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    tot = c.agg(F.sum("n").cast("long").alias("total"))
-    m = c.crossJoin(F.broadcast(tot)).select(
-        "digit",
-        "n",
-        F.expr("cast(1000 * n div total as bigint)").alias("share_milli"),
-        F.expr(
-            "element_at(array(301, 176, 125, 97, 79, 67, 58, 51, 46),"
-            " cast(digit as int))"
-        )
-        .cast("long")
-        .alias("benford_milli"),
-    )
-    # the L1 total runs over the ≤9-row digit dim — a bounded window
-    return m.select(
-        "digit",
-        "n",
-        "share_milli",
-        "benford_milli",
-        F.abs(F.col("share_milli") - F.col("benford_milli"))
-        .cast("long")
-        .alias("dev_milli"),
-        F.sum(F.abs(F.col("share_milli") - F.col("benford_milli")))
-        .over(Window.partitionBy())
-        .cast("long")
-        .alias("l1_total_milli"),
-    )
-
-
 # ------------------------------------------------- session pathing
 # "Given where a session starts, where does it go?" — the funnel-
 # discovery complement to q_funnel's fixed-order scoring: sessions
@@ -6633,7 +4838,6 @@ def slo_burn_from_daily(g: DataFrame) -> DataFrame:
     )
 
 
-
 # ------------------------------------------------------- SLO burn
 # The on-call question over the event stream: what share of events
 # errored each day, and is the trailing-7-day burn over budget? Runs
@@ -6777,21 +4981,18 @@ def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ----------------------------------------------- CUBE / RANGE / EXCEPT
-# Three operator shapes the registry had not yet demonstrated, each
-# in its canonical engine form. q_cube_revenue: full CUBE over
-# (priority, status) with the composite grouping id (Spark
-# grouping_id() == DuckDB GROUPING(a, b), same bit encoding, the
-# gate proves it) and '(all)' markers so every stratum row is
-# self-describing; revenue in exact floor-cents (the q_benford
-# rule). q_revenue_30d: the trailing-30-day revenue as a RANGE frame
-# over the numeric day — on the SPARSE per-day revenue dim a ROWS
-# frame would silently span gaps (30 rows ≠ 30 days); publishing
-# both the range sum and the in-window day count makes the gap
-# handling visible. q_window_shoppers: viewers-minus-purchasers as
-# EXCEPT DISTINCT (Spark subtract == DuckDB EXCEPT). Scale: one
-# map-side-combined rollup each; the 30-day window runs on the
-# calendar-bounded day dim; EXCEPT shuffles distinct user ids only.
+# ------------------------------------------------------ CUBE / EXCEPT
+# Two operator shapes, each in its canonical engine form.
+# q_cube_revenue: full CUBE over (priority, status) with the composite
+# grouping id (Spark grouping_id() == DuckDB GROUPING(a, b), same bit
+# encoding, the gate proves it) and '(all)' markers so every stratum
+# row is self-describing; revenue in exact floor-cents
+# (cast(floor(o_totalprice * 100)) — floor() is the same IEEE op in
+# both engines, where a bare double→bigint cast would truncate in
+# Spark but round in DuckDB). q_window_shoppers: viewers-minus-
+# purchasers as EXCEPT DISTINCT (Spark subtract == DuckDB EXCEPT).
+# Scale: one map-side-combined rollup; EXCEPT shuffles distinct user
+# ids only.
 @_q(
     "q_cube_revenue",
     """
@@ -6832,49 +5033,6 @@ def q_cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_orders",
             "rev_cents",
         )
-    )
-
-
-@_q(
-    "q_revenue_30d",
-    """
-    WITH g AS (SELECT CAST(epoch_ms(o_orderdate) // 86400000 AS bigint)
-                        AS day,
-                      CAST(SUM(CAST(FLOOR(o_totalprice * 100) AS bigint))
-                           AS bigint) AS rev_cents
-               FROM orders GROUP BY 1)
-    SELECT day, rev_cents,
-           CAST(SUM(rev_cents) OVER (ORDER BY day RANGE BETWEEN
-                29 PRECEDING AND CURRENT ROW) AS bigint) AS rev30_cents,
-           CAST(COUNT(*) OVER (ORDER BY day RANGE BETWEEN
-                29 PRECEDING AND CURRENT ROW) AS bigint) AS n30_days
-    FROM g
-    """,
-)
-def q_revenue_30d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per order-day: exact cents revenue, the trailing-30-day RANGE-
-    frame sum, and the count of revenue days inside the frame (gap
-    visibility). See family comment."""
-    g = (
-        load(spark, sf_dir, "orders")
-        .select(
-            F.expr(
-                "cast(unix_millis(cast(o_orderdate as timestamp))"
-                " div 86400000 as bigint)"
-            ).alias("day"),
-            F.expr("cast(floor(o_totalprice * 100) as bigint)").alias(
-                "cents"
-            ),
-        )
-        .groupBy("day")
-        .agg(F.sum("cents").cast("long").alias("rev_cents"))
-    )
-    w = Window.orderBy("day").rangeBetween(-29, 0)
-    return g.select(
-        "day",
-        "rev_cents",
-        F.sum("rev_cents").over(w).cast("long").alias("rev30_cents"),
-        F.count(F.lit(1)).over(w).cast("long").alias("n30_days"),
     )
 
 
@@ -7341,9 +5499,9 @@ def q_rolling_distinct_90(spark: SparkSession, sf_dir: str) -> DataFrame:
 # frame (RANGE BETWEEN 3599999 PRECEDING) on the millisecond axis —
 # the frame kind that is CORRECT on irregular event spacing where a
 # ROWS frame would count a fixed number of events regardless of how
-# long ago they happened (the q_revenue_30d distinction, here at
-# EVENT grain rather than on a daily rollup dim). Scale: one user_id
-# exchange, one sort, O(1) sliding-frame state per row — Spark's
+# long ago they happened (on a sparse daily rollup dim the same rule
+# reads "30 rows ≠ 30 days"; here it holds at EVENT grain). Scale: one
+# user_id exchange, one sort, O(1) sliding-frame state per row — Spark's
 # range-frame implementation advances two pointers over the sorted
 # partition, never re-scanning the window per row.
 @_q(

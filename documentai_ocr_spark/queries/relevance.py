@@ -1233,7 +1233,7 @@ def q_bigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (rank (n+1)//2 under deterministic (value, doc_id) order) so every
 # quantity is an exact INTEGER — no mid-point averaging float, no
 # straddle risk. Ranks come from util.two_phase_ranks (the factored
-# q_score_calibration / q_gini_activity decomposition): the oracle is
+# q_score_calibration / q_epoch_shuffle decomposition): the oracle is
 # the plain whole-source window, so the gate again proves the
 # decomposition rank-preserving — now composed TWICE in one query
 # (value ranks, then deviation ranks).
@@ -1623,7 +1623,8 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
 # O(S²) groups; the token-total dim is O(S) broadcast. The oracle
 # keeps the equivalent self-join formulation as the independent
 # cross-check. Pairs sharing no word emit no row (their JSD is exactly
-# ln 2 — nothing to measure; the q_event_overlap convention).
+# ln 2 — nothing to measure; a pair with no shared support is absent,
+# not a zero row).
 # Integer headroom: c·t stays under 2^63 while c·t < 9.2e18 — past
 # ~10^9-token sources the products move to decimal(38).
 

@@ -66,11 +66,13 @@ def test_readme_count():
 def test_coverage_md_count():
     text = _read("COVERAGE.md")
     m = re.search(
-        r"\*\*(\d+) queries — (\d+) DuckDB value-hash gated", text
+        r"\*\*(\d+) queries — (\d+) DuckDB value-hash gated,\s+(\d+) rows-only",
+        text,
     )
     assert m, "COVERAGE.md header count line missing"
     assert int(m.group(1)) == len(QUERIES)
     assert int(m.group(2)) == len(ORACLES)
+    assert int(m.group(3)) == len(ROWS_ONLY)
 
 
 def test_driver_entrypoint_mirrors_registry():

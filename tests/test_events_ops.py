@@ -216,173 +216,6 @@ def test_dau_wau_recount_and_pins(spark, tmp_path):
     assert g2[days[8]]["stickiness_milli"] == 500
 
 
-def test_rfm_segments_recount(spark):
-    """Whole-corpus python replay at sf0.001: metrics from the parquet's
-    physical values, quintiles from the exact rank formula with the
-    (metric, custkey) tiebreak."""
-    from documentai_ocr_spark.queries.relational import q_rfm_segments
-
-    o = pd.read_parquet(f"{SF}/orders.parquet")
-    ms = _epoch_ms(o["o_orderdate"])
-    mx = int(ms.max())
-    agg: dict = {}
-    for ck, m, tp in zip(o["o_custkey"], ms, o["o_totalprice"]):
-        a = agg.setdefault(int(ck), {"last": -1, "n": 0, "cents": 0})
-        a["last"] = max(a["last"], int(m))
-        a["n"] += 1
-        import math as _math
-
-        a["cents"] += int(_math.floor(tp * 100))
-    met = {
-        ck: (
-            (mx - a["last"]) // 86400000,
-            a["n"],
-            a["cents"],
-        )
-        for ck, a in agg.items()
-    }
-    n = len(met)
-
-    def quint(ranks):
-        return {
-            ck: min(5, 1 + (5 * (r - 1)) // n) for ck, r in ranks.items()
-        }
-
-    rr = {
-        ck: i + 1
-        for i, (ck, _) in enumerate(
-            sorted(met.items(), key=lambda kv: (-kv[1][0], kv[0]))
-        )
-    }
-    rf = {
-        ck: i + 1
-        for i, (ck, _) in enumerate(
-            sorted(met.items(), key=lambda kv: (kv[1][1], kv[0]))
-        )
-    }
-    rm = {
-        ck: i + 1
-        for i, (ck, _) in enumerate(
-            sorted(met.items(), key=lambda kv: (kv[1][2], kv[0]))
-        )
-    }
-    qr, qf, qm = quint(rr), quint(rf), quint(rm)
-    got = {r["o_custkey"]: r for r in q_rfm_segments(spark, SF).collect()}
-    assert set(got) == set(met)
-    for ck, (days, freq, cents) in met.items():
-        r = got[ck]
-        assert (
-            r["recency_days"],
-            r["frequency"],
-            r["monetary_cents"],
-            r["r_q"],
-            r["f_q"],
-            r["m_q"],
-        ) == (days, freq, cents, qr[ck], qf[ck], qm[ck]), ck
-
-
-def test_basket_pairs_recount_and_lift_pin(spark, tmp_path):
-    """sf0.001 replay from scratch (distinct per-order part sets, pair
-    counts, lift formula), plus an engineered pin: two parts that
-    always co-occur in every basket have lift exactly n_orders / (n_a ·
-    n_b) · n_ab = n (perfect attraction); a never-co-occurring pair
-    emits no row."""
-    from documentai_ocr_spark.queries.relational import (
-        _BASKET_MIN,
-        q_basket_pairs,
-    )
-
-    li = pd.read_parquet(f"{SF}/lineitem.parquet")
-    baskets: dict = {}
-    for ok, pk in zip(li["l_orderkey"], li["l_partkey"]):
-        baskets.setdefault(int(ok), set()).add(int(pk))
-    n_orders = len(baskets)
-    from collections import Counter
-
-    marg: Counter = Counter()
-    pair: Counter = Counter()
-    for parts in baskets.values():
-        ps = sorted(parts)
-        marg.update(ps)
-        for i, a in enumerate(ps):
-            for b in ps[i + 1 :]:
-                pair[(a, b)] += 1
-    want = {
-        k: v for k, v in pair.items() if v >= _BASKET_MIN
-    }
-    got = {
-        (r["part_a"], r["part_b"]): r
-        for r in q_basket_pairs(spark, SF).collect()
-    }
-    assert set(got) == set(want)
-    for (a, b), n_ab in want.items():
-        r = got[(a, b)]
-        assert (r["n_ab"], r["n_a"], r["n_b"]) == (n_ab, marg[a], marg[b])
-        assert abs(
-            r["lift"] - round(n_ab * n_orders / (marg[a] * marg[b]), 6)
-        ) < 1e-9
-
-    # engineered: parts 1+2 always together (4 baskets), part 3 alone
-    rows = []
-    ln = 0
-    for ok in range(4):
-        for pk in (1, 2):
-            rows.append((ok, pk, ln := ln + 1))
-    rows.append((9, 3, ln := ln + 1))
-    pdf = pd.DataFrame(rows, columns=["l_orderkey", "l_partkey", "l_linenumber"])
-    d = str(tmp_path / "basket")
-    spark.createDataFrame(pdf).write.parquet(f"{d}/lineitem.parquet")
-    g2 = {
-        (r["part_a"], r["part_b"]): r
-        for r in q_basket_pairs(spark, d).collect()
-    }
-    assert set(g2) == {(1, 2)}
-    r = g2[(1, 2)]
-    # lift = n_ab·n_orders/(n_a·n_b) = 4·5/(4·4) = 1.25
-    assert r["n_ab"] == 4 and r["lift"] == 1.25
-
-
-def test_top_supplier_recount_and_tie_pin(spark, tmp_path):
-    """sf0.001 replay (rounded per-supplier revenue, max, tie set) plus
-    an engineered fixture where TWO suppliers achieve the identical
-    rounded maximum — both rows must come back (a LIMIT-1 formulation
-    would drop one)."""
-    from documentai_ocr_spark.queries.relational import q_top_supplier
-
-    li = pd.read_parquet(f"{SF}/lineitem.parquet")
-    rev: dict[int, float] = {}
-    for sk, ep, dc in zip(
-        li["l_suppkey"], li["l_extendedprice"], li["l_discount"]
-    ):
-        rev[int(sk)] = rev.get(int(sk), 0.0) + float(ep) * (1.0 - float(dc))
-    rounded = {k: round(v, 2) for k, v in rev.items()}
-    m = max(rounded.values())
-    want = {k for k, v in rounded.items() if v == m}
-    got = {r["s_suppkey"]: r for r in q_top_supplier(spark, SF).collect()}
-    assert set(got) == want
-    for k in want:
-        assert abs(got[k]["revenue"] - m) < 1e-9
-
-    # engineered tie: suppliers 1 and 2 each bill exactly 100.00;
-    # supplier 3 bills 50.00 — exactly {1, 2} must be returned.
-    li2 = pd.DataFrame(
-        [
-            (1, 100.0, 0.0),
-            (2, 200.0, 0.5),
-            (3, 50.0, 0.0),
-        ],
-        columns=["l_suppkey", "l_extendedprice", "l_discount"],
-    )
-    sup = pd.DataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], columns=["s_suppkey", "s_name"]
-    )
-    d = str(tmp_path / "ties")
-    spark.createDataFrame(li2).write.parquet(f"{d}/lineitem.parquet")
-    spark.createDataFrame(sup).write.parquet(f"{d}/supplier.parquet")
-    g2 = {r["s_suppkey"]: r["revenue"] for r in q_top_supplier(spark, d).collect()}
-    assert g2 == {1: 100.0, 2: 100.0}
-
-
 # ----------------------------------------------------- activity streaks
 def test_user_streaks_engineered(spark, tmp_path):
     """Hand-pinned islands: user 1 is active on days {0,1,2,5,6} (three
@@ -544,76 +377,6 @@ def test_event_gaps_bucket_edges(spark, tmp_path):
         ("a", 1): (2, 0, 9),
         ("b", 2): (1, 10, 10),
     }
-
-
-# ----------------------------------------------------- reorder latency
-def test_reorder_latency_python_recount(spark):
-    """sf0.001 replay of the telescoped identity: mean consecutive gap
-    == span // (n-1) exactly, single-order customers excluded."""
-    from documentai_ocr_spark.queries.relational import q_reorder_latency
-
-    o = pd.read_parquet(f"{SF}/orders.parquet")
-    ms = _epoch_ms(o["o_orderdate"])
-    per: dict[int, list] = {}
-    for ck, m in zip(o["o_custkey"], ms):
-        a = per.setdefault(int(ck), [0, m, m])
-        a[0] += 1
-        a[1] = min(a[1], m)
-        a[2] = max(a[2], m)
-    want = {}
-    for ck, (n, lo, hi) in per.items():
-        if n >= 2:
-            span = (hi - lo) // 86400000
-            want[ck] = (n, int(span), int(1000 * span // (n - 1)))
-    got = {
-        r["o_custkey"]: (
-            r["n_orders"],
-            r["span_days"],
-            r["mean_gap_milli_days"],
-        )
-        for r in q_reorder_latency(spark, SF).collect()
-    }
-    assert got == want and len(got) > 0
-    # the telescoping identity really does equal the mean of the
-    # consecutive gaps for one explicitly sorted customer
-    ck = next(iter(want))
-    days = sorted(
-        int(m) // 86400000
-        for c, m in zip(o["o_custkey"], ms)
-        if int(c) == ck
-    )
-    gaps = [b - a for a, b in zip(days, days[1:])]
-    assert sum(gaps) == days[-1] - days[0]
-
-
-def test_reorder_latency_fixture(spark, tmp_path):
-    """Hand numbers: orders on days 0, 10, 30 -> span 30, mean gap 15
-    exactly (15000 milli); a single-order customer is absent."""
-    from documentai_ocr_spark.queries.relational import q_reorder_latency
-
-    def day(d):
-        return pd.Timestamp(d * 86400000, unit="ms")
-
-    pdf = pd.DataFrame(
-        [
-            (1, 7, day(0)),
-            (2, 7, day(10)),
-            (3, 7, day(30)),
-            (4, 8, day(5)),
-        ],
-        columns=["o_orderkey", "o_custkey", "o_orderdate"],
-    )
-    d = str(tmp_path / "reorder")
-    spark.createDataFrame(pdf).write.parquet(f"{d}/orders.parquet")
-    got = {
-        r["o_custkey"]: (
-            r["n_orders"],
-            r["span_days"],
-            r["mean_gap_milli_days"],
-        )
-        for r in q_reorder_latency(spark, d).collect()
-    }
-    assert got == {7: (3, 30, 15000)}
 
 
 # ----------------------------------------------------- tool stationary

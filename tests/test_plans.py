@@ -11,15 +11,6 @@ from documentai_ocr_spark.synth import synth_transcripts
 SF = "/root/testdata/sf0.001"
 
 
-def test_pricing_summary_pushdown(spark):
-    p = plan(QUERIES["q_pricing_summary"](spark, SF))
-    assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in p
-    # column pruning: only the 6 needed columns reach the scan
-    assert "l_comment" not in p
-    rs = [ln for ln in p.splitlines() if "ReadSchema" in ln]
-    assert rs and "l_quantity" in rs[0] and "l_orderkey" not in rs[0]
-
-
 def test_region_revenue_broadcasts_dims(spark):
     p = plan(QUERIES["q_region_revenue"](spark, SF))
     assert p.count("BroadcastHashJoin") >= 2  # nation, region
@@ -349,38 +340,6 @@ def test_trimmed_mean_bucketed_window(spark):
             assert "_vbucket" in ln, ln
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
-
-
-def test_ship_priority_topk_and_pushdown(spark):
-    """The Q3-shaped report must plan the top-10 as
-    TakeOrderedAndProject (per-partition top-K, no global sort), push
-    both date predicates and the segment filter to the scans, and
-    broadcast the filtered customer dim."""
-    p = plan(QUERIES["q_ship_priority"](spark, SF))
-    assert "TakeOrderedAndProject" in p, p
-    assert "EqualTo(c_mktsegment,BUILDING)" in p
-    assert "LessThan(o_orderdate" in p
-    assert "GreaterThan(l_shipdate" in p
-    assert "BroadcastHashJoin" in p
-
-
-def test_late_orders_semi_join(spark):
-    """EXISTS must plan as LeftSemi — one row per order regardless of
-    how many lines qualify, no dedup shuffle."""
-    p = plan(QUERIES["q_late_orders"](spark, SF))
-    assert "LeftSemi" in p, p
-
-
-def test_big_spenders_prunes_before_join(spark):
-    """Q18 shape: the quantity HAVING-prune must aggregate BEFORE the
-    joins back (the plan's aggregate feeds the join, not vice versa),
-    the top-K is TakeOrderedAndProject, and customer broadcasts."""
-    p = plan(QUERIES["q_big_spenders"](spark, SF))
-    assert "TakeOrderedAndProject" in p, p
-    assert "BroadcastHashJoin" in p
-    # the lineitem scan reads only the two aggregate columns
-    rs = [ln for ln in p.splitlines() if "ReadSchema" in ln and "l_quantity" in ln]
-    assert rs and "l_extendedprice" not in rs[0]
 
 
 def test_attribution_has_no_join_node(spark):

@@ -1,4 +1,4 @@
-"""Day-of-week seasonality, autocorrelation, Benford and skyline:
+"""Day-of-week seasonality, autocorrelation and skyline:
 engineered closed-form fixtures plus whole-corpus python replays at
 sf0.001 (the test_events_ops discipline — recount from the physical
 values the parquet stores)."""
@@ -11,7 +11,6 @@ import pandas as pd
 from documentai_ocr_spark.queries.corpusops import q_skyline_docs
 from documentai_ocr_spark.queries.relational import (
     q_autocorr,
-    q_benford,
     q_dow_seasonality,
 )
 
@@ -186,65 +185,6 @@ def test_dow_seasonality_replay(spark):
             trough,
             mean[trough],
         )
-
-
-def test_benford_engineered(spark, tmp_path):
-    """Digit d appearing exactly d times pins every share; sub-cent
-    totals are excluded by the floor-cents rule."""
-    rows = []
-    ok = 0
-    ts = dt.datetime(2024, 1, 1)
-    for d in range(1, 10):
-        for i in range(d):
-            # d.50, d0.25, d00.75, ... — first digit d at any magnitude
-            price = d * (10 ** (i % 3)) + 0.25
-            rows.append((ok, 1, "O", float(price), ts, "1-URGENT"))
-            ok += 1
-    rows.append((ok, 1, "O", 0.004, ts, "1-URGENT"))  # floor cents = 0
-    pdf = pd.DataFrame(
-        rows,
-        columns=[
-            "o_orderkey",
-            "o_custkey",
-            "o_orderstatus",
-            "o_totalprice",
-            "o_orderdate",
-            "o_orderpriority",
-        ],
-    )
-    d = str(tmp_path / "benford")
-    spark.createDataFrame(pdf).write.parquet(f"{d}/orders.parquet")
-    got = {r["digit"]: r for r in q_benford(spark, d).collect()}
-    assert set(got) == set(range(1, 10))
-    bf = [301, 176, 125, 97, 79, 67, 58, 51, 46]
-    l1 = sum(
-        abs(1000 * k // 45 - bf[k - 1]) for k in range(1, 10)
-    )
-    for k in range(1, 10):
-        g = got[k]
-        assert g["n"] == k
-        assert g["share_milli"] == 1000 * k // 45
-        assert g["benford_milli"] == bf[k - 1]
-        assert g["dev_milli"] == abs(1000 * k // 45 - bf[k - 1])
-        assert g["l1_total_milli"] == l1
-
-
-def test_benford_replay(spark):
-    """sf0.001 replay with python's math.floor on the float64 totals —
-    the same IEEE floor the engines apply."""
-    o = pd.read_parquet(f"{SF}/orders.parquet")
-    cnt: dict[int, int] = {}
-    for p in o["o_totalprice"]:
-        c = int(math.floor(p * 100))
-        if c >= 1:
-            k = int(str(c)[0])
-            cnt[k] = cnt.get(k, 0) + 1
-    n = sum(cnt.values())
-    got = {r["digit"]: r for r in q_benford(spark, SF).collect()}
-    assert set(got) == set(cnt)
-    for k, c in cnt.items():
-        assert got[k]["n"] == c
-        assert got[k]["share_milli"] == 1000 * c // n
 
 
 def _doc(doc_id, source, n, alnum):

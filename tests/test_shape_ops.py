@@ -1,6 +1,5 @@
-"""CUBE / RANGE-frame / EXCEPT shapes: engineered closed forms, the
-cube marginal identities on real data, and the gap-visibility law of
-the range frame."""
+"""CUBE / EXCEPT shapes: engineered closed forms and the cube marginal
+identities on real data."""
 
 import datetime as dt
 
@@ -8,7 +7,6 @@ import pandas as pd
 
 from documentai_ocr_spark.queries.relational import (
     q_cube_revenue,
-    q_revenue_30d,
     q_window_shoppers,
 )
 
@@ -78,42 +76,6 @@ def test_cube_identities_replay(spark):
             assert r["rev_cents"] == sum(
                 v["rev_cents"] for v in cells.values()
             )
-
-
-def test_revenue_30d_gap_visibility(spark, tmp_path):
-    """Days 0, 10, 50: the RANGE frame includes day 0 in day 10's
-    window (10 ≤ 29) but NOT in day 50's — a ROWS frame would have
-    included both. n30_days makes the difference observable."""
-    base = dt.datetime(2024, 1, 1)
-    rows = [
-        (1, 1, "O", 10.00, base, "1-URGENT"),
-        (2, 1, "O", 20.00, base + dt.timedelta(days=10), "1-URGENT"),
-        (3, 1, "O", 40.00, base + dt.timedelta(days=50), "1-URGENT"),
-    ]
-    d = _orders(spark, tmp_path, rows, "r30")
-    got = sorted(q_revenue_30d(spark, d).collect(), key=lambda r: r["day"])
-    assert [r["rev_cents"] for r in got] == [1000, 2000, 4000]
-    assert [r["rev30_cents"] for r in got] == [1000, 3000, 4000]
-    assert [r["n30_days"] for r in got] == [1, 2, 1]
-
-
-def test_revenue_30d_replay(spark):
-    """sf0.001 replay from floor-cents per day."""
-    import math
-
-    o = pd.read_parquet(f"{SF}/orders.parquet")
-    day = o["o_orderdate"].astype("int64") // 1000 // 86400000
-    per: dict[int, int] = {}
-    for d, p in zip(day, o["o_totalprice"]):
-        per[int(d)] = per.get(int(d), 0) + int(math.floor(p * 100))
-    got = {r["day"]: r for r in q_revenue_30d(spark, SF).collect()}
-    assert set(got) == set(per)
-    days = sorted(per)
-    for d in days:
-        win = [e for e in days if d - 29 <= e <= d]
-        assert got[d]["rev_cents"] == per[d]
-        assert got[d]["rev30_cents"] == sum(per[e] for e in win)
-        assert got[d]["n30_days"] == len(win)
 
 
 def test_window_shoppers_engineered(spark, tmp_path):

@@ -81,17 +81,6 @@ BOUNDED_OK = {
         "1-row broadcast (lo, hi) day-bounds dim — the lag window and "
         "sums run on the O(types × days) calendar-bounded dim",
     ),
-    "q_benford": (
-        ("PRODUCT-JOIN", "EMPTY-WINDOW"),
-        "crossJoin of the ONE-ROW broadcast digit-total dim (the "
-        "q_key_skew scalar-broadcast pattern); the global L1 window "
-        "runs over the ≤9-row digit frame post-aggregation",
-    ),
-    "q_revenue_30d": (
-        "EMPTY-WINDOW",
-        "the trailing-30-day RANGE frame runs over the per-day revenue "
-        "dim — calendar-bounded post-aggregation, never the corpus",
-    ),
     "q_attribution": (
         "EMPTY-WINDOW",
         "the global share window runs over the ≤20-row lag-digit "
@@ -174,18 +163,6 @@ BOUNDED_OK = {
         "PRODUCT-JOIN",
         "crossJoin of the ONE-ROW broadcast bloom-sketch dim (fixed "
         "1 KiB array) onto the probe batch",
-    ),
-    "q_part_value_share": (
-        "PRODUCT-JOIN",
-        "crossJoin of the 1-row broadcast (total, n_parts) dim onto "
-        "the O(parts) quantity rollup — scalar broadcast (TPC-H Q11's "
-        "fraction-of-global HAVING)",
-    ),
-    "q_idle_customers": (
-        "PRODUCT-JOIN",
-        "crossJoin of the 1-row broadcast (sum_cents, n) average dim "
-        "onto the positive-balance customer slice — scalar broadcast "
-        "(TPC-H Q22's scalar subquery)",
     ),
     "q_quantile_sketch": (
         "LOW-CARD-WINDOW",
@@ -303,27 +280,6 @@ BOUNDED_OK = {
         "broadcast corpus-total crossJoin; this op itself adds only "
         "O(sources) broadcast joins",
     ),
-    "q_rfm_segments": (
-        ("EMPTY-WINDOW", "LOW-CARD-WINDOW", "PRODUCT-JOIN"),
-        "three GLOBAL two_phase_ranks passes over the customer-metric "
-        "dim (constant group _g, which Catalyst folds out of the "
-        "partition spec — hence EMPTY-WINDOW): those global windows "
-        "are the ≤64-row bucket dims only; the fact windows partition "
-        "by _vbucket — ~1/64 of the customer dim per task, buckets "
-        "raised with corpus size; the crossJoins are the 1-row "
-        "corpus-latest-date and row-count dims",
-    ),
-    "q_basket_pairs": (
-        "PRODUCT-JOIN",
-        "crossJoin of the 1-row broadcast order-count dim onto the "
-        "support-floored pair frame — scalar broadcast (the q_bm25 "
-        "pattern); the pair expansion itself is in-row per basket",
-    ),
-    "q_brand_revenue": (
-        "PRODUCT-JOIN",
-        "crossJoin of the 1-row broadcast total-lines dim onto the "
-        "O(brands) rollup — scalar broadcast (the q_bm25 pattern)",
-    ),
     "q_decile_grid": (
         "LOW-CARD-WINDOW",
         "util.two_phase_ranks dim window over the per-(source, "
@@ -412,10 +368,6 @@ MEASURED_MAX_ROWS: dict[str, int] = {
     "q_bigram_logprob": 64,
     "q_pmi_collocations": 64,
     "q_rare_token_docs": 64,
-    "q_part_value_share": 64,
-    "q_idle_customers": 64,
-    "q_basket_pairs": 64,
-    "q_brand_revenue": 64,
     "q_dsir_weights": 1024,  # ≤256-row model dims onto doc probes
     "x_bloom_dedup": 64,
     "q_knn_cosine": 64,    # 20-query × corpus-vectors fan-out is the
@@ -427,9 +379,7 @@ MEASURED_MAX_ROWS: dict[str, int] = {
     "q_dow_seasonality": 64,
     "q_autocorr": 64,
     "q_slo_burn": 10_000,
-    "q_revenue_30d": 5_000,
     "q_conv_retention": 64,
-    "q_benford": 64,
     "q_attribution": 64,
     "q_lang_source_assoc": 2_000,   # langs × sources grid
     "q_skyline_docs": 30_000,       # per-source distinct-n_chars dim
@@ -451,7 +401,6 @@ MEASURED_MAX_ROWS: dict[str, int] = {
     "q_robust_stats": 5_000,
     "q_trimmed_mean": 5_000,
     "q_release_audit": 20_000,
-    "q_rfm_segments": 10_000,
     "q_decile_grid": 5_000,
     "q_heaps_law": 10_000,
     "q_lateness_profile": 64,
