@@ -285,18 +285,13 @@ def dedup_increment(
     )
 
 
-def rolling_fold(
-    docs: DataFrame, n_batches: int, seq_col=None
+def _fold(
+    docs: DataFrame, n_batches: int, seq_col, sig_fn, near_fn, sig_schema
 ) -> DataFrame:
-    """One-shot reference fold: the SAME policy applied to a batched
-    corpus entirely in memory (no filesystem state) — batch k of
-    ``n_batches`` is ``doc_id % n_batches == k`` unless ``seq_col``
-    (an int Column) is given. Returns (batch_seq, doc_id) survivors.
-    The batch loop is driver-side over the BATCH COUNT (a bounded
-    ingest-schedule constant, never data-sized); all per-batch work is
-    the shared batch_survivors() DataFrame core."""
-    from .queries.dedup import _mh_band_df
-
+    """The in-memory fold loop both rolling policies share: ``sig_fn``
+    builds the per-doc signature rows, ``near_fn`` is the policy's near
+    rule over (exact survivors, batch signatures, accepted signatures)
+    and ``sig_schema`` the empty accepted-signature state."""
     spark = docs.sparkSession
     seq = (
         seq_col
@@ -312,13 +307,13 @@ def rolling_fold(
     dd_all = batched.select(
         "seq", "doc_id", content_hash_col().alias("h")
     ).localCheckpoint()
-    bands_all = (
-        _mh_band_df(batched)
+    sig_all = (
+        sig_fn(batched)
         .join(dd_all.select("doc_id", "seq"), "doc_id")
         .localCheckpoint()
     )
     acc_exact = spark.createDataFrame([], _EXACT_SCHEMA)
-    acc_bands = spark.createDataFrame([], _SIG_SCHEMA)
+    acc_sig = spark.createDataFrame([], sig_schema)
     out = None
     for k in range(n_batches):
         # localCheckpoint truncates lineage per round (the components
@@ -328,18 +323,36 @@ def rolling_fold(
         ek = exact_survivors(
             dd_all.where(F.col("seq") == k).drop("seq"), acc_exact
         )
-        sk, sk_bands = near_filter(
-            ek, bands_all.where(F.col("seq") == k).drop("seq"), acc_bands
+        sk, sk_sig = near_fn(
+            ek, sig_all.where(F.col("seq") == k).drop("seq"), acc_sig
         )
         sk = sk.localCheckpoint()
-        sk_bands = sk_bands.localCheckpoint()
+        sk_sig = sk_sig.localCheckpoint()
         part = sk.select(
             F.lit(k).cast("int").alias("batch_seq"), "doc_id"
         )
         out = part if out is None else out.unionByName(part)
         acc_exact = acc_exact.unionByName(sk.select("doc_id", "h"))
-        acc_bands = acc_bands.unionByName(sk_bands)
+        acc_sig = acc_sig.unionByName(sk_sig)
     return out
+
+
+def rolling_fold(
+    docs: DataFrame, n_batches: int, seq_col=None
+) -> DataFrame:
+    """One-shot reference fold: the SAME policy applied to a batched
+    corpus entirely in memory (no filesystem state) — batch k of
+    ``n_batches`` is ``doc_id % n_batches == k`` unless ``seq_col``
+    (an int Column) is given. Returns (batch_seq, doc_id) survivors.
+    The batch loop is driver-side over the BATCH COUNT (a bounded
+    ingest-schedule constant, never data-sized); each batch runs
+    exact_survivors() then near_filter(), the two rules
+    batch_survivors() applies."""
+    from .queries.dedup import _mh_band_df
+
+    return _fold(
+        docs, n_batches, seq_col, _mh_band_df, near_filter, _SIG_SCHEMA
+    )
 
 
 # ---------------------------------------------- simhash rolling layer
@@ -427,39 +440,11 @@ def simhash_rolling_fold(
     docs: DataFrame, n_batches: int, seq_col=None
 ) -> DataFrame:
     """One-shot reference fold of the simhash rolling policy (the
-    rolling_fold twin — see its docstring for the loop/localCheckpoint
-    rationale). Returns (batch_seq, doc_id) survivors."""
+    rolling_fold twin, on the same _fold loop). Returns
+    (batch_seq, doc_id) survivors."""
     from .queries.dedup import _simhash_df
 
-    spark = docs.sparkSession
-    seq = (
-        seq_col
-        if seq_col is not None
-        else (F.col("doc_id") % n_batches).cast("int")
+    return _fold(
+        docs, n_batches, seq_col, _simhash_df, simhash_near_filter,
+        _FP_SCHEMA,
     )
-    batched = docs.withColumn("seq", seq)
-    dd_all = batched.select(
-        "seq", "doc_id", content_hash_col().alias("h")
-    ).localCheckpoint()
-    fp_all = (
-        _simhash_df(batched)
-        .join(dd_all.select("doc_id", "seq"), "doc_id")
-        .localCheckpoint()
-    )
-    acc_exact = spark.createDataFrame([], _EXACT_SCHEMA)
-    acc_fp = spark.createDataFrame([], _FP_SCHEMA)
-    out = None
-    for k in range(n_batches):
-        ek = exact_survivors(
-            dd_all.where(F.col("seq") == k).drop("seq"), acc_exact
-        )
-        sk, sk_fp = simhash_near_filter(
-            ek, fp_all.where(F.col("seq") == k).drop("seq"), acc_fp
-        )
-        sk = sk.localCheckpoint()
-        sk_fp = sk_fp.localCheckpoint()
-        part = sk.select(F.lit(k).cast("int").alias("batch_seq"), "doc_id")
-        out = part if out is None else out.unionByName(part)
-        acc_exact = acc_exact.unionByName(sk.select("doc_id", "h"))
-        acc_fp = acc_fp.unionByName(sk_fp)
-    return out

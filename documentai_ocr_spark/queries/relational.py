@@ -4,11 +4,13 @@ transcript/turn operators of the extraction pipeline.
 Each query re-expresses one dataflow operator family of the reference
 (file:line cited per query) as idiomatic DataFrame code, with a DuckDB
 oracle. Entries stay only while they anchor a §2 coverage row or serve
-the pipeline (extraction gates, turn hygiene, conversation assembly,
-the streaming twins' batch references); warehouse reports over the
-harness tables with neither role do not belong here (the TPC-H report
-shapes are gone; the event-warehouse shapes over ``events`` are the
-next to weigh). Numeric discipline for cross-engine equality:
+the pipeline: extraction gates, turn hygiene and conversation assembly
+over documents/transcripts, and the batch references of the streaming
+twins (q_hour_mix, q_dau_wau, q_activity_bitmap, q_slo_burn). Over
+``events`` only those twins, the §2 anchors such as q_asof_join, and
+q_scd2_intervals / q_floor_balance (ROADMAP direction 4 lists them to
+go next) remain. Warehouse reports over the harness tables
+with neither role do not belong here. Numeric discipline for cross-engine equality:
 
   * integer aggregates are cast to bigint on BOTH sides (DuckDB sums
     int → hugeint, Spark → bigint);
@@ -35,7 +37,7 @@ from ..rules import (
     HYST_EXIT as _R_HYST_EXIT,
     MIN_LINE_LEN as _R_MIN_LINE_LEN,
 )
-from .util import load, spread, topk_by_count
+from .util import load, spread
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -1573,98 +1575,6 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- interval-overlap (range) join
-# Point-in-interval join: each error event opens a window of `value`
-# seconds; count the purchases each user makes inside it. A naive
-# non-equi join is a nested loop (O(n·m) per user); the scale path bins
-# both sides into fixed-width epochs sized >= the maximum interval
-# length, so every interval spans <= 2 buckets (bounded explode) and
-# the non-equi predicate becomes an equi-join on (user, bucket) plus a
-# residual filter. Integer-ms arithmetic with explicit floor keeps the
-# two engines bit-identical (Spark's double->long cast truncates,
-# DuckDB's rounds — never rely on either).
-_RANGE_BUCKET_MS = 512_000  # > max interval (490.02 s) => <=2 buckets
-
-
-@_q(
-    "q_interval_overlap",
-    """
-    WITH e AS (
-      SELECT event_id AS error_id, user_id,
-             epoch_ms(ts) AS beg_ms,
-             epoch_ms(ts) + CAST(FLOOR(value * 1000) AS BIGINT) AS end_ms
-      FROM events WHERE event_type = 'error'
-    ),
-    p AS (
-      SELECT user_id, epoch_ms(ts) AS p_ms, value
-      FROM events WHERE event_type = 'purchase'
-    )
-    SELECT e.error_id, e.user_id,
-           CAST(COUNT(p.p_ms) AS BIGINT) AS n_purchases,
-           ROUND(COALESCE(SUM(p.value), 0.0), 6) AS purchase_value
-    FROM e LEFT JOIN p
-      ON e.user_id = p.user_id
-     AND p.p_ms BETWEEN e.beg_ms AND e.end_ms
-    GROUP BY e.error_id, e.user_id
-    """,
-)
-def q_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binned range join: intervals explode to their covered epoch
-    buckets (<=2 by construction), points map to exactly one, and the
-    overlap test runs only within (user, bucket) groups. The DuckDB
-    oracle is the plain non-equi join, so the gate proves the binned
-    rewrite loses no pairs and invents none.
-
-    Scale: shuffle keys are (user_id, bucket) — time-locality means a
-    bucket only meets its own ~width of data; the nested-loop surface
-    is gone. Zero-match intervals are restored by a left join against
-    the (small) aggregated hit set, not by outer-joining the raw
-    streams."""
-    ev = load(spark, sf_dir, "events")
-    w_ms = _RANGE_BUCKET_MS
-    e = ev.where(F.col("event_type") == "error").select(
-        F.col("event_id").alias("error_id"),
-        "user_id",
-        F.unix_millis(F.col("ts").cast("timestamp")).alias("beg_ms"),
-        (
-            F.unix_millis(F.col("ts").cast("timestamp"))
-            + F.floor(F.col("value") * 1000).cast("long")
-        ).alias("end_ms"),
-    )
-    p = ev.where(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.unix_millis(F.col("ts").cast("timestamp")).alias("p_ms"),
-        "value",
-    )
-    e_binned = e.select(
-        "*",
-        F.explode(
-            F.sequence(
-                (F.col("beg_ms") / w_ms).cast("long"),
-                (F.col("end_ms") / w_ms).cast("long"),
-            )
-        ).alias("bucket"),
-    )
-    p_binned = p.withColumn("bucket", (F.col("p_ms") / w_ms).cast("long"))
-    hits = (
-        e_binned.join(p_binned, ["user_id", "bucket"])
-        .where(F.col("p_ms").between(F.col("beg_ms"), F.col("end_ms")))
-        .groupBy("error_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_purchases"),
-            F.sum("value").alias("pv"),
-        )
-    )
-    return e.join(hits, "error_id", "left").select(
-        "error_id",
-        "user_id",
-        F.coalesce("n_purchases", F.lit(0).cast("long")).alias(
-            "n_purchases"
-        ),
-        F.round(F.coalesce("pv", F.lit(0.0)), 6).alias("purchase_value"),
-    )
-
-
 # --------------------------------------------------- agent-loop detection
 # Transcripts-native hygiene op: an agent stuck in a loop shows as a
 # run of consecutive tool turns invoking the SAME tool. Classic
@@ -1733,243 +1643,6 @@ def q_agent_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("run_len") >= 2)
         .drop("grp")
     )
-
-
-# --------------------------------------------------------- funnel analysis
-# Ordered-sequence conversion funnel: how many users performed
-# signup → view → purchase IN THAT ORDER. Each stage anchors on the
-# FIRST qualifying event after the previous stage (the standard
-# product-analytics semantics). Three conditional min-aggregations over
-# one user-keyed pass — never a self-join per stage.
-@_q(
-    "q_funnel",
-    """
-    WITH e AS (
-      SELECT user_id, event_type, epoch_ms(ts) AS ms FROM events
-    ),
-    s1 AS (
-      SELECT user_id, MIN(ms) AS t1 FROM e
-      WHERE event_type = 'signup' GROUP BY user_id
-    ),
-    s2 AS (
-      SELECT e.user_id, MIN(e.ms) AS t2
-      FROM e JOIN s1 USING (user_id)
-      WHERE e.event_type = 'view' AND e.ms > s1.t1
-      GROUP BY e.user_id
-    ),
-    s3 AS (
-      SELECT e.user_id, MIN(e.ms) AS t3
-      FROM e JOIN s2 USING (user_id)
-      WHERE e.event_type = 'purchase' AND e.ms > s2.t2
-      GROUP BY e.user_id
-    )
-    SELECT s1.user_id,
-           s1.t1 AS signup_ms,
-           s2.t2 AS view_ms,
-           s3.t3 AS purchase_ms,
-           CAST(CASE WHEN s3.t3 IS NOT NULL THEN 3
-                     WHEN s2.t2 IS NOT NULL THEN 2
-                     ELSE 1 END AS int) AS stage_reached
-    FROM s1
-    LEFT JOIN s2 USING (user_id)
-    LEFT JOIN s3 USING (user_id)
-    """,
-)
-def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Three-stage ordered funnel per user (signup → first view after
-    signup → first purchase after that view), with the deepest stage
-    reached. The Spark form needs NO join at all: one user-keyed
-    sort-window pass computes all three stage anchors with running
-    conditional minima (stage-2 min only admits views later than the
-    stage-1 running min, etc.), so a funnel over 10^12 events is one
-    shuffle + one sort — the per-stage join cascade the SQL oracle
-    spells out stays in DuckDB as the independent formulation."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.unix_millis(F.col("ts").cast("timestamp")).alias("ms"),
-        "event_id",
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ms", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # running first-signup; first view strictly after it; first purchase
-    # strictly after that — each as a running min over the same window
-    t1 = F.min(F.when(F.col("event_type") == "signup", F.col("ms"))).over(w)
-    rows = ev.withColumn("t1", t1)
-    t2 = F.min(
-        F.when(
-            (F.col("event_type") == "view")
-            & F.col("t1").isNotNull()
-            & (F.col("ms") > F.col("t1")),
-            F.col("ms"),
-        )
-    ).over(w)
-    rows = rows.withColumn("t2", t2)
-    t3 = F.min(
-        F.when(
-            (F.col("event_type") == "purchase")
-            & F.col("t2").isNotNull()
-            & (F.col("ms") > F.col("t2")),
-            F.col("ms"),
-        )
-    ).over(w)
-    rows = rows.withColumn("t3", t3)
-    return (
-        rows.groupBy("user_id")
-        .agg(
-            F.min("t1").alias("signup_ms"),
-            F.min("t2").alias("view_ms"),
-            F.min("t3").alias("purchase_ms"),
-        )
-        .where(F.col("signup_ms").isNotNull())
-        .select(
-            "user_id",
-            "signup_ms",
-            "view_ms",
-            "purchase_ms",
-            F.when(F.col("purchase_ms").isNotNull(), 3)
-            .when(F.col("view_ms").isNotNull(), 2)
-            .otherwise(1)
-            .cast("int")
-            .alias("stage_reached"),
-        )
-    )
-
-
-# ------------------------------------------------- EWMA anomaly flag
-# Trailing exponentially-weighted moving average per user over event
-# values, truncated at K lags so the recursion unrolls into a CLOSED
-# FORM both engines evaluate identically (a true infinite-horizon EWMA
-# is a recursive accumulator — cross-engine float parity would hinge on
-# accumulation order; the truncated form is also what a streaming
-# implementation keeps as bounded state). Events whose value exceeds
-# 3× the trailing EWMA are flagged — the spike detector of an ingest
-# monitoring pipeline.
-_EWMA_ALPHA = 0.5
-_EWMA_K = 8
-
-
-def _ewma_terms_sql() -> str:
-    num = " + ".join(
-        f"COALESCE({_EWMA_ALPHA ** lag} * lag(value, {lag}) OVER w, 0.0)"
-        for lag in range(1, _EWMA_K + 1)
-    )
-    den = " + ".join(
-        f"(CASE WHEN lag(value, {lag}) OVER w IS NOT NULL"
-        f" THEN {_EWMA_ALPHA ** lag} ELSE 0.0 END)"
-        for lag in range(1, _EWMA_K + 1)
-    )
-    return num, den
-
-
-@_q(
-    "q_ewma_anomaly",
-    f"""
-    SELECT event_id, user_id,
-           ROUND(value, 6) AS value,
-           ROUND(({_ewma_terms_sql()[0]})
-                 / NULLIF({_ewma_terms_sql()[1]}, 0.0), 6) AS ewma,
-           value > 3.0 * (({_ewma_terms_sql()[0]})
-                 / NULLIF({_ewma_terms_sql()[1]}, 0.0)) AS is_spike
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-    """,
-)
-def q_ewma_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user trailing EWMA (α={_EWMA_ALPHA}, truncated at
-    {_EWMA_K} lags, weights renormalized over available history) and a
-    3× spike flag. One user-keyed shuffle + sort serves all
-    {_EWMA_K} lag() calls (same window). Rows with no history yield
-    NULL ewma / NULL flag."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", "user_id", "ts", "value"
-    )
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    a = _EWMA_ALPHA
-    num = None
-    den = None
-    for lag in range(1, _EWMA_K + 1):
-        lv = F.lag("value", lag).over(w)
-        t = F.coalesce(F.lit(a**lag) * lv, F.lit(0.0))
-        d = F.when(lv.isNotNull(), F.lit(a**lag)).otherwise(F.lit(0.0))
-        num = t if num is None else num + t
-        den = d if den is None else den + d
-    ewma = num / F.nullif(den, F.lit(0.0))
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.round("value", 6).alias("value"),
-        F.round(ewma, 6).alias("ewma"),
-        (F.col("value") > 3.0 * ewma).alias("is_spike"),
-    )
-
-
-# --------------------------------------------------------- retention cohorts
-# Cohort retention matrix: users grouped by their first-signup week,
-# counted as retained in each later week they produced any event. The
-# companion analytics op to q_funnel (did the user convert) — did the
-# user COME BACK. Absolute epoch weeks (epoch_ms // 1w) keep both
-# engines on integer arithmetic with no corpus-wide min.
-@_q(
-    "q_retention_cohorts",
-    """
-    WITH wk AS (
-      SELECT user_id, event_type,
-             epoch_ms(ts) // 604800000 AS week
-      FROM events
-    ),
-    cohort AS (
-      SELECT user_id, MIN(week) AS cohort_week
-      FROM wk WHERE event_type = 'signup' GROUP BY user_id
-    ),
-    active AS (
-      SELECT DISTINCT wk.user_id, cohort.cohort_week,
-             wk.week - cohort.cohort_week AS week_offset
-      FROM wk JOIN cohort USING (user_id)
-      WHERE wk.week >= cohort.cohort_week
-    )
-    SELECT cohort_week, CAST(week_offset AS int) AS week_offset,
-           CAST(COUNT(*) AS bigint) AS n_users
-    FROM active
-    GROUP BY cohort_week, week_offset
-    """,
-)
-def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly retention cohorts: (cohort_week, week_offset) → distinct
-    retained users. Two user-keyed aggregations and one counting
-    groupBy over (cohort, offset) pairs — the distinct collapses
-    map-side first, so the wide stream is (user, week) pairs, never raw
-    events. week_offset 0 row per cohort = cohort size (the
-    denominator a retention curve divides by)."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        (
-            F.unix_millis(F.col("ts").cast("timestamp"))
-            / F.lit(604800000)
-        ).cast("long").alias("week"),
-    )
-    cohort = (
-        ev.where(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("week").alias("cohort_week"))
-    )
-    active = (
-        ev.join(cohort, "user_id")
-        .where(F.col("week") >= F.col("cohort_week"))
-        .select(
-            "user_id",
-            "cohort_week",
-            (F.col("week") - F.col("cohort_week")).alias("week_offset"),
-        )
-        .distinct()
-    )
-    return active.groupBy(
-        "cohort_week", F.col("week_offset").cast("int").alias("week_offset")
-    ).agg(F.count(F.lit(1)).cast("long").alias("n_users"))
 
 
 # --------------------------------------------------------- data-quality suite
@@ -3607,239 +3280,6 @@ def q_hour_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------- per-user activity span
-@_q(
-    "q_activity_span",
-    """
-    WITH s AS (SELECT user_id,
-                      CAST(COUNT(*) AS bigint) AS n_events,
-                      MIN(epoch_ms(ts)) AS beg_ms,
-                      MAX(epoch_ms(ts)) AS end_ms
-               FROM events GROUP BY user_id)
-    SELECT user_id, n_events,
-           CAST(end_ms - beg_ms AS bigint) AS span_ms,
-           CAST(CASE WHEN end_ms = beg_ms THEN 0
-                ELSE n_events * 86400000 * 1000 // (end_ms - beg_ms) END
-             AS bigint) AS rate_per_day_milli
-    FROM s
-    """,
-)
-def q_activity_span(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user activity span and exact integer event rate: first→last
-    observed millisecond and milli-events-per-day over that span — the
-    bot/power-user screen (a clock-dense user with an absurd rate is
-    automation; a one-event user pins the span-0 sentinel). Float
-    discipline: the rate is ONE integer division of exact epoch-ms
-    sums (n·86400000·1000 // span); single-event users define rate 0.
-    Shape: one user-grain partial agg on the scan — min/max/count all
-    combine map-side; no window, no ordering."""
-    ev = load(spark, sf_dir, "events").select("user_id", "ts")
-    s = ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.min(F.unix_millis(F.col("ts").cast("timestamp"))).alias("beg_ms"),
-        F.max(F.unix_millis(F.col("ts").cast("timestamp"))).alias("end_ms"),
-    )
-    return s.select(
-        "user_id",
-        "n_events",
-        (F.col("end_ms") - F.col("beg_ms")).cast("long").alias("span_ms"),
-        F.expr(
-            "CASE WHEN end_ms = beg_ms THEN 0L"
-            " ELSE n_events * 86400000L * 1000L div (end_ms - beg_ms) END"
-        )
-        .cast("long")
-        .alias("rate_per_day_milli"),
-    )
-
-
-# ------------------------------------------------- event-type audience overlap
-@_q(
-    "q_event_overlap",
-    """
-    WITH tu AS (SELECT DISTINCT event_type, user_id FROM events),
-    c AS (SELECT event_type, CAST(COUNT(*) AS bigint) AS n
-          FROM tu GROUP BY event_type),
-    p AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-                 CAST(COUNT(*) AS bigint) AS n_both
-          FROM tu a JOIN tu b
-            ON a.user_id = b.user_id AND a.event_type < b.event_type
-          GROUP BY 1, 2)
-    SELECT type_a, type_b, n_both,
-           ca.n AS n_a, cb.n AS n_b,
-           1000 * n_both // (ca.n + cb.n - n_both) AS jaccard_milli
-    FROM p JOIN c ca ON ca.event_type = p.type_a
-           JOIN c cb ON cb.event_type = p.type_b
-    """,
-)
-def q_event_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audience overlap between event types: for every co-observed pair
-    of event types, the exact Jaccard (integer milli) of their user
-    sets — the feature-adoption / cannibalization matrix a product
-    analytics team reads, and for a training pipeline the signal for
-    which interaction modes share an audience (pairs with zero common
-    users emit no row — there is nothing to measure). Set algebra is
-    exact integers end to end.
-
-    Scale: one (event_type, user) dedup exchange, then a user-keyed
-    self-equi-join whose per-user expansion is bounded by the number of
-    DISTINCT event types (a fixed product-schema constant, like
-    q_engine_winrate's in-row pair expansion — never n² in users); the
-    type-cardinality dim is O(types) and broadcast back onto the
-    O(types²) pair frame."""
-    ev = load(spark, sf_dir, "events").select("event_type", "user_id")
-    tu = ev.distinct()
-    c = tu.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    a = tu.alias("a")
-    b = tu.alias("b")
-    p = (
-        a.join(
-            b,
-            (F.col("a.user_id") == F.col("b.user_id"))
-            & (F.col("a.event_type") < F.col("b.event_type")),
-        )
-        .groupBy(
-            F.col("a.event_type").alias("type_a"),
-            F.col("b.event_type").alias("type_b"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n_both"))
-    )
-    ca = c.select(F.col("event_type").alias("type_a"), F.col("n").alias("n_a"))
-    cb = c.select(F.col("event_type").alias("type_b"), F.col("n").alias("n_b"))
-    return (
-        p.join(F.broadcast(ca), "type_a")
-        .join(F.broadcast(cb), "type_b")
-        .select(
-            "type_a",
-            "type_b",
-            "n_both",
-            "n_a",
-            "n_b",
-            F.expr("1000 * n_both div (n_a + n_b - n_both)").alias(
-                "jaccard_milli"
-            ),
-        )
-    )
-
-
-# ------------------------------------------------- activity concentration
-_GINI_BUCKETS = 64
-
-
-@_q(
-    "q_gini_activity",
-    """
-    WITH cnt AS (SELECT event_type, user_id, CAST(COUNT(*) AS bigint) AS x
-                 FROM events GROUP BY event_type, user_id),
-    r AS (SELECT event_type, x,
-                 row_number() OVER (PARTITION BY event_type
-                                    ORDER BY x, user_id) AS r
-          FROM cnt)
-    SELECT event_type,
-           CAST(COUNT(*) AS bigint) AS n_users,
-           CAST(SUM(x) AS bigint) AS n_events,
-           CAST((1000 * (2 * SUM(r * x) - (COUNT(*) + 1) * SUM(x)))
-                // (COUNT(*) * SUM(x)) AS bigint) AS gini_milli
-    FROM r GROUP BY event_type
-    """,
-)
-def q_gini_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Activity-concentration (Gini) per event type: how unequal the
-    per-user event distribution is — the bot/whale screen a pipeline
-    reads before trusting engagement counts (uniform usage → 0;
-    one-user dominance → →1000). Exact integer milli from the rank
-    formula G = (2·Σ r·x − (n+1)·Σx)/(n·Σx) over users ranked
-    ascending by (count, user_id) — ties broken deterministically, no
-    floats anywhere.
-
-    Scale — ranks WITHOUT a whole-type window (the q_score_calibration
-    / q_epoch_shuffle two-phase): the oracle's `row_number() OVER
-    (PARTITION BY event_type ORDER BY x)` would sort every user of a
-    type in ONE task, and there are O(5) types. Instead (1) bucket
-    users by equal-width VALUE ranges of x (monotone in x, ties share
-    a bucket), (2) a tiny per-(type, bucket) count dim yields each
-    bucket's exclusive prefix via an O(types×buckets) post-agg window,
-    (3) row_number runs within (type, bucket) — ~1/64 of a type per
-    task — plus the prefix offset. Identical ranks to the single
-    window, oracle-gated. The (type,user) count agg is the only
-    corpus-scale exchange."""
-    from .util import two_phase_ranks
-
-    ev = load(spark, sf_dir, "events").select("event_type", "user_id")
-    cnt = ev.groupBy("event_type", "user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
-    ranked = two_phase_ranks(
-        cnt, ["event_type"], "x", ["user_id"], buckets=_GINI_BUCKETS
-    ).select("event_type", "x", "r")
-    return (
-        ranked.groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_users"),
-            F.sum("x").cast("long").alias("n_events"),
-            F.sum(F.col("r") * F.col("x")).cast("long").alias("srx"),
-        )
-        .select(
-            "event_type",
-            "n_users",
-            "n_events",
-            F.expr(
-                "CAST((1000 * (2 * srx - (n_users + 1) * n_events))"
-                " div (n_users * n_events) AS bigint)"
-            ).alias("gini_milli"),
-        )
-    )
-
-
-# ------------------------------------------------- heavy users per type
-# The per-event-type heavy-user review queue (abuse/bot triage, whale
-# analysis) — the SECOND consumer of util.topk_by_count, proving the
-# digit-bucket top-K machinery is generic: identical shape to the
-# per-source vocabulary ranks, a different table entirely.
-_TOPU_K = 10
-
-
-@_q(
-    "q_event_topusers",
-    f"""
-    WITH cnt AS (SELECT event_type, user_id,
-                        CAST(COUNT(*) AS bigint) AS c
-                 FROM events GROUP BY event_type, user_id),
-    rk AS (SELECT event_type, user_id, c,
-                  row_number() OVER (PARTITION BY event_type
-                                     ORDER BY c DESC, user_id) AS rnk
-           FROM cnt)
-    SELECT event_type, CAST(rnk AS bigint) AS rnk, user_id,
-           c AS n_events
-    FROM rk WHERE rnk <= {_TOPU_K}
-    """,
-)
-def q_event_topusers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top {_TOPU_K} users per event type by exact event count with the
-    deterministic (count DESC, user ASC) rank — the heavy-user queue an
-    abuse/whale review reads per interaction mode.
-
-    Scale: the (event_type, user) count agg is the only corpus
-    exchange; ranks come from util.topk_by_count (digit-bucket
-    histogram prefix pruning → row_number on the surviving head), so no
-    task ever sorts a whole event type's user population — the oracle
-    is the plain whole-partition rank window, making the gate itself
-    the proof that pruning is rank-preserving."""
-    from .util import topk_by_count
-
-    ev = load(spark, sf_dir, "events").select("event_type", "user_id")
-    cnt = ev.groupBy("event_type", "user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    return topk_by_count(cnt, ["event_type"], ["user_id"], _TOPU_K).select(
-        "event_type",
-        F.col("rnk").cast("long").alias("rnk"),
-        "user_id",
-        F.col("c").alias("n_events"),
-    )
-
-
 # ---------------------------------------------------------- DAU / WAU
 # Rolling engagement: daily active users beside the trailing-7-day
 # weekly actives and the DAU/WAU stickiness ratio — the
@@ -3905,175 +3345,6 @@ def q_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------------ activity streaks
-# Longest consecutive-day activity streak per user — the canonical
-# gaps-and-islands problem. Day index is the shared physical epoch-ms
-# integer rule (q_hour_mix / q_dau_wau — no calendar, no timezone).
-# The oracle spells the textbook form (day − row_number constant on a
-# run); the ENGINE never windows at all: a user's distinct-day set is
-# bounded by the CALENDAR (≤ timespan days, never event volume), so
-# collect_set(day) per user is a bounded-size aggregate with MAP-SIDE
-# partial dedup — a user with 10^9 events ships ≤ days values per
-# input partition — and the whole island scan (lengths, count,
-# longest, earliest-longest tie-break) is ONE in-row higher-order
-# aggregate() fold over the sorted array. One exchange, zero
-# Sort/Window/Join nodes (plan-asserted).
-
-_STREAK_FOLD = """
-aggregate(
-  sort_array(days),
-  named_struct(
-    'prev', cast(-4611686018427387904 as bigint),
-    'cur_len', cast(0 as bigint),
-    'cur_start', cast(0 as bigint),
-    'best_len', cast(0 as bigint),
-    'best_start', cast(0 as bigint),
-    'n_streaks', cast(0 as bigint)),
-  (s, d) -> named_struct(
-    'prev', d,
-    'cur_len',
-      IF(d = s.prev + 1, s.cur_len + 1, cast(1 as bigint)),
-    'cur_start',
-      IF(d = s.prev + 1, s.cur_start, d),
-    'best_len',
-      IF(IF(d = s.prev + 1, s.cur_len + 1, cast(1 as bigint))
-           > s.best_len,
-         IF(d = s.prev + 1, s.cur_len + 1, cast(1 as bigint)),
-         s.best_len),
-    'best_start',
-      IF(IF(d = s.prev + 1, s.cur_len + 1, cast(1 as bigint))
-           > s.best_len,
-         IF(d = s.prev + 1, s.cur_start, d),
-         s.best_start),
-    'n_streaks',
-      s.n_streaks
-        + IF(d = s.prev + 1, cast(0 as bigint), cast(1 as bigint))))
-"""
-
-
-@_q(
-    "q_user_streaks",
-    """
-    WITH days AS (SELECT DISTINCT user_id,
-                         CAST(epoch_ms(ts) // 86400000 AS bigint) AS day
-                  FROM events),
-    seq AS (SELECT user_id, day,
-                   ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY day)
-                     AS rn
-            FROM days),
-    isl AS (SELECT user_id, day - rn AS anchor,
-                   CAST(COUNT(*) AS bigint) AS len,
-                   CAST(MIN(day) AS bigint) AS start
-            FROM seq GROUP BY 1, 2),
-    agg AS (SELECT user_id,
-                   CAST(SUM(len) AS bigint) AS n_active_days,
-                   CAST(COUNT(*) AS bigint) AS n_streaks,
-                   CAST(MAX(len) AS bigint) AS longest
-            FROM isl GROUP BY 1)
-    SELECT a.user_id, a.n_active_days, a.n_streaks, a.longest,
-           CAST(MIN(i.start) AS bigint) AS longest_start_day
-    FROM agg a
-    JOIN isl i ON a.user_id = i.user_id AND i.len = a.longest
-    GROUP BY 1, 2, 3, 4
-    """,
-)
-def q_user_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user activity-streak profile: distinct active days, number
-    of maximal consecutive-day runs, the longest run's length and the
-    epoch-day it starts (earliest among equal-length ties — the fold's
-    strictly-greater comparison means a later equal run never
-    replaces).
-
-    Scale — collect_set(day) bounds every user's payload by the
-    calendar with map-side partial dedup, so the single user_id
-    exchange moves ≤ days values per (partition, user); the island
-    scan is an in-row fold, so the oracle's window + double rollup +
-    join-back never materialize in the engine (plan pins 1 Exchange,
-    0 Sort/Window/Join nodes)."""
-    ev = load(spark, sf_dir, "events").select("ts", "user_id")
-    day = F.expr(
-        "cast(unix_millis(cast(ts as timestamp)) div 86400000 as bigint)"
-    )
-    g = (
-        ev.select("user_id", day.alias("day"))
-        .groupBy("user_id")
-        .agg(F.collect_set("day").alias("days"))
-    )
-    return g.select(
-        "user_id",
-        F.size("days").cast("long").alias("n_active_days"),
-        F.expr(_STREAK_FOLD).alias("_s"),
-    ).select(
-        "user_id",
-        "n_active_days",
-        F.col("_s.n_streaks").alias("n_streaks"),
-        F.col("_s.best_len").alias("longest"),
-        F.col("_s.best_start").alias("longest_start_day"),
-    )
-
-
-# --------------------------------------------------------- event gaps
-# Inter-arrival profile: per event type, a histogram of the gap (in
-# ms) between each event and the SAME USER's previous event (any
-# type) — the think-time distribution behind sessionization windows
-# and bot screens. Buckets are DECIMAL-DIGIT COUNTS of the integer
-# gap (len(str(gap))): integer-exact in both engines, where a
-# floor(log2(...)) bucket could straddle on a libm ulp at an exact
-# power of two. One user_id exchange, O(n log n) per partition for
-# the (ts, event_id) sort — the q_asof_join discipline.
-@_q(
-    "q_event_gaps",
-    """
-    WITH seq AS (
-      SELECT event_type, epoch_ms(ts) AS ms,
-             lag(epoch_ms(ts)) OVER (PARTITION BY user_id
-                                     ORDER BY epoch_ms(ts), event_id) AS prev_ms
-      FROM events
-    ),
-    g AS (SELECT event_type, ms - prev_ms AS gap
-          FROM seq WHERE prev_ms IS NOT NULL)
-    SELECT event_type, CAST(LENGTH(CAST(gap AS varchar)) AS int)
-             AS gap_digits,
-           CAST(COUNT(*) AS bigint) AS n,
-           CAST(MIN(gap) AS bigint) AS min_gap_ms,
-           CAST(MAX(gap) AS bigint) AS max_gap_ms
-    FROM g GROUP BY 1, 2
-    """,
-)
-def q_event_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per event type: how long after the user's previous event it
-    fired, as a digit-count histogram (bucket d covers gaps with d
-    decimal digits: 1 = 0–9 ms, 4 = 1.0–9.999 s, ...) with exact
-    bucket min/max.
-
-    Scale — one user_id exchange; the per-user sort is bounded by
-    that user's activity, and the later-event attribution is a lag,
-    never a self-join."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type",
-        "user_id",
-        "event_id",
-        F.expr(
-            "cast(unix_millis(cast(ts as timestamp)) as bigint)"
-        ).alias("ms"),
-    )
-    w = Window.partitionBy("user_id").orderBy("ms", "event_id")
-    seq = ev.withColumn("prev_ms", F.lag("ms").over(w))
-    g = seq.where(F.col("prev_ms").isNotNull()).select(
-        "event_type", (F.col("ms") - F.col("prev_ms")).alias("gap")
-    )
-    return g.groupBy(
-        "event_type",
-        F.length(F.col("gap").cast("string")).cast("int").alias(
-            "gap_digits"
-        ),
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.min("gap").cast("long").alias("min_gap_ms"),
-        F.max("gap").cast("long").alias("max_gap_ms"),
-    )
-
-
 # ----------------------------------------------------- tool stationary
 # The long-run tool mix: the stationary distribution π of the
 # tool→tool transition chain (πP = π) — where an agent fleet's tool
@@ -4134,97 +3405,12 @@ def _q_tool_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["x_tool_stationary"] = _q_tool_stationary
 
 
-# -------------------------------------------------- growth accounting
-# The canonical DAU decomposition: every active (user, day) is NEW
-# (first day ever), RETAINED (also active the day before) or
-# RESURRECTED (active before, but not yesterday); CHURNED(d) counts
-# users active on d−1 who are not active on d (emitted from the gap
-# AFTER each active day, so it needs no day-level self-join — the
-# identity dau(d−1) = retained(d) + churned(d) is pinned in tests).
-# Same engine shape as q_user_streaks: collect_set(day) bounds every
-# user by the calendar with map-side partial dedup, the per-day class
-# labels fall out of ONE in-row transform over the sorted array, and
-# the only exchanges are the user rollup and the O(days×4) final
-# count. The ORACLE spells the textbook lag/lead window form.
-@_q(
-    "q_growth_accounting",
-    """
-    WITH d AS (SELECT DISTINCT user_id,
-                      CAST(epoch_ms(ts) // 86400000 AS bigint) AS day
-               FROM events),
-    lagd AS (SELECT day,
-                    lag(day) OVER (PARTITION BY user_id ORDER BY day)
-                      AS prev
-             FROM d),
-    cls AS (SELECT day,
-                   CASE WHEN prev IS NULL THEN 'new'
-                        WHEN day = prev + 1 THEN 'retained'
-                        ELSE 'resurrected' END AS klass
-            FROM lagd),
-    nxt AS (SELECT day,
-                   lead(day) OVER (PARTITION BY user_id ORDER BY day)
-                     AS nx
-            FROM d),
-    ch AS (SELECT day + 1 AS day, 'churned' AS klass
-           FROM nxt WHERE nx IS NULL OR nx > day + 1),
-    u AS (SELECT * FROM cls UNION ALL SELECT * FROM ch)
-    SELECT day, klass, CAST(COUNT(*) AS bigint) AS n
-    FROM u GROUP BY 1, 2
-    """,
-)
-def q_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per day: how many active users were new, retained or
-    resurrected, and how many of yesterday's actives churned (the
-    churn row lands on the first INACTIVE day, including the day
-    after the corpus ends — the honest tail).
-
-    Scale — one calendar-bounded collect_set exchange per user, class
-    labels from an in-row transform over the sorted day array (no
-    Window, no self-join), one O(days×classes) count exchange."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id",
-        F.expr(
-            "cast(unix_millis(cast(ts as timestamp)) div 86400000"
-            " as bigint)"
-        ).alias("day"),
-    )
-    g = ev.groupBy("user_id").agg(
-        F.sort_array(F.collect_set("day")).alias("ds")
-    )
-    lab = F.expr(
-        """
-        concat(
-          transform(ds, (d, i) -> named_struct(
-            'day', d,
-            'klass', CASE WHEN i = 0 THEN 'new'
-                          WHEN d = element_at(ds, i) + 1
-                            THEN 'retained'
-                          ELSE 'resurrected' END)),
-          filter(
-            transform(ds, (d, i) -> IF(
-              i = size(ds) - 1 OR element_at(ds, i + 2) > d + 1,
-              named_struct('day', d + 1,
-                           'klass', 'churned'),
-              null)),
-            x -> x IS NOT NULL))
-        """
-    )
-    return (
-        g.select(F.explode(lab).alias("x"))
-        .groupBy(F.col("x.day").alias("day"), F.col("x.klass").alias("klass"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-
-
-# ---------------------------------------------------- forecast backtest
 # ------------------------------------------- densified daily series
-# Shared core of the time-series family (q_forecast_backtest,
-# q_changepoint, q_dow_seasonality, q_autocorr): the per-type daily
-# count series DENSIFIED over the corpus day span — a day with no
-# events is an actual of 0, not a skipped row (a silent skip would
-# flatter forecasts, shift every CUSUM index and bias the dow mix).
-# One rendering on each side so the four gates all prove the same
-# grid: the SQL CTE chain below ends at `d(event_type, day, n)`, and
+# The per-type daily count series q_slo_burn reads, DENSIFIED over the
+# corpus day span — a day with no events is an actual of 0, not a
+# skipped row (a silent skip would shorten the trailing-7 window
+# without saying so). One rendering on each side: the SQL CTE chain
+# below ends at `d(event_type, day, n)`, and
 # dense_daily_counts() is the DataFrame twin. Scale: the per-(type,
 # day) rollup is the only corpus exchange; the grid is the 1-row
 # broadcast (lo, hi) bounds dim crossJoined onto the O(types) dim —
@@ -4275,445 +3461,6 @@ def dense_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The ops-side question every event warehouse answers weekly: does a
-# seasonal-naive forecast (same weekday last week, lag 7) beat the
-# last-day carry-forward (lag 1) on daily event counts? Scored as a
-# proper dense backtest: the day grid is DENSIFIED over the corpus
-# span (a day with no events is an actual of 0, not a skipped row —
-# skipping would flatter both baselines), errors are EXACT integer
-# count sums (MAE published as 1000·Σ|err| // n), and both baselines
-# score over the identical day set (day ≥ lo+7) so the verdict column
-# compares like with like. Scale: the per-(type, day) count rollup is
-# the only corpus exchange; the grid, lags and scoring run on
-# O(types × days) dims — calendar-bounded at any corpus size.
-@_q(
-    "q_forecast_backtest",
-    f"""
-    WITH {_DENSE_DAILY_CTE},
-    s AS (SELECT event_type, day, n,
-                 lag(n, 7) OVER (PARTITION BY event_type ORDER BY day)
-                   AS f7,
-                 lag(n, 1) OVER (PARTITION BY event_type ORDER BY day)
-                   AS f1
-          FROM d)
-    SELECT event_type,
-           CAST(COUNT(*) AS bigint) AS n_scored,
-           CAST(SUM(ABS(n - f7)) AS bigint) AS sae7,
-           CAST(1000 * SUM(ABS(n - f7)) // COUNT(*) AS bigint)
-             AS mae7_milli,
-           CAST(SUM(ABS(n - f1)) AS bigint) AS sae1,
-           CAST(1000 * SUM(ABS(n - f1)) // COUNT(*) AS bigint)
-             AS mae1_milli,
-           SUM(ABS(n - f7)) < SUM(ABS(n - f1)) AS seasonal_better
-    FROM s WHERE f7 IS NOT NULL
-    GROUP BY event_type
-    """,
-)
-def q_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per event type: seasonal-naive (lag-7) vs carry-forward (lag-1)
-    daily-count backtest over the densified day grid — scored days,
-    exact absolute-error sums, integer-milli MAEs, and the
-    seasonal_better verdict. See family comment for the dense-grid
-    and exact-integer rules."""
-    d = dense_daily_counts(spark, sf_dir)
-    w = Window.partitionBy("event_type").orderBy("day")
-    s = d.select(
-        "event_type",
-        "n",
-        F.lag("n", 7).over(w).alias("f7"),
-        F.lag("n", 1).over(w).alias("f1"),
-    ).where(F.col("f7").isNotNull())
-    return s.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_scored"),
-        F.sum(F.abs(F.col("n") - F.col("f7")))
-        .cast("long")
-        .alias("sae7"),
-        F.expr("1000 * sum(abs(n - f7)) div count(1)")
-        .cast("long")
-        .alias("mae7_milli"),
-        F.sum(F.abs(F.col("n") - F.col("f1")))
-        .cast("long")
-        .alias("sae1"),
-        F.expr("1000 * sum(abs(n - f1)) div count(1)")
-        .cast("long")
-        .alias("mae1_milli"),
-        (
-            F.sum(F.abs(F.col("n") - F.col("f7")))
-            < F.sum(F.abs(F.col("n") - F.col("f1")))
-        ).alias("seasonal_better"),
-    )
-
-
-# ------------------------------------------------- CUSUM changepoint
-# "When did this metric change level?" — the classic CUSUM
-# changepoint on daily event counts, EXACT: the statistic
-# G_k = |S_k·N − k·S| (the cumulative sum's deviation from the
-# uniform ramp, cleared of divisions by cross-multiplication) is pure
-# integer arithmetic, the argmax tie-breaks to the earliest day, and
-# the two segment means publish as exact integer milli. Runs on the
-# DENSIFIED day grid (q_forecast_backtest's rule — missing days are
-# zeros, and a silent skip would shift every k). Scale: the
-# per-(type, day) rollup is the only corpus exchange; prefix sums and
-# the argmax run on O(types × days) calendar-bounded dims.
-@_q(
-    "q_changepoint",
-    f"""
-    WITH {_DENSE_DAILY_CTE},
-    p AS (SELECT event_type, day, n,
-                 SUM(n) OVER (PARTITION BY event_type ORDER BY day)
-                   AS sk,
-                 ROW_NUMBER() OVER (PARTITION BY event_type
-                                    ORDER BY day) AS k,
-                 SUM(n) OVER (PARTITION BY event_type) AS s,
-                 COUNT(*) OVER (PARTITION BY event_type) AS nd
-          FROM d),
-    g AS (SELECT event_type, day, k, sk, s, nd,
-                 ABS(sk * nd - k * s) AS gstat
-          FROM p WHERE k < nd),
-    mx AS (SELECT event_type, MAX(gstat) AS mg FROM g GROUP BY 1),
-    best AS (SELECT g.event_type, MIN(g.day) AS split_day
-             FROM g JOIN mx
-               ON g.event_type = mx.event_type AND g.gstat = mx.mg
-             GROUP BY 1)
-    SELECT g.event_type, g.day AS split_day,
-           CAST(g.gstat AS bigint) AS g_stat,
-           CAST(1000 * g.sk // g.k AS bigint) AS mean_before_milli,
-           CAST(1000 * (g.s - g.sk) // (g.nd - g.k) AS bigint)
-             AS mean_after_milli
-    FROM g JOIN best
-      ON g.event_type = best.event_type AND g.day = best.split_day
-    """,
-)
-def q_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per event type: the CUSUM-argmax split day (level change ends
-    that day; earliest day on ties), the exact integer statistic, and
-    the exact milli means of the two segments. See family comment —
-    the oracle's IN-subquery argmax is a max(struct(gstat, −day))
-    aggregate here."""
-    d = dense_daily_counts(spark, sf_dir)
-    wo = Window.partitionBy("event_type").orderBy("day")
-    wa = Window.partitionBy("event_type")
-    p = d.select(
-        "event_type",
-        "day",
-        F.sum("n").over(wo).alias("sk"),
-        F.row_number().over(wo).alias("k"),
-        F.sum("n").over(wa).alias("s"),
-        F.count(F.lit(1)).over(wa).alias("nd"),
-    ).where(F.col("k") < F.col("nd"))
-    g = p.withColumn(
-        "gstat", F.abs(F.col("sk") * F.col("nd") - F.col("k") * F.col("s"))
-    )
-    best = F.max(
-        F.struct(
-            F.col("gstat").alias("g"), (-F.col("day")).alias("nd_")
-        )
-    )
-    picked = g.groupBy("event_type").agg(
-        best.alias("_b"),
-    )
-    return (
-        g.join(picked, "event_type")
-        .where(
-            (F.col("gstat") == F.col("_b.g"))
-            & (F.col("day") == -F.col("_b.nd_"))
-        )
-        .select(
-            "event_type",
-            F.col("day").alias("split_day"),
-            F.col("gstat").cast("long").alias("g_stat"),
-            F.expr("1000 * sk div k").cast("long").alias(
-                "mean_before_milli"
-            ),
-            F.expr("1000 * (s - sk) div (nd - k)")
-            .cast("long")
-            .alias("mean_after_milli"),
-        )
-    )
-
-
-# ----------------------------------------------- weekly seasonality
-# "How weekly IS this metric?" — the day-of-week decomposition of
-# daily event counts, EXACT end to end: dev_milli is the L1 distance
-# between the dow-sum mix and the dow-day mix, Σ_d |N·s_d − n_d·S|
-# cleared of divisions by cross-multiplication (the q_changepoint
-# rule) and published as 1000·Σ|…| div (N·S) ∈ [0, 2000); peak and
-# trough day-of-week are argmax/argmin over the exact integer milli
-# means (ties break to the smaller dow — a tie AT milli precision is
-# a tie in the published statistic, so the break is deterministic in
-# both engines). Runs on the DENSIFIED day grid (q_forecast_backtest's
-# rule — a skipped empty day would inflate every dow mean and skew
-# n_d). dow = day % 7 on the epoch day number (dow 0 = Thursday;
-# pure integer arithmetic, no calendar-library divergence between
-# engines). Scale: the per-(type, day) rollup is the only corpus
-# exchange; the dow rollup and the argmax run on O(types × 7)
-# calendar-bounded dims.
-@_q(
-    "q_dow_seasonality",
-    f"""
-    WITH {_DENSE_DAILY_CTE},
-    w AS (SELECT event_type, day % 7 AS dow,
-                 CAST(COUNT(*) AS bigint) AS nd,
-                 CAST(SUM(n) AS bigint) AS sd
-          FROM d GROUP BY 1, 2),
-    tot AS (SELECT event_type,
-                   CAST(SUM(nd) AS bigint) AS ndays,
-                   CAST(SUM(sd) AS bigint) AS s
-            FROM w GROUP BY 1),
-    m AS (SELECT w.event_type, w.dow, w.nd, w.sd, tot.ndays, tot.s,
-                 CAST(1000 * w.sd // w.nd AS bigint) AS mean_milli
-          FROM w JOIN tot ON w.event_type = tot.event_type)
-    SELECT event_type,
-           MAX(ndays) AS n_days,
-           MAX(s) AS total,
-           CAST(1000 * SUM(ABS(ndays * sd - nd * s)) // (MAX(ndays)
-                * MAX(s)) AS bigint) AS dev_milli,
-           CAST(MAX_BY(dow, mean_milli * 8 + (7 - dow)) AS bigint)
-             AS peak_dow,
-           MAX(mean_milli) AS peak_mean_milli,
-           CAST(MIN_BY(dow, mean_milli * 8 + dow) AS bigint)
-             AS trough_dow,
-           MIN(mean_milli) AS trough_mean_milli
-    FROM m GROUP BY event_type
-    """,
-)
-def q_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per event type: n_days, total events, the exact L1 uniformity
-    deviation of the day-of-week mix in milli, and the peak/trough
-    day-of-week with their exact milli mean daily counts. See family
-    comment for the cross-multiplication and dense-grid rules; the
-    oracle's MAX_BY/MIN_BY(struct) argmax mirrors the engine's
-    max(struct(mean_milli, −dow))."""
-    d = dense_daily_counts(spark, sf_dir).select(
-        "event_type", (F.col("day") % 7).alias("dow"), "n"
-    )
-    w = d.groupBy("event_type", "dow").agg(
-        F.count(F.lit(1)).cast("long").alias("nd"),
-        F.sum("n").cast("long").alias("sd"),
-    )
-    wa = Window.partitionBy("event_type")
-    m = w.select(
-        "event_type",
-        "dow",
-        "nd",
-        "sd",
-        F.sum("nd").over(wa).alias("ndays"),
-        F.sum("sd").over(wa).alias("s"),
-    ).withColumn(
-        "mean_milli", F.expr("1000 * sd div nd").cast("long")
-    )
-    return m.groupBy("event_type").agg(
-        F.max("ndays").alias("n_days"),
-        F.max("s").alias("total"),
-        F.expr(
-            "cast(1000 * sum(abs(ndays * sd - nd * s))"
-            " div (max(ndays) * max(s)) as bigint)"
-        ).alias("dev_milli"),
-        F.expr("max_by(dow, mean_milli * 8 + (7 - dow))")
-        .cast("long")
-        .alias("peak_dow"),
-        F.max("mean_milli").alias("peak_mean_milli"),
-        F.expr("min_by(dow, mean_milli * 8 + dow)")
-        .cast("long")
-        .alias("trough_dow"),
-        F.min("mean_milli").alias("trough_mean_milli"),
-    )
-
-
-# ------------------------------------------------- autocorrelation
-# "Does yesterday (or last week) predict today?" — lag-1 and lag-7
-# Pearson autocorrelation of the densified daily count series per
-# event type, the q_ols_per_source numeric discipline: six exact
-# bigint sums per (type, lag), then r² as ONE double expression over
-# the bigints (both engines perform the identical IEEE ops before the
-# single round-6), sign published separately from the exact integer
-# covariance numerator so the directional claim never rests on a
-# float. Constant series ⇒ zero variance ⇒ r² NULL via nullif.
-# Scale: the per-(type, day) rollup is the only corpus exchange; the
-# lag window and sums run on the O(types × days) calendar-bounded
-# dim (the q_forecast_backtest shape).
-@_q(
-    "q_autocorr",
-    f"""
-    WITH {_DENSE_DAILY_CTE},
-    l AS (SELECT event_type, day, n,
-                 LAG(n, 1) OVER (PARTITION BY event_type
-                                 ORDER BY day) AS l1,
-                 LAG(n, 7) OVER (PARTITION BY event_type
-                                 ORDER BY day) AS l7
-          FROM d),
-    p AS (SELECT event_type, 1 AS lag, n AS y, l1 AS x FROM l
-          WHERE l1 IS NOT NULL
-          UNION ALL
-          SELECT event_type, 7 AS lag, n AS y, l7 AS x FROM l
-          WHERE l7 IS NOT NULL),
-    s AS (SELECT event_type, CAST(lag AS bigint) AS lag,
-                 CAST(COUNT(*) AS bigint) AS np,
-                 CAST(SUM(x) AS bigint) AS sx,
-                 CAST(SUM(y) AS bigint) AS sy,
-                 CAST(SUM(x * y) AS bigint) AS sxy,
-                 CAST(SUM(x * x) AS bigint) AS sxx,
-                 CAST(SUM(y * y) AS bigint) AS syy
-          FROM p GROUP BY 1, 2)
-    SELECT event_type, lag, np AS n_pairs,
-           CAST(np * sxy - sx * sy AS bigint) AS cov_num,
-           CAST(CASE WHEN np * sxy - sx * sy > 0 THEN 1
-                     WHEN np * sxy - sx * sy < 0 THEN -1
-                     ELSE 0 END AS bigint) AS r_sign,
-           ROUND(CAST(np * sxy - sx * sy AS double)
-                 * (np * sxy - sx * sy)
-                 / NULLIF((np * sxx - sx * sx)
-                          * CAST(np * syy - sy * sy AS double), 0),
-                 6) AS r2
-    FROM s
-    """,
-)
-def q_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per (event type, lag ∈ {1, 7}): pair count, exact integer
-    covariance numerator and its sign, and round-6 r² of the daily
-    count series against its own lag. See family comment — one double
-    expression, exact bigint sums, nullif on the zero-variance
-    denominator."""
-    d = dense_daily_counts(spark, sf_dir)
-    wo = Window.partitionBy("event_type").orderBy("day")
-    lagged = d.select(
-        "event_type",
-        "n",
-        F.lag("n", 1).over(wo).alias("l1"),
-        F.lag("n", 7).over(wo).alias("l7"),
-    )
-    p = lagged.select(
-        "event_type",
-        F.expr("stack(2, 1, l1, 7, l7)").alias("lag", "x"),
-        F.col("n").alias("y"),
-    ).where(F.col("x").isNotNull())
-    s = p.groupBy("event_type", F.col("lag").cast("long").alias("lag")).agg(
-        F.count(F.lit(1)).cast("long").alias("np"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
-    )
-    num = F.col("np") * F.col("sxy") - F.col("sx") * F.col("sy")
-    denx = F.col("np") * F.col("sxx") - F.col("sx") * F.col("sx")
-    deny = F.col("np") * F.col("syy") - F.col("sy") * F.col("sy")
-    return s.select(
-        "event_type",
-        "lag",
-        F.col("np").alias("n_pairs"),
-        num.cast("long").alias("cov_num"),
-        F.when(num > 0, F.lit(1))
-        .when(num < 0, F.lit(-1))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("r_sign"),
-        F.round(
-            num.cast("double")
-            * num
-            / F.expr(
-                "nullif((np * sxx - sx * sx)"
-                " * cast(np * syy - sy * sy as double), 0)"
-            ),
-            6,
-        ).alias("r2"),
-    )
-
-
-# ------------------------------------------------- session pathing
-# "Given where a session starts, where does it go?" — the funnel-
-# discovery complement to q_funnel's fixed-order scoring: sessions
-# are segmented by the SAME 30-minute gap rule as q_sessionize (one
-# constant, one rendering per engine), each session's first ≤5 event
-# types join into a '>' path under the deterministic (ms, event_id)
-# order, and the top-10 paths per entry type rank through the
-# digit-bucketed topk_by_count pruner (oracle = the plain whole-
-# partition rank window, so the gate again proves pruning
-# rank-preserving). Scale: one user_id exchange serves the session
-# windows; collect_list is session-bounded; the path-count dim is
-# value-domain-bounded (≤ types^5 distinct paths) and the rank
-# window only ever sees the pruned head.
-@_q(
-    "q_session_paths",
-    f"""
-    WITH s AS (
-      SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms,
-             lag(epoch_ms(ts)) OVER (PARTITION BY user_id
-               ORDER BY epoch_ms(ts), event_id) AS prev_ms
-      FROM events
-    ), r AS (
-      SELECT user_id, event_id, event_type, ms,
-             CAST(SUM(CASE WHEN prev_ms IS NULL
-                           OR ms - prev_ms > {_SESSION_GAP_MS}
-                           THEN 1 ELSE 0 END)
-               OVER (PARTITION BY user_id ORDER BY ms, event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS bigint) AS session_id
-      FROM s
-    ), p AS (
-      SELECT user_id, session_id,
-             (list(event_type ORDER BY ms, event_id))[1] AS entry,
-             array_to_string((list(event_type ORDER BY ms,
-                                   event_id))[1:5], '>') AS path
-      FROM r GROUP BY 1, 2
-    ), c AS (
-      SELECT entry, path, CAST(COUNT(*) AS bigint) AS n_sessions
-      FROM p GROUP BY 1, 2
-    )
-    SELECT entry, path, n_sessions, CAST(rnk AS bigint) AS rnk
-    FROM (SELECT entry, path, n_sessions,
-                 ROW_NUMBER() OVER (PARTITION BY entry
-                   ORDER BY n_sessions DESC, path ASC) AS rnk
-          FROM c)
-    WHERE rnk <= 10
-    """,
-)
-def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 session paths (first ≤5 event types, '>'-joined) per
-    entry event type, with session counts and ranks. See family
-    comment — q_sessionize's gap rule, topk_by_count's pruner."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type", "ts"
-    )
-    ms = F.unix_millis(F.col("ts").cast("timestamp"))
-    ordw = Window.partitionBy("user_id").orderBy("ms", "event_id")
-    s = ev.withColumn("ms", ms).withColumn(
-        "prev_ms", F.lag("ms").over(ordw)
-    )
-    new_sess = F.when(
-        F.col("prev_ms").isNull()
-        | ((F.col("ms") - F.col("prev_ms")) > _SESSION_GAP_MS),
-        1,
-    ).otherwise(0)
-    r = s.withColumn(
-        "session_id",
-        F.sum(new_sess)
-        .over(ordw.rowsBetween(Window.unboundedPreceding, 0))
-        .cast("long"),
-    )
-    arr = F.array_sort(
-        F.collect_list(
-            F.struct(
-                F.col("ms").alias("ms"),
-                F.col("event_id").alias("event_id"),
-                F.col("event_type").alias("et"),
-            )
-        )
-    )
-    p = r.groupBy("user_id", "session_id").agg(arr.alias("a")).select(
-        F.element_at("a", 1)["et"].alias("entry"),
-        F.array_join(
-            F.transform(F.slice("a", 1, 5), lambda x: x["et"]), ">"
-        ).alias("path"),
-    )
-    c = p.groupBy("entry", "path").agg(
-        F.count(F.lit(1)).cast("long").alias("n_sessions")
-    )
-    return topk_by_count(
-        c, ["entry"], ["path"], 10, cnt_col="n_sessions"
-    ).select("entry", "path", "n_sessions", F.col("rnk").cast("long"))
-
-
 # --------------------------------------------- lang×source coupling
 # "Are languages spread evenly across sources, or does each source
 # own its own languages?" — the independence audit on the documents
@@ -4722,7 +3469,7 @@ def q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 # = over-represented), and the corpus association as the total
 # variation distance between the joint and the product of marginals,
 # TVD = Σ|O·N − R·C| / (2·N²), published as exact integer milli via
-# cross-multiplication (the q_dow_seasonality rule). Headroom: each
+# cross-multiplication (no division before the last step). Headroom: each
 # leverage cell fits bigint to N ≈ 3·10⁹ (|O·N − R·C| ≤ N²), but
 # Σ|·| ≤ 2·N² with the extra ×1000 would overflow int64 near
 # N ≈ 6.8·10⁷ — so the Spark side sums |leverage| as decimal(38,0)
@@ -4841,7 +3588,7 @@ def slo_burn_from_daily(g: DataFrame) -> DataFrame:
 # ------------------------------------------------------- SLO burn
 # The on-call question over the event stream: what share of events
 # errored each day, and is the trailing-7-day burn over budget? Runs
-# on the DENSIFIED day grid (the time-series family rule): totals
+# on the DENSIFIED day grid (dense_daily_counts): totals
 # are the cross-type daily sum, the error series is the 'error'
 # type's row, both exact integers, and the trailing window publishes
 # its own day count so a partial window can never silently pass as a
@@ -4897,102 +3644,14 @@ def q_slo_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
     return slo_burn_from_daily(g)
 
 
-# ------------------------------------------------------ attribution
-# The conversion question: when a purchase happens, how long ago was
-# the same user's last view? A windowed carry-forward (the q_asof_join
-# rule — ZERO join nodes: last_value(view ms IGNORE NULLS) over the
-# strictly-preceding frame), lags bucketed by DECIMAL-DIGIT count
-# (the q_event_gaps rule — integer-exact where a log bucket could
-# straddle a libm ulp), never-viewed purchases published under the
-# explicit -1 bucket instead of silently dropping, and the milli
-# share over total purchases. Scale: the view/purchase filter pushes
-# to the scan, one user_id exchange serves the carry-forward, and
-# the histogram + share window run on the ≤20-row digit dim.
-@_q(
-    "q_attribution",
-    """
-    WITH seq AS (
-      SELECT user_id, event_id, event_type, epoch_ms(ts) AS ms,
-             last_value(CASE WHEN event_type = 'view'
-                             THEN epoch_ms(ts) END IGNORE NULLS)
-               OVER (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND 1 PRECEDING) AS last_view_ms
-      FROM events WHERE event_type IN ('view', 'purchase')
-    ),
-    p AS (SELECT ms - last_view_ms AS lag_ms FROM seq
-          WHERE event_type = 'purchase'),
-    b AS (SELECT CASE WHEN lag_ms IS NULL THEN -1
-                      ELSE LENGTH(CAST(lag_ms AS varchar)) END
-                   AS lag_digits,
-                 CAST(COUNT(*) AS bigint) AS n,
-                 CAST(MIN(lag_ms) AS bigint) AS min_lag_ms,
-                 CAST(MAX(lag_ms) AS bigint) AS max_lag_ms
-          FROM p GROUP BY 1)
-    SELECT CAST(lag_digits AS bigint) AS lag_digits, n,
-           min_lag_ms, max_lag_ms,
-           CAST(1000 * n // SUM(n) OVER () AS bigint) AS share_milli
-    FROM b
-    """,
-)
-def q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Purchase-to-last-view lag histogram in decimal-digit buckets
-    (-1 = purchase with no prior view), with per-bucket min/max lag
-    and milli share of all purchases. See family comment."""
-    ev = (
-        load(spark, sf_dir, "events")
-        .where(F.col("event_type").isin("view", "purchase"))
-        .select("user_id", "event_id", "event_type", "ts")
-    )
-    ms = F.unix_millis(F.col("ts").cast("timestamp"))
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ms", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    seq = ev.withColumn("ms", ms).withColumn(
-        "last_view_ms",
-        F.last(
-            F.when(F.col("event_type") == "view", F.col("ms")),
-            ignorenulls=True,
-        ).over(w),
-    )
-    p = seq.where(F.col("event_type") == "purchase").select(
-        (F.col("ms") - F.col("last_view_ms")).alias("lag_ms")
-    )
-    b = p.groupBy(
-        F.when(F.col("lag_ms").isNull(), F.lit(-1))
-        .otherwise(F.length(F.col("lag_ms").cast("string")))
-        .cast("long")
-        .alias("lag_digits")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.min("lag_ms").cast("long").alias("min_lag_ms"),
-        F.max("lag_ms").cast("long").alias("max_lag_ms"),
-    )
-    return b.select(
-        "lag_digits",
-        "n",
-        "min_lag_ms",
-        "max_lag_ms",
-        F.expr("cast(1000 * n div sum(n) over () as bigint)").alias(
-            "share_milli"
-        ),
-    )
-
-
-# ------------------------------------------------------ CUBE / EXCEPT
-# Two operator shapes, each in its canonical engine form.
+# -------------------------------------------------------------- CUBE
 # q_cube_revenue: full CUBE over (priority, status) with the composite
 # grouping id (Spark grouping_id() == DuckDB GROUPING(a, b), same bit
 # encoding, the gate proves it) and '(all)' markers so every stratum
 # row is self-describing; revenue in exact floor-cents
 # (cast(floor(o_totalprice * 100)) — floor() is the same IEEE op in
 # both engines, where a bare double→bigint cast would truncate in
-# Spark but round in DuckDB). q_window_shoppers: viewers-minus-
-# purchasers as EXCEPT DISTINCT (Spark subtract == DuckDB EXCEPT).
-# Scale: one map-side-combined rollup; EXCEPT shuffles distinct user
-# ids only.
+# Spark but round in DuckDB). Scale: one map-side-combined rollup.
 @_q(
     "q_cube_revenue",
     """
@@ -5034,72 +3693,6 @@ def q_cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rev_cents",
         )
     )
-
-
-@_q(
-    "q_window_shoppers",
-    """
-    SELECT user_id, CAST(epoch_ms(ts) // 86400000 AS bigint) AS day
-    FROM events WHERE event_type = 'view'
-    EXCEPT
-    SELECT user_id, CAST(epoch_ms(ts) // 86400000 AS bigint)
-    FROM events WHERE event_type = 'purchase'
-    """,
-)
-def q_window_shoppers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window-shopping user-days: (user, day) pairs with a view but no
-    purchase that day — EXCEPT DISTINCT at the granularity where the
-    synthetic corpus actually separates the two (every heavy user
-    eventually purchases SOMEDAY, so plain user-level EXCEPT is empty
-    — the day grain is the one a re-engagement campaign keys on). See
-    family comment."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id",
-        F.expr(
-            "cast(unix_millis(cast(ts as timestamp)) div 86400000"
-            " as bigint)"
-        ).alias("day"),
-        "event_type",
-    )
-    views = ev.where(F.col("event_type") == "view").select(
-        "user_id", "day"
-    )
-    buys = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", "day"
-    )
-    return views.subtract(buys)
-
-
-@_q(
-    "q_convert_days",
-    """
-    SELECT user_id, CAST(epoch_ms(ts) // 86400000 AS bigint) AS day
-    FROM events WHERE event_type = 'view'
-    INTERSECT
-    SELECT user_id, CAST(epoch_ms(ts) // 86400000 AS bigint)
-    FROM events WHERE event_type = 'purchase'
-    """,
-)
-def q_convert_days(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_window_shoppers' INTERSECT twin: (user, day) pairs with BOTH
-    a view and a purchase — same-day conversions, the set-op shape
-    completing EXCEPT/UNION coverage (Spark intersect == DuckDB
-    INTERSECT, distinct semantics both sides)."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id",
-        F.expr(
-            "cast(unix_millis(cast(ts as timestamp)) div 86400000"
-            " as bigint)"
-        ).alias("day"),
-        "event_type",
-    )
-    views = ev.where(F.col("event_type") == "view").select(
-        "user_id", "day"
-    )
-    buys = ev.where(F.col("event_type") == "purchase").select(
-        "user_id", "day"
-    )
-    return views.intersect(buys)
 
 
 # ------------------------------------------------------- SCD2 build
@@ -5173,89 +3766,6 @@ def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
         nxt.cast("long").alias("valid_to_ms"),
         F.row_number().over(w2).cast("long").alias("version"),
         nxt.isNull().alias("is_current"),
-    )
-
-
-# -------------------------------------------------- lateness profile
-# Watermark sizing from the data instead of folklore: how late do
-# events actually arrive? Arrival order is the monotone ingest id
-# (event_id); event time is ms. Per user, the running event-time
-# maximum over STRICTLY PRIOR arrivals (1-preceding frame — a row is
-# never late vs itself); an arrival is late iff its ms is behind that
-# max, and its lateness = max − ms. The profile buckets lateness by
-# DECIMAL-DIGIT count (the q_event_gaps integer-exact rule), with
-# on-time arrivals published under the explicit 0 bucket (first
-# arrival per user included — nothing precedes it), so the shares sum
-# to 1000 over ALL events and a streaming operator can read
-# "watermark = 10^d ms covers X‰ of arrivals" straight off the rows.
-# Scale: one user_id exchange for the running max; histogram + share
-# window on the ≤20-row digit dim.
-@_q(
-    "q_lateness_profile",
-    """
-    WITH s AS (
-      SELECT epoch_ms(ts) AS ms,
-             max(epoch_ms(ts)) OVER (PARTITION BY user_id
-               ORDER BY event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND 1 PRECEDING) AS prior_max
-      FROM events
-    ),
-    l AS (SELECT CASE WHEN prior_max IS NULL OR ms >= prior_max THEN 0
-                      ELSE LENGTH(CAST(prior_max - ms AS varchar)) END
-                   AS late_digits,
-                 CASE WHEN prior_max IS NOT NULL AND ms < prior_max
-                      THEN prior_max - ms END AS late_ms
-          FROM s),
-    b AS (SELECT late_digits, CAST(COUNT(*) AS bigint) AS n,
-                 CAST(MIN(late_ms) AS bigint) AS min_late_ms,
-                 CAST(MAX(late_ms) AS bigint) AS max_late_ms
-          FROM l GROUP BY 1)
-    SELECT CAST(late_digits AS bigint) AS late_digits, n,
-           min_late_ms, max_late_ms,
-           CAST(1000 * n // SUM(n) OVER () AS bigint) AS share_milli
-    FROM b
-    """,
-)
-def q_lateness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Out-of-order arrival profile in decimal-digit lateness buckets
-    (0 = on-time), with milli shares over all events — the table a
-    watermark configuration review reads. See family comment."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id",
-        F.unix_millis(F.col("ts").cast("timestamp")).alias("ms"),
-        "event_id",
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    s = ev.withColumn("prior_max", F.max("ms").over(w))
-    late = F.when(
-        F.col("prior_max").isNotNull()
-        & (F.col("ms") < F.col("prior_max")),
-        F.col("prior_max") - F.col("ms"),
-    )
-    l = s.select(
-        F.when(late.isNull(), F.lit(0))
-        .otherwise(F.length(late.cast("string")))
-        .alias("late_digits"),
-        late.alias("late_ms"),
-    )
-    b = l.groupBy("late_digits").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.min("late_ms").cast("long").alias("min_late_ms"),
-        F.max("late_ms").cast("long").alias("max_late_ms"),
-    )
-    return b.select(
-        F.col("late_digits").cast("long"),
-        "n",
-        "min_late_ms",
-        "max_late_ms",
-        F.expr("cast(1000 * n div sum(n) over () as bigint)").alias(
-            "share_milli"
-        ),
     )
 
 
@@ -5408,132 +3918,4 @@ def q_floor_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("balance"),
-    )
-
-
-# ------------------------------------------ rolling distinct, 90-day
-# Exact trailing-90-day distinct users per day — the q_dau_wau
-# problem at the window size where its bounded-fan-out trick stops
-# scaling (7× in-row fan-out is fine; 90× is ~13 copies of the
-# corpus). The difference-array method does it in O(pairs): a (user,
-# day) pair is the LAST activity of u inside the window ending D iff
-# day ≤ D < min(next_day, day + 90) — so each pair supports exactly
-# the window-ends in [day, min(next_day − 1, day + 89)], and the
-# per-day distinct count is the prefix sum of +1/−1 interval
-# endpoints over the dense day grid. No fan-out, no per-day rescan,
-# one lead window per user. The ORACLE is the deliberately naive
-# independent formulation — a day × activity range join with
-# COUNT(DISTINCT) — so the gate proves the interval algebra, not the
-# implementation, at every tested SF. Scale: one user_id exchange
-# (dedup + lead share the sort), endpoint rollup on the day dim, the
-# prefix sum a global window over the CALENDAR-bounded day grid
-# (BOUNDED_OK), corpus never rescanned per day.
-_ROLL_WIN = 90
-
-
-@_q(
-    "q_rolling_distinct_90",
-    f"""
-    WITH ud AS (SELECT DISTINCT user_id,
-                       CAST(epoch_ms(ts) // 86400000 AS bigint) AS day
-                FROM events),
-    span AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM ud),
-    days AS (SELECT unnest(generate_series(lo, hi)) AS day FROM span)
-    SELECT d.day, CAST(COUNT(DISTINCT ud.user_id) AS bigint)
-             AS n_active_90
-    FROM days d LEFT JOIN ud
-      ON ud.day BETWEEN d.day - {_ROLL_WIN - 1} AND d.day
-    GROUP BY 1
-    """,
-)
-def q_rolling_distinct_90(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per day of the corpus span: the exact count of users active in
-    the trailing 90 days, via interval endpoints + one prefix sum.
-    See family comment — the oracle is the naive range join."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id",
-        (
-            F.unix_millis(F.col("ts").cast("timestamp"))
-            / F.lit(86400000)
-        )
-        .cast("long")
-        .alias("day"),
-    )
-    ud = ev.distinct()
-    w = Window.partitionBy("user_id").orderBy("day")
-    pairs = ud.withColumn("next_day", F.lead("day").over(w))
-    starts = pairs.select(F.col("day").alias("d"), F.lit(1).alias("delta"))
-    ends = pairs.select(
-        F.least(
-            F.coalesce(F.col("next_day"), F.lit(2**62)),
-            F.col("day") + F.lit(_ROLL_WIN),
-        ).alias("d"),
-        F.lit(-1).alias("delta"),
-    )
-    deltas = starts.unionAll(ends).groupBy("d").agg(
-        F.sum("delta").alias("delta")
-    )
-    span = ud.agg(
-        F.min("day").alias("lo"), F.max("day").alias("hi")
-    )
-    days = span.select(
-        F.explode(F.sequence(F.col("lo"), F.col("hi"))).alias("day")
-    )
-    dense = days.join(deltas, days["day"] == deltas["d"], "left").select(
-        "day", F.coalesce("delta", F.lit(0)).alias("delta")
-    )
-    wprefix = (
-        Window.orderBy("day")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return dense.select(
-        "day",
-        F.sum("delta").over(wprefix).cast("long").alias("n_active_90"),
-    )
-
-
-# ------------------------------------------------- trailing-1h rate
-# The rate-limiter's view of the stream: at EVERY event, how many
-# events (and how much value, in exact floor-cents) did the same
-# user produce in the trailing hour including this one? A TIME-RANGE
-# frame (RANGE BETWEEN 3599999 PRECEDING) on the millisecond axis —
-# the frame kind that is CORRECT on irregular event spacing where a
-# ROWS frame would count a fixed number of events regardless of how
-# long ago they happened (on a sparse daily rollup dim the same rule
-# reads "30 rows ≠ 30 days"; here it holds at EVENT grain). Scale: one
-# user_id exchange, one sort, O(1) sliding-frame state per row — Spark's
-# range-frame implementation advances two pointers over the sorted
-# partition, never re-scanning the window per row.
-@_q(
-    "q_rate_window",
-    """
-    SELECT user_id, event_id,
-           CAST(COUNT(*) OVER w AS bigint) AS n_1h,
-           CAST(SUM(CAST(FLOOR(value * 100) AS bigint)) OVER w
-                AS bigint) AS cents_1h
-    FROM events
-    WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ms(ts)
-                 RANGE BETWEEN 3599999 PRECEDING AND CURRENT ROW)
-    """,
-)
-def q_rate_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per event: same-user event count and exact floor-cents value
-    over the trailing hour (time-RANGE frame, not ROWS). See family
-    comment."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.unix_millis(F.col("ts").cast("timestamp")).alias("ms"),
-        F.floor(F.col("value") * 100).cast("long").alias("cents"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ms")
-        .rangeBetween(-3599999, 0)
-    )
-    return ev.select(
-        "user_id",
-        "event_id",
-        F.count(F.lit(1)).over(w).cast("long").alias("n_1h"),
-        F.sum("cents").over(w).cast("long").alias("cents_1h"),
     )

@@ -113,10 +113,9 @@ def topk_by_count(counts, group_cols, key_cols, k: int, cnt_col: str = "c"):
     reaches k BEFORE any window runs, and row_number only the
     surviving head (overshoot bounded by the boundary count-decade).
     The generic core behind relevance._src_topk_df (per-source
-    vocabulary) and relational.q_event_topusers (per-type heavy
-    users); the matching oracle is always the plain whole-partition
-    rank window, so every consumer's gate proves the pruning
-    rank-preserving. Input: a pre-aggregated counts frame. Output:
+    vocabulary); the matching oracle is always the plain
+    whole-partition rank window, so every consumer's gate proves the
+    pruning rank-preserving. Input: a pre-aggregated counts frame. Output:
     input columns + ``rnk``."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
@@ -163,8 +162,9 @@ def two_phase_ranks(
 ):
     """Per-group ascending ``row_number() OVER (PARTITION BY group
     ORDER BY value, tiebreaks)`` WITHOUT ever sorting a whole group on
-    one reducer — the generic core of the q_score_calibration /
-    q_gini_activity / q_epoch_shuffle decomposition: (1) bucket rows by
+    one reducer — the q_score_calibration / q_epoch_shuffle
+    decomposition, factored for q_robust_stats, q_trimmed_mean,
+    q_heaps_law and q_decile_grid: (1) bucket rows by
     equal-width VALUE ranges of the integer ``value_col`` (monotone,
     ties share a bucket — one tiny global min/max agg sizes the width),
     (2) a per-(group, bucket) count dim yields each bucket's exclusive

@@ -1,8 +1,8 @@
-"""q_activity_bitmap + q_floor_balance + q_fd_audit: pure-Python
-replays over the full sf0.001 tables plus engineered fixtures — the
-bitmap's 64-day horizon edge (day 63 uses the sign bit; day ≥ 64
-contributes nothing), the floor balance's reflection identity on a
-hand sequence where the floor binds twice, and the FD audit's
+"""q_activity_bitmap + q_floor_balance + q_fd_audit + q_split_scan:
+pure-Python replays over the full sf0.001 tables plus engineered
+fixtures — the bitmap's 64-day horizon edge (day 63 uses the sign bit;
+day ≥ 64 contributes nothing), the floor balance's reflection identity
+on a hand sequence where the floor binds twice, and the FD audit's
 majority tie-break."""
 
 from __future__ import annotations
@@ -214,10 +214,6 @@ def test_fd_audit_tiebreak_and_exact_fd(spark, tmp_path):
     assert got == {"A": (2, "de", 500), "B": (1, "fr", 1000)}
 
 
-if __name__ == "__main__":
-    pytest.main([__file__, "-q"])
-
-
 # ----------------------------------------------------- split scan
 
 
@@ -263,102 +259,5 @@ def test_split_scan_replay_sf0001(spark):
     assert got[tmax][2] == int((class_tot**2).sum())
 
 
-# ---------------------------------------------- rolling distinct 90
-
-
-def test_rolling_distinct_90_replay_sf0001(spark):
-    """Difference-array rolling distinct vs a brute-force python
-    replay over the full sf0.001 events, plus the structural
-    invariants: monotone ≤ total users, and a window fully inside a
-    gap longer than 90 days would read 0 (vacuous on this data; the
-    fixture below forces it)."""
-    from documentai_ocr_spark.queries.relational import (
-        q_rolling_distinct_90,
-    )
-
-    ev = (
-        spark.read.parquet(f"{SF}/events.parquet")
-        .selectExpr(
-            "user_id", "unix_millis(cast(ts as timestamp)) as ms"
-        )
-        .toPandas()
-    )
-    ev["day"] = ev["ms"] // 86400000
-    ud = ev[["user_id", "day"]].drop_duplicates()
-    lo, hi = int(ud["day"].min()), int(ud["day"].max())
-    want = {}
-    for d in range(lo, hi + 1):
-        w = ud[(ud["day"] >= d - 89) & (ud["day"] <= d)]
-        want[d] = w["user_id"].nunique()
-    got = {
-        int(r.day): int(r.n_active_90)
-        for r in q_rolling_distinct_90(spark, SF).collect()
-    }
-    assert got == want
-    assert max(got.values()) <= ud["user_id"].nunique()
-
-
-def test_rolling_distinct_90_gap_fixture(spark, tmp_path):
-    """Two users active on day 0; one returns on day 200. The count
-    must fall to 0 for days 90..199 (the >90-day silence), then read
-    1 — the interval-endpoint algebra's decay edge, which the
-    fan-out method gets for free but a buggy difference array (e.g.
-    a missing −1 endpoint) would corrupt forever after."""
-    rows = [
-        (0, 1, "view", 0),
-        (1, 2, "view", 3600_000),             # same day 0
-        (2, 1, "view", 200 * 86400000),       # day 200
-    ]
-    sf = _events_pdf(rows, tmp_path)
-    from documentai_ocr_spark.queries.relational import (
-        q_rolling_distinct_90,
-    )
-
-    got = {
-        int(r.day): int(r.n_active_90)
-        for r in q_rolling_distinct_90(spark, sf).collect()
-    }
-    assert got[0] == 2
-    assert got[89] == 2
-    assert got[90] == 0
-    assert got[199] == 0
-    assert got[200] == 1
-    assert len(got) == 201
-
-
-# -------------------------------------------------- rate window (1h)
-
-
-def test_rate_window_range_vs_rows_fixture(spark, tmp_path):
-    """Events at minutes 0, 30, 59.999, 90, 200: the trailing-hour
-    RANGE frame reads 1,2,3,2,1 — at minute 90 the minute-30 event
-    sits exactly 3,600,000 ms back, ONE millisecond outside the
-    3,599,999-PRECEDING frame (the inclusive-bound edge), and a
-    ROWS frame would instead count a fixed number of events
-    regardless of age (reading 3 at minute 200). Also pins peer
-    inclusion: two events in the SAME millisecond must see each
-    other."""
-    from documentai_ocr_spark.queries.relational import q_rate_window
-
-    m = 60_000
-    rows = [
-        (0, 1, "view", 0),
-        (1, 1, "view", 30 * m),
-        (2, 1, "view", 60 * m - 1),
-        (3, 1, "view", 90 * m),
-        (4, 1, "view", 200 * m),
-        # user 2: same-ms peers
-        (5, 2, "view", 1000),
-        (6, 2, "view", 1000),
-    ]
-    sf = _events_pdf(rows, tmp_path)
-    got = {
-        int(r.event_id): int(r.n_1h)
-        for r in q_rate_window(spark, sf).collect()
-    }
-    assert got[0] == 1
-    assert got[1] == 2
-    assert got[2] == 3          # 0, 30m, 59.999m all inside the hour
-    assert got[3] == 2          # minute-30 is 1 ms outside the frame
-    assert got[4] == 1          # everything aged out
-    assert got[5] == 2 and got[6] == 2  # same-ms peers see each other
+if __name__ == "__main__":
+    pytest.main([__file__, "-q"])

@@ -1,7 +1,9 @@
 """Registry-count freshness: the three documents that state registry
 sizes (REGISTRY.md header, README.md tree annotation, COVERAGE.md
 header) must agree with the live registry — len(QUERIES) /
-len(ORACLES) / rows-only count. Counts drifted twice during round 3
+len(ORACLES) / rows-only count — and PLANS.md must audit exactly the
+live registry, with a measured-bounds table of live queries whose
+result line counts that table. Counts drifted twice during round 3
 before being caught by hand; this makes a stale count a red test
 instead of an advisor finding.
 
@@ -51,6 +53,39 @@ def test_registry_md_row_per_query():
         "REGISTRY.md rows drifted from the live registry — "
         "regenerate with tools/registry_index.py"
     )
+
+
+def test_plans_md_pinned_to_registry():
+    text = _read("PLANS.md")
+    audit, _, measured = text.partition("## Measured bounds")
+    rows = re.findall(r"^\| (\w+) \|", audit, re.M)
+    assert sorted(r for r in rows if r != "query") == sorted(QUERIES), (
+        "PLANS.md audit rows drifted from the live registry — "
+        "regenerate with tools/plan_audit.py"
+    )
+    if not measured:
+        return
+    header = re.search(r"^\| query \|(.*)$", measured, re.M)
+    assert header, "PLANS.md measured-bounds table header missing"
+    n_sf = header.group(1).count("measured @")
+    m_rows = [
+        [c.strip() for c in line.strip().strip("|").split("|")]
+        for line in measured.splitlines()
+        if re.match(r"^\| [qx]_\w+ \|", line)
+    ]
+    assert {r[0] for r in m_rows} <= set(QUERIES), (
+        "PLANS.md measured-bounds rows name queries no longer registered"
+    )
+    m = re.search(
+        r"Measured-bounds result: (\d+) violated / (\d+) measured "
+        r"\((\d+) queries × (\d+) sf\)",
+        measured,
+    )
+    assert m, "PLANS.md measured-bounds result line missing"
+    cells = [c for r in m_rows for c in r[1 : 1 + n_sf] if c != "—"]
+    assert int(m.group(2)) == len(cells)
+    assert int(m.group(3)) == len(m_rows)
+    assert int(m.group(4)) == n_sf
 
 
 def test_readme_count():

@@ -64,123 +64,6 @@ def test_asof_strictly_prior_tie_break(spark):
     assert out[5].click_value == 1.5  # not the later 9.9 click
 
 
-def test_interval_overlap_boundary_inclusive(spark):
-    """Both interval endpoints are inclusive in integer milliseconds —
-    a purchase at exactly beg_ms or end_ms is inside."""
-    import datetime
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from documentai_ocr_spark.queries.relational import q_interval_overlap
-
-    t0 = datetime.datetime(2024, 1, 1, 0, 0, 0)
-
-    def at(sec):
-        return t0 + datetime.timedelta(seconds=sec)
-
-    rows = pd.DataFrame(
-        {
-            # error interval [t0, t0+10s]; purchases at beg, end, end+1ms
-            "event_id": [1, 2, 3, 4],
-            "ts": [at(0), at(0), at(10), at(10.001)],
-            "user_id": [7] * 4,
-            "event_type": ["error", "purchase", "purchase", "purchase"],
-            "value": [10.0, 1.0, 1.0, 1.0],
-            "props": ["{}"] * 4,
-        }
-    )
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(rows).write.parquet(
-            os.path.join(d, "events.parquet")
-        )
-        out = q_interval_overlap(spark, d).collect()
-    assert len(out) == 1
-    assert out[0].n_purchases == 2  # both boundaries in, end+1ms out
-
-
-def test_funnel_order_enforced(spark):
-    """Funnel stages must respect event order: a view BEFORE the first
-    signup does not advance the funnel; one after it does; the purchase
-    must follow the qualifying view."""
-    import datetime
-    import os
-    import tempfile
-
-    import pandas as pd
-
-    from documentai_ocr_spark.queries.relational import q_funnel
-
-    t0 = datetime.datetime(2024, 1, 1)
-
-    def at(m):
-        return t0 + datetime.timedelta(minutes=m)
-
-    rows = pd.DataFrame(
-        {
-            # u1: view@0 (too early), signup@1, view@2, purchase@3 → stage 3
-            # u2: signup@0, purchase@1 (no view between) → stage 1
-            # u3: view-only → not in funnel at all
-            "event_id": [1, 2, 3, 4, 5, 6, 7],
-            "ts": [at(0), at(1), at(2), at(3), at(0), at(1), at(0)],
-            "user_id": [1, 1, 1, 1, 2, 2, 3],
-            "event_type": [
-                "view", "signup", "view", "purchase",
-                "signup", "purchase", "view",
-            ],
-            "value": [1.0] * 7,
-            "props": ["{}"] * 7,
-        }
-    )
-    with tempfile.TemporaryDirectory() as d:
-        spark.createDataFrame(rows).write.parquet(
-            os.path.join(d, "events.parquet")
-        )
-        out = {r.user_id: r for r in q_funnel(spark, d).collect()}
-    assert set(out) == {1, 2}
-    assert out[1].stage_reached == 3
-    assert out[1].view_ms > out[1].signup_ms
-    assert out[1].purchase_ms > out[1].view_ms
-    assert out[2].stage_reached == 1
-    assert out[2].view_ms is None and out[2].purchase_ms is None
-
-
-def test_ewma_matches_python_recursion_truncated(spark):
-    """The truncated-EWMA closed form must equal a direct Python
-    re-derivation (renormalized trailing-8 exponential weights), and the
-    first row of each user must have NULL ewma."""
-    from documentai_ocr_spark.queries.relational import (
-        _EWMA_ALPHA,
-        _EWMA_K,
-        q_ewma_anomaly,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    ev = sorted(
-        spark.read.parquet(f"{sf}/events.parquet")
-        .select("event_id", "user_id", "ts", "value")
-        .collect(),
-        key=lambda r: (r.user_id, r.ts, r.event_id),
-    )
-    got = {r.event_id: r for r in q_ewma_anomaly(spark, sf).collect()}
-    hist = {}
-    for r in ev:
-        h = hist.setdefault(r.user_id, [])
-        if not h:
-            assert got[r.event_id].ewma is None
-            assert got[r.event_id].is_spike is None
-        else:
-            tail = h[-_EWMA_K:][::-1]  # most recent first = lag 1
-            num = 0.0
-            den = 0.0
-            for lag, v in enumerate(tail, start=1):
-                num += _EWMA_ALPHA**lag * v
-                den += _EWMA_ALPHA**lag
-            assert got[r.event_id].ewma == round(num / den, 6), r
-        h.append(r.value)
-
-
 def test_dq_checks_fire_on_planted_violations(spark):
     """The suite must actually detect what it claims: plant a duplicate
     pk, an orphan lineitem, an n_chars mismatch, an unknown lang, and an

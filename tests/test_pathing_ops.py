@@ -1,92 +1,11 @@
-"""Session pathing and lang×source association: engineered
-closed-form fixtures plus whole-corpus python replays at sf0.001."""
-
-import datetime as dt
+"""Lang×source association: engineered closed-form fixtures plus a
+whole-corpus python replay at sf0.001."""
 
 import pandas as pd
 
-from documentai_ocr_spark.queries.relational import (
-    _SESSION_GAP_MS,
-    q_lang_source_assoc,
-    q_session_paths,
-)
+from documentai_ocr_spark.queries.relational import q_lang_source_assoc
 
 SF = "/root/testdata/sf0.001"
-
-_EV_COLS = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-
-
-def test_session_paths_engineered(spark, tmp_path):
-    """Hand sessions: the 30-min gap rule segments, paths truncate at
-    5 types, duplicate paths count, ranks tie-break by path asc."""
-    t0 = dt.datetime(2024, 5, 1, 9, 0, 0)
-    m = dt.timedelta(minutes=1)
-    h = dt.timedelta(hours=2)
-    rows, eid = [], 0
-
-    def ev(ts, uid, et):
-        nonlocal eid
-        rows.append((eid, ts, uid, et, 0.0, "{}"))
-        eid += 1
-
-    for base in (t0, t0 + h):  # user 1: a>b>c twice
-        for i, et in enumerate(["a", "b", "c"]):
-            ev(base + i * m, 1, et)
-    ev(t0 + 2 * h, 1, "b")  # and a lone b session
-    for i, et in enumerate(["a", "b", "c", "d", "e", "f"]):  # user 2
-        ev(t0 + i * m, 2, et)
-    d = str(tmp_path / "paths")
-    pdf = pd.DataFrame(rows, columns=_EV_COLS)
-    spark.createDataFrame(pdf).write.parquet(f"{d}/events.parquet")
-    got = sorted(
-        (r["entry"], r["path"], r["n_sessions"], r["rnk"])
-        for r in q_session_paths(spark, d).collect()
-    )
-    assert got == [
-        ("a", "a>b>c", 2, 1),
-        ("a", "a>b>c>d>e", 1, 2),
-        ("b", "b", 1, 1),
-    ]
-
-
-def _py_paths(sf):
-    ev = pd.read_parquet(f"{sf}/events.parquet")
-    ms = ev["ts"].astype("int64") // 1000
-    per: dict[int, list] = {}
-    for m, uid, eid, et in zip(
-        ms, ev["user_id"], ev["event_id"], ev["event_type"]
-    ):
-        per.setdefault(uid, []).append((int(m), int(eid), et))
-    cnt: dict[tuple, int] = {}
-    for uid, evs in per.items():
-        evs.sort()
-        sess: list[list] = []
-        prev = None
-        for m, eid, et in evs:
-            if prev is None or m - prev > _SESSION_GAP_MS:
-                sess.append([])
-            sess[-1].append(et)
-            prev = m
-        for types in sess:
-            key = (types[0], ">".join(types[:5]))
-            cnt[key] = cnt.get(key, 0) + 1
-    out = []
-    by_entry: dict[str, list] = {}
-    for (entry, path), n in cnt.items():
-        by_entry.setdefault(entry, []).append((path, n))
-    for entry, lst in by_entry.items():
-        lst.sort(key=lambda x: (-x[1], x[0]))
-        for rnk, (path, n) in enumerate(lst[:10], 1):
-            out.append((entry, path, n, rnk))
-    return sorted(out)
-
-
-def test_session_paths_replay(spark):
-    got = sorted(
-        (r["entry"], r["path"], r["n_sessions"], r["rnk"])
-        for r in q_session_paths(spark, SF).collect()
-    )
-    assert got == _py_paths(SF) and len(got) > 0
 
 
 def _docs(tmp_path, spark, cells, name):

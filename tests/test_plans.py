@@ -195,19 +195,6 @@ def test_asof_join_has_no_join_node(spark):
     assert n_exchanges(p) == 1
 
 
-def test_interval_overlap_is_equijoin(spark):
-    """The binned range join must plan as a hash/merge equi-join on
-    (user, bucket) — the nested-loop surface of the naive non-equi join
-    is exactly what the binning removes."""
-    p = plan(QUERIES["q_interval_overlap"](spark, SF))
-    assert "BroadcastNestedLoopJoin" not in p
-    assert "CartesianProduct" not in p
-    assert any(
-        j in p
-        for j in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin")
-    )
-
-
 def test_weighted_sample_is_partial_topk(spark):
     """The weighted sample must plan as TakeOrderedAndProject (per-
     partition heap + driver merge) — a global Sort here would be the
@@ -342,23 +329,6 @@ def test_trimmed_mean_bucketed_window(spark):
     assert "SortMergeJoin" not in p
 
 
-def test_attribution_has_no_join_node(spark):
-    """q_attribution is a windowed carry-forward — the as-of rule:
-    zero join nodes, and the view/purchase filter reaches the scan."""
-    p = plan(QUERIES["q_attribution"](spark, SF))
-    assert "Join" not in p
-    assert "In(event_type" in p or "PushedFilters" in p
-
-
-def test_session_paths_single_user_exchange(spark):
-    """One hash exchange on user_id feeds the session windows; the
-    rank stage joins only the broadcast pruned-bucket dim."""
-    p = plan(QUERIES["q_session_paths"](spark, SF))
-    assert p.count("hashpartitioning(user_id") >= 1
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-
-
 def test_skyline_window_carries_collapsed_dim(spark):
     """The descending scan partitions by source but its input is the
     collapsed per-(source, n_chars) dim — the plan must show the
@@ -447,37 +417,6 @@ def test_floor_balance_closed_form_plan(spark):
     assert len(user_ex) == 1, user_ex
     assert "Join" not in p
     assert "MapInPandas" not in p and "ArrowEvalPython" not in p
-
-
-def test_rolling_distinct_no_corpus_fanout(spark):
-    """q_rolling_distinct_90: the difference-array form must NOT
-    explode the corpus (the q_dau_wau fan-out would show a Generate
-    over event-grain rows); its only Generate is the 1-row span's
-    day-sequence explode, and the corpus-side work is one user_id
-    exchange chain."""
-    p = plan(QUERIES["q_rolling_distinct_90"](spark, SF))
-    # the day-grid explode exists… (detail section prints
-    # "Arguments: explode(sequence(lo…" under the Generate node)
-    assert "explode(sequence(lo" in p
-    # …and it is the ONLY Generate in the plan
-    import re
-
-    gens = re.findall(r"^\(\d+\) Generate", p, re.M)
-    assert len(gens) == 1, gens
-    assert "CartesianProduct" not in p
-
-
-def test_rate_window_single_exchange_range_frame(spark):
-    """q_rate_window: one user_id exchange, one Window node carrying
-    a RANGE frame (not ROWS) on the millisecond axis."""
-    p = plan(QUERIES["q_rate_window"](spark, SF))
-    user_ex = [
-        ln
-        for ln in p.splitlines()
-        if "Arguments: hashpartitioning(user_id" in ln
-    ]
-    assert len(user_ex) == 1, user_ex
-    assert "RangeFrame, -3599999" in p  # a ROWS regression prints RowFrame
 
 
 def test_split_scan_one_corpus_exchange(spark):

@@ -516,32 +516,6 @@ def test_bigram_entropy_python_recount(spark):
         assert abs(r["cond_entropy"] - round(h, 6)) < 5e-6, src
 
 
-def test_event_topusers_python_recount(spark):
-    """The generic digit-bucket top-K (second consumer, events table)
-    equals a Counter-based replay with (count DESC, user ASC) order."""
-    from collections import Counter
-
-    from documentai_ocr_spark.queries.relational import (
-        _TOPU_K,
-        q_event_topusers,
-    )
-
-    ev = pd.read_parquet(f"{SF}/events.parquet")
-    per: dict[str, Counter] = {}
-    for et, u in zip(ev["event_type"], ev["user_id"]):
-        per.setdefault(et, Counter())[u] += 1
-    got = {}
-    for r in q_event_topusers(spark, SF).collect():
-        got[(r["event_type"], r["rnk"])] = (r["user_id"], r["n_events"])
-    n = 0
-    for et, cnt in per.items():
-        ranked = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))
-        for i, (u, c) in enumerate(ranked[:_TOPU_K], start=1):
-            assert got[(et, i)] == (u, c), (et, i)
-            n += 1
-    assert len(got) == n
-
-
 def test_langid_confusion_reconciles_with_eval(spark):
     """The confusion matrix marginals must equal q_langid_eval's
     support/predicted/tp columns — one predictor rendering, two views."""

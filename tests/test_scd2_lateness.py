@@ -1,22 +1,15 @@
-"""q_scd2_intervals + q_lateness_profile + q_weighted_median: pure-
-Python replays over the full sf0.001 tables plus engineered fixtures
-hitting every branch — SCD2's collapse-consecutive rule and open
-current interval, the lateness profile's strictly-prior frame and
-explicit on-time bucket, the weighted median's exact 2·cum ≥ total
-crossing (including the all-mass-in-one-length and two-equal-halves
-ties)."""
+"""q_scd2_intervals + q_weighted_median: pure-Python replays over the
+full sf0.001 tables plus engineered fixtures hitting every branch —
+SCD2's collapse-consecutive rule and open current interval, the
+weighted median's exact 2·cum ≥ total crossing (including the
+all-mass-in-one-length and two-equal-halves ties)."""
 
 from __future__ import annotations
-
-from collections import defaultdict
 
 import pandas as pd
 import pytest
 
-from documentai_ocr_spark.queries.relational import (
-    q_lateness_profile,
-    q_scd2_intervals,
-)
+from documentai_ocr_spark.queries.relational import q_scd2_intervals
 from documentai_ocr_spark.queries.textstats import q_weighted_median
 
 SF = "/root/testdata/sf0.001"
@@ -112,81 +105,6 @@ def test_scd2_fixture_branches(spark, tmp_path):
         (1, "B", 20, 30, 2, False),
         (2, "X", 5, None, 1, True),
     ]
-
-
-# --------------------------------------------------------- lateness
-
-
-def _lateness_python(ev: pd.DataFrame):
-    buckets = defaultdict(lambda: [0, None, None])
-    for _, g in ev.groupby("user_id"):
-        g = g.sort_values("event_id")
-        prior = None
-        for _, r in g.iterrows():
-            ms = int(r["ms"])
-            if prior is None or ms >= prior:
-                d = 0
-                late = None
-            else:
-                late = prior - ms
-                d = len(str(late))
-            b = buckets[d]
-            b[0] += 1
-            if late is not None:
-                b[1] = late if b[1] is None else min(b[1], late)
-                b[2] = late if b[2] is None else max(b[2], late)
-            prior = ms if prior is None else max(prior, ms)
-    total = sum(b[0] for b in buckets.values())
-    return sorted(
-        (d, b[0], b[1], b[2], 1000 * b[0] // total)
-        for d, b in buckets.items()
-    )
-
-
-def test_lateness_replay_sf0001(spark):
-    ev = (
-        spark.read.parquet(f"{SF}/events.parquet")
-        .selectExpr(
-            "user_id",
-            "unix_millis(cast(ts as timestamp)) as ms",
-            "event_id",
-        )
-        .toPandas()
-    )
-    want = _lateness_python(ev)
-    got = sorted(
-        (r.late_digits, r.n, r.min_late_ms, r.max_late_ms, r.share_milli)
-        for r in q_lateness_profile(spark, SF).collect()
-    )
-    assert got == want
-    # the explicit on-time bucket must exist (first arrivals qualify)
-    assert any(d == 0 for d, *_ in got)
-
-
-def test_lateness_fixture(spark, tmp_path):
-    """Arrival order 0..3 with event times 100, 50, 100, 1050:
-    arrival1 is 50 ms late (2 digits), others on time; running max
-    is vs PRIOR arrivals only."""
-    pdf = pd.DataFrame(
-        {
-            "event_id": [0, 1, 2, 3],
-            "user_id": [7, 7, 7, 7],
-            "event_type": ["a"] * 4,
-            "ts": pd.Series(
-                [pd.Timestamp(t, unit="ms") for t in (100, 50, 100, 1050)],
-                dtype="datetime64[ms]",
-            ),
-            "value": [0.0] * 4,
-            "props": ["{}"] * 4,
-        }
-    )
-    pdf.to_parquet(str(tmp_path / "events.parquet"))
-    got = {
-        r.late_digits: (r.n, r.min_late_ms, r.max_late_ms, r.share_milli)
-        for r in q_lateness_profile(spark, str(tmp_path)).collect()
-    }
-    assert got[0] == (3, None, None, 750)
-    assert got[2] == (1, 50, 50, 250)
 
 
 # --------------------------------------------------- weighted median

@@ -1,14 +1,11 @@
-"""CUBE / EXCEPT shapes: engineered closed forms and the cube marginal
+"""CUBE shape: an engineered closed form and the cube marginal
 identities on real data."""
 
 import datetime as dt
 
 import pandas as pd
 
-from documentai_ocr_spark.queries.relational import (
-    q_cube_revenue,
-    q_window_shoppers,
-)
+from documentai_ocr_spark.queries.relational import q_cube_revenue
 
 SF = "/root/testdata/sf0.001"
 
@@ -76,53 +73,3 @@ def test_cube_identities_replay(spark):
             assert r["rev_cents"] == sum(
                 v["rev_cents"] for v in cells.values()
             )
-
-
-def test_window_shoppers_engineered(spark, tmp_path):
-    """A user-day with views only is in; the same user's purchase day
-    is out; a purchase on the view day removes it."""
-    t0 = dt.datetime(2024, 2, 1, 10, 0, 0)
-    dd = dt.timedelta(days=1)
-    ev = [
-        (0, t0, 1, "view", 0.0, "{}"),           # day0: view only -> in
-        (1, t0 + dd, 1, "view", 0.0, "{}"),      # day1: view + purchase
-        (2, t0 + dd, 1, "purchase", 0.0, "{}"),  #   -> out
-        (3, t0 + 2 * dd, 2, "purchase", 0.0, "{}"),  # purchase only -> out
-        (4, t0 + 2 * dd, 3, "view", 0.0, "{}"),  # -> in
-        (5, t0 + 2 * dd, 3, "view", 0.0, "{}"),  # duplicate collapses
-    ]
-    d = str(tmp_path / "ws")
-    pdf = pd.DataFrame(
-        ev,
-        columns=["event_id", "ts", "user_id", "event_type", "value", "props"],
-    )
-    spark.createDataFrame(pdf).write.parquet(f"{d}/events.parquet")
-    day0 = int(t0.timestamp() * 1000) // 86400000
-    got = sorted(
-        (r["user_id"], r["day"]) for r in q_window_shoppers(spark, d).collect()
-    )
-    assert got == [(1, day0), (3, day0 + 2)]
-
-
-def test_convert_days_partition_law(spark, tmp_path):
-    """INTERSECT ∪ EXCEPT partitions the distinct view days: on the
-    engineered corpus AND sf0.001, window_shoppers ∪ convert_days ==
-    distinct (user, view-day) pairs, disjointly."""
-    from documentai_ocr_spark.queries.relational import q_convert_days
-
-    ws = {
-        (r["user_id"], r["day"])
-        for r in q_window_shoppers(spark, SF).collect()
-    }
-    cv = {
-        (r["user_id"], r["day"]) for r in q_convert_days(spark, SF).collect()
-    }
-    assert not (ws & cv)
-    ev = pd.read_parquet(f"{SF}/events.parquet")
-    day = ev["ts"].astype("int64") // 1000 // 86400000
-    views = {
-        (int(u), int(d))
-        for u, d, t in zip(ev["user_id"], day, ev["event_type"])
-        if t == "view"
-    }
-    assert (ws | cv) == views and len(cv) > 0

@@ -56,36 +56,6 @@ BOUNDED_OK = {
         "the 1-row broadcast total dim — both sides are bounded "
         "post-aggregation dims, the same pattern as q_threshold_yield",
     ),
-    "q_forecast_backtest": (
-        "PRODUCT-JOIN",
-        "crossJoin of the 1-row broadcast (lo, hi) day-bounds dim onto "
-        "the O(types) dim to densify the day grid — scalar broadcast, "
-        "O(types × days) calendar-bounded fan-out",
-    ),
-    "q_changepoint": (
-        "PRODUCT-JOIN",
-        "same densify pattern as q_forecast_backtest: crossJoin of the "
-        "1-row broadcast (lo, hi) day-bounds dim onto the O(types) dim "
-        "— scalar broadcast, O(types × days) calendar-bounded fan-out",
-    ),
-    "q_dow_seasonality": (
-        "PRODUCT-JOIN",
-        "the q_forecast_backtest densify pattern: crossJoin of the "
-        "1-row broadcast (lo, hi) day-bounds dim onto the O(types) dim "
-        "— O(types × days) calendar-bounded fan-out; the per-type "
-        "window runs on the 7-rows-per-type dow dim",
-    ),
-    "q_autocorr": (
-        "PRODUCT-JOIN",
-        "the q_forecast_backtest densify pattern: crossJoin of the "
-        "1-row broadcast (lo, hi) day-bounds dim — the lag window and "
-        "sums run on the O(types × days) calendar-bounded dim",
-    ),
-    "q_attribution": (
-        "EMPTY-WINDOW",
-        "the global share window runs over the ≤20-row lag-digit "
-        "histogram post-aggregation, never the corpus",
-    ),
     "q_slo_burn": (
         ("PRODUCT-JOIN", "EMPTY-WINDOW"),
         "the dense_daily_counts densify crossJoin (1-row bounds dim), "
@@ -96,7 +66,7 @@ BOUNDED_OK = {
         ("PRODUCT-JOIN", "EMPTY-WINDOW", "LOW-CARD-WINDOW"),
         "the langs-dim × sources-dim × 1-row-total crossJoin densifies "
         "the contingency grid — all post-aggregation dims (the "
-        "q_forecast_backtest densify shape); the global TVD window "
+        "dense_daily_counts densify shape); the global TVD window "
         "runs over the same O(langs × sources) cell dim",
     ),
     "q_skyline_docs": (
@@ -296,12 +266,6 @@ BOUNDED_OK = {
         "the plan text duplicates the subtree; identical exchanges "
         "dedupe at runtime via ReusedExchange",
     ),
-    "q_lateness_profile": (
-        "EMPTY-WINDOW",
-        "the global share window runs over the ≤20-row lateness-digit "
-        "histogram post-aggregation, never the corpus (the "
-        "q_attribution shape)",
-    ),
     "q_weighted_median": (
         "LOW-CARD-WINDOW",
         "the cumulative window walks the per-(source, n_chars) "
@@ -315,12 +279,6 @@ BOUNDED_OK = {
         "per parquet file (thousands at 100 TB, 1-64 at bench SFs), "
         "broadcast non-equi by construction; the corpus-sized work is "
         "the map-side-combined per-file rollup before it",
-    ),
-    "q_rolling_distinct_90": (
-        "EMPTY-WINDOW",
-        "the prefix sum runs over the CALENDAR-bounded dense day grid "
-        "(the q_slo_burn densify bound); the corpus-sized work is the "
-        "(user, day) dedup + lead before the endpoint rollup",
     ),
     "q_split_scan": (
         ("LOW-CARD-WINDOW", "PRODUCT-JOIN"),
@@ -373,14 +331,9 @@ MEASURED_MAX_ROWS: dict[str, int] = {
     "q_knn_cosine": 64,    # 20-query × corpus-vectors fan-out is the
     #   documented exact-BASELINE quadratic (2k vectors at sf0.1 ⇒ 40k)
     "q_embed_label_margin": 64,  # ×|labels| fan-out over vectors
-    # calendar-densify crossJoins + windows on O(types×days) dims
-    "q_forecast_backtest": 64,
-    "q_changepoint": 64,
-    "q_dow_seasonality": 64,
-    "q_autocorr": 64,
+    # densify crossJoins + windows on post-aggregation dims
     "q_slo_burn": 10_000,
     "q_conv_retention": 64,
-    "q_attribution": 64,
     "q_lang_source_assoc": 2_000,   # langs × sources grid
     "q_skyline_docs": 30_000,       # per-source distinct-n_chars dim
     # two_phase_ranks / bucketed decompositions: dim windows only
@@ -403,12 +356,10 @@ MEASURED_MAX_ROWS: dict[str, int] = {
     "q_release_audit": 20_000,
     "q_decile_grid": 5_000,
     "q_heaps_law": 10_000,
-    "q_lateness_profile": 64,
     "q_weighted_median": 30_000,
     "x_zonemap_audit": 4_096,
     "q_fd_audit": 2_000,
     "q_split_scan": 60_000,
-    "q_rolling_distinct_90": 10_000,
 }
 
 
@@ -655,6 +606,93 @@ def facts(p: str) -> dict:
     }
 
 
+_PLANS_MD = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"
+)
+
+
+def _measured_section(sf_names: list[str], by_name: dict) -> list[str]:
+    """Render the measured-bounds table and its result line. by_name
+    maps query → {"bnd": bound, "worst": {sf: rows}, "kinds": str};
+    a (query, sf) cell violates when its measured rows exceed the
+    bound, and the result line is counted from the rows rendered."""
+    n_viol = sum(
+        1 for e in by_name.values() for w in e["worst"].values()
+        if w > e["bnd"]
+    )
+    n_meas = sum(len(e["worst"]) for e in by_name.values())
+    lines = [
+        "",
+        "## Measured bounds (executed at "
+        + ", ".join(f"`{s}`" for s in sf_names)
+        + " — round-4 verdict item 2; the second, 10× column is "
+        "round-5 item 5: scale-INVARIANCE of the dims)",
+        "",
+        "Every BOUNDED_OK claim above, EXECUTED: the numOutputRows "
+        "SQL metric of each flagged-shape node (global/corpus-"
+        "constant Window, BroadcastNestedLoopJoin, "
+        "CartesianProduct) in the executed plan, vs the entry's "
+        "documented numeric bound. Windows are measured on their "
+        "input (= output) rows; product joins on their SMALLER "
+        "child — the broadcast dim side the claim names (the "
+        "stream side is corpus-grain with ×1 fan-out in the "
+        "scalar-broadcast pattern). measured = −1 means the "
+        "flagged shape vanished at runtime (e.g. AQE replanned "
+        "it) — vacuously within bound.",
+        "",
+        "| query | "
+        + " | ".join(f"measured @ {os.path.basename(s)}" for s in sf_names)
+        + " | bound | flagged nodes (last sf) | ok |",
+        "|---" * (len(sf_names) + 4) + "|",
+    ]
+    for name in sorted(by_name):
+        e = by_name[name]
+        ok = all(w <= e["bnd"] for w in e["worst"].values())
+        lines.append(
+            "| {} | {} | {} | {} | {} |".format(
+                name,
+                " | ".join(str(e["worst"].get(s, "—")) for s in sf_names),
+                e["bnd"],
+                e["kinds"],
+                "yes" if ok else "**VIOLATED**",
+            )
+        )
+    lines += [
+        "",
+        f"**Measured-bounds result: {n_viol} violated / "
+        f"{n_meas} measured ({len(by_name)} queries × "
+        f"{len(sf_names)} sf).**",
+    ]
+    return lines
+
+
+def _carried_measured(path: str) -> tuple[list[str], dict]:
+    """Parse the measured-bounds table of a previous PLANS.md back
+    into _measured_section's input, keeping only the queries still in
+    MEASURED_MAX_ROWS. Returns ([], {}) when there is no table."""
+    try:
+        with open(path) as f:
+            prev = f.read()
+    except OSError:
+        return [], {}
+    head = re.search(r"^## Measured bounds \(executed at (.*?) — ", prev, re.M)
+    if not head:
+        return [], {}
+    sf_names = re.findall(r"`([^`]+)`", head.group(1))
+    by_name: dict[str, dict] = {}
+    for line in prev[head.end():].splitlines():
+        cells = [c.strip() for c in line.strip().strip("|").split("|")]
+        if len(cells) != len(sf_names) + 4 or cells[0] not in MEASURED_MAX_ROWS:
+            continue
+        worst = cells[1 : 1 + len(sf_names)]
+        by_name[cells[0]] = {
+            "bnd": int(cells[-3]),
+            "worst": {s: int(w) for s, w in zip(sf_names, worst) if w != "—"},
+            "kinds": cells[-2],
+        }
+    return sf_names, by_name
+
+
 def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     do_measure = "--measure" in sys.argv[1:]
@@ -759,90 +797,23 @@ def main() -> int:
         for name, why in bad:
             lines.append(f"- {name}: {why}")
 
-    if not do_measure:
-        # a fast (plan-only) run must not CLOBBER the measured-bounds
-        # table a previous --measure run published — carry it forward
-        # verbatim (its own header names the sf it ran at)
-        try:
-            prev = open(
-                os.path.join(
-                    os.path.dirname(
-                        os.path.dirname(os.path.abspath(__file__))
-                    ),
-                    "PLANS.md",
-                )
-            ).read()
-            k = prev.index("## Measured bounds")
-            lines += ["", prev[k:].rstrip()]
-        except (OSError, ValueError):
-            pass
-
     if do_measure:
-        n_viol = sum(
-            1
-            for rows_ in measured_by_sf.values()
-            for r in rows_
-            if not r[4]
-        )
-        n_meas = sum(len(v) for v in measured_by_sf.values())
-        sf_names = list(measured_by_sf)
-        lines += [
-            "",
-            "## Measured bounds (executed at "
-            + ", ".join(f"`{s}`" for s in sf_names)
-            + " — round-4 verdict item 2; the second, 10× column is "
-            "round-5 item 5: scale-INVARIANCE of the dims)",
-            "",
-            "Every BOUNDED_OK claim above, EXECUTED: the numOutputRows "
-            "SQL metric of each flagged-shape node (global/corpus-"
-            "constant Window, BroadcastNestedLoopJoin, "
-            "CartesianProduct) in the executed plan, vs the entry's "
-            "documented numeric bound. Windows are measured on their "
-            "input (= output) rows; product joins on their SMALLER "
-            "child — the broadcast dim side the claim names (the "
-            "stream side is corpus-grain with ×1 fan-out in the "
-            "scalar-broadcast pattern). measured = −1 means the "
-            "flagged shape vanished at runtime (e.g. AQE replanned "
-            "it) — vacuously within bound.",
-            "",
-            "| query | "
-            + " | ".join(f"measured @ {os.path.basename(s)}" for s in sf_names)
-            + " | bound | flagged nodes (last sf) | ok |",
-            "|---" * (len(sf_names) + 4) + "|",
-        ]
         by_name: dict[str, dict] = {}
         for msf, rows_ in measured_by_sf.items():
-            for name, worst, bnd, kinds, ok in rows_:
-                e = by_name.setdefault(
-                    name, {"bnd": bnd, "worst": {}, "kinds": kinds, "ok": True}
-                )
+            for name, worst, bnd, kinds, _ in rows_:
+                e = by_name.setdefault(name, {"bnd": bnd, "worst": {}})
                 e["worst"][msf] = worst
-                e["kinds"] = kinds
-                e["ok"] = e["ok"] and ok
-        for name in sorted(by_name):
-            e = by_name[name]
-            lines.append(
-                "| {} | {} | {} | {} | {} |".format(
-                    name,
-                    " | ".join(
-                        str(e["worst"].get(s, "—")) for s in sf_names
-                    ),
-                    e["bnd"],
-                    "; ".join(e["kinds"]) or "—",
-                    "yes" if e["ok"] else "**VIOLATED**",
-                )
-            )
-        lines.append("")
-        lines.append(
-            f"**Measured-bounds result: {n_viol} violated / "
-            f"{n_meas} measured ({len(by_name)} queries × "
-            f"{len(sf_names)} sf).**"
-        )
-    open(
-        os.path.join(os.path.dirname(os.path.dirname(
-            os.path.abspath(__file__))), "PLANS.md"),
-        "w",
-    ).write("\n".join(lines) + "\n")
+                e["kinds"] = "; ".join(kinds) or "—"
+        sf_names = list(measured_by_sf)
+    else:
+        # a fast (plan-only) run must not CLOBBER the measured-bounds
+        # table a previous --measure run published — carry its rows
+        # forward, minus those of queries no longer in MEASURED_MAX_ROWS
+        sf_names, by_name = _carried_measured(_PLANS_MD)
+    if by_name:
+        lines += _measured_section(sf_names, by_name)
+    with open(_PLANS_MD, "w") as f:
+        f.write("\n".join(lines) + "\n")
     print(f"{len(bad)} flagged / {len(rows)} queries -> PLANS.md")
     for name, why in bad:
         print(f"  FLAG {name}: {why}")
