@@ -28,11 +28,15 @@ over a fixed batch list in both Spark and DuckDB:
   * near rule (applied to exact survivors): a doc is dropped iff it
     shares a MinHash band bucket (band, bh) with an ACCEPTED doc from
     an earlier batch, or with a smaller-doc_id exact-survivor of its
-    own batch — whether or not that blocker itself survives (the
-    PAIRWISE rule: order-free given doc_id order, SQL-expressible,
-    and exactly what a signature-state probe can answer; exact
+    own batch — whether or not that blocker itself survives (exact
     duplicates carry identical band sets, so restricting in-batch
-    blockers to exact survivors loses nothing).
+    blockers to exact survivors loses nothing). The in-batch half is
+    computed as a per-bucket min: a doc has a smaller-doc_id
+    bucket-mate iff its doc_id exceeds min(doc_id) over that bucket,
+    so one window partitioned by (band, bh) answers it in work linear
+    in the bucket, where the pairwise self-join is quadratic. The
+    DuckDB oracle keeps the pairwise form as the independent
+    statement of the same rule.
   * the accepted state grows by the batch's survivors only — a doc is
     never retroactively un-accepted (rolling-ingest semantics).
 
@@ -150,21 +154,21 @@ def near_filter(
     """Near rule over the exact survivors ``ek`` (doc_id, h) and
     THEIR band rows ``bands`` (doc_id, band, bh — any superset is
     filtered to ek here): drop docs sharing a bucket with the
-    accepted state or with a smaller-doc_id exact survivor. Returns
-    (survivor (doc_id, h), survivor bands). This pair of helpers is
-    the single policy implementation shared by the state-backed
-    increment and the one-shot fold — the two can only differ in
-    where the accepted state comes from."""
+    accepted state, or holding more than the smallest doc_id of one
+    of their batch buckets. Returns (survivor (doc_id, h), survivor
+    bands). This pair of helpers is the single policy implementation
+    shared by the state-backed increment and the one-shot fold — the
+    two can only differ in where the accepted state comes from."""
     bands = bands.join(ek.select("doc_id"), "doc_id")
     dropped_state = (
         bands.join(acc_bands.select("band", "bh"), ["band", "bh"], "left_semi")
         .select("doc_id")
         .distinct()
     )
-    blockers = bands.select("band", "bh", F.col("doc_id").alias("doc_b"))
+    wmin = Window.partitionBy("band", "bh")
     dropped_in = (
-        bands.join(blockers, ["band", "bh"])
-        .where(F.col("doc_b") < F.col("doc_id"))
+        bands.withColumn("mind", F.min("doc_id").over(wmin))
+        .where(F.col("doc_id") > F.col("mind"))
         .select("doc_id")
         .distinct()
     )
@@ -198,22 +202,30 @@ def _exact_stage(
     return ek, docs.join(ek.select("doc_id"), "doc_id")
 
 
-def _commit_increment(
+class DocIdError(ValueError):
+    """An increment's doc ids are not unique and non-null. The rules
+    key every decision and every state row on doc_id, so such a batch
+    is refused before any state is written."""
+
+
+def dedup_increment(
     spark: SparkSession,
     docs: DataFrame,
     state_dir: str,
     batch_id: str,
-    sig_sub: str,
-    sig_schema: str,
-    sign,
-    near,
-    _crash_before_commit: bool,
+    _crash_before_commit: bool = False,
 ) -> dict:
-    """The commit machinery both rolling policies share: ledger lookup
-    (a committed batch_id returns its ledger stats), the exact rule,
-    the policy's near rule ``near(ek, sign(ek_docs), acc_sig)`` against
-    the ``sig_sub`` state table, the state writes, then the ledger row
-    LAST."""
+    """One rolling increment: dedup ``docs`` (the NEW batch only —
+    doc_id, text) against the committed state, persist the survivors'
+    signatures, commit the batch. Idempotent: a batch_id that is
+    already committed is a no-op returning its ledger stats, so a
+    retried driver never double-appends. Raises DocIdError, before any
+    write, unless the doc ids are unique and non-null.
+    ``_crash_before_commit`` simulates dying after the data writes but
+    before the ledger append (the staging dirs are left behind, like a
+    real crash)."""
+    from .queries.dedup import _mh_band_df
+
     led = _ledger_rows(spark, state_dir)
     for r in led:
         if r["batch_id"] == batch_id:
@@ -221,16 +233,23 @@ def _commit_increment(
     seq = (max((r["batch_seq"] for r in led), default=-1)) + 1
     ids = [r["batch_id"] for r in led]
     acc_exact = _read_state(spark, state_dir, "exact", _EXACT_SCHEMA, ids)
-    acc_sig = _read_state(spark, state_dir, sig_sub, sig_schema, ids)
+    acc_bands = _read_state(spark, state_dir, "signatures", _SIG_SCHEMA, ids)
 
-    n_in = docs.count()
+    n_in, n_ids, n_distinct = docs.agg(
+        F.count(F.lit(1)), F.count("doc_id"), F.countDistinct("doc_id")
+    ).first()
+    if not n_in == n_ids == n_distinct:
+        raise DocIdError(
+            f"batch {batch_id}: {n_in} docs carry {n_ids} non-null doc "
+            f"ids, {n_distinct} of them distinct"
+        )
     ek, ek_docs = _exact_stage(docs, acc_exact)
-    sk, sk_sig = near(ek, sign(ek_docs), acc_sig)
+    sk, sk_bands = near_filter(ek, _mh_band_df(ek_docs), acc_bands)
     n_exact_kept = ek.count()
 
     sk.write.mode("overwrite").parquet(f"{state_dir}/exact/batch-{batch_id}")
-    sk_sig.write.mode("overwrite").parquet(
-        f"{state_dir}/{sig_sub}/batch-{batch_id}"
+    sk_bands.write.mode("overwrite").parquet(
+        f"{state_dir}/signatures/batch-{batch_id}"
     )
     sk.select("doc_id").write.mode("overwrite").parquet(
         f"{state_dir}/survivors/batch-{batch_id}"
@@ -263,35 +282,19 @@ def _commit_increment(
     return stats
 
 
-def dedup_increment(
-    spark: SparkSession,
-    docs: DataFrame,
-    state_dir: str,
-    batch_id: str,
-    _crash_before_commit: bool = False,
-) -> dict:
-    """One rolling increment: dedup ``docs`` (the NEW batch only —
-    doc_id, text) against the committed state, persist the survivors'
-    signatures, commit the batch. Idempotent: a batch_id that is
-    already committed is a no-op returning its ledger stats, so a
-    retried driver never double-appends. ``_crash_before_commit``
-    simulates dying after the data writes but before the ledger append
-    (the staging dirs are left behind, like a real crash)."""
+def rolling_fold(
+    docs: DataFrame, n_batches: int, seq_col=None
+) -> DataFrame:
+    """One-shot reference fold: the SAME policy applied to a batched
+    corpus entirely in memory (no filesystem state) — batch k of
+    ``n_batches`` is ``doc_id % n_batches == k`` unless ``seq_col``
+    (an int Column) is given. Returns (batch_seq, doc_id) survivors.
+    The batch loop is driver-side over the BATCH COUNT (a bounded
+    ingest-schedule constant, never data-sized); each batch runs
+    exact_survivors() then near_filter(), the two rules
+    batch_survivors() applies."""
     from .queries.dedup import _mh_band_df
 
-    return _commit_increment(
-        spark, docs, state_dir, batch_id, "signatures", _SIG_SCHEMA,
-        _mh_band_df, near_filter, _crash_before_commit,
-    )
-
-
-def _fold(
-    docs: DataFrame, n_batches: int, seq_col, sig_fn, near_fn, sig_schema
-) -> DataFrame:
-    """The in-memory fold loop both rolling policies share: ``sig_fn``
-    builds the per-doc signature rows, ``near_fn`` is the policy's near
-    rule over (exact survivors, batch signatures, accepted signatures)
-    and ``sig_schema`` the empty accepted-signature state."""
     spark = docs.sparkSession
     seq = (
         seq_col
@@ -307,13 +310,13 @@ def _fold(
     dd_all = batched.select(
         "seq", "doc_id", content_hash_col().alias("h")
     ).localCheckpoint()
-    sig_all = (
-        sig_fn(batched)
+    bands_all = (
+        _mh_band_df(batched)
         .join(dd_all.select("doc_id", "seq"), "doc_id")
         .localCheckpoint()
     )
     acc_exact = spark.createDataFrame([], _EXACT_SCHEMA)
-    acc_sig = spark.createDataFrame([], sig_schema)
+    acc_bands = spark.createDataFrame([], _SIG_SCHEMA)
     out = None
     for k in range(n_batches):
         # localCheckpoint truncates lineage per round (the components
@@ -323,128 +326,15 @@ def _fold(
         ek = exact_survivors(
             dd_all.where(F.col("seq") == k).drop("seq"), acc_exact
         )
-        sk, sk_sig = near_fn(
-            ek, sig_all.where(F.col("seq") == k).drop("seq"), acc_sig
+        sk, sk_bands = near_filter(
+            ek, bands_all.where(F.col("seq") == k).drop("seq"), acc_bands
         )
         sk = sk.localCheckpoint()
-        sk_sig = sk_sig.localCheckpoint()
+        sk_bands = sk_bands.localCheckpoint()
         part = sk.select(
             F.lit(k).cast("int").alias("batch_seq"), "doc_id"
         )
         out = part if out is None else out.unionByName(part)
         acc_exact = acc_exact.unionByName(sk.select("doc_id", "h"))
-        acc_sig = acc_sig.unionByName(sk_sig)
+        acc_bands = acc_bands.unionByName(sk_bands)
     return out
-
-
-def rolling_fold(
-    docs: DataFrame, n_batches: int, seq_col=None
-) -> DataFrame:
-    """One-shot reference fold: the SAME policy applied to a batched
-    corpus entirely in memory (no filesystem state) — batch k of
-    ``n_batches`` is ``doc_id % n_batches == k`` unless ``seq_col``
-    (an int Column) is given. Returns (batch_seq, doc_id) survivors.
-    The batch loop is driver-side over the BATCH COUNT (a bounded
-    ingest-schedule constant, never data-sized); each batch runs
-    exact_survivors() then near_filter(), the two rules
-    batch_survivors() applies."""
-    from .queries.dedup import _mh_band_df
-
-    return _fold(
-        docs, n_batches, seq_col, _mh_band_df, near_filter, _SIG_SCHEMA
-    )
-
-
-# ---------------------------------------------- simhash rolling layer
-# A SECOND rolling policy over the same commit machinery, with a
-# stronger semantics than the minhash layer: VERIFY-AFTER-PROBE. The
-# minhash policy drops on any shared band bucket (a probabilistic
-# Jaccard screen — fast, but a bucket collision IS the decision); the
-# simhash policy's decision is the EXACT hamming rule
-#   drop d  ⟺  ∃ accepted/earlier doc a with
-#               hamming(fp_d, fp_a) ≤ SIMHASH_ROLL_HAMMING
-# and the pigeonhole band probe (simsearch.simhash_band_segments,
-# n_bands = hamming_max + 1) is only the COMPLETE candidate generator
-# — every qualifying pair shares a segment, the exact bit_count(xor)
-# check after the join rejects false-positive bucket collisions. The
-# DuckDB oracle of q_incdedup_simhash_fold therefore needs NO banding
-# at all (plain NOT EXISTS over the hamming predicate): the gate
-# machine-checks probe-then-verify == the exact rule, per batch.
-# State per accepted doc: 16 bytes (doc_id, fp) — the fingerprint IS
-# the index (band keys are bit slices, recomputed in the probe).
-
-from .queries.dedup import _SIMHASH_HAMMING_MAX as SIMHASH_ROLL_HAMMING  # noqa: E402 (= 8; one source of truth with the pair anchors)
-
-_FP_SCHEMA = "doc_id bigint, simhash bigint"
-
-
-def simhash_near_filter(
-    ek: DataFrame, fps: DataFrame, acc_fp: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """Verify-after-probe near rule: drop exact-survivor d when an
-    accepted doc, or a smaller-doc_id exact survivor of its own
-    batch, sits within SIMHASH_ROLL_HAMMING of d's fingerprint.
-    ``fps`` = (doc_id, simhash) covering at least ek's docs. Returns
-    (survivor (doc_id, h), survivor (doc_id, simhash))."""
-    from .queries.simsearch import simhash_band_segments
-
-    fps = fps.join(ek.select("doc_id"), "doc_id")
-    segs = simhash_band_segments(fps, SIMHASH_ROLL_HAMMING)
-    ham = F.expr("bit_count(a.simhash ^ b.simhash)")
-    seg_join = lambda a, b: (  # noqa: E731
-        (F.col("a.seg") == F.col("b.seg"))
-        & (F.col("a.seg_val") == F.col("b.seg_val"))
-    )
-    a = segs.alias("a")
-    acc_segs = simhash_band_segments(acc_fp, SIMHASH_ROLL_HAMMING)
-    dropped_state = (
-        a.join(acc_segs.alias("b"), seg_join("a", "b"))
-        .where(ham <= SIMHASH_ROLL_HAMMING)
-        .select(F.col("a.doc_id").alias("doc_id"))
-        .distinct()
-    )
-    dropped_in = (
-        a.join(
-            segs.alias("b"),
-            seg_join("a", "b") & (F.col("b.doc_id") < F.col("a.doc_id")),
-        )
-        .where(ham <= SIMHASH_ROLL_HAMMING)
-        .select(F.col("a.doc_id").alias("doc_id"))
-        .distinct()
-    )
-    dropped = dropped_state.unionByName(dropped_in).distinct()
-    sk = ek.join(dropped, "doc_id", "left_anti")
-    return sk, fps.join(sk.select("doc_id"), "doc_id")
-
-
-def simhash_increment(
-    spark: SparkSession,
-    docs: DataFrame,
-    state_dir: str,
-    batch_id: str,
-    _crash_before_commit: bool = False,
-) -> dict:
-    """One rolling increment under the simhash policy — same ledger
-    machinery and commit discipline as dedup_increment (ledger row
-    LAST; staging invisible until committed; idempotent on replay),
-    with fingerprint state under ``fps/batch-<id>``."""
-    from .queries.dedup import _simhash_df
-
-    return _commit_increment(
-        spark, docs, state_dir, batch_id, "fps", _FP_SCHEMA,
-        _simhash_df, simhash_near_filter, _crash_before_commit,
-    )
-
-
-def simhash_rolling_fold(
-    docs: DataFrame, n_batches: int, seq_col=None
-) -> DataFrame:
-    """One-shot reference fold of the simhash rolling policy (the
-    rolling_fold twin, on the same _fold loop). Returns
-    (batch_seq, doc_id) survivors."""
-    from .queries.dedup import _simhash_df
-
-    return _fold(
-        docs, n_batches, seq_col, _simhash_df, simhash_near_filter,
-        _FP_SCHEMA,
-    )

@@ -41,9 +41,10 @@ DEFAULT_BUCKETS = 16
 def turn_doc_id() -> F.Column:
     """Deterministic per-turn document id: the conv's numeric suffix
     × 1000 + turn_idx (turn counts are « 1000). Pure function of the
-    natural key, so retries and both engines agree."""
+    natural key, so retries and both engines agree. A digit-free
+    conv_id gives a NULL id, which dedup_increment refuses."""
     return (
-        F.regexp_extract("conv_id", r"(\d+)", 1).cast("long") * 1000
+        F.regexp_extract("conv_id", r"(\d+)", 1).try_cast("long") * 1000
         + F.col("turn_idx")
     ).alias("doc_id")
 

@@ -123,14 +123,6 @@ ROWS_ONLY = {
         "resume without recompute, and crash-before-commit "
         "invisibility"
     ),
-    "x_incdedup_simhash_state": (
-        "filesystem-stateful rolling ingest (simhash fingerprint "
-        "state + ledger commits in a temp dir) — the POLICY is "
-        "oracled via q_incdedup_simhash_fold (whose DuckDB side uses "
-        "NO banding, machine-checking probe-then-verify == the exact "
-        "hamming rule), and tests/test_incdedup.py pins the "
-        "state-backed increments equal to that fold on the union"
-    ),
     "x_bloom_dedup": _SKETCH_GATED,
     "x_cms_heavyhitters": _SKETCH_GATED,
     "x_hll_cardinality": _SKETCH_GATED,

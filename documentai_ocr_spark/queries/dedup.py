@@ -1487,6 +1487,9 @@ def q_typo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # in one DuckDB SQL (the batch count is an ingest-schedule constant,
 # so the fold unrolls to a fixed CTE chain — e_k = exact survivors of
 # batch k, s_k = its accepted survivors, each referencing only s_<k).
+# The in-batch near rule stays PAIRWISE here (a band self-join under
+# NOT EXISTS) while incdedup.near_filter computes it as a per-bucket
+# min, so the gate checks two independent statements of the rule.
 # tests/test_incdedup.py then pins the state-backed increments equal to
 # this fold on the union, proving the persisted path computes the same
 # corpus the oracled path does.
@@ -1549,25 +1552,30 @@ def q_incdedup_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rolling_fold(docs, 3)
 
 
-def _three_batch_ledger(
-    spark: SparkSession, sf_dir: str, increment, prefix: str
-) -> DataFrame:
-    """Run ``increment`` (dedup_increment or simhash_increment) over the
-    fixed 3-batch schedule (batch = doc_id mod 3) against a fresh state
-    dir and return the committed ledger rows. The dir is private to the
-    call (concurrent runs never share or delete each other's state) and
-    is removed once the ledger rows are collected."""
+@_q("x_incdedup_state")
+def x_incdedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The REAL state-backed rolling ingest, end-to-end: three
+    dedup_increment calls (batch = doc_id mod 3) against a fresh
+    persisted-state dir (exact + band-signature tables, ledger
+    commits), returning the committed ledger — one row per batch with
+    input/dropped/survivor counts. The dir is private to the call
+    (concurrent runs never share or delete each other's state) and is
+    removed once the ledger rows are collected, so every call starts
+    from fresh state. Rows-only by necessity (filesystem state); the
+    SEMANTICS are oracled via q_incdedup_fold and
+    tests/test_incdedup.py pins this path equal to that fold on the
+    union."""
     import shutil
     import tempfile
 
-    from ..incdedup import LEDGER_SCHEMA
+    from ..incdedup import LEDGER_SCHEMA, dedup_increment
 
-    state = tempfile.mkdtemp(prefix=prefix)
+    state = tempfile.mkdtemp(prefix="incdedup_state_")
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     rows = []
     try:
         for k in range(3):
-            st = increment(
+            st = dedup_increment(
                 spark,
                 docs.where((F.col("doc_id") % 3).cast("int") == k),
                 state,
@@ -1580,136 +1588,6 @@ def _three_batch_ledger(
     finally:
         shutil.rmtree(state, ignore_errors=True)
     return spark.createDataFrame(rows, LEDGER_SCHEMA)
-
-
-@_q("x_incdedup_state")
-def x_incdedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The REAL state-backed rolling ingest, end-to-end: three
-    dedup_increment calls against a fresh persisted-state dir (exact +
-    band-signature tables, ledger commits), returning the committed
-    ledger — one row per batch with input/dropped/survivor counts.
-    Deterministic: each call starts from a fresh state dir. Rows-only by
-    necessity (filesystem state); the SEMANTICS are oracled via
-    q_incdedup_fold and tests/test_incdedup.py pins this path equal to
-    that fold on the union."""
-    from ..incdedup import dedup_increment
-
-    return _three_batch_ledger(
-        spark, sf_dir, dedup_increment, "incdedup_state_"
-    )
-
-
-# ------------------------------------- incremental simhash (verifying)
-# The SECOND rolling policy (incdedup.py simhash layer): the decision
-# is the EXACT hamming rule — drop iff an accepted/earlier doc sits
-# within hamming ≤ 8 of the doc's 60-bit fingerprint — and Spark's
-# pigeonhole band probe is only the complete candidate generator. The
-# oracle below therefore uses NO banding (plain NOT EXISTS over
-# bit_count(xor(...))): the gate machine-checks probe-then-verify ==
-# the exact rule on every batch of the fold.
-_INC_SIMHASH_FOLD_SQL = f"""
-    WITH tok AS (SELECT doc_id, t AS tok, CAST(COUNT(*) AS bigint) AS w
-                 FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t
-                       FROM documents)
-                 GROUP BY doc_id, t),
-    hh2 AS (SELECT doc_id, w,
-                   ('0x' || substr(md5(tok), 1, 15))::bigint AS hv FROM tok),
-    vote AS (SELECT doc_id, b.bit,
-                    SUM(CASE WHEN (hv >> b.bit) & 1 = 1 THEN w ELSE -w END)
-                      AS vote
-             FROM hh2,
-                  (SELECT unnest(generate_series(0, {_SIMHASH_BITS - 1}))
-                     AS bit) b
-             GROUP BY doc_id, b.bit),
-    fp AS (SELECT doc_id,
-                  CAST(SUM(CASE WHEN vote > 0 THEN (1::bigint << bit)
-                                ELSE 0 END) AS bigint) AS simhash
-           FROM vote GROUP BY doc_id),
-    dd AS (SELECT d.doc_id, {content_hash_sql()} AS ch,
-                  CAST(d.doc_id % 3 AS int) AS seq
-           FROM documents d),
-    e0 AS (SELECT d.doc_id, d.ch FROM dd d WHERE d.seq = 0
-             AND NOT EXISTS (SELECT 1 FROM dd x WHERE x.seq = 0
-                             AND x.ch = d.ch AND x.doc_id < d.doc_id)),
-    s0 AS (SELECT e.doc_id, e.ch FROM e0 e WHERE NOT EXISTS (
-             SELECT 1 FROM e0 x
-             JOIN fp fa ON fa.doc_id = x.doc_id
-             JOIN fp fd ON fd.doc_id = e.doc_id
-             WHERE x.doc_id < e.doc_id
-               AND bit_count(xor(fa.simhash, fd.simhash))
-                     <= {_SIMHASH_HAMMING_MAX})),
-    e1 AS (SELECT d.doc_id, d.ch FROM dd d WHERE d.seq = 1
-             AND NOT EXISTS (SELECT 1 FROM dd x WHERE x.seq = 1
-                             AND x.ch = d.ch AND x.doc_id < d.doc_id)
-             AND NOT EXISTS (SELECT 1 FROM s0 x WHERE x.ch = d.ch)),
-    s1 AS (SELECT e.doc_id, e.ch FROM e1 e
-           WHERE NOT EXISTS (
-             SELECT 1 FROM s0 a
-             JOIN fp fa ON fa.doc_id = a.doc_id
-             JOIN fp fd ON fd.doc_id = e.doc_id
-             WHERE bit_count(xor(fa.simhash, fd.simhash))
-                     <= {_SIMHASH_HAMMING_MAX})
-           AND NOT EXISTS (
-             SELECT 1 FROM e1 x
-             JOIN fp fa ON fa.doc_id = x.doc_id
-             JOIN fp fd ON fd.doc_id = e.doc_id
-             WHERE x.doc_id < e.doc_id
-               AND bit_count(xor(fa.simhash, fd.simhash))
-                     <= {_SIMHASH_HAMMING_MAX})),
-    e2 AS (SELECT d.doc_id, d.ch FROM dd d WHERE d.seq = 2
-             AND NOT EXISTS (SELECT 1 FROM dd x WHERE x.seq = 2
-                             AND x.ch = d.ch AND x.doc_id < d.doc_id)
-             AND NOT EXISTS (SELECT 1 FROM s0 x WHERE x.ch = d.ch)
-             AND NOT EXISTS (SELECT 1 FROM s1 x WHERE x.ch = d.ch)),
-    s2 AS (SELECT e.doc_id, e.ch FROM e2 e
-           WHERE NOT EXISTS (
-             SELECT 1 FROM (SELECT doc_id FROM s0
-                            UNION ALL SELECT doc_id FROM s1) a
-             JOIN fp fa ON fa.doc_id = a.doc_id
-             JOIN fp fd ON fd.doc_id = e.doc_id
-             WHERE bit_count(xor(fa.simhash, fd.simhash))
-                     <= {_SIMHASH_HAMMING_MAX})
-           AND NOT EXISTS (
-             SELECT 1 FROM e2 x
-             JOIN fp fa ON fa.doc_id = x.doc_id
-             JOIN fp fd ON fd.doc_id = e.doc_id
-             WHERE x.doc_id < e.doc_id
-               AND bit_count(xor(fa.simhash, fd.simhash))
-                     <= {_SIMHASH_HAMMING_MAX}))
-    SELECT CAST(0 AS int) AS batch_seq, CAST(doc_id AS bigint) AS doc_id
-    FROM s0
-    UNION ALL
-    SELECT CAST(1 AS int), CAST(doc_id AS bigint) FROM s1
-    UNION ALL
-    SELECT CAST(2 AS int), CAST(doc_id AS bigint) FROM s2
-    """
-
-
-@_q("q_incdedup_simhash_fold", _INC_SIMHASH_FOLD_SQL)
-def q_incdedup_simhash_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(batch_seq, doc_id) survivors of the VERIFYING rolling policy
-    (simhash exact-hamming rule, pigeonhole probe as the complete
-    candidate generator) over the fixed 3-batch schedule — the
-    one-shot oracle of incdedup.simhash_increment. Family comment
-    above; per-doc state in the rolling path is 16 bytes."""
-    from ..incdedup import simhash_rolling_fold
-
-    docs = spread(load(spark, sf_dir, "documents").select("doc_id", "text"))
-    return simhash_rolling_fold(docs, 3)
-
-
-@_q("x_incdedup_simhash_state")
-def x_incdedup_simhash_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The state-backed simhash rolling ingest end-to-end (three
-    simhash_increment calls against a fresh persisted-state dir),
-    returning the committed ledger. Rows-only (filesystem state);
-    semantics oracled via q_incdedup_simhash_fold and pinned equal in
-    tests/test_incdedup.py."""
-    from ..incdedup import simhash_increment
-
-    return _three_batch_ledger(
-        spark, sf_dir, simhash_increment, "incdedup_sh_state_"
-    )
 
 
 # The cap's OBSERVABILITY twin: before trusting a bucket cap you look

@@ -1714,7 +1714,7 @@ def q_fisher_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("cast(nl * ss - s * s as double) / nl").alias("tw"),
     )
 
-    def _fold(col_name: str):
+    def _ordered_sum(col_name: str):
         lst = F.transform(
             F.array_sort(F.collect_list(F.struct("label", col_name))),
             lambda st: st[col_name],
@@ -1724,7 +1724,7 @@ def q_fisher_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return terms.groupBy("dim").agg(
         F.count(F.lit(1)).cast("long").alias("n_labels"),
         F.round(
-            _fold("tb") / F.nullif(_fold("tw"), F.lit(0.0)), 6
+            _ordered_sum("tb") / F.nullif(_ordered_sum("tw"), F.lit(0.0)), 6
         ).alias("fisher"),
     )
 

@@ -159,83 +159,3 @@ def test_survivors_block_later_batches(spark, tmp_path_factory):
     assert st1["n_near_dropped"] == 1
     assert st1["n_survivors"] == 1
     assert _survivor_set(spark, state) == {(0, 1), (1, 12)}
-
-
-# ---------------------------------------------- simhash rolling layer
-
-
-def test_simhash_increments_equal_oneshot_fold(spark, docs, tmp_path_factory):
-    from documentai_ocr_spark.incdedup import (
-        simhash_increment,
-        simhash_rolling_fold,
-    )
-
-    state = str(tmp_path_factory.mktemp("incdedup_sh_eq"))
-    for k in range(3):
-        st = simhash_increment(spark, _batch(docs, k), state, f"b{k}")
-        assert st["batch_seq"] == k and st["n_survivors"] > 0
-    got = _survivor_set(spark, state)
-    want = {
-        (r["batch_seq"], r["doc_id"])
-        for r in simhash_rolling_fold(docs, 3).collect()
-    }
-    assert got == want and 0 < len(got) < docs.count()
-
-
-def test_simhash_resume_never_recomputes(spark, docs, tmp_path_factory):
-    from documentai_ocr_spark.incdedup import (
-        committed_batches,
-        simhash_increment,
-    )
-
-    state = str(tmp_path_factory.mktemp("incdedup_sh_resume"))
-    simhash_increment(spark, _batch(docs, 0), state, "b0")
-    simhash_increment(spark, _batch(docs, 1), state, "b1")
-    before = {
-        sub: _file_census(os.path.join(state, sub))
-        for sub in ("exact", "fps", "survivors")
-    }
-    st = simhash_increment(spark, _batch(docs, 2), state, "b2")
-    assert st["n_survivors"] > 0
-    for sub, old in before.items():
-        now = _file_census(os.path.join(state, sub))
-        for rel, sig in old.items():
-            assert now[rel] == sig, f"{sub}/{rel} was rewritten"
-        new_files = set(now) - set(old)
-        assert new_files and all("batch-b2" in f for f in new_files)
-    assert committed_batches(spark, state) == ["b0", "b1", "b2"]
-
-
-def test_simhash_verify_after_probe_closed_form(spark, tmp_path_factory):
-    """The policy DIFFERENCE the simhash layer exists for: the
-    decision is the exact hamming rule, so a doc whose bands collide
-    but whose fingerprint sits PAST the threshold must SURVIVE.
-    Deterministic (md5-fixed) fingerprint hammings vs the accepted
-    doc 1: doc 14 (one appended word) = 9 > 8 → survives (the
-    minhash layer DROPS this same doc — test_survivors_block_later_
-    batches); doc 15 (one substituted word) = 6 ≤ 8 → dropped;
-    doc 16 (unrelated) = 33 → survives; doc 10 exact replay →
-    exact rule. Pairwise in-batch: (14,15)=11, (14,16)=36,
-    (15,16)=29 — no in-batch drops."""
-    from documentai_ocr_spark.incdedup import simhash_increment
-
-    state = str(tmp_path_factory.mktemp("incdedup_sh_block"))
-    t1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    b0 = spark.createDataFrame([(1, t1)], "doc_id bigint, text string")
-    assert simhash_increment(spark, b0, state, "b0")["n_survivors"] == 1
-    b1 = spark.createDataFrame(
-        [
-            (10, t1),
-            (14, t1 + " lambda"),
-            (15, t1.replace("kappa", "sigma")),
-            (16, "red orange yellow green blue indigo violet black"
-                 " white gray"),
-        ],
-        "doc_id bigint, text string",
-    )
-    st1 = simhash_increment(spark, b1, state, "b1")
-    assert st1["n_in"] == 4
-    assert st1["n_exact_dropped"] == 1
-    assert st1["n_near_dropped"] == 1
-    assert st1["n_survivors"] == 2
-    assert _survivor_set(spark, state) == {(0, 1), (1, 14), (1, 16)}

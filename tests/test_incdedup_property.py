@@ -1,33 +1,28 @@
-"""Third-implementation property check for the rolling dedup folds.
+"""Third-implementation property check for the rolling dedup fold.
 
-The DuckDB oracles pin both policies cross-engine at EXACTLY 3
-batches (the unrolled CTE chain). This suite replays the policies in
+The DuckDB oracle pins the policy cross-engine at EXACTLY 3 batches
+(the unrolled CTE chain). This suite replays the policy in
 straight-line pure Python — signatures and all (shingle→md5→linear-
-map minhash bands; token-vote simhash + hamming) — over seeded random
+map minhash bands) and the pairwise near rule — over seeded random
 word-soup corpora at OTHER batch counts (2, 4, 5), and the Spark
-folds must match doc-for-doc. Small vocabulary + short docs force
-dense hash/band/fingerprint collisions, the regime where an
-off-by-one in blocker scoping (accepted vs exact-survivor vs
-survivor) actually shows up."""
+fold must match doc-for-doc. Small vocabulary + short docs force
+dense hash/band collisions, the regime where an off-by-one in
+blocker scoping (accepted vs exact-survivor vs survivor) actually
+shows up. The hot-bucket row puts more than 5,000 exact-distinct
+docs of one batch into a single (band, bh) bucket, the input under
+which a pairwise in-batch join grows with the square of the bucket."""
 
 from __future__ import annotations
 
 import hashlib
 import random
 import re
+from collections import Counter
 
 import pytest
 
-from documentai_ocr_spark.incdedup import (
-    SIMHASH_ROLL_HAMMING,
-    rolling_fold,
-    simhash_rolling_fold,
-)
-from documentai_ocr_spark.queries.dedup import (
-    _MH_AB,
-    _MH_P,
-    _SIMHASH_BITS,
-)
+from documentai_ocr_spark.incdedup import rolling_fold
+from documentai_ocr_spark.queries.dedup import _MH_AB, _MH_P
 
 VOCAB = [
     "alpha", "beta", "gamma", "delta", "epsilon", "zeta",
@@ -64,21 +59,6 @@ def _mh_bands(text: str) -> set[tuple[int, str]]:
             continue
         out.add((band, _md5(f"{a}:{b}")))
     return out
-
-
-def _simhash(text: str) -> int:
-    w: dict[str, int] = {}
-    for t in text.split(" "):
-        w[t] = w.get(t, 0) + 1
-    fp = 0
-    for bit in range(_SIMHASH_BITS):
-        vote = sum(
-            (cnt if (_hex60(tok) >> bit) & 1 else -cnt)
-            for tok, cnt in w.items()
-        )
-        if vote > 0:
-            fp |= 1 << bit
-    return fp
 
 
 def _replay(docs, n_batches, near_blocks):
@@ -128,20 +108,43 @@ def _mk_corpus(seed: int, n_docs: int, vocab_n: int = 12):
     ]
 
 
+# 11,000 docs in 2 batches: each batch puts ~5,400 docs in one bucket
+HOT_DOCS = 11_000
+
+
+def _mk_hot_corpus(seed: int, n_docs: int):
+    """A shared 40-word body plus one unique trailing token per doc:
+    every doc is exact-distinct, and only the body's last shingle
+    differs between docs, so most docs share most band buckets."""
+    rng = random.Random(seed)
+    body = " ".join(f"w{x}" for x in rng.sample(range(10**6), 40))
+    ids = rng.sample(range(1, 10 * n_docs), n_docs)
+    return [{"doc_id": i, "text": f"{body} u{i}"} for i in ids]
+
+
 def _spark_set(df):
     return {(r["batch_seq"], r["doc_id"]) for r in df.collect()}
 
 
 @pytest.mark.parametrize(
-    "seed,n_batches,n_docs", [(11, 2, 40), (22, 4, 40), (33, 5, 70)]
+    "seed,n_batches,n_docs",
+    [(11, 2, 40), (22, 4, 40), (33, 5, 70), (77, 2, HOT_DOCS)],
 )
 def test_minhash_fold_matches_python_replay(spark, seed, n_batches, n_docs):
-    # the 5-batch case shrinks the vocab so cross-batch shingle
-    # collisions fire even with only ~14 docs per batch
-    corpus = _mk_corpus(seed, n_docs, vocab_n=12 if n_batches < 5 else 6)
+    if n_docs == HOT_DOCS:
+        corpus = _mk_hot_corpus(seed, n_docs)
+    else:
+        # the 5-batch case shrinks the vocab so cross-batch shingle
+        # collisions fire even with only ~14 docs per batch
+        corpus = _mk_corpus(seed, n_docs, vocab_n=12 if n_batches < 5 else 6)
     for d in corpus:
         d["h"] = _content_hash(d["text"])
         d["bands"] = _mh_bands(d["text"])
+    if n_docs == HOT_DOCS:
+        buckets = Counter(
+            (d["doc_id"] % n_batches, b) for d in corpus for b in d["bands"]
+        )
+        assert max(buckets.values()) > 5000  # one batch's largest bucket
 
     def blocks(d, accepted, earlier):
         return any(d["bands"] & a["bands"] for a in accepted) or any(
@@ -156,30 +159,3 @@ def test_minhash_fold_matches_python_replay(spark, seed, n_batches, n_docs):
     got = _spark_set(rolling_fold(df, n_batches))
     assert got == want
     assert 0 < len(got) < len(corpus)  # collisions actually fired
-
-
-@pytest.mark.parametrize("seed,n_batches", [(44, 2), (55, 4)])
-def test_simhash_fold_matches_python_replay(spark, seed, n_batches):
-    corpus = _mk_corpus(seed, 30)
-    for d in corpus:
-        d["h"] = _content_hash(d["text"])
-        d["fp"] = _simhash(d["text"])
-
-    def ham(a, b):
-        return bin(a ^ b).count("1")
-
-    def blocks(d, accepted, earlier):
-        return any(
-            ham(d["fp"], a["fp"]) <= SIMHASH_ROLL_HAMMING for a in accepted
-        ) or any(
-            ham(d["fp"], e["fp"]) <= SIMHASH_ROLL_HAMMING for e in earlier
-        )
-
-    want = _replay(corpus, n_batches, blocks)
-    df = spark.createDataFrame(
-        [(d["doc_id"], d["text"]) for d in corpus],
-        "doc_id bigint, text string",
-    )
-    got = _spark_set(simhash_rolling_fold(df, n_batches))
-    assert got == want
-    assert 0 < len(got) < len(corpus)

@@ -6,15 +6,21 @@ the byte-identical admitted set of a crash-free run."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from documentai_ocr_spark.incdedup import DocIdError, committed_batches
 from documentai_ocr_spark.lineage import run_extraction_increment
 from documentai_ocr_spark.pipeline import (
     read_admitted,
     run_curation_increment,
 )
-from documentai_ocr_spark.synth import transcripts_from_documents
+from documentai_ocr_spark.synth import (
+    synth_transcripts,
+    transcripts_from_documents,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -96,3 +102,20 @@ def test_cross_batch_dedup_actually_fires(spark, batches, tmp_path_factory):
     # instead (near rule) — either way nothing is admitted twice
     assert st1["n_exact_dropped"] + st1["n_near_dropped"] == st1["n_in"]
     assert st1["n_exact_dropped"] >= st0["n_survivors"]
+
+
+def test_bad_doc_ids_fail_before_any_state_write(spark, tmp_path_factory):
+    """turn_doc_id reads the FIRST digit run of conv_id: conv_12 and
+    conv_12_part_3 both map to 12 (colliding doc ids), and a
+    digit-free conv id maps to NULL. Either batch must be refused
+    with DocIdError before the dedup layer commits anything."""
+    for conv_ids in (("conv_12", "conv_12_part_3"), ("conv_abc",)):
+        pdf = synth_transcripts(n_convs=len(conv_ids), seed=1, skew_factor=1)
+        pdf["conv_id"] = pdf["conv_id"].map(
+            {f"conv-{c:06d}": cid for c, cid in enumerate(conv_ids)}
+        )
+        out = str(tmp_path_factory.mktemp("pipe_bad_ids"))
+        with pytest.raises(DocIdError):
+            run_curation_increment(spark, spark.createDataFrame(pdf), out, "b0")
+        assert committed_batches(spark, f"{out}/dedup") == []
+        assert not os.path.exists(f"{out}/dedup")  # no staging either

@@ -2,6 +2,10 @@
 scale (pushdown reaching the scan, broadcasts where intended, a narrow
 no-shuffle extraction stage) must be the plans Catalyst actually picks."""
 
+import importlib.util
+import os
+import re
+
 from planutil import n_exchanges, plan
 
 from documentai_ocr_spark.extract import extract_turns
@@ -9,6 +13,7 @@ from documentai_ocr_spark.queries import QUERIES
 from documentai_ocr_spark.synth import synth_transcripts
 
 SF = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_region_revenue_broadcasts_dims(spark):
@@ -176,6 +181,57 @@ def test_incremental_neardup_band_equijoin(spark):
     p = plan(QUERIES["q_incremental_neardup"](spark, SF))
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
+
+
+def test_near_filter_in_batch_arm_is_a_bucket_window(spark, tmp_path):
+    """The in-batch near rule is a per-bucket min, not a (band, bh)
+    self-join whose pairs grow with the square of the largest bucket:
+    the only join keyed on band is the LeftSemi probe of the accepted
+    state, and the in-batch arm is a Window partitioned by (band, bh)."""
+    from documentai_ocr_spark.incdedup import _SIG_SCHEMA, near_filter
+
+    bands = spark.createDataFrame(
+        [(1, 0, "x"), (2, 0, "x"), (3, 1, "y")], _SIG_SCHEMA
+    )
+    bands.where("doc_id = 3").write.parquet(str(tmp_path / "acc"))
+    acc_bands = spark.read.schema(_SIG_SCHEMA).parquet(str(tmp_path / "acc"))
+    ek = spark.createDataFrame(
+        [(1, "a"), (2, "b"), (3, "c")], "doc_id bigint, h string"
+    )
+    p = plan(near_filter(ek, bands, acc_bands)[0])
+    band_joins = [
+        re.search(r"^Join type: (\w+)", node, re.MULTILINE).group(1)
+        for node in re.split(r"^(?=\(\d+\) )", p, flags=re.MULTILINE)
+        if re.match(r"\(\d+\) \w*Join", node)
+        and re.search(r"^Left keys \[\d+\]: \[.*\bband#", node, re.MULTILINE)
+    ]
+    assert band_joins == ["LeftSemi"], p
+    assert re.search(
+        r"^\(\d+\) Window\n(?:[^\n]*\n)*?Arguments: .*\], "
+        r"\[band#\d+, bh#\d+\]$",
+        p,
+        re.MULTILINE,
+    ), p
+
+
+def test_plan_audit_hash_keys_ignore_key_order():
+    """tools/plan_audit.py renders each exchange's key list sorted, so
+    PLANS.md does not churn when Catalyst expands the same keys in
+    another order."""
+    spec = importlib.util.spec_from_file_location(
+        "plan_audit", os.path.join(REPO, "tools", "plan_audit.py")
+    )
+    audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(audit)
+    node = (
+        "(4) Exchange\nInput [4]: [_groupingexpression#9, raw#1, canon#2, "
+        "gid#3L]\nArguments: hashpartitioning({}, 16), "
+        "ENSURE_REQUIREMENTS, [plan_id=7]\n"
+    )
+    a = audit.facts(node.format("_groupingexpression#9, raw#1, canon#2, gid#3L"))
+    b = audit.facts(node.format("_groupingexpression#9, canon#2, raw#1, gid#3L"))
+    assert a == b
+    assert a["hash_keys"] == ["_groupingexpression, canon, gid, raw"]
 
 
 def test_asof_join_has_no_join_node(spark):

@@ -13,9 +13,15 @@
 #                              bench queries at sf0.001, scaling off
 #                              (the per-round scaling record is a
 #                              separate, longer `python bench.py` run)
+#   5. perfbench self-test   — both rolling-ingest workloads at tiny
+#                              size: admitted docs == rolling_fold,
+#                              and the replay_probe pre-built state ==
+#                              the state real increments leave
+#                              (--verify-prebuild); skipped by --fast
 #
 # Usage: tools/ci.sh [--fast]
-#   --fast: oracle gate at sf0.001 and pytest -x (first failure stops)
+#   --fast: oracle gate at sf0.001, pytest -x (first failure stops),
+#           no perfbench self-test
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 cd "$REPO"
@@ -31,17 +37,22 @@ else
   PYTEST_ARGS=(-q)
 fi
 
-echo "=== [1/4] oracle gate ($GATE_SF) ==="
+echo "=== [1/5] oracle gate ($GATE_SF) ==="
 python tools/check_queries.py "$GATE_SF" 2>/dev/null | tail -3
 
-echo "=== [2/4] plan audit ==="
+echo "=== [2/5] plan audit ==="
 python tools/plan_audit.py 2>/dev/null | tail -3
 
-echo "=== [3/4] pytest ==="
+echo "=== [3/5] pytest ==="
 python -m pytest tests/ "${PYTEST_ARGS[@]}"
 
-echo "=== [4/4] bench smoke (sf0.001, scaling off) ==="
+echo "=== [4/5] bench smoke (sf0.001, scaling off) ==="
 SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 SPARK_GRAFT_SCALING=0 \
   python bench.py 2>/dev/null | tail -1
+
+if [ "$FAST" = 0 ]; then
+  echo "=== [5/5] perfbench self-test ==="
+  python3 perfbench/selftest.py
+fi
 
 echo "=== CI green ==="

@@ -537,9 +537,11 @@ def measure_bounds(spark, sf_dir: str) -> list[tuple]:
 
 def facts(p: str) -> dict:
     ex = len(re.findall(r"^\(\d+\) Exchange", p, re.MULTILINE))
+    # key order inside one exchange is sorted too: Catalyst may expand
+    # the same grouping keys in a different order from run to run
     hashkeys = sorted(
         {
-            re.sub(r"#\d+L?", "", m)
+            ", ".join(sorted(re.sub(r"#\d+L?", "", m).split(", ")))
             for m in re.findall(r"hashpartitioning\(([^)]*?), \d+\)", p)
         }
     )
