@@ -6,10 +6,11 @@ the accumulated corpus without rescanning it. This module persists the
 accepted corpus ONLY as its signature tables — the normalized-content
 exact hash and the MinHash LSH band buckets, O(survivors) rows with
 none of the original text — so the increment for batch N+1 computes
-signatures for ITS OWN rows exactly once and anti-joins them against
-the persisted state. Batch ≤N text is never rescanned; batch ≤N
-signatures are never recomputed (tests/test_incdedup.py pins the
-state files byte-stable across later increments).
+signatures for ITS OWN rows exactly once (see "One pass" below) and
+anti-joins them against the persisted state. Batch ≤N text is never
+rescanned; batch ≤N signatures are never recomputed
+(tests/test_incdedup.py pins the state files byte-stable across later
+increments).
 
 Reference anchor: the insert-if-absent probe + per-run seen-set of
 /root/reference/ocrclient/redisdata.py:106-108,170 — the per-key Redis
@@ -54,6 +55,17 @@ appended LAST, so a crash anywhere earlier leaves per-batch staging
 directories that are invisible to readers (state readers enumerate
 committed batch ids from the ledger, never glob the data dirs) and
 are idempotently overwritten when the batch is retried.
+
+One pass per increment: dedup_increment materializes each stage once
+with localCheckpoint and every later action reads the checkpoint, so
+the batch's text is scanned, hashed and shingled exactly once:
+
+  dd     (doc_id, text, h)   the batch with its content hashes; the
+                             doc-id guard aggregates over it
+  ek     (doc_id, h)         the exact survivors; counted once
+  bands  (doc_id, band, bh)  the exact survivors' MinHash bands
+  sk     (doc_id, h)         the near survivors; the three state
+                             writes read sk and bands
 
 Scale notes: per increment the only corpus-sized work is the new
 batch's own shingle scan (one groupBy(doc_id) with map-side partial
@@ -235,7 +247,15 @@ def dedup_increment(
     acc_exact = _read_state(spark, state_dir, "exact", _EXACT_SCHEMA, ids)
     acc_bands = _read_state(spark, state_dir, "signatures", _SIG_SCHEMA, ids)
 
-    n_in, n_ids, n_distinct = docs.agg(
+    # one pass (module docstring): without the checkpoints the id
+    # guard, the exact count and each state write re-run the scan, the
+    # exact window, the anti-join and the shingle build. Not cache(): a
+    # cached plan keeps its shuffle partitioning, so each state table
+    # would be one file per shuffle partition instead of one.
+    dd = docs.select(
+        "doc_id", "text", content_hash_col().alias("h")
+    ).localCheckpoint()
+    n_in, n_ids, n_distinct = dd.agg(
         F.count(F.lit(1)), F.count("doc_id"), F.countDistinct("doc_id")
     ).first()
     if not n_in == n_ids == n_distinct:
@@ -243,9 +263,16 @@ def dedup_increment(
             f"batch {batch_id}: {n_in} docs carry {n_ids} non-null doc "
             f"ids, {n_distinct} of them distinct"
         )
-    ek, ek_docs = _exact_stage(docs, acc_exact)
-    sk, sk_bands = near_filter(ek, _mh_band_df(ek_docs), acc_bands)
+    ek = exact_survivors(
+        dd.select("doc_id", "h"), acc_exact
+    ).localCheckpoint()
     n_exact_kept = ek.count()
+    bands = _mh_band_df(
+        dd.join(ek.select("doc_id"), "doc_id")
+    ).localCheckpoint()
+    sk, _ = near_filter(ek, bands, acc_bands)
+    sk = sk.localCheckpoint()
+    sk_bands = bands.join(sk.select("doc_id"), "doc_id")
 
     sk.write.mode("overwrite").parquet(f"{state_dir}/exact/batch-{batch_id}")
     sk_bands.write.mode("overwrite").parquet(

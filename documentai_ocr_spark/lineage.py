@@ -217,7 +217,9 @@ def run_to_completion(
     max_buckets_per_run: int | None = None,
 ) -> int:
     """Drain the work queue (the while-pending loop of the reference,
-    minus the sleep — each iteration is one committed batch)."""
+    minus the sleep — each iteration is one committed batch). An
+    unbounded run takes every pending bucket in its first pass, so it
+    returns without a confirming pass that could only find none."""
     total = 0
     while True:
         n = run_extraction_increment(
@@ -228,9 +230,9 @@ def run_to_completion(
             n_buckets=n_buckets,
             max_buckets=max_buckets_per_run,
         )
-        if n == 0:
-            return total
         total += n
+        if n == 0 or max_buckets_per_run is None:
+            return total
 
 
 def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:

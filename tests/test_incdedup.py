@@ -159,3 +159,30 @@ def test_survivors_block_later_batches(spark, tmp_path_factory):
     assert st1["n_near_dropped"] == 1
     assert st1["n_survivors"] == 1
     assert _survivor_set(spark, state) == {(0, 1), (1, 12)}
+
+
+# one pass per increment runs 27-30 jobs on these batches; re-running
+# the whole batch plan for every action ran 66-70
+INCREMENT_JOB_BUDGET = 36
+
+
+def test_increment_job_budget_and_one_file_per_table(
+    spark, docs, tmp_path_factory
+):
+    state = str(tmp_path_factory.mktemp("incdedup_budget"))
+    sc = spark.sparkContext
+    for k in range(3):
+        group = f"incdedup_budget_b{k}"
+        sc.setJobGroup(group, "dedup_increment")
+        try:
+            dedup_increment(spark, _batch(docs, k), state, f"b{k}")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert 0 < n_jobs <= INCREMENT_JOB_BUDGET, f"b{k}: {n_jobs} jobs"
+    # one part file per table and batch: the layout perfbench pre-builds
+    for sub in ("exact", "signatures", "survivors"):
+        for k in range(3):
+            d = os.path.join(state, sub, f"batch-b{k}")
+            parts = [f for f in os.listdir(d) if f.startswith("part-")]
+            assert len(parts) == 1, f"{sub}/batch-b{k}: {parts}"

@@ -69,6 +69,29 @@ def test_incremental_resume_equals_oneshot(
     assert lin.agg(F.sum("n_turns")).collect()[0][0] == transcripts.count()
 
 
+def test_unbounded_drain_runs_one_pass(
+    spark, transcripts, tmp_path_factory, monkeypatch
+):
+    """Without a per-run bound the first pass takes every pending
+    bucket, so the drain returns without a confirming pass (which
+    would cost a lineage read and a lock round-trip to find none)."""
+    import documentai_ocr_spark.lineage as lineage
+
+    calls = []
+    real = lineage.run_extraction_increment
+
+    def counted(*args, **kwargs):
+        calls.append(kwargs)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(lineage, "run_extraction_increment", counted)
+    out = str(tmp_path_factory.mktemp("lin") / "out")
+    total = run_to_completion(spark, transcripts, out, n_buckets=N_BUCKETS)
+    assert total == N_BUCKETS
+    assert len(calls) == 1
+    assert committed_buckets(spark, out) == set(range(N_BUCKETS))
+
+
 def test_crash_before_commit_resumes_exactly(
     spark, transcripts, oneshot, tmp_path_factory
 ):

@@ -214,15 +214,20 @@ def test_near_filter_in_batch_arm_is_a_bucket_window(spark, tmp_path):
     ), p
 
 
-def test_plan_audit_hash_keys_ignore_key_order():
-    """tools/plan_audit.py renders each exchange's key list sorted, so
-    PLANS.md does not churn when Catalyst expands the same keys in
-    another order."""
+def _plan_audit():
     spec = importlib.util.spec_from_file_location(
         "plan_audit", os.path.join(REPO, "tools", "plan_audit.py")
     )
     audit = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(audit)
+    return audit
+
+
+def test_plan_audit_hash_keys_ignore_key_order():
+    """tools/plan_audit.py renders each exchange's key list sorted, so
+    PLANS.md does not churn when Catalyst expands the same keys in
+    another order."""
+    audit = _plan_audit()
     node = (
         "(4) Exchange\nInput [4]: [_groupingexpression#9, raw#1, canon#2, "
         "gid#3L]\nArguments: hashpartitioning({}, 16), "
@@ -232,6 +237,25 @@ def test_plan_audit_hash_keys_ignore_key_order():
     b = audit.facts(node.format("_groupingexpression#9, canon#2, raw#1, gid#3L"))
     assert a == b
     assert a["hash_keys"] == ["_groupingexpression, canon, gid, raw"]
+
+
+def test_plan_audit_notes_plans_without_a_file_scan():
+    """A plan that reads no file (its rows were materialized while the
+    query was built) gets the no-scan note, not a flag; a plan with a
+    file scan gets no note."""
+    audit = _plan_audit()
+    eager = (
+        "(1) Scan ExistingRDD\nOutput [2]: [batch_seq#1, doc_id#2L]\n"
+        "Arguments: [batch_seq#1, doc_id#2L], MapPartitionsRDD[9]\n"
+    )
+    scanned = (
+        "(1) Scan parquet \nOutput [1]: [doc_id#2L]\n"
+        "ReadSchema: struct<doc_id:bigint>\n"
+    )
+    assert audit.facts(eager)["notes"] == [audit.NO_SCAN_NOTE]
+    assert audit.facts(eager)["scan_cols"] == []
+    assert audit.facts(scanned)["notes"] == []
+    assert audit.facts(scanned)["scan_cols"] == [1]
 
 
 def test_asof_join_has_no_join_node(spark):
