@@ -79,6 +79,8 @@ to the buckets the new batch actually touches.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -99,12 +101,10 @@ def _ledger_rows(spark: SparkSession, state_dir: str) -> list:
     path = f"{state_dir}/ledger"
     if not _path_exists(spark, path):
         return []
-    return (
-        spark.read.schema(LEDGER_SCHEMA)
-        .parquet(path)
-        .orderBy("batch_seq")
-        .collect()
-    )
+    # sorted here, not with orderBy: a sort is two more Spark jobs for
+    # a table of one row per batch
+    rows = spark.read.schema(LEDGER_SCHEMA).parquet(path).collect()
+    return sorted(rows, key=lambda r: r["batch_seq"])
 
 
 def committed_batches(spark: SparkSession, state_dir: str) -> list[str]:
@@ -116,11 +116,28 @@ def _read_state(
     spark: SparkSession, state_dir: str, sub: str, schema: str, ids: list[str]
 ) -> DataFrame:
     """Union of one state table over the COMMITTED batches only — an
-    uncommitted (crashed) batch's staging directory is never read."""
+    uncommitted (crashed) batch's staging directory is never read.
+
+    The batch dirs are read in chunks of at most the parallel listing
+    threshold: one read of more paths than that lists them with a
+    Spark job of one task per path (160 batch dirs: 0.8-1.4 s at
+    local[4]), while a chunk is listed on the driver in milliseconds."""
     paths = [f"{state_dir}/{sub}/batch-{b}" for b in ids]
     if not paths:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*paths)
+        # limit(0) turns the frame into an empty local relation, which
+        # the optimizer folds out of the joins against it; a bare empty
+        # createDataFrame is an RDD that each such join runs jobs over
+        return spark.createDataFrame([], schema).limit(0)
+    step = int(
+        spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold")
+    )
+    return reduce(
+        DataFrame.unionByName,
+        [
+            spark.read.schema(schema).parquet(*paths[i : i + step])
+            for i in range(0, len(paths), step)
+        ],
+    )
 
 
 def accepted_state(

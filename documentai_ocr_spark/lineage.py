@@ -189,8 +189,14 @@ def _increment_locked(
         F.sum("n_spans").cast("long").alias("n_spans"),
     )
     # a pending bucket with no input rows still commits (part_id=-1,
-    # zero counts) — otherwise it would be rescanned forever
-    all_pending = spark.createDataFrame([(b,) for b in pending], "bucket int")
+    # zero counts) — otherwise it would be rescanned forever. Built with
+    # range, not createDataFrame: a DataFrame of local Python rows runs a
+    # Python worker per partition to hand them to the JVM
+    all_pending = (
+        spark.range(n_buckets)
+        .select(F.col("id").cast("int").alias("bucket"))
+        .where(F.col("bucket").isin(pending))
+    )
     lineage = (
         all_pending.join(lineage, "bucket", "left")
         .select(

@@ -223,6 +223,41 @@ def test_winnow_inrow_kernel_matches_python_spec(spark):
     assert got == want
 
 
+def test_word_shingles_match_python_split(spark):
+    """The regex shingler against k-grams of Python's text.split(" ")
+    (which, like Spark's split, keeps empty tokens): leading, trailing
+    and doubled spaces, tabs and newlines inside tokens, unicode,
+    fewer than k tokens, and the empty text."""
+    from documentai_ocr_spark.queries.dedup import _word_shingles
+
+    texts = [
+        "",
+        "a",
+        "a b",
+        "a b c",
+        " a b c ",
+        "a  b   c d",
+        "   ",
+        "x\ty z\nw v",
+        "文 档 提 取 引 擎 按 行",
+        "one two three four five six seven eight nine ten",
+        "r r r r r",
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    for k in (1, 3, 8):
+        got = sorted(
+            (r["doc_id"], r["sh"])
+            for r in _word_shingles(docs, k, distinct=False).collect()
+        )
+        want = sorted(
+            (i, " ".join(toks[j : j + k]))
+            for i, t in enumerate(texts)
+            for toks in [t.split(" ")]
+            for j in range(len(toks) - k + 1)
+        )
+        assert got == want, k
+
+
 def test_mirror_attribution_reconciles_with_token_yield(spark):
     """Attribution's redundant tokens must equal exactly the tokens
     q_token_yield subtracts (total - unique), corpus-wide — the two
