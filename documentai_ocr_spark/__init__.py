@@ -21,9 +21,11 @@ Layout:
   queries/               operator registry (relational, dedup, textstats,
                          simsearch, extraction, labeldsl) with DuckDB oracles
   fusion.py              multi-recognizer weighted fusion + the ×4 vote
+  signatures.py          content hash + MinHash band kernels the dedup runs
+  incdedup.py            rolling dedup against persisted signature state
   lineage.py             checkpoint / lineage / resumable incremental runs
-  streaming.py           structured-streaming front end (idempotent sink,
-                         stateful per-conversation progress)
+  pipeline.py            run_curation_increment (extract → dedup → commit);
+                         its streaming front door is stream_curation
   pdfbin.py              PDF-binary ingestion front door (SPDF container)
   inference.py           batched model hook (broadcast + worker singleton)
   bucketing.py           co-located bucketed table layout (shuffle-free joins)

@@ -23,7 +23,7 @@ Policy — identical, by construction, to the oracled one-shot fold
 over a fixed batch list in both Spark and DuckDB:
 
   * exact rule: a doc is dropped iff its normalized-content hash
-    (util.content_hash_col) equals an ACCEPTED doc's hash from an
+    (signatures.content_hash_col) equals an ACCEPTED doc's hash from an
     earlier committed batch, or a smaller-doc_id doc in its OWN batch
     shares the hash.
   * near rule (applied to exact survivors): a doc is dropped iff it
@@ -69,7 +69,7 @@ the batch's text is scanned, hashed and shingled exactly once:
 
 Scale notes: per increment the only corpus-sized work is the new
 batch's own shingle scan (one groupBy(doc_id) with map-side partial
-mins, see dedup._mh_sig_df). The anti-joins are equi-joins on a
+mins, see signatures._mh_sig_df). The anti-joins are equi-joins on a
 32-char hash / (band int, 32-char bh) — they shuffle signatures,
 never text. Accumulated state grows O(total survivors × bands); at
 10^12 turns you would bucket the signature tables by bh (Iceberg
@@ -86,7 +86,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .lineage import _path_exists
-from .queries.util import content_hash_col
+from .signatures import _mh_band_df, content_hash_col
 
 LEDGER_SCHEMA = (
     "batch_seq int, batch_id string, n_in bigint, n_exact_dropped bigint, "
@@ -215,8 +215,6 @@ def batch_survivors(
     shingle md5 work is pure waste (a twin's bands are identical to
     its keeper's, so the blocker set is unchanged — see the policy
     note in the module docstring)."""
-    from .queries.dedup import _mh_band_df
-
     ek, ek_docs = _exact_stage(docs, acc_exact)
     return near_filter(ek, _mh_band_df(ek_docs), acc_bands)
 
@@ -253,8 +251,6 @@ def dedup_increment(
     ``_crash_before_commit`` simulates dying after the data writes but
     before the ledger append (the staging dirs are left behind, like a
     real crash)."""
-    from .queries.dedup import _mh_band_df
-
     led = _ledger_rows(spark, state_dir)
     for r in led:
         if r["batch_id"] == batch_id:
@@ -337,8 +333,6 @@ def rolling_fold(
     ingest-schedule constant, never data-sized); each batch runs
     exact_survivors() then near_filter(), the two rules
     batch_survivors() applies."""
-    from .queries.dedup import _mh_band_df
-
     spark = docs.sparkSession
     seq = (
         seq_col

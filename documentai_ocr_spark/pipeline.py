@@ -25,17 +25,30 @@ Layout under ``out_dir``:
   dedup/                ONE shared incdedup state dir: exact hashes +
                         band signatures + survivors + ledger, growing
                         by each batch's admitted docs
+
+Streaming is a thin driver over the same increment: stream_curation
+reads transcript files as they arrive and runs run_curation_increment
+on each micro-batch under the batch id ``epoch-<id>``. There are no
+stateful operators, no second dedup rule and no second sink; the
+ledger's idempotent batch ids make an engine replay of a committed
+epoch a no-op, so each epoch is admitted exactly once.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from .incdedup import dedup_increment, read_survivors
 from .lineage import read_extracted, run_to_completion
 
 DEFAULT_BUCKETS = 16
+
+TRANSCRIPT_SCHEMA = (
+    "conv_id string, turn_idx int, role string, text string, "
+    "tool string, ts timestamp"
+)
 
 
 def turn_doc_id() -> F.Column:
@@ -78,3 +91,32 @@ def read_admitted(spark: SparkSession, out_dir: str) -> DataFrame:
     """(batch_seq, doc_id) of every admitted (deduped) turn-document
     across all committed ingest batches."""
     return read_survivors(spark, f"{out_dir}/dedup")
+
+
+def stream_curation(
+    spark: SparkSession,
+    input_dir: str,
+    out_dir: str,
+    checkpoint_dir: str,
+    max_files_per_trigger: int = 8,
+) -> StreamingQuery:
+    """Drain the transcript parquet files under ``input_dir`` through
+    run_curation_increment, one increment per micro-batch, and return
+    the started query (availableNow: it stops once every file present
+    at start has been processed). The streaming checkpoint tracks which
+    files each epoch read; a restart on the same checkpoint resumes
+    after the last committed epoch, and a replayed epoch finds its
+    batch id in the ledger and commits nothing."""
+    return (
+        spark.readStream.schema(TRANSCRIPT_SCHEMA)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(input_dir)
+        .writeStream.foreachBatch(
+            lambda df, i: run_curation_increment(
+                spark, df, out_dir, batch_id=f"epoch-{i}"
+            )
+        )
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )

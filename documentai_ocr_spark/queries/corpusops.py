@@ -1937,9 +1937,8 @@ def template_text():
 
 def template_hash(text_col):
     """ONE Spark rendering of the template-normalization fingerprint
-    (lowercase, single-space collapse, trim, md5) — shared by
-    q_template_turns and streaming.stream_template_detect so the batch
-    rule and the streaming monitor can never drift."""
+    (lowercase, single-space collapse, trim, md5) — q_template_turns'
+    rule, kept in one place."""
     return F.md5(F.lower(F.trim(F.regexp_replace(text_col, "[ ]+", " "))))
 
 
@@ -2688,8 +2687,8 @@ ORACLES["q_line_dedup_rewrite"] = _line_dedup_sql()
 # Spark's built-in HLL++ whose register layout is engine-internal and
 # cannot be persisted or merged across jobs; these helpers hand-roll
 # the classic HyperLogLog register set as plain (group, idx, rho) rows
-# so the sketch can be WRITTEN, re-read and merged by MAX — the form a
-# streaming maintainer needs (stream_hll_dau). 60-bit xxhash64-derived
+# so the sketch can be WRITTEN, re-read and merged by MAX — the form an
+# incremental maintainer needs. 60-bit xxhash64-derived
 # hash: low log2(m) bits pick the register, the remaining 55 bits'
 # leading-zero count (+1) is rho; merge law: max(rho) per register,
 # associative/commutative/idempotent — a replayed batch cannot move a
@@ -2932,8 +2931,8 @@ def q_skyline_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------- per-type value profile
-# Third consumer of the mergeable quantile-sketch kernel (after the
-# batch n_chars readout and the streaming maintainer), proving the
+# Second consumer of the mergeable quantile-sketch kernel (after the
+# batch n_chars readout), proving the
 # machinery column- and table-agnostic: per event type, the exact
 # integer floor-cents stats (min / max / sum, mean as milli-cents =
 # 1000·sum div n — i.e. thousandths of a cent (milli-cents), one

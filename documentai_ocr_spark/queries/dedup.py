@@ -23,9 +23,20 @@ the oracle-checkable baseline.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..signatures import (  # noqa: F401 — the pipeline's kernels, gated here
+    _JACCARD_K,
+    _MH_AB,
+    _MH_P,
+    _MH_ROWS_PER_BAND,
+    _MH_SEEDS,
+    _hex60,
+    _mh_band_df,
+    _mh_sig_df,
+    _word_shingles,
+)
 from .util import content_hash_col, content_hash_sql, guard_allpairs, load, spread
 
 QUERIES: dict = {}
@@ -40,33 +51,6 @@ def _q(name: str, sql: str | None = None):
         return fn
 
     return reg
-
-
-def _hex60(col: Column) -> Column:
-    """First 60 bits of md5 as a non-negative bigint (engine side)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def _word_shingles(
-    doc: DataFrame, k: int, distinct: bool = True
-) -> DataFrame:
-    """(doc_id, sh): word k-gram shingles per document. ``distinct``
-    dedups them (set semantics — required wherever shingles are COUNTED,
-    e.g. Jaccard); pass False for consumers that only take MIN over the
-    shingle set (minhash): duplicates cannot change a min, and skipping
-    the dedup drops a full shuffle of the raw shingle stream.
-
-    Tokens are the pieces of ``split(text, ' ')``, empty ones included;
-    shingle i is tokens i..i+k-1 joined by one space. The regex
-    captures, at every token start, the k tokens that begin there (a
-    lookahead, so the matches overlap): one compiled pass over the
-    text, where a lambda per shingle over ``split(text)`` re-splits
-    the text for each token it reads and is interpreted."""
-    gram = r"[^ ]*+" + r"(?: [^ ]*+)" * (k - 1)
-    starts = F.lit(rf"(?:^|(?<= ))(?=({gram}))")
-    grams = F.regexp_extract_all("text", starts, 1)
-    sh = doc.select("doc_id", F.explode(grams).alias("sh"))
-    return sh.distinct() if distinct else sh
 
 
 # ------------------------------------------------------------------- exact
@@ -95,7 +79,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------- jaccard
-_JACCARD_K = 3
 _JACCARD_TAU = 0.01  # word-soup fixture corpus: low overlap by design
 
 
@@ -245,28 +228,9 @@ def containment_pairs(docs: DataFrame) -> DataFrame:
 
 
 # ----------------------------------------------------------------- minhash
-_MH_SEEDS = 8
-_MH_ROWS_PER_BAND = 2  # 4 bands of 2
-
-# Hash economics: ONE md5 digest per shingle, then the 8 "permutations"
-# are pairwise-independent linear maps (a·h + b) mod p of its 60-bit
-# prefix (reduced mod a 31-bit prime so a·h stays < 2^62 in bigint).
-# The original form hashed every shingle 8× (seed-prefixed md5 each);
-# digesting is the per-token cost that scales with the corpus, the
-# linear maps are near-free — measured 1.94 s → 1.19 s on the sf0.1
-# signature build (BENCH.md round 3). Both engines compute the same
-# integers, so the value-hash gate is unaffected.
-_MH_P = 2147483629  # largest prime < 2^31
-_MH_AB = [
-    (1948261107, 921312109),
-    (651088733, 1706916241),
-    (1211468881, 412002143),
-    (880120577, 1523985619),
-    (1727539969, 204042157),
-    (433420127, 1369618019),
-    (1065623057, 77041823),
-    (1582249123, 1835017493),
-]
+# _MH_SEEDS, _MH_ROWS_PER_BAND, _MH_P, _MH_AB and the Spark builders
+# _mh_sig_df / _mh_band_df live in signatures.py (the increment runs
+# them); the DuckDB rendering below is the oracle side.
 _MH_AB_VALUES = ", ".join(
     f"({s}, {a}, {b})" for s, (a, b) in enumerate(_MH_AB)
 )
@@ -295,45 +259,6 @@ _MH_BAND_CTE = f"""
                         CAST(MIN(CASE WHEN seed % 2 = 1 THEN sig END)
                              AS varchar)) AS bh
              FROM sig GROUP BY doc_id, seed // {_MH_ROWS_PER_BAND})"""
-
-
-def _mh_sig_df(docs: DataFrame) -> DataFrame:
-    """(doc_id, s0..s7): the 8-component MinHash signature, wide form.
-    ONE md5 digest per shingle; the 8 permutations are linear maps
-    (a·h + b) mod p of its 60-bit prefix (see _MH_AB) — digesting is
-    the corpus-linear cost, the maps are free. Builds in ONE
-    groupBy(doc_id) with 8 parallel min aggregates (columns, not
-    exploded seed rows) — map-side partial mins do all the work.
-    Shingles are NOT deduped first: MIN is duplicate-insensitive, so
-    the distinct()'s shuffle of the raw shingle stream would buy
-    nothing (the oracle SQL keeps its DISTINCT — same mins either
-    way). Shared by the band builder and q_minhash_calibration, so the
-    candidate generator and its accuracy audit can never disagree
-    about what a signature is."""
-    sh = _word_shingles(docs, _JACCARD_K, distinct=False)
-    hh = sh.select(
-        "doc_id", (_hex60(F.col("sh")) % _MH_P).alias("h")
-    )
-    return hh.groupBy("doc_id").agg(
-        *[
-            F.expr(f"min(({a} * h + {b}) % {_MH_P})").alias(f"s{s}")
-            for s, (a, b) in enumerate(_MH_AB)
-        ]
-    )
-
-
-def _mh_band_df(docs: DataFrame) -> DataFrame:
-    """(doc_id, band, bh): MinHash LSH band buckets — pure projections
-    over the shared signature frame (_mh_sig_df). Written as SQL
-    expressions (here and in _mh_sig_df): composed one Column call at a
-    time, the two frames cost ~0.15 s of driver time per increment."""
-    sig = _mh_sig_df(docs)
-    bands = ", ".join(
-        f"named_struct('band', {b}, 'bh', md5(concat_ws(':', "
-        f"CAST(s{2 * b} AS STRING), CAST(s{2 * b + 1} AS STRING))))"
-        for b in range(_MH_SEEDS // _MH_ROWS_PER_BAND)
-    )
-    return sig.select("doc_id", F.expr(f"inline(array({bands}))"))
 
 
 MINHASH_PAIRS_SQL = f"""

@@ -5,12 +5,12 @@ Each query re-expresses one dataflow operator family of the reference
 (file:line cited per query) as idiomatic DataFrame code, with a DuckDB
 oracle. Entries stay only while they anchor a §2 coverage row or serve
 the pipeline: extraction gates, turn hygiene and conversation assembly
-over documents/transcripts, and the batch references of the streaming
-twins (q_hour_mix, q_dau_wau, q_activity_bitmap, q_slo_burn). Over
-``events`` only those twins, the §2 anchors such as q_asof_join, and
-q_scd2_intervals / q_floor_balance (ROADMAP direction 4 lists them to
-go next) remain. Warehouse reports over the harness tables
-with neither role do not belong here. Numeric discipline for cross-engine equality:
+over documents/transcripts. Over ``events`` only the §2 anchors such as
+q_asof_join and four event rollups (q_hour_mix, q_dau_wau,
+q_activity_bitmap, q_slo_burn) remain; the rollups were kept as the
+batch references of streaming maintainers that no longer exist, and
+are the next entries to weigh against the same rule. Warehouse reports
+over the harness tables with neither role do not belong here. Numeric discipline for cross-engine equality:
 
   * integer aggregates are cast to bigint on BOTH sides (DuckDB sums
     int → hugeint, Spark → bigint);
@@ -1959,10 +1959,10 @@ def q_turn_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-conversation completeness audit: turn count, max index,
     missing-index count (holes in 0..max), duplicate-index count. One
     conv-keyed aggregation; with the table bucketed on conv_id the
-    audit runs shuffle-free. Pairs with streaming.stream_dedup (which
-    prevents duplicates at ingest) and the lineage resume (which
-    prevents holes from partial failures) — this is the detector that
-    proves they worked."""
+    audit runs shuffle-free. Pairs with the dedup increment's doc-id
+    guard (which refuses duplicate turns at ingest) and the lineage
+    resume (which prevents holes from partial failures) — this is the
+    detector that proves they worked."""
     from ..synth import transcripts_from_documents
 
     t = transcripts_from_documents(spark, sf_dir).select(
@@ -3541,11 +3541,9 @@ def q_lang_source_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def slo_burn_from_daily(g: DataFrame) -> DataFrame:
     """(day, total, err) daily rollup — possibly SPARSE — → the full
     burn table. Densifies over the rollup's own day span (a no-op on
-    already-dense input, which is how q_slo_burn calls it; the
-    streaming maintainer's SUM-merged partials arrive sparse), then
-    the trailing-7 window and the exact milli columns. ONE rendering
-    for the batch query and streaming.slo_burn_read_current — their
-    equality on the same corpus is pinned in pytest."""
+    already-dense input, which is how q_slo_burn calls it; SUM-merged
+    partials arrive sparse), then the trailing-7 window and the exact
+    milli columns."""
     bounds = g.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
     grid = bounds.select(
         F.explode(F.expr("sequence(lo, hi)")).alias("day")
@@ -3695,80 +3693,6 @@ def q_cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------------- SCD2 build
-# The warehouse dimension-history operator the registry lacked: from
-# an append-only change stream, build the slowly-changing-dimension
-# type-2 table — per user, one row per STATUS RUN (consecutive
-# same-type events collapse; only changes open a version) carrying
-# [valid_from, valid_to) millisecond validity, a per-user version
-# number, and the is_current flag (open interval). The deterministic
-# order is the house (epoch-ms, event_id) key on BOTH engines (the
-# round-3 advisor rule). Scale: ONE user_id exchange serves the
-# change-detect lag, the interval lead AND the version row_number —
-# all three windows share (user_id | ms, event_id), so Catalyst plans
-# a single sort, and a 10^12-event stream pays one shuffle. The
-# output is change-grain (≤ event count, typically ≪), and a
-# point-in-time probe against it is q_asof_join's carry-forward — no
-# new machinery.
-@_q(
-    "q_scd2_intervals",
-    """
-    WITH s AS (
-      SELECT user_id, event_type, epoch_ms(ts) AS ms, event_id,
-             lag(event_type) OVER (PARTITION BY user_id
-               ORDER BY epoch_ms(ts), event_id) AS prev_type
-      FROM events
-    ),
-    c AS (SELECT user_id, event_type AS status, ms, event_id
-          FROM s WHERE prev_type IS NULL OR prev_type <> event_type)
-    SELECT user_id, status,
-           CAST(ms AS bigint) AS valid_from_ms,
-           CAST(lead(ms) OVER (PARTITION BY user_id
-                ORDER BY ms, event_id) AS bigint) AS valid_to_ms,
-           CAST(ROW_NUMBER() OVER (PARTITION BY user_id
-                ORDER BY ms, event_id) AS bigint) AS version,
-           lead(ms) OVER (PARTITION BY user_id
-                ORDER BY ms, event_id) IS NULL AS is_current
-    FROM c
-    """,
-)
-def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD type-2 dimension build from the event stream: per user, one
-    row per status run with [valid_from_ms, valid_to_ms) validity,
-    version number and is_current. See family comment — one user_id
-    exchange, three windows on one sort."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_type",
-        F.unix_millis(F.col("ts").cast("timestamp")).alias("ms"),
-        "event_id",
-    )
-    w = Window.partitionBy("user_id").orderBy("ms", "event_id")
-    ch = (
-        ev.withColumn("prev_type", F.lag("event_type").over(w))
-        .where(
-            F.col("prev_type").isNull()
-            | (F.col("prev_type") != F.col("event_type"))
-        )
-        .select(
-            "user_id",
-            F.col("event_type").alias("status"),
-            "ms",
-            "event_id",
-        )
-    )
-    w2 = Window.partitionBy("user_id").orderBy("ms", "event_id")
-    nxt = F.lead("ms").over(w2)
-    return ch.select(
-        "user_id",
-        "status",
-        F.col("ms").cast("long").alias("valid_from_ms"),
-        nxt.cast("long").alias("valid_to_ms"),
-        F.row_number().over(w2).cast("long").alias("version"),
-        nxt.isNull().alias("is_current"),
-    )
-
-
 # ------------------------------------------------- activity bitmaps
 # The bitmap-index retention pattern: per user, the first 64 days
 # after first contact packed into ONE bigint (bit d set = active on
@@ -3846,76 +3770,4 @@ def q_activity_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).groupBy("n_active_64").agg(
         F.count(F.lit(1)).cast("long").alias("n_users"),
         F.sum(F.expr("(mask >> 7) & 1")).cast("long").alias("n_d7_active"),
-    )
-
-
-# ------------------------------------------- floor-clamped balance
-# The "balance never goes below zero" recurrence — token buckets,
-# inventory floors, queue workloads: b_i = max(0, b_{i-1} + d_i).
-# NOT expressible as a plain cumulative sum — but the ONE-SIDED clamp
-# has the closed form b_i = S_i − min(0, min_{j≤i} S_j) (Lindley's
-# recursion / the reflected random walk), which IS two stacked
-# windows: a cumulative sum and a running minimum over the same
-# (user | ms, event_id) sort. The ENGINE ships the closed form; the
-# ORACLE runs the literal recurrence through a DuckDB recursive CTE —
-# so the value-hash gate machine-checks the reflection identity on
-# real data, not just the textbook proof. Deltas are deterministic
-# small ints by event type (mixed signs, so the floor actually
-# binds). Scale: one user_id exchange, both windows on one sort,
-# state O(1) per row — a 10^12-event stream pays exactly what
-# q_sessionize pays.
-_BAL_DELTA_SQL = """CASE event_type WHEN 'view' THEN 2
-        WHEN 'purchase' THEN -5 WHEN 'signup' THEN 1 ELSE -1 END"""
-
-
-@_q(
-    "q_floor_balance",
-    f"""
-    WITH RECURSIVE t AS (
-      SELECT user_id, event_id, epoch_ms(ts) AS ms,
-             {_BAL_DELTA_SQL} AS d,
-             ROW_NUMBER() OVER (PARTITION BY user_id
-               ORDER BY epoch_ms(ts), event_id) AS rn
-      FROM events
-    ),
-    r AS (
-      SELECT user_id, event_id, rn,
-             CAST(GREATEST(0, d) AS bigint) AS balance
-      FROM t WHERE rn = 1
-      UNION ALL
-      SELECT t.user_id, t.event_id, t.rn,
-             CAST(GREATEST(0, r.balance + t.d) AS bigint)
-      FROM r JOIN t ON t.user_id = r.user_id AND t.rn = r.rn + 1
-    )
-    SELECT user_id, event_id, balance FROM r
-    """,
-)
-def q_floor_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per event: the floor-clamped running balance of type-derived
-    deltas, via the reflected-walk closed form (two windows — cumsum
-    and running min — on one sort). The oracle replays the literal
-    max(0, prev + d) recurrence; see family comment."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        F.unix_millis(F.col("ts").cast("timestamp")).alias("ms"),
-        F.expr(_BAL_DELTA_SQL).cast("long").alias("d"),
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ms", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    s = ev.withColumn("s", F.sum("d").over(w)).withColumn(
-        "runmin", F.min("s").over(w)
-    )
-    return s.select(
-        "user_id",
-        "event_id",
-        (
-            F.col("s")
-            - F.least(F.lit(0).cast("long"), F.col("runmin"))
-        )
-        .cast("long")
-        .alias("balance"),
     )

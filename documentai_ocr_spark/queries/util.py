@@ -4,6 +4,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..signatures import content_hash_col  # noqa: F401 — re-exported
+
 
 # all-pairs (O(n²)) oracle anchors refuse to run beyond this input size —
 # they exist for sampled validation against the bucketed scale paths, and
@@ -87,19 +89,13 @@ def ntok_col(col):
 # per engine, shared by exact dedup, the curation gate, dup inflation,
 # the bloom probe front door, conversation-grain dedup and the dataset
 # card — a change to the normalization edits these two functions and
-# nothing else.
+# nothing else. The Spark rendering, content_hash_col, lives in
+# signatures.py (the rolling increment runs it) and is imported above.
 def content_hash_sql(col: str = "text") -> str:
     """DuckDB rendering of the normalized-content hash of ``col``."""
     return (
         "md5(lower(regexp_replace(" + col + ", '[ \t\n\x0B\f\r]+', ' ', 'g')))"
     )
-
-
-def content_hash_col(col: str = "text"):
-    """Spark rendering of the normalized-content hash of ``col``."""
-    from pyspark.sql import functions as F
-
-    return F.md5(F.lower(F.regexp_replace(col, r"[ \t\n\x0B\f\r]+", " ")))
 
 
 # --------------------------------- per-group top-K without a group sort

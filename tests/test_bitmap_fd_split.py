@@ -1,24 +1,17 @@
-"""q_activity_bitmap + q_floor_balance + q_fd_audit + q_split_scan:
-pure-Python replays over the full sf0.001 tables plus engineered
-fixtures — the bitmap's 64-day horizon edge (day 63 uses the sign bit;
-day ≥ 64 contributes nothing), the floor balance's reflection identity
-on a hand sequence where the floor binds twice, and the FD audit's
-majority tie-break."""
+"""q_activity_bitmap + q_fd_audit + q_split_scan: pure-Python replays
+over the full sf0.001 tables plus engineered fixtures — the bitmap's
+64-day horizon edge (day 63 uses the sign bit; day ≥ 64 contributes
+nothing) and the FD audit's majority tie-break."""
 
 from __future__ import annotations
 
 import pandas as pd
 import pytest
 
-from documentai_ocr_spark.queries.relational import (
-    q_activity_bitmap,
-    q_floor_balance,
-)
+from documentai_ocr_spark.queries.relational import q_activity_bitmap
 from documentai_ocr_spark.queries.webtext import q_fd_audit
 
 SF = "/root/testdata/sf0.001"
-
-_DELTAS = {"view": 2, "purchase": -5, "signup": 1}
 
 
 def _events_pdf(rows, tmp_path):
@@ -38,64 +31,6 @@ def _events_pdf(rows, tmp_path):
     )
     pdf.to_parquet(str(tmp_path / "events.parquet"))
     return str(tmp_path)
-
-
-# ----------------------------------------------------- floor balance
-
-
-def _balance_python(ev: pd.DataFrame):
-    out = {}
-    for _, g in ev.groupby("user_id"):
-        g = g.sort_values(["ms", "event_id"])
-        bal = 0
-        for _, r in g.iterrows():
-            bal = max(0, bal + _DELTAS.get(r["event_type"], -1))
-            out[int(r["event_id"])] = bal
-    return out
-
-
-def test_floor_balance_replay_sf0001(spark):
-    ev = (
-        spark.read.parquet(f"{SF}/events.parquet")
-        .selectExpr(
-            "user_id",
-            "event_id",
-            "event_type",
-            "unix_millis(cast(ts as timestamp)) as ms",
-        )
-        .toPandas()
-    )
-    want = _balance_python(ev)
-    got = {
-        int(r.event_id): int(r.balance)
-        for r in q_floor_balance(spark, SF).collect()
-    }
-    assert got == want
-    # the floor must actually bind somewhere, or the gate proves
-    # nothing about the clamp
-    ev2 = ev.assign(
-        d=ev["event_type"].map(_DELTAS).fillna(-1).astype(int)
-    )
-    assert (ev2.groupby("user_id")["d"].cumsum() < 0).any()
-
-
-def test_floor_balance_fixture(spark, tmp_path):
-    """One user, deltas +2 −5 −1 +1 +2: recurrence 2,0,0,1,3 — the
-    floor binds at steps 2 AND 3 (plain cumsum would read 2,−3,−4,
-    −3,−1)."""
-    rows = [
-        (0, 1, "view", 0),
-        (1, 1, "purchase", 10),
-        (2, 1, "other", 20),
-        (3, 1, "signup", 30),
-        (4, 1, "view", 40),
-    ]
-    sf = _events_pdf(rows, tmp_path)
-    got = {
-        int(r.event_id): int(r.balance)
-        for r in q_floor_balance(spark, sf).collect()
-    }
-    assert got == {0: 2, 1: 0, 2: 0, 3: 1, 4: 3}
 
 
 # --------------------------------------------------- activity bitmap

@@ -1,7 +1,7 @@
-"""Event-stream batch references of the streaming twins (tz-free hour
-histogram, DAU/WAU) recounted in pure Python from the physical epoch
-milliseconds the parquet file stores, and the tool stationary
-distribution against hand-derived chains and a numpy replay."""
+"""Event rollups (tz-free hour histogram, DAU/WAU) recounted in pure
+Python from the physical epoch milliseconds the parquet file stores,
+and the tool stationary distribution against hand-derived chains and
+a numpy replay."""
 
 import pandas as pd
 

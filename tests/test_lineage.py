@@ -132,7 +132,7 @@ def test_empty_input_commits_and_converges(spark, tmp_path):
     commit them (zero-count lineage rows) rather than crash on schema
     inference over an empty output dir — otherwise run_to_completion
     could never converge on an empty slice."""
-    from documentai_ocr_spark.streaming import TRANSCRIPT_SCHEMA
+    from documentai_ocr_spark.pipeline import TRANSCRIPT_SCHEMA
 
     out = str(tmp_path / "empty_run")
     empty = spark.createDataFrame([], TRANSCRIPT_SCHEMA)

@@ -469,36 +469,6 @@ def test_slo_burn_one_corpus_exchange(spark):
         )
 
 
-def test_scd2_single_user_sort(spark):
-    """q_scd2_intervals: the change-detect lag, the interval lead AND
-    the version row_number must share ONE user_id exchange (all three
-    windows ride the same (user_id | ms, event_id) sort) — and the
-    plan carries no join at all."""
-    p = plan(QUERIES["q_scd2_intervals"](spark, SF))
-    user_ex = [
-        ln
-        for ln in p.splitlines()
-        if "Arguments: hashpartitioning(user_id" in ln
-    ]
-    assert len(user_ex) == 1, user_ex
-    assert "Join" not in p
-
-
-def test_floor_balance_closed_form_plan(spark):
-    """q_floor_balance: the Lindley closed form is one user exchange,
-    zero joins, zero Python nodes — cumsum + running min on one
-    sort."""
-    p = plan(QUERIES["q_floor_balance"](spark, SF))
-    user_ex = [
-        ln
-        for ln in p.splitlines()
-        if "Arguments: hashpartitioning(user_id" in ln
-    ]
-    assert len(user_ex) == 1, user_ex
-    assert "Join" not in p
-    assert "MapInPandas" not in p and "ArrowEvalPython" not in p
-
-
 def test_split_scan_one_corpus_exchange(spark):
     """q_split_scan: documents are scanned and shuffled ONCE — the
     (n_chars, lang) rollup — and every other partitioning in the plan
