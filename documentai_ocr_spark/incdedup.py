@@ -312,14 +312,25 @@ def dedup_increment(
         "n_near_dropped": n_exact_kept - n_surv,
         "n_survivors": n_surv,
     }
-    spark.createDataFrame(
-        [tuple(stats[f] for f in (
-            "batch_seq", "batch_id", "n_in", "n_exact_dropped",
-            "n_near_dropped", "n_survivors",
-        ))],
-        LEDGER_SCHEMA,
-    ).write.mode("append").parquet(f"{state_dir}/ledger")
+    _ledger_row(spark, stats).write.mode("append").parquet(f"{state_dir}/ledger")
     return stats
+
+
+def _ledger_row(spark: SparkSession, stats: dict) -> DataFrame:
+    """The batch's ledger row as a JVM-built frame. A frame of local
+    Python rows hands them over through a Python worker per partition
+    (four tasks for one row); the row here is the one id == 1 of a
+    two-slice range, so the append writes the same two files such a
+    frame does: partition 0's file, which Spark writes even when it is
+    empty, and partition 1's file holding the row. The CASE keeps the
+    columns nullable, as LEDGER_SCHEMA's are (a bare literal column is
+    written as a required parquet field)."""
+    row = F.col("id") == 1
+    cols = [
+        F.when(row, F.lit(stats[name])).cast(dtype).alias(name)
+        for name, dtype in (f.split() for f in LEDGER_SCHEMA.split(", "))
+    ]
+    return spark.range(0, 2, 1, 2).where(row).select(*cols)
 
 
 def rolling_fold(

@@ -36,9 +36,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .extract import extract_turns
+from .extract import EXTRACT_SCHEMA, extract_turns
 
 DEFAULT_BUCKETS = 64
+# extracted/ as a run without ``augment`` writes it, partition column last
+EXTRACTED_SCHEMA = f"{EXTRACT_SCHEMA}, part_id int, bucket int"
 
 LINEAGE_SCHEMA = (
     "bucket int, part_id int, n_turns bigint, n_convs bigint, "
@@ -246,11 +248,21 @@ def read_extracted(spark: SparkSession, out_dir: str) -> DataFrame:
     uncommitted/partial bucket is invisible — snapshot-read emulation).
     mergeSchema: buckets written before a column was added (schema
     evolution via the ``augment`` hook) read it as NULL."""
-    done = sorted(committed_buckets(spark, out_dir))
-    df = spark.read.option("mergeSchema", "true").parquet(
-        f"{out_dir}/extracted"
+    return read_buckets(
+        spark.read.option("mergeSchema", "true"),
+        out_dir,
+        committed_buckets(spark, out_dir),
     )
-    return df.where(F.col("bucket").isin(done))
+
+
+def read_buckets(reader, out_dir: str, buckets) -> DataFrame:
+    """The extracted rows of ``buckets`` through ``reader`` (a
+    DataFrameReader carrying the schema or mergeSchema): the bucket
+    filter is partition pruning, so other buckets' files are never
+    opened."""
+    return reader.parquet(f"{out_dir}/extracted").where(
+        F.col("bucket").isin(sorted(buckets))
+    )
 
 
 def read_extracted_asof(
@@ -282,11 +294,11 @@ def read_extracted_asof(
         .distinct()
         .collect()
     )
-    done = sorted(r.bucket for r in rows)
-    df = spark.read.option("mergeSchema", "true").parquet(
-        f"{out_dir}/extracted"
+    return read_buckets(
+        spark.read.option("mergeSchema", "true"),
+        out_dir,
+        [r.bucket for r in rows],
     )
-    return df.where(F.col("bucket").isin(done))
 
 
 # --------------------------------------------------------------- concurrency

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from .incdedup import dedup_increment, read_survivors
-from .lineage import read_extracted, run_to_completion
+from .lineage import EXTRACTED_SCHEMA, read_buckets, run_to_completion
 
 DEFAULT_BUCKETS = 16
 
@@ -76,7 +76,12 @@ def run_curation_increment(
     ledger stats for the batch."""
     ex_dir = f"{out_dir}/extract/batch-{batch_id}"
     run_to_completion(spark, transcripts, ex_dir, n_buckets=n_buckets)
-    ext = read_extracted(spark, ex_dir)
+    # an unbounded drain leaves every bucket committed, so the committed
+    # view is all n_buckets, read with the schema the drain wrote: no
+    # lineage read and no footer merge (read_extracted does both)
+    ext = read_buckets(
+        spark.read.schema(EXTRACTED_SCHEMA), ex_dir, range(n_buckets)
+    )
     docs = ext.where(F.length("text") > 0).select(turn_doc_id(), "text")
     return dedup_increment(
         spark,

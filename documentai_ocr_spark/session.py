@@ -22,6 +22,12 @@ BASE_CONFS: dict[str, str] = {
     # oracle comparisons need a fixed zone (duckdb is UTC-naive)
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
+    # static conf (read when the session starts). The 100-entry default
+    # holds fewer compiled plan classes than one curation increment
+    # cycles through, so each increment would recompile ~90-110 janino
+    # classes and the JIT would compile them again; with 2000 a warm
+    # increment compiles a handful (BENCH.md)
+    "spark.sql.codegen.cache.maxEntries": "2000",
 }
 
 

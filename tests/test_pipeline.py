@@ -155,6 +155,93 @@ def test_importing_the_pipeline_loads_no_registry_module():
     assert out.stdout.strip() == "[]"
 
 
+# ------------------------------------------------- the increment's fixed cost
+
+# Jobs a warm increment on these batches may run: 34 (37 when the
+# committed view re-reads lineage, 2 jobs, and merges the part-file
+# footers, 1 job).
+WARM_INCREMENT_JOBS = 34
+# Classes a warm increment may compile. The 100-entry default codegen
+# cache recompiles 86-113 per increment; the session's cache keeps one
+# increment's classes, and only the first increment to read prior state
+# (a warm-up one here) compiles ~34 new ones.
+WARM_INCREMENT_COMPILES = 32
+
+
+def _executions_after(sql_store, last_id: int) -> list:
+    execs = sql_store.executionsList()
+    out = []
+    for i in range(execs.size() - 1, -1, -1):
+        e = execs.apply(i)
+        if e.executionId() <= last_id:
+            break
+        out.append(e)
+    return out
+
+
+@pytest.fixture(scope="module")
+def warm_increments(spark, tmp_path_factory):
+    """Four increments into one out dir, the sf0.001 transcripts split
+    by conv number mod 4, each under its own job group. The first two
+    warm up (the first meets an empty state, the second is the first to
+    read prior state); returns, for the last two, the jobs they ran,
+    the classes they compiled and their SQL plans."""
+    tr = transcripts_from_documents(spark, SF)
+    key = F.regexp_extract("conv_id", r"(\d+)", 1).cast("long") % 4
+    out = str(tmp_path_factory.mktemp("pipe_warm"))
+    sc = spark.sparkContext
+    codegen = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    ).METRIC_COMPILATION_TIME()
+    sql_store = spark._jsparkSession.sharedState().statusStore()
+    runs = []
+    for k in range(4):
+        group = f"pipe_warm_b{k}"
+        execs = sql_store.executionsList()
+        last_id = execs.last().executionId() if execs.size() else -1
+        compiled = codegen.getCount()
+        sc.setJobGroup(group, "run_curation_increment")
+        try:
+            run_curation_increment(spark, tr.where(key == k), out, f"b{k}")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        runs.append(
+            {
+                "jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
+                "compiled": codegen.getCount() - compiled,
+                "plans": [
+                    e.physicalPlanDescription()
+                    for e in _executions_after(sql_store, last_id)
+                ],
+            }
+        )
+    return runs[2:]
+
+
+def test_warm_increment_job_budget_and_jvm_ledger_row(warm_increments):
+    """A warm increment stays within its job budget, and its ledger
+    append reads a JVM Range: no Python-fed scan of local rows, which
+    would start a Python worker per partition for one row."""
+    for run in warm_increments:
+        assert 0 < run["jobs"] <= WARM_INCREMENT_JOBS, run["jobs"]
+        # formatted plans: the node tree, a blank line, node details
+        trees = [p.split("\n\n")[0].splitlines()[1:] for p in run["plans"]]
+        (ledger,) = [
+            tree
+            for tree, p in zip(trees, run["plans"])
+            if "InsertIntoHadoopFsRelation" in tree[0] and "/dedup/ledger" in p
+        ]
+        assert "Range" in ledger[-1], ledger
+        assert not any("ExistingRDD" in node for node in ledger), ledger
+
+
+def test_warm_increment_compiles_from_codegen_cache(warm_increments):
+    """The session's codegen cache holds one increment's classes: a
+    warm increment compiles at most a handful of new ones."""
+    for run in warm_increments:
+        assert run["compiled"] <= WARM_INCREMENT_COMPILES, run["compiled"]
+
+
 # ------------------------------------------------- streaming front door
 
 _ARROW_SCHEMA = pa.schema(

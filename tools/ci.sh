@@ -17,11 +17,16 @@
 #                              size: admitted docs == rolling_fold,
 #                              and the replay_probe pre-built state ==
 #                              the state real increments leave
-#                              (--verify-prebuild); skipped by --fast
+#                              (--verify-prebuild); --fast runs only
+#                              that pre-build check, on one tiny
+#                              replay_probe run, so a change to the
+#                              ledger or state layout perfbench pins
+#                              fails fast CI too
 #
 # Usage: tools/ci.sh [--fast]
 #   --fast: oracle gate at sf0.001, pytest -x (first failure stops),
-#           no perfbench self-test
+#           one tiny replay_probe run with --verify-prebuild instead of
+#           the perfbench self-test
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 cd "$REPO"
@@ -53,6 +58,16 @@ SPARK_GRAFT_SF_DIR=/root/testdata/sf0.001 SPARK_GRAFT_SCALING=0 \
 if [ "$FAST" = 0 ]; then
   echo "=== [5/5] perfbench self-test ==="
   python3 perfbench/selftest.py
+else
+  echo "=== [5/5] perfbench pre-build check (replay_probe, tiny) ==="
+  # a pre-build mismatch raises (nonzero exit); a wrong op leaves
+  # "correct": false in the result line
+  python3 perfbench/run.py --workload replay_probe --seed 3 --seconds 0 \
+    --size tiny --verify-prebuild 2>/dev/null | tail -1 | python3 -c '
+import json, sys
+r = json.load(sys.stdin)
+print({k: r[k] for k in ("correct", "attempted", "failed")})
+sys.exit(not r["correct"])'
 fi
 
 echo "=== CI green ==="
