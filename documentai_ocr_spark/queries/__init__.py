@@ -16,7 +16,11 @@ Coverage map (SURVEY.md §2 → module):
   §2.8 dedup              — dedup.* (exact / minhash-LSH / simhash / jaccard)
   §2.9 incremental        — lineage.py (tested in pytest, not SQL-expressible)
   §2.10 UDF surface       — extraction.* (mapInPandas kernels, golden-tested)
-  training-data ops       — dedup.*, simsearch.*, textstats.*
+  training-data ops       — dedup.*, simsearch.*, textstats.*, corpusops.*,
+                            relevance.*, labeldsl.*, governance.*
+
+An entry stays only while it anchors a SURVEY.md §2 row or oracles a
+kernel the curation pipeline runs.
 """
 
 from __future__ import annotations
@@ -31,7 +35,6 @@ from . import (
     relevance,
     simsearch,
     textstats,
-    webtext,
 )
 
 _MODULES = (
@@ -43,7 +46,6 @@ _MODULES = (
     corpusops,
     extraction,
     labeldsl,
-    webtext,
     governance,
 )
 
@@ -143,10 +145,6 @@ ROWS_ONLY = {
         "iterative power-method eigenvector on the collected k×k "
         "transition matrix — numpy replay, πP = π fixed-point law, "
         "hand-derived two-state chain (tests/test_events_ops.py)"
-    ),
-    "x_compression_ratio": (
-        "zlib byte counts — DuckDB has no zlib; whole-corpus "
-        "pure-Python recount (tests/test_webtext.py)"
     ),
     "x_pca_variance": (
         "driver-side covariance eigendecomposition — numpy whole-table "

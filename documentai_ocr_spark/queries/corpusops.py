@@ -2529,8 +2529,8 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-K_max is a TakeOrderedAndProject (heap per partition + K_max-row
     merge on the driver — NEVER a full sort of the vocab dim), and
     everything after runs on ≤{_VCOV_KMAX} rows: the rank window, the
-    {len(_VCOV_GRID)}-row grid join (bounded non-equi — the
-    q_conv_retention post-agg pattern), and the 1-row total dim."""
+    {len(_VCOV_GRID)}-row grid join (bounded non-equi, after the
+    aggregation), and the 1-row total dim."""
     docs = spread(load(spark, sf_dir, "documents").select("text"))
     w = docs.select(
         F.explode(
@@ -2682,73 +2682,13 @@ def _line_dedup_sql() -> str:
 ORACLES["q_line_dedup_rewrite"] = _line_dedup_sql()
 
 
-# ------------------------------------------- mergeable HLL registers
-# Sketch trilogy completed as MERGEABLE ROWS: x_hll_cardinality uses
-# Spark's built-in HLL++ whose register layout is engine-internal and
-# cannot be persisted or merged across jobs; these helpers hand-roll
-# the classic HyperLogLog register set as plain (group, idx, rho) rows
-# so the sketch can be WRITTEN, re-read and merged by MAX — the form an
-# incremental maintainer needs. 60-bit xxhash64-derived
-# hash: low log2(m) bits pick the register, the remaining 55 bits'
-# leading-zero count (+1) is rho; merge law: max(rho) per register,
-# associative/commutative/idempotent — a replayed batch cannot move a
-# register.
-_HLL_M = 256  # registers; rsd ≈ 1.04/sqrt(m) ≈ 6.5%
-_HLL_ALPHA = 0.7213 / (1 + 1.079 / _HLL_M)
-
-
-def hll_registers(df: DataFrame, col: str, group_cols: list) -> DataFrame:
-    """(group..., idx, rho) register rows — ≤ m per group, map-side
-    combined (the exchange carries registers, never values)."""
-    h = F.abs(F.xxhash64(F.col(col)))  # 63-bit non-negative
-    idx = (h % _HLL_M).cast("int")
-    w = F.expr(
-        f"abs(xxhash64({col})) div {_HLL_M}"
-    )  # ~55 significant bits
-    # rho = leading zeros of w within 55 bits, + 1; bin(w) has no
-    # leading zeros, so floor(log2(w)) = length(bin(w)) - 1
-    rho = (
-        F.when(w == 0, F.lit(56))
-        .otherwise(56 - F.length(F.expr(f"bin(abs(xxhash64({col})) div {_HLL_M})")))
-        .cast("int")
-    )
-    return (
-        df.select(*group_cols, idx.alias("idx"), rho.alias("rho"))
-        .groupBy(*group_cols, "idx")
-        .agg(F.max("rho").alias("rho"))
-    )
-
-
-def hll_estimate(regs: DataFrame, group_cols: list) -> DataFrame:
-    """Distinct-count estimate per group from (merged) register rows:
-    the standard HLL estimator with the small-range linear-counting
-    correction. Input may span many batches — merge by MAX first."""
-    merged = regs.groupBy(*group_cols, "idx").agg(
-        F.max("rho").alias("rho")
-    )
-    m = _HLL_M
-    agg = merged.groupBy(*group_cols).agg(
-        F.count(F.lit(1)).alias("n_present"),
-        F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("z_present"),
-    )
-    z = F.col("z_present") + (m - F.col("n_present"))  # absent ⇒ 2^0
-    raw = F.lit(_HLL_ALPHA * m * m) / z
-    v = m - F.col("n_present")  # zero-valued registers
-    est = F.when(
-        (raw <= 2.5 * m) & (v > 0),
-        F.lit(float(m)) * F.log(F.lit(float(m)) / v),
-    ).otherwise(raw)
-    return agg.select(
-        *group_cols, F.round(est).cast("long").alias("hll_est")
-    )
-
 # ------------------------------------------- mergeable quantile sketch
 # The sketch family's missing member: Bloom (membership), CMS (counts),
 # HLL (cardinality) — and now QUANTILES, as plain mergeable rows. The
 # built-in percentile_approx buffer is engine-internal (not
-# persistable, not mergeable across jobs — the same motivation as
-# hll_registers); these rows are. The bucketing is DDSketch's
-# relative-error-bounded idea, but the bucket rule is PURE
+# persistable, not mergeable across jobs); these rows are. The
+# bucketing is DDSketch's relative-error-bounded idea, but the bucket
+# rule is PURE
 # STRING/INTEGER arithmetic — a value keeps its first 3 significant
 # digits, the rest zeroed (4271 → 4270) — so bucketing is
 # bit-identical in Spark, DuckDB and Python (a float log() bucket

@@ -314,7 +314,10 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hot buckets; SURVEY.md §4's fan-out note). Cap chosen so a true
 # K-clone near-dup family (K ≤ 256) still pairs fully while bucket
 # cost is bounded by CAP²·n_buckets — the join becomes linear in
-# corpus size for fixed template density.
+# corpus size for fixed template density. The loss is all-or-nothing
+# per bucket, measured on planted families (tests/test_dup_audits.py):
+# 300 identical texts keep 0 of their 44,850 pairs (every band bucket
+# holds 300 > CAP docs); 200 identical texts keep all 19,900.
 _MH_BUCKET_CAP = 256
 
 MINHASH_PAIRS_CAPPED_SQL = f"""
@@ -1273,9 +1276,9 @@ def q_neardup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # The driver corpus has a closed 31-word vocabulary with no natural
 # typos, so the gate would be vacuous on it: a deterministic typo is
-# injected (ONE rendering per engine, the q_url_canonical decoration
-# discipline) — docs with doc_id % 7 == 3 append their first word with
-# its second character deleted.
+# injected (ONE rendering per engine, so both sides decorate the same
+# docs the same way) — docs with doc_id % 7 == 3 append their first
+# word with its second character deleted.
 _TYPO_MIN_LEN = 3  # vocab floor: shorter tokens are stop-ish and their
 #                    deletion signatures ('' / 1-char) are hot join keys
 

@@ -6,11 +6,9 @@ Each query re-expresses one dataflow operator family of the reference
 oracle. Entries stay only while they anchor a §2 coverage row or serve
 the pipeline: extraction gates, turn hygiene and conversation assembly
 over documents/transcripts. Over ``events`` only the §2 anchors such as
-q_asof_join and four event rollups (q_hour_mix, q_dau_wau,
-q_activity_bitmap, q_slo_burn) remain; the rollups were kept as the
-batch references of streaming maintainers that no longer exist, and
-are the next entries to weigh against the same rule. Warehouse reports
-over the harness tables with neither role do not belong here. Numeric discipline for cross-engine equality:
+q_asof_join remain. Warehouse reports over the harness tables with
+neither role do not belong here. Numeric discipline for cross-engine
+equality:
 
   * integer aggregates are cast to bigint on BOTH sides (DuckDB sums
     int → hugeint, Spark → bigint);
@@ -3244,107 +3242,6 @@ def q_code_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ----------------------------------------------------- hour-of-day mix
-@_q(
-    "q_hour_mix",
-    """
-    WITH h AS (SELECT ((epoch_ms(ts) // 3600000) % 24) AS hour_utc,
-                      event_type, user_id
-               FROM events)
-    SELECT CAST(hour_utc AS int) AS hour_utc, event_type,
-           CAST(COUNT(*) AS bigint) AS n_events,
-           CAST(COUNT(DISTINCT user_id) AS bigint) AS n_users
-    FROM h GROUP BY hour_utc, event_type
-    """,
-)
-def q_hour_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hour-of-day × event-type activity histogram — the load-shaping
-    report a batch-window scheduler reads (when to run compaction, when
-    the ingest peak lands). The hour is derived from the PHYSICAL epoch
-    milliseconds by integer arithmetic ((ms // 3600000) % 24) — no
-    calendar function, no session-timezone dependence — so both engines
-    bucket the identical int64 the parquet file stores (the same
-    tz-free discipline as the clock-regression audit). Shape: in-row
-    derivation on the scan, one ≤24×|types|-key partial agg; the
-    distinct-user count shuffles (hour, type, user) partials."""
-    ev = load(spark, sf_dir, "events").select("ts", "event_type", "user_id")
-    ms = F.unix_millis(F.col("ts").cast("timestamp"))
-    h = ev.select(ms.alias("_ms"), "event_type", "user_id").select(
-        F.expr("(_ms div 3600000) % 24").cast("int").alias("hour_utc"),
-        "event_type",
-        "user_id",
-    )
-    return h.groupBy("hour_utc", "event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.countDistinct("user_id").cast("long").alias("n_users"),
-    )
-
-
-# ---------------------------------------------------------- DAU / WAU
-# Rolling engagement: daily active users beside the trailing-7-day
-# weekly actives and the DAU/WAU stickiness ratio — the
-# product-health curve every event warehouse serves. The day index is
-# PHYSICAL integer arithmetic on epoch milliseconds (the q_hour_mix
-# rule — no calendar, no timezone), and the rolling distinct avoids
-# any per-day re-scan: each (user, day) pair supports exactly the 7
-# trailing windows ending on days d..d+6, so a bounded 7× in-row
-# fan-out followed by a (day, user) dedup computes every window's
-# exact distinct count in one pass. Output keeps only days that have
-# events (the observed-days convention).
-
-
-@_q(
-    "q_dau_wau",
-    """
-    WITH e AS (SELECT DISTINCT CAST(epoch_ms(ts) // 86400000 AS bigint)
-                        AS day, user_id
-               FROM events),
-    dau AS (SELECT day, CAST(COUNT(*) AS bigint) AS dau
-            FROM e GROUP BY day),
-    x AS (SELECT CAST(e.day + gg.i AS bigint) AS day, e.user_id
-          FROM e, unnest(generate_series(0, 6)) gg(i)),
-    wau AS (SELECT day, CAST(COUNT(DISTINCT user_id) AS bigint) AS wau
-            FROM x GROUP BY day)
-    SELECT d.day, d.dau, w.wau,
-           CAST(1000 * d.dau // w.wau AS bigint) AS stickiness_milli
-    FROM dau d JOIN wau w USING (day)
-    """,
-)
-def q_dau_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-day exact DAU, trailing-7-day WAU and integer-milli
-    stickiness (DAU/WAU — 1000 means every weekly user shows up daily,
-    ~143 means each appears once a week).
-
-    Scale: one (day, user) dedup exchange (dau is its rollup — COUNT(*)
-    on already-distinct pairs), a bounded 7× in-row explode, one
-    (day, user) dedup-rollup for wau, and an O(days) join. No window
-    functions, no per-day re-aggregation of the event stream."""
-    ev = load(spark, sf_dir, "events").select("ts", "user_id")
-    day = F.expr(
-        "cast(unix_millis(cast(ts as timestamp)) div 86400000 as bigint)"
-    )
-    e = ev.select(day.alias("day"), "user_id").distinct()
-    dau = e.groupBy("day").agg(F.count(F.lit(1)).cast("long").alias("dau"))
-    x = e.select(
-        F.explode(F.expr("sequence(day, day + 6)")).alias("day"),
-        "user_id",
-    )
-    wau = x.groupBy("day").agg(
-        F.countDistinct("user_id").cast("long").alias("wau")
-    )
-    return (
-        dau.join(wau, "day")
-        .select(
-            "day",
-            "dau",
-            "wau",
-            F.expr("1000 * dau div wau").cast("long").alias(
-                "stickiness_milli"
-            ),
-        )
-    )
-
-
 # ----------------------------------------------------- tool stationary
 # The long-run tool mix: the stationary distribution π of the
 # tool→tool transition chain (πP = π) — where an agent fleet's tool
@@ -3403,62 +3300,6 @@ def _q_tool_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES["x_tool_stationary"] = _q_tool_stationary
-
-
-# ------------------------------------------- densified daily series
-# The per-type daily count series q_slo_burn reads, DENSIFIED over the
-# corpus day span — a day with no events is an actual of 0, not a
-# skipped row (a silent skip would shorten the trailing-7 window
-# without saying so). One rendering on each side: the SQL CTE chain
-# below ends at `d(event_type, day, n)`, and
-# dense_daily_counts() is the DataFrame twin. Scale: the per-(type,
-# day) rollup is the only corpus exchange; the grid is the 1-row
-# broadcast (lo, hi) bounds dim crossJoined onto the O(types) dim —
-# O(types × days), calendar-bounded at any corpus size.
-_DENSE_DAILY_CTE = """
-    b AS (SELECT CAST(epoch_ms(MIN(ts)) // 86400000 AS bigint)
-                   AS lo,
-                 CAST(epoch_ms(MAX(ts)) // 86400000 AS bigint)
-                   AS hi
-          FROM events),
-    t AS (SELECT DISTINCT event_type FROM events),
-    grid AS (SELECT t.event_type, g.d AS day
-             FROM t, b, unnest(generate_series(b.lo, b.hi)) g(d)),
-    c AS (SELECT event_type,
-                 CAST(epoch_ms(ts) // 86400000 AS bigint) AS day,
-                 CAST(COUNT(*) AS bigint) AS n
-          FROM events GROUP BY 1, 2),
-    d AS (SELECT grid.event_type, grid.day, COALESCE(c.n, 0) AS n
-          FROM grid LEFT JOIN c
-            ON grid.event_type = c.event_type AND grid.day = c.day)"""
-
-
-def dense_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(event_type, day, n) — the densified per-type daily count
-    series over the corpus day span. See family comment."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type",
-        F.expr(
-            "cast(unix_millis(cast(ts as timestamp)) div 86400000"
-            " as bigint)"
-        ).alias("day"),
-    )
-    c = ev.groupBy("event_type", "day").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
-    bounds = ev.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
-    grid = (
-        c.select("event_type")
-        .distinct()
-        .crossJoin(F.broadcast(bounds))
-        .select(
-            "event_type",
-            F.explode(F.expr("sequence(lo, hi)")).alias("day"),
-        )
-    )
-    return grid.join(c, ["event_type", "day"], "left").select(
-        "event_type", "day", F.coalesce("n", F.lit(0)).alias("n")
-    )
 
 
 # --------------------------------------------- lang×source coupling
@@ -3538,110 +3379,6 @@ def q_lang_source_assoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def slo_burn_from_daily(g: DataFrame) -> DataFrame:
-    """(day, total, err) daily rollup — possibly SPARSE — → the full
-    burn table. Densifies over the rollup's own day span (a no-op on
-    already-dense input, which is how q_slo_burn calls it; SUM-merged
-    partials arrive sparse), then the trailing-7 window and the exact
-    milli columns."""
-    bounds = g.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
-    grid = bounds.select(
-        F.explode(F.expr("sequence(lo, hi)")).alias("day")
-    )
-    gd = grid.join(g, "day", "left").select(
-        "day",
-        F.coalesce("total", F.lit(0)).cast("long").alias("total"),
-        F.coalesce("err", F.lit(0)).cast("long").alias("err"),
-    )
-    w7 = Window.orderBy("day").rowsBetween(-6, 0)
-    w = gd.select(
-        "day",
-        "total",
-        "err",
-        F.sum("total").over(w7).cast("long").alias("tot7"),
-        F.sum("err").over(w7).cast("long").alias("err7"),
-        F.count(F.lit(1)).over(w7).cast("long").alias("window_days"),
-    )
-    return w.select(
-        "day",
-        "total",
-        "err",
-        F.when(F.col("total") > 0, F.expr("1000 * err div total"))
-        .otherwise(0)
-        .cast("long")
-        .alias("err_milli"),
-        "window_days",
-        F.when(F.col("tot7") > 0, F.expr("1000 * err7 div tot7"))
-        .otherwise(0)
-        .cast("long")
-        .alias("burn7_milli"),
-        (
-            (F.col("window_days") == 7)
-            & (F.col("tot7") > 0)
-            & (F.expr("1000 * err7 div tot7") > _SLO_MILLI)
-        ).alias("breach"),
-    )
-
-
-# ------------------------------------------------------- SLO burn
-# The on-call question over the event stream: what share of events
-# errored each day, and is the trailing-7-day burn over budget? Runs
-# on the DENSIFIED day grid (dense_daily_counts): totals
-# are the cross-type daily sum, the error series is the 'error'
-# type's row, both exact integers, and the trailing window publishes
-# its own day count so a partial window can never silently pass as a
-# full one (breach requires window_days = 7 AND burn over SLO — a
-# 3-day-old corpus reports burn but never breaches). SLO is the
-# fixed 250-milli error-share budget. Scale: the per-(type, day)
-# rollup is the only corpus exchange; the global day series and its
-# trailing window are calendar-bounded dims.
-_SLO_MILLI = 250
-
-
-@_q(
-    "q_slo_burn",
-    f"""
-    WITH {_DENSE_DAILY_CTE},
-    g AS (SELECT day,
-                 CAST(SUM(n) AS bigint) AS total,
-                 CAST(SUM(CASE WHEN event_type = 'error' THEN n
-                               ELSE 0 END) AS bigint) AS err
-          FROM d GROUP BY 1),
-    w AS (SELECT day, total, err,
-                 CAST(SUM(total) OVER (ORDER BY day ROWS BETWEEN
-                   6 PRECEDING AND CURRENT ROW) AS bigint) AS tot7,
-                 CAST(SUM(err) OVER (ORDER BY day ROWS BETWEEN
-                   6 PRECEDING AND CURRENT ROW) AS bigint) AS err7,
-                 CAST(COUNT(*) OVER (ORDER BY day ROWS BETWEEN
-                   6 PRECEDING AND CURRENT ROW) AS bigint)
-                   AS window_days
-          FROM g)
-    SELECT day, total, err,
-           CAST(CASE WHEN total > 0 THEN 1000 * err // total
-                     ELSE 0 END AS bigint) AS err_milli,
-           window_days,
-           CAST(CASE WHEN tot7 > 0 THEN 1000 * err7 // tot7
-                     ELSE 0 END AS bigint) AS burn7_milli,
-           (window_days = 7 AND tot7 > 0
-            AND 1000 * err7 // tot7 > {_SLO_MILLI}) AS breach
-    FROM w
-    """,
-)
-def q_slo_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per day: totals, errors, exact milli error share, the
-    trailing-7-day burn with its window size, and the breach verdict
-    (full window AND burn over the 250-milli SLO). See
-    family comment."""
-    d = dense_daily_counts(spark, sf_dir)
-    g = d.groupBy("day").agg(
-        F.sum("n").cast("long").alias("total"),
-        F.sum(F.when(F.col("event_type") == "error", F.col("n")).otherwise(0))
-        .cast("long")
-        .alias("err"),
-    )
-    return slo_burn_from_daily(g)
-
-
 # -------------------------------------------------------------- CUBE
 # q_cube_revenue: full CUBE over (priority, status) with the composite
 # grouping id (Spark grouping_id() == DuckDB GROUPING(a, b), same bit
@@ -3690,84 +3427,4 @@ def q_cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_orders",
             "rev_cents",
         )
-    )
-
-
-# ------------------------------------------------- activity bitmaps
-# The bitmap-index retention pattern: per user, the first 64 days
-# after first contact packed into ONE bigint (bit d set = active on
-# day base+d; day 63 intentionally uses the sign bit — two's-
-# complement bigint semantics are identical in both engines), then
-# the corpus rolled up by active-day count with the day-7-retained
-# tally read straight off bit 7. Fixed 8 bytes of state per user
-# replaces a (user × day) table for every downstream retention
-# question — the reason bitmap indexes exist. Scale: the (user, day)
-# dedup and the bit_or rollup are ONE map-side-combinable exchange
-# chain on user_id; the final histogram is a ≤65-row dim.
-@_q(
-    "q_activity_bitmap",
-    """
-    WITH ud AS (SELECT DISTINCT user_id,
-                       CAST(epoch_ms(ts) // 86400000 AS bigint) AS day
-                FROM events),
-    b AS (SELECT user_id, MIN(day) AS base_day FROM ud GROUP BY 1),
-    m AS (SELECT ud.user_id,
-                 bit_or(CASE WHEN ud.day - b.base_day < 64
-                        THEN (CAST(1 AS bigint) << CAST(ud.day - b.base_day AS int))
-                        ELSE 0 END) AS mask
-          FROM ud JOIN b USING (user_id) GROUP BY 1)
-    SELECT CAST(bit_count(mask) AS bigint) AS n_active_64,
-           CAST(COUNT(*) AS bigint) AS n_users,
-           CAST(SUM((mask >> 7) & 1) AS bigint) AS n_d7_active
-    FROM m GROUP BY 1
-    """,
-)
-def q_activity_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Users histogrammed by active-day count within their first 64
-    days (bitmap-packed), with the day-7-retained tally per bucket.
-    See family comment — 8 bytes of state per user, one exchange."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id",
-        (
-            F.unix_millis(F.col("ts").cast("timestamp"))
-            / F.lit(86400000)
-        )
-        .cast("long")
-        .alias("day"),
-    )
-    # no distinct: bit_or is duplicate-insensitive (the shingle/minhash
-    # argument, dedup.py), so the (user, day) dedup would shuffle the
-    # raw event stream for nothing — the oracle keeps its DISTINCT,
-    # same masks either way. base_day as a window min on the SAME
-    # user_id exchange the bit_or rollup needs (round-4 verdict
-    # nit 3): the former groupBy + self-join re-read the events down a
-    # second plan branch and added a join — min over (partition by
-    # user_id) reuses the one hash-partitioning, so the whole query is
-    # a single exchange chain on user_id
-    ud = ev
-    m = (
-        ud.withColumn(
-            "base_day", F.min("day").over(Window.partitionBy("user_id"))
-        )
-        .select(
-            "user_id",
-            F.when(
-                F.col("day") - F.col("base_day") < 64,
-                F.expr(
-                    "shiftleft(cast(1 as bigint),"
-                    " cast(day - base_day as int))"
-                ),
-            )
-            .otherwise(F.lit(0).cast("long"))
-            .alias("bit"),
-        )
-        .groupBy("user_id")
-        .agg(F.expr("bit_or(bit)").alias("mask"))
-    )
-    return m.select(
-        F.bit_count("mask").cast("long").alias("n_active_64"),
-        F.col("mask"),
-    ).groupBy("n_active_64").agg(
-        F.count(F.lit(1)).cast("long").alias("n_users"),
-        F.sum(F.expr("(mask >> 7) & 1")).cast("long").alias("n_d7_active"),
     )

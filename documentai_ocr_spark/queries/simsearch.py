@@ -2125,225 +2125,8 @@ def x_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------ dup-graph triangles
-# Cluster-cohesion audit for the near-dup graph: per-document triangle
-# participation counts. Why it matters at curation time: transitive
-# closure (q_dedup_components) merges everything a chain connects, so
-# a star-shaped component (one template hub, many false-positive
-# spokes, ZERO triangles) and a dense true-dup cluster (every pair
-# agrees — triangle-rich) look identical in component size; triangle
-# counts are the cheapest statistic that separates them. The engine
-# runs the DEGREE-ORDERED node-iterator (wedges form only at each
-# triangle's lowest-(degree, id) vertex, the classic O(E^1.5) wedge
-# bound — a hub of degree d contributes ZERO wedges from its own
-# adjacency unless it is the low endpoint, so a dup-storm star cannot
-# explode the join), all as equi-joins over the EDGE-sized pair table;
-# the corpus-sized work is exactly q_simhash_pairs_banded's banded
-# equi-join. The ORACLE counts triangles by the id-oriented 3-way
-# self-join — a different orientation, same triangle set, so the gate
-# proves orientation-independence too.
-def triangle_counts(edges: DataFrame) -> DataFrame:
-    """(doc_a < doc_b) edge table → (doc_id, n_triangles) for every
-    vertex in ≥1 triangle. Degree-ordered node-iterator; see family
-    comment."""
-    deg = (
-        edges.select(F.col("doc_a").alias("v"))
-        .unionAll(edges.select(F.col("doc_b").alias("v")))
-        .groupBy("v")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
-    e = (
-        edges.join(deg.withColumnRenamed("v", "doc_a"), "doc_a")
-        .withColumnRenamed("deg", "da")
-        .join(deg.withColumnRenamed("v", "doc_b"), "doc_b")
-        .withColumnRenamed("deg", "db")
-    )
-    ra = F.struct(F.col("da").alias("d"), F.col("doc_a").alias("i"))
-    rb = F.struct(F.col("db").alias("d"), F.col("doc_b").alias("i"))
-    low_a = ra < rb
-    o = e.select(
-        F.when(low_a, F.col("doc_a")).otherwise(F.col("doc_b")).alias(
-            "src"
-        ),
-        F.when(low_a, F.col("doc_b")).otherwise(F.col("doc_a")).alias(
-            "dst"
-        ),
-        F.when(low_a, rb).otherwise(ra).alias("dst_rank"),
-    )
-    w1 = o.select(
-        F.col("src"),
-        F.col("dst").alias("v"),
-        F.col("dst_rank").alias("rv"),
-    )
-    w2 = o.select(
-        F.col("src"),
-        F.col("dst").alias("w"),
-        F.col("dst_rank").alias("rw"),
-    )
-    wedges = w1.join(w2, "src").where(F.col("rv") < F.col("rw"))
-    closing = o.select(
-        F.col("src").alias("v"), F.col("dst").alias("w")
-    )
-    tri = wedges.join(closing, ["v", "w"]).select(
-        F.col("src").alias("u"), "v", "w"
-    )
-    verts = (
-        tri.select(F.col("u").alias("doc_id"))
-        .unionAll(tri.select(F.col("v").alias("doc_id")))
-        .unionAll(tri.select(F.col("w").alias("doc_id")))
-    )
-    return verts.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_triangles")
-    )
-
-
-@_q(
-    "q_dup_triangles",
-    f"""
-    WITH e AS (SELECT doc_a AS a, doc_b AS b
-               FROM ({_DEDUP_SIMHASH_PAIRS_SQL})),
-    t AS (SELECT e1.a, e1.b, e2.b AS c
-          FROM e e1
-          JOIN e e2 ON e1.b = e2.a
-          JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-    v AS (SELECT a AS doc_id FROM t
-          UNION ALL SELECT b FROM t
-          UNION ALL SELECT c FROM t)
-    SELECT doc_id, CAST(COUNT(*) AS bigint) AS n_triangles
-    FROM v GROUP BY 1
-    """,
-)
-def q_dup_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document triangle participation in the hamming≤8 simhash
-    near-dup graph — the star-vs-clique cohesion audit. Edge set is
-    exactly q_simhash_pairs_banded's (so the oracle's all-pairs edge
-    derivation + id-oriented 3-way self-join independently rebuilds
-    both the graph AND the triangles)."""
-    edges = q_simhash_pairs_banded(spark, sf_dir).select(
-        "doc_a", "doc_b"
-    )
-    return triangle_counts(edges)
-
-
-# ------------------------------------------- component cohesion audit
-# The component-grain verdict the curation reviewer actually reads:
-# for every connected component of the simhash near-dup graph — the
-# unit transitive closure MERGES, i.e. the thing a dedup keeper
-# election collapses to one survivor — its size, edge count, triangle
-# count, edge density and triangle-closure ratio (global clustering:
-# 1000·3·triangles / wedges). A template hub with false-positive
-# spokes reads closure 0 / density ~ 2/n; a true duplicate clique
-# reads 1000 / 1000 — so this one table prices exactly how much of
-# the dedup loss is chain-merge inflation. Engine: the banded pair
-# equi-join (corpus-sized work), the O(log n)-round pointer-jumping
-# min_label_components kernel, the degree-ordered triangle_counts
-# kernel, then an O(vertices) rollup — every stage edge- or
-# vertex-sized after the band join. The ORACLE independently rebuilds
-# all three layers (all-pairs edges, recursive-CTE closure, 3-way
-# self-join triangles), so the gate proves the banded graph, the
-# iterative components AND the oriented triangle count at once.
-@_q(
-    "q_component_cohesion",
-    f"""
-    WITH RECURSIVE e AS (SELECT doc_a AS u, doc_b AS v
-               FROM ({_DEDUP_SIMHASH_PAIRS_SQL})),
-    sym AS (SELECT u, v FROM e UNION SELECT v AS u, u AS v FROM e),
-    n AS (SELECT DISTINCT u AS doc_id FROM sym),
-    reach(a, b) AS (
-        SELECT doc_id, doc_id FROM n
-        UNION
-        SELECT r.a, s.v FROM reach r JOIN sym s ON r.b = s.u
-    ),
-    comp AS (SELECT a AS doc_id, MIN(b) AS component
-             FROM reach GROUP BY a),
-    deg AS (SELECT u AS doc_id, CAST(COUNT(*) AS bigint) AS deg
-            FROM sym GROUP BY u),
-    tri AS (SELECT e1.u AS a, e1.v AS b, e2.v AS c
-            FROM e e1
-            JOIN e e2 ON e1.v = e2.u
-            JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v),
-    tv AS (SELECT a AS doc_id FROM tri
-           UNION ALL SELECT b FROM tri
-           UNION ALL SELECT c FROM tri),
-    tcnt AS (SELECT doc_id, CAST(COUNT(*) AS bigint) AS t
-             FROM tv GROUP BY doc_id),
-    pv AS (SELECT c.component, d.deg, COALESCE(t.t, 0) AS t
-           FROM comp c
-           JOIN deg d USING (doc_id)
-           LEFT JOIN tcnt t USING (doc_id))
-    SELECT component,
-           CAST(COUNT(*) AS bigint) AS n_docs,
-           CAST(SUM(deg) // 2 AS bigint) AS n_edges,
-           CAST(SUM(t) // 3 AS bigint) AS n_triangles,
-           CAST(1000 * SUM(deg)
-                // (COUNT(*) * (COUNT(*) - 1)) AS bigint)
-             AS density_milli,
-           CAST(CASE WHEN SUM(deg * (deg - 1) // 2) > 0
-                     THEN 1000 * SUM(t) // SUM(deg * (deg - 1) // 2)
-                     ELSE 0 END AS bigint) AS closure_milli
-    FROM pv GROUP BY component
-    """,
-)
-def q_component_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per near-dup component: size, edges, triangles, edge-density
-    milli (2E/(n(n−1)) — written 1000·Σdeg // n(n−1) since Σdeg = 2E
-    exactly) and triangle-closure milli (3·triangles/wedges as
-    1000·Σt // Σ C(deg,2), exact because Σt = 3·triangles). See
-    family comment for the scale story."""
-    from .dedup import min_label_components
-
-    edges = q_simhash_pairs_banded(spark, sf_dir).select(
-        "doc_a", "doc_b"
-    )
-    nodes = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .union(edges.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    labels, _rounds = min_label_components(
-        nodes,
-        edges.select(
-            F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-        ),
-    )
-    deg = (
-        edges.select(F.col("doc_a").alias("doc_id"))
-        .unionAll(edges.select(F.col("doc_b").alias("doc_id")))
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
-    tri = triangle_counts(edges)
-    pv = (
-        labels.select("doc_id", "component")
-        .join(deg, "doc_id")
-        .join(tri, "doc_id", "left")
-        .select(
-            "component",
-            "deg",
-            F.coalesce("n_triangles", F.lit(0)).alias("t"),
-        )
-    )
-    nn = F.count(F.lit(1))
-    return pv.groupBy("component").agg(
-        nn.cast("long").alias("n_docs"),
-        F.expr("sum(deg) div 2").cast("long").alias("n_edges"),
-        F.expr("sum(t) div 3").cast("long").alias("n_triangles"),
-        F.expr("1000 * sum(deg) div (count(1) * (count(1) - 1))")
-        .cast("long")
-        .alias("density_milli"),
-        F.expr(
-            "CASE WHEN sum(deg * (deg - 1) div 2) > 0"
-            " THEN 1000 * sum(t) div sum(deg * (deg - 1) div 2)"
-            " ELSE 0 END"
-        )
-        .cast("long")
-        .alias("closure_milli"),
-    )
-
-
 # ------------------------------------------------ k-core decomposition
-# The last graph-cohesion grain after components (who merges),
-# triangles (who closes) and closure (how clique-like): WHERE in a
+# The graph-cohesion grain after components (who merges): WHERE in a
 # component each document sits. A chain-merged mega-component has a
 # dense true-dup nucleus and a fringe of single-link attachments; the
 # k-core level (3 = survives 3-core peeling, 2 = 2-core, 1 = edge but
@@ -2508,8 +2291,8 @@ def q_dedup_yield_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # … — the length of the decimal rendering, the topk_by_count
 # bucketing rule). A healthy corpus concentrates in bucket 1; mass in
 # bucket 3+ means template hubs are forming and the component-merge
-# inflation audits (q_dup_inflation, q_component_cohesion) are about
-# to matter. Everything after the banded equi-join is vertex-sized.
+# inflation audit (q_dup_inflation) is about to matter. Everything
+# after the banded equi-join is vertex-sized.
 @_q(
     "q_dup_degree_hist",
     f"""

@@ -323,153 +323,3 @@ def test_cluster_cap_dup_storm_unbiased_keepers(spark):
     assert kept != {0, 1}
     ranks = sorted(r["keep_rank"] for r in out)
     assert ranks == list(range(1, 101))
-
-
-# ------------------------------------------------ dup-graph triangles
-def _edges_df(spark, pairs):
-    return spark.createDataFrame(
-        [(a, b) for a, b in pairs], "doc_a long, doc_b long"
-    )
-
-
-def test_triangles_hand_graphs(spark):
-    """Closed-form graphs: K4 has 4 triangles with every vertex in 3;
-    a 6-spoke star has NONE (the star-vs-clique separation the audit
-    exists for); a wheel (hub + 6-cycle) has 6 — hub in all 6, each
-    rim vertex in exactly 2. The wheel hub is also the max-degree
-    vertex, so it exercises the degree-ordered orientation: wedges
-    never form at the hub."""
-    from documentai_ocr_spark.queries.simsearch import triangle_counts
-
-    k4 = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4)]
-    got = {
-        r["doc_id"]: r["n_triangles"]
-        for r in triangle_counts(_edges_df(spark, k4)).collect()
-    }
-    assert got == {1: 3, 2: 3, 3: 3, 4: 3}
-
-    star = [(0, i) for i in range(1, 7)]
-    assert triangle_counts(_edges_df(spark, star)).count() == 0
-
-    rim = [(i, i % 6 + 1) for i in range(1, 7)]
-    rim = [(min(a, b), max(a, b)) for a, b in rim]
-    wheel = star + rim
-    got = {
-        r["doc_id"]: r["n_triangles"]
-        for r in triangle_counts(_edges_df(spark, wheel)).collect()
-    }
-    assert got == {0: 6, 1: 2, 2: 2, 3: 2, 4: 2, 5: 2, 6: 2}
-
-
-def test_dup_triangles_bruteforce_replay(spark):
-    """sf0.001 replay: collect the banded edge set, brute-force every
-    triangle in Python, compare per-vertex counts exactly — proves the
-    degree-ordered orientation counts each triangle exactly once
-    (no miss from the orientation, no double count from the wedge
-    join)."""
-    from documentai_ocr_spark.queries.simsearch import (
-        q_dup_triangles,
-        q_simhash_pairs_banded,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    edges = {
-        (r["doc_a"], r["doc_b"])
-        for r in q_simhash_pairs_banded(spark, sf).collect()
-    }
-    adj: dict[int, set] = {}
-    for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-    want: dict[int, int] = {}
-    for a, b in edges:
-        for c in adj[a] & adj[b]:
-            if c > b:  # a < b < c: each triangle once
-                for v in (a, b, c):
-                    want[v] = want.get(v, 0) + 1
-    got = {
-        r["doc_id"]: r["n_triangles"]
-        for r in q_dup_triangles(spark, sf).collect()
-    }
-    assert got == want and len(got) > 0
-
-
-# ------------------------------------------- component cohesion audit
-def test_component_cohesion_bruteforce_replay(spark):
-    """sf0.001 replay: union-find components, brute-force triangles,
-    exact degree sums — every published column recomputed in Python,
-    plus the cross-operator reconciliation (component triangle totals
-    == q_dup_triangles' per-vertex totals / 3) and the bound laws
-    (density ≤ 1000 with equality exactly on cliques; closure ≤ 1000
-    with 0 exactly on triangle-free components)."""
-    from documentai_ocr_spark.queries.simsearch import (
-        q_component_cohesion,
-        q_dup_triangles,
-        q_simhash_pairs_banded,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    edges = {
-        (r["doc_a"], r["doc_b"])
-        for r in q_simhash_pairs_banded(spark, sf).collect()
-    }
-    parent: dict[int, int] = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    adj: dict[int, set] = {}
-    for a, b in edges:
-        adj.setdefault(a, set()).add(b)
-        adj.setdefault(b, set()).add(a)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    comp = {v: find(v) for v in adj}
-    tri_v: dict[int, int] = {}
-    for a, b in edges:
-        for c in adj[a] & adj[b]:
-            if c > b:
-                for v in (a, b, c):
-                    tri_v[v] = tri_v.get(v, 0) + 1
-    agg: dict[int, list] = {}
-    for v in adj:
-        a = agg.setdefault(comp[v], [0, 0, 0, 0])  # n, sumdeg, sumt, wedges
-        a[0] += 1
-        a[1] += len(adj[v])
-        a[2] += tri_v.get(v, 0)
-        a[3] += len(adj[v]) * (len(adj[v]) - 1) // 2
-    want = {}
-    for c, (n, sd, st, wg) in agg.items():
-        want[c] = (
-            n,
-            sd // 2,
-            st // 3,
-            1000 * sd // (n * (n - 1)),
-            1000 * st // wg if wg > 0 else 0,
-        )
-    got = {
-        r["component"]: (
-            r["n_docs"],
-            r["n_edges"],
-            r["n_triangles"],
-            r["density_milli"],
-            r["closure_milli"],
-        )
-        for r in q_component_cohesion(spark, sf).collect()
-    }
-    assert got == want and len(got) > 0
-
-    total_tri = sum(
-        r["n_triangles"] for r in q_dup_triangles(spark, sf).collect()
-    )
-    assert sum(v[2] for v in got.values()) * 3 == total_tri
-    for n, ne, nt, dens, clos in got.values():
-        assert dens <= 1000 and clos <= 1000
-        if dens == 1000 and n >= 3:  # clique -> every wedge closes
-            assert clos == 1000
-        if nt == 0:
-            assert clos == 0

@@ -569,34 +569,6 @@ def test_vocab_coverage_python_recount_and_monotone(spark):
         assert got[max(_VCOV_GRID)]["coverage_milli"] == 1000
 
 
-def test_hll_registers_accuracy_and_merge_law(spark):
-    """The mergeable row-form HLL: 200k distinct ids estimate within
-    2×rsd (m=256 → rsd ≈ 6.5%; measured 6.9%), and the MAX merge law —
-    estimating from two half-corpus register sets unioned equals
-    estimating from the whole corpus's registers exactly."""
-    from pyspark.sql import functions as F
-
-    from documentai_ocr_spark.queries.corpusops import (
-        hll_estimate,
-        hll_registers,
-    )
-
-    df = spark.range(200000).select(
-        F.lit(0).alias("g"),
-        F.concat(F.lit("user"), F.col("id")).alias("uid"),
-    )
-    regs = hll_registers(df, "uid", ["g"])
-    est = hll_estimate(regs, ["g"]).collect()[0]["hll_est"]
-    assert abs(est - 200000) / 200000 < 0.13, est
-
-    half_a = hll_registers(df.where(F.col("uid") < "user3"), "uid", ["g"])
-    half_b = hll_registers(df.where(F.col("uid") >= "user3"), "uid", ["g"])
-    merged = hll_estimate(half_a.unionByName(half_b), ["g"]).collect()[0][
-        "hll_est"
-    ]
-    assert merged == est
-
-
 # ------------------------------------------- mergeable quantile sketch
 def test_qsketch_bucket_rule_and_exact_order_statistic(spark):
     """sf0.001 replay: every published estimate equals the BUCKET of

@@ -1,6 +1,14 @@
 """Dedup threshold yield curve and degree histogram: python replays
-from the (gate-proven) banded pair set, plus structural laws."""
+from the (gate-proven) banded pair set, plus structural laws; and the
+measured pair loss of the MinHash-LSH hot-bucket cap."""
 
+import pandas as pd
+
+from documentai_ocr_spark.queries.dedup import (
+    _MH_BUCKET_CAP,
+    q_minhash_lsh_pairs,
+    q_minhash_lsh_pairs_capped,
+)
 from documentai_ocr_spark.queries.simsearch import (
     q_dedup_yield_curve,
     q_dup_degree_hist,
@@ -54,3 +62,46 @@ def test_degree_hist_replay_and_laws(spark):
     }
     assert got == {b: tuple(v) for b, v in want.items()}
     assert sum(v[0] for v in got.values()) == len(deg)
+
+
+def test_hot_bucket_cap_recall_on_planted_families(spark, tmp_path):
+    """The cap's loss as a figure: a family of 300 identical texts puts
+    300 docs in each of its 4 band buckets, over _MH_BUCKET_CAP, so the
+    capped query keeps 0 of its 44,850 pairs; a 200-family stays under
+    the cap and keeps all 19,900. The uncapped query keeps both."""
+    hot = "the same shipping template sentence repeated by every hub page"
+    warm = "an identical review that praises the battery life of the phone"
+    texts = [hot] * 300 + [warm] * 200
+    texts += [f"filler {i} word{i} w{i * 7} tail{i}" for i in range(100)]
+    pdf = pd.DataFrame(
+        {
+            "doc_id": range(len(texts)),
+            "text": texts,
+            "lang": "en",
+            "source": "web",
+            "n_chars": [len(t) for t in texts],
+        }
+    )
+    pdf.to_parquet(str(tmp_path / "documents.parquet"))
+    families = {"hot": range(0, 300), "warm": range(300, 500)}
+    assert _MH_BUCKET_CAP < 300 and 200 <= _MH_BUCKET_CAP
+
+    def recall(q):
+        got = {
+            (r["doc_a"], r["doc_b"])
+            for r in q(spark, str(tmp_path)).collect()
+        }
+        out = {}
+        for name, ids in families.items():
+            want = {(a, b) for a in ids for b in ids if a < b}
+            out[name] = (len(got & want), len(want))
+        return out
+
+    assert recall(q_minhash_lsh_pairs) == {
+        "hot": (44_850, 44_850),
+        "warm": (19_900, 19_900),
+    }
+    assert recall(q_minhash_lsh_pairs_capped) == {
+        "hot": (0, 44_850),
+        "warm": (19_900, 19_900),
+    }

@@ -1,91 +1,7 @@
-"""Event rollups (tz-free hour histogram, DAU/WAU) recounted in pure
-Python from the physical epoch milliseconds the parquet file stores,
-and the tool stationary distribution against hand-derived chains and
-a numpy replay."""
-
-import pandas as pd
-
-from documentai_ocr_spark.queries.relational import q_hour_mix
+"""The tool stationary distribution against hand-derived chains and a
+numpy replay."""
 
 SF = "/root/testdata/sf0.001"
-
-
-def _epoch_ms(series):
-    # datetime64[us] → physical epoch milliseconds (the int64 the
-    # parquet stores, divided down) — no timezone interpretation.
-    return series.astype("int64") // 1000
-
-
-def test_hour_mix_python_recount(spark):
-    ev = pd.read_parquet(f"{SF}/events.parquet")
-    ms = _epoch_ms(ev["ts"])
-    want: dict[tuple, list] = {}
-    for m, et, uid in zip(ms, ev["event_type"], ev["user_id"]):
-        k = (int((m // 3600000) % 24), et)
-        a = want.setdefault(k, [0, set()])
-        a[0] += 1
-        a[1].add(uid)
-    got = {
-        (r["hour_utc"], r["event_type"]): (r["n_events"], r["n_users"])
-        for r in q_hour_mix(spark, SF).collect()
-    }
-    assert got == {k: (a[0], len(a[1])) for k, a in want.items()}
-    # every hour of the synthetic day is populated
-    assert {h for h, _ in got} == set(range(24))
-
-
-def test_dau_wau_recount_and_pins(spark, tmp_path):
-    """Whole-corpus replay at sf0.001 from the physical epoch ms, plus
-    engineered pins: an every-day user scores stickiness 1000; a
-    once-a-week user pulls the shared window's ratio down to the exact
-    closed form."""
-    from documentai_ocr_spark.queries.relational import q_dau_wau
-
-    ev = pd.read_parquet(f"{SF}/events.parquet")
-    day = _epoch_ms(ev["ts"]) // 86400000
-    pairs = set(zip(day, ev["user_id"]))
-    dau: dict = {}
-    for d, u in pairs:
-        dau.setdefault(d, set()).add(u)
-    wau: dict = {}
-    for d, u in pairs:
-        for t in range(d, d + 7):
-            wau.setdefault(t, set()).add(u)
-    got = {r["day"]: r for r in q_dau_wau(spark, SF).collect()}
-    assert set(got) == set(dau)
-    for d in dau:
-        r = got[d]
-        assert (r["dau"], r["wau"]) == (len(dau[d]), len(wau[d]))
-        assert r["stickiness_milli"] == 1000 * len(dau[d]) // len(wau[d])
-
-    # engineered: user 1 fires daily for 14 days; user 2 only on day 7
-    import datetime
-
-    rows = []
-    base = datetime.datetime(2024, 1, 1)
-    eid = 0
-    for d in range(14):
-        rows.append(
-            (eid, base + datetime.timedelta(days=d), 1, "click", 0.0, "{}")
-        )
-        eid += 1
-    rows.append(
-        (eid, base + datetime.timedelta(days=7), 2, "click", 0.0, "{}")
-    )
-    pdf = pd.DataFrame(
-        rows,
-        columns=["event_id", "ts", "user_id", "event_type", "value", "props"],
-    )
-    dd = str(tmp_path / "dau")
-    spark.createDataFrame(pdf).write.parquet(f"{dd}/events.parquet")
-    g2 = {r["day"]: r for r in q_dau_wau(spark, dd).collect()}
-    days = sorted(g2)
-    # day 0..6: only user 1 in the window → stickiness 1000
-    assert g2[days[0]]["stickiness_milli"] == 1000
-    # days 7..13: user 2 is in the trailing week → dau 1, wau 2 → 500
-    assert g2[days[7]]["dau"] == 2  # both fired on day 7 itself
-    assert g2[days[8]]["dau"] == 1 and g2[days[8]]["wau"] == 2
-    assert g2[days[8]]["stickiness_milli"] == 500
 
 
 # ----------------------------------------------------- tool stationary

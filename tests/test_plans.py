@@ -429,46 +429,6 @@ def test_cube_expands_before_single_exchange(spark):
     assert n_exchanges(p) == 1
 
 
-def test_slo_burn_one_corpus_exchange(spark):
-    """Everything after the per-(type, day) rollup runs on calendar
-    dims: exactly ONE exchange keyed (event_type, day) — the corpus
-    rollup. The only other event_type-keyed exchanges the plan may
-    contain are the distinct-dim builds, and those must be map-side
-    combined (a partial HashAggregate below the exchange) so their
-    exchange input is dim-sized, never corpus-sized."""
-    p = plan(QUERIES["q_slo_burn"](spark, SF))
-    # the formatted plan's detail section prints exactly one
-    # "Arguments: hashpartitioning(...)" line per Exchange node
-    rollups = [
-        ln.strip()
-        for ln in p.splitlines()
-        if "Arguments: hashpartitioning(event_type" in ln and ", day" in ln
-    ]
-    assert len(rollups) == 1, rollups
-    # dim-build exchanges: single-key event_type, each directly above
-    # a keyed HashAggregate (the partial distinct) in the tree section
-    import re
-
-    others = [
-        ln.strip()
-        for ln in p.splitlines()
-        if "Arguments: hashpartitioning(event_type" in ln
-        and ", day" not in ln
-    ]
-    for ln in others:
-        node_id = re.search(r"plan_id=(\d+)", ln)
-        assert node_id is not None, ln
-    # each single-key exchange node must be fed by a HashAggregate:
-    # "(n) Exchange" detail blocks follow their child "(n-1)
-    # HashAggregate" in node numbering for this shape
-    for m in re.finditer(r"^\((\d+)\) Exchange\nInput \[1\]: \[event_type", p, re.M):
-        child = int(m.group(1)) - 1
-        assert f"({child}) HashAggregate" in p, (
-            "single-key event_type exchange not fed by a partial "
-            "distinct aggregate"
-        )
-
-
 def test_split_scan_one_corpus_exchange(spark):
     """q_split_scan: documents are scanned and shuffled ONCE — the
     (n_chars, lang) rollup — and every other partitioning in the plan
@@ -481,23 +441,6 @@ def test_split_scan_one_corpus_exchange(spark):
     for ln in rs:
         assert "doc_id" not in ln and "text" not in ln, ln
         assert "source" not in ln, ln
-
-
-def test_activity_bitmap_single_exchange_chain(spark):
-    """q_activity_bitmap (round-5 rework): base_day is a window min
-    on the SAME user_id exchange the bit_or rollup uses — no join, no
-    second scan branch, and no (user, day) distinct (bit_or is
-    duplicate-insensitive). Exactly two exchanges total: user_id,
-    then the ≤65-row histogram key."""
-    import re
-
-    p = plan(QUERIES["q_activity_bitmap"](spark, SF))
-    assert "Join" not in p
-    scans = re.findall(r"^\(\d+\) Scan parquet", p, re.M)
-    assert len(scans) == 1, scans
-    ex = re.findall(r"hashpartitioning\(([^,)]+)", p)
-    keys = sorted({re.sub(r"#\d+L?", "", k) for k in ex})
-    assert keys == ["n_active_64", "user_id"], keys
 
 
 def test_minhash_capped_reuses_band_exchange(spark):

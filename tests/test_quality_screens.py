@@ -1,7 +1,8 @@
 """Quality screens: character entropy (pure-Python recount + engineered
 separation corpus), Gopher line-shape (whole-corpus replay of the
-decoration coins + discriminative-verdict evidence), and URL
-canonicalization dedup (closed-form python replay of the injection)."""
+decoration coins + discriminative-verdict evidence), per-source top-K /
+Zipf fit, embedding label margin, line dedup, badwords, bigram entropy,
+langid confusion, perplexity buckets and source JSD."""
 
 import math
 
@@ -16,7 +17,6 @@ from documentai_ocr_spark.queries.textstats import (
     q_char_entropy,
     q_gopher_lineshape,
 )
-from documentai_ocr_spark.queries.webtext import q_url_canonical
 
 SF = "/root/testdata/sf0.001"
 
@@ -130,57 +130,6 @@ def test_gopher_lineshape_python_replay(spark):
     assert n_pass > 0 and n_fail > 0
 
 
-def _canon(raw: str) -> str:
-    c = raw.lower().split("?")[0].split("#")[0]
-    return c[:-1] if c.endswith("/") else c
-
-
-def test_url_canonical_closed_form_replay(spark):
-    """The injection coins are deterministic, so the per-domain report
-    has a closed form; replayed in pure Python including the raw-variant
-    decorations and the canonicalization rule."""
-    docs = pd.read_parquet(f"{SF}/documents.parquet")
-    agg: dict[str, list] = {}
-    for doc in docs["doc_id"]:
-        for t in range(12):
-            urls = []
-            if (doc + t) % 3 == 0:
-                urls.append(
-                    f"https://d{(doc * 7 + t) % 23}.example.com/p/{t}"
-                )
-            if (doc + t) % 7 == 2:
-                urls.append(f"http://m{(doc * 11 + t) % 13}.test.org")
-            for url in urls:
-                raw = url
-                if (doc + t) % 6 == 1:
-                    raw += "/"
-                if (doc + t) % 4 == 0:
-                    raw += f"?utm_source=feed&utm_campaign=c{doc % 3}"
-                if (doc + t) % 5 == 3:
-                    raw += f"#sec-{t}"
-                if (doc + t) % 9 == 4:
-                    raw = raw.upper()
-                canon = _canon(raw)
-                dom = canon.split("//")[1].split("/")[0]
-                agg.setdefault(dom, []).append((raw, canon))
-    got = {r["domain"]: r for r in q_url_canonical(spark, SF).collect()}
-    assert set(got) == set(agg)
-    inflated = 0
-    for dom, pairs in agg.items():
-        n_raw = len({r for r, _ in pairs})
-        n_canon = len({c for _, c in pairs})
-        r = got[dom]
-        assert (
-            r["n_links"],
-            r["n_raw"],
-            r["n_canonical"],
-            r["inflation_milli"],
-        ) == (len(pairs), n_raw, n_canon, 1000 * n_raw // n_canon), dom
-        inflated += n_raw > n_canon
-    # the decorations must actually create collapsible spellings
-    assert inflated > 0
-
-
 # ---------------------------------------- per-source top-K / Zipf fit
 def test_source_topwords_python_recount(spark):
     """The digit-bucket pruned rank equals a plain Counter-based
@@ -256,53 +205,6 @@ def test_zipf_slope_recovers_minus_one(spark, tmp_path):
     assert abs(rows["zipf"]["slope"] + 1.0) < 0.05
     assert abs(rows["uniform"]["slope"]) < 1e-9
     assert rows["zipf"]["n_fit"] == 80 and rows["uniform"]["n_fit"] == 80
-
-
-def test_refusal_rate_python_replay(spark):
-    """Closed-form replay of the refusal injection + detector over the
-    whole corpus: per-source turn/refusal counts, milli rate, affected
-    conversations, and the high_refusal verdict."""
-    import re
-
-    from documentai_ocr_spark.queries.webtext import (
-        _REFUSAL_HIGH_MILLI,
-        _REFUSAL_RE,
-        _REFUSAL_TEMPLATES,
-        q_refusal_rate,
-    )
-
-    docs = pd.read_parquet(f"{SF}/documents.parquet")
-    rx = re.compile(_REFUSAL_RE)
-    agg: dict[str, list] = {}
-    for doc, src, text in zip(docs["doc_id"], docs["source"], docs["text"]):
-        tk = text.split(" ")
-        for t in range(12):
-            if t % 3 != 1:
-                continue
-            lo = (t * 29) % max(1, len(tk))
-            base = " ".join(tk[lo : lo + 8])
-            if (doc * 5 + t) % 13 == 3:
-                txt = _REFUSAL_TEMPLATES[doc % 3] + base
-            else:
-                txt = base
-            agg.setdefault(src, []).append((doc, bool(rx.search(txt))))
-    got = {r["source"]: r for r in q_refusal_rate(spark, SF).collect()}
-    assert set(got) == set(agg)
-    any_hit = False
-    for src, rows in agg.items():
-        n = len(rows)
-        nh = sum(1 for _, h in rows if h)
-        convs = len({d for d, h in rows if h})
-        r = got[src]
-        assert (
-            r["n_asst_turns"],
-            r["n_refusals"],
-            r["refusal_milli"],
-            r["n_affected_convs"],
-            r["high_refusal"],
-        ) == (n, nh, 1000 * nh // n, convs, 1000 * nh // n > _REFUSAL_HIGH_MILLI), src
-        any_hit = any_hit or nh > 0
-    assert any_hit  # the injection must actually fire on this corpus
 
 
 def test_embed_label_margin_numpy_replay(spark):

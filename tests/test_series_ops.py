@@ -1,7 +1,6 @@
-"""Skyline, SLO burn and value profile: engineered closed-form
-fixtures plus whole-corpus python replays at sf0.001 (the
-test_events_ops discipline — recount from the physical values the
-parquet stores)."""
+"""Skyline and value profile: engineered closed-form fixtures plus
+whole-corpus python replays at sf0.001 (recounted from the physical
+values the parquet stores)."""
 
 import datetime as dt
 import math
@@ -15,32 +14,11 @@ SF = "/root/testdata/sf0.001"
 _EV_COLS = ["event_id", "ts", "user_id", "event_type", "value", "props"]
 
 
-def _day(ms):
-    return ms // 86400000
-
-
-def _epoch_ms(series):
-    return series.astype("int64") // 1000
-
-
 def _write_events(spark, tmp_path, rows, name):
     d = str(tmp_path / name)
     pdf = pd.DataFrame(rows, columns=_EV_COLS)
     spark.createDataFrame(pdf).write.parquet(f"{d}/events.parquet")
     return d
-
-
-def _dense_series(sf):
-    """Per-type densified daily-count series over the corpus span."""
-    ev = pd.read_parquet(f"{sf}/events.parquet")
-    ms = _epoch_ms(ev["ts"])
-    days = ms // 86400000
-    lo, hi = int(days.min()), int(days.max())
-    out = {}
-    for et in sorted(ev["event_type"].unique()):
-        cnt = days[ev["event_type"] == et].value_counts()
-        out[et] = [int(cnt.get(d, 0)) for d in range(lo, hi + 1)]
-    return lo, out
 
 
 def _doc(doc_id, source, n, alnum):
@@ -105,60 +83,6 @@ def test_skyline_replay(spark):
         for r in q_skyline_docs(spark, SF).collect()
     }
     assert got == want and len(got) > 0
-
-
-def test_slo_burn_engineered(spark, tmp_path):
-    """10 dense days, errors only on the last three: pins the exact
-    daily shares, the trailing-7 burn, the partial-window guard, and
-    the single breach day."""
-    from documentai_ocr_spark.queries.relational import q_slo_burn
-
-    base = dt.datetime(2024, 6, 1)
-    rows, eid = [], 0
-    for d in range(10):
-        for _ in range(10):
-            rows.append((eid, base + dt.timedelta(days=d), 1, "view", 0.0, "{}"))
-            eid += 1
-        if d >= 7:
-            for _ in range(10):
-                rows.append(
-                    (eid, base + dt.timedelta(days=d), 1, "error", 0.0, "{}")
-                )
-                eid += 1
-    d = _write_events(spark, tmp_path, rows, "slo")
-    got = sorted(q_slo_burn(spark, d).collect(), key=lambda r: r["day"])
-    assert len(got) == 10
-    day0 = got[0]["day"]
-    for r in got:
-        i = r["day"] - day0
-        assert r["window_days"] == min(i + 1, 7)
-        assert (r["total"], r["err"]) == ((20, 10) if i >= 7 else (10, 0))
-        assert r["err_milli"] == (500 if i >= 7 else 0)
-    # hand burns: day7 = 10/80, day8 = 20/90, day9 = 30/100
-    assert [r["burn7_milli"] for r in got[6:]] == [0, 125, 222, 300]
-    assert [r["breach"] for r in got] == [False] * 9 + [True]
-
-
-def test_slo_burn_replay(spark):
-    """sf0.001 replay of every column from the densified series."""
-    from documentai_ocr_spark.queries.relational import q_slo_burn
-
-    lo, series = _dense_series(SF)
-    ndays = len(next(iter(series.values())))
-    tot = [sum(series[et][i] for et in series) for i in range(ndays)]
-    err = series.get("error", [0] * ndays)
-    got = sorted(q_slo_burn(spark, SF).collect(), key=lambda r: r["day"])
-    assert len(got) == ndays
-    for i, r in enumerate(got):
-        assert r["day"] == lo + i
-        assert (r["total"], r["err"]) == (tot[i], err[i])
-        assert r["err_milli"] == (1000 * err[i] // tot[i] if tot[i] else 0)
-        j = max(0, i - 6)
-        t7, e7 = sum(tot[j : i + 1]), sum(err[j : i + 1])
-        assert r["window_days"] == i - j + 1
-        burn = 1000 * e7 // t7 if t7 else 0
-        assert r["burn7_milli"] == burn
-        assert r["breach"] == (i - j + 1 == 7 and t7 > 0 and burn > 250)
 
 
 def test_value_profile_engineered_and_replay(spark, tmp_path):

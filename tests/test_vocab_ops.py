@@ -1,7 +1,8 @@
 """Vocabulary-statistics operators: term burstiness (Church–Gale),
-k-anonymity governance audit, and the SymSpell deletion-neighborhood
-edit-distance-1 pair join — engineered-verdict corpora plus whole-corpus
-python replays at sf0.001."""
+k-anonymity governance audit, the SymSpell deletion-neighborhood
+edit-distance-1 pair join, BPE training and per-language tokenizer
+fertility — engineered-verdict corpora plus whole-corpus python replays
+at sf0.001."""
 
 import collections
 
@@ -283,3 +284,51 @@ def test_typo_pairs_bruteforce_replay(spark):
         for r in q_typo_pairs(spark, SF).collect()
     }
     assert got == want and len(got) > 0
+
+
+def test_tokenizer_fertility_python_recount(spark):
+    """Full independent recount: re-run the stopword-vote predictor and
+    THE token/byte units in pure Python per document, aggregate per
+    predicted lang — every column of every class row must match, and
+    the classes must partition the corpus."""
+    from documentai_ocr_spark.queries.textstats import (
+        _STOPWORDS,
+        q_tokenizer_fertility,
+    )
+
+    sw: dict[str, list] = {}
+    for w, lang in _STOPWORDS:
+        sw.setdefault(w, []).append(lang)
+    docs = pd.read_parquet(f"{SF}/documents.parquet")
+    per: dict[str, dict] = {}
+    for text in docs["text"]:
+        cnt: dict[str, int] = {}
+        for w in text.lower().split(" "):
+            for lang in sw.get(w, ()):
+                cnt[lang] = cnt.get(lang, 0) + 1
+        # argmax, ties by lang asc, no hits -> unk
+        pred = (
+            min(cnt, key=lambda l: (-cnt[l], l)) if cnt else "unk"
+        )
+        a = per.setdefault(pred, {"n_docs": 0, "ntok": 0, "nbytes": 0})
+        a["n_docs"] += 1
+        a["ntok"] += sum(1 for w in text.split(" ") if w != "")
+        a["nbytes"] += len(text.encode("utf-8"))
+    got = {
+        r["pred_lang"]: r for r in q_tokenizer_fertility(spark, SF).collect()
+    }
+    assert set(got) == set(per)
+    assert sum(r["n_docs"] for r in got.values()) == len(docs)
+    for lang, a in per.items():
+        g = got[lang]
+        assert (g["n_docs"], g["n_tokens"], g["n_bytes"]) == (
+            a["n_docs"],
+            a["ntok"],
+            a["nbytes"],
+        ), lang
+        want_milli = (
+            0 if a["ntok"] == 0 else a["nbytes"] * 1000 // a["ntok"]
+        )
+        assert g["bytes_per_token_milli"] == want_milli
+
+

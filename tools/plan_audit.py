@@ -50,24 +50,12 @@ GUARDED_ANCHORS = {"q_simhash_pairs", "q_embed_neardup", "q_jaccard_pairs"}
 # text alone. Each entry is (flag-prefix, reason) — the audit records
 # the note instead of failing, and any NEW flag still fails loudly.
 BOUNDED_OK = {
-    "q_conv_retention": (
-        "PRODUCT-JOIN",
-        "grid(12)⋈failure-histogram(≤13) suffix-sum non-equi join plus "
-        "the 1-row broadcast total dim — both sides are bounded "
-        "post-aggregation dims, the same pattern as q_threshold_yield",
-    ),
-    "q_slo_burn": (
-        ("PRODUCT-JOIN", "EMPTY-WINDOW"),
-        "the dense_daily_counts densify crossJoin (1-row bounds dim), "
-        "then the global day series and its trailing-7 window — both "
-        "calendar-bounded dims, never the corpus",
-    ),
     "q_lang_source_assoc": (
         ("PRODUCT-JOIN", "EMPTY-WINDOW", "LOW-CARD-WINDOW"),
         "the langs-dim × sources-dim × 1-row-total crossJoin densifies "
-        "the contingency grid — all post-aggregation dims (the "
-        "dense_daily_counts densify shape); the global TVD window "
-        "runs over the same O(langs × sources) cell dim",
+        "the contingency grid — all post-aggregation dims; the "
+        "global TVD window runs over the same O(langs × sources) "
+        "cell dim",
     ),
     "q_skyline_docs": (
         "LOW-CARD-WINDOW",
@@ -76,16 +64,6 @@ BOUNDED_OK = {
         "(≤ max doc length), never corpus-sized; the corpus-sized "
         "work is the map-side-combined (source, n_chars, purity) "
         "collapse before it",
-    ),
-    "q_domain_reputation": (
-        "PRODUCT-JOIN",
-        "crossJoin of the 1-row broadcast corpus-quality anchor dim "
-        "onto the O(domains) reputation rollup — scalar broadcast",
-    ),
-    "q_reputation_gate": (
-        "PRODUCT-JOIN",
-        "same 1-row anchor dim via the shared _REP_SQL rendering; the "
-        "blocked-domain dim itself is a broadcast equi-join",
     ),
     "q_key_skew": (
         "PRODUCT-JOIN",
@@ -288,12 +266,6 @@ BOUNDED_OK = {
         "≤classes-row lang dim broadcast; the only corpus exchange is "
         "the map-side-combined (n_chars, lang) rollup before it",
     ),
-    "q_fd_audit": (
-        "LOW-CARD-WINDOW",
-        "the majority election and totals run on the (source, lang) "
-        "count dim — O(sources × langs) rows post-aggregation (the "
-        "q_lang_source_assoc cell dim), never documents",
-    ),
     "q_embed_label_margin": (
         "PRODUCT-JOIN",
         "crossJoin of the O(labels) broadcast centroid dim — bounded "
@@ -317,8 +289,6 @@ BOUNDED_OK = {
 MEASURED_MAX_ROWS: dict[str, int] = {
     # scalar (1-row) broadcasts fanned onto a small report dim
     "q_key_skew": 64,
-    "q_domain_reputation": 64,
-    "q_reputation_gate": 64,
     "q_bm25": 64,          # per-term probe frame after the 1-row dim
     "q_tfidf_topterms": 64,
     "q_source_kl": 64,    # (source, word) count frame
@@ -332,8 +302,6 @@ MEASURED_MAX_ROWS: dict[str, int] = {
     #   documented exact-BASELINE quadratic (2k vectors at sf0.1 ⇒ 40k)
     "q_embed_label_margin": 64,  # ×|labels| fan-out over vectors
     # densify crossJoins + windows on post-aggregation dims
-    "q_slo_burn": 10_000,
-    "q_conv_retention": 64,
     "q_lang_source_assoc": 2_000,   # langs × sources grid
     "q_skyline_docs": 30_000,       # per-source distinct-n_chars dim
     # two_phase_ranks / bucketed decompositions: dim windows only
@@ -358,7 +326,6 @@ MEASURED_MAX_ROWS: dict[str, int] = {
     "q_heaps_law": 10_000,
     "q_weighted_median": 30_000,
     "x_zonemap_audit": 4_096,
-    "q_fd_audit": 2_000,
     "q_split_scan": 60_000,
 }
 
